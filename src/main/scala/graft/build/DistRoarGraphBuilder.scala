@@ -1,7 +1,7 @@
 package graft.build
 
 import graft.core.{BuildParams, Metric, NeighborVec}
-import graft.functions.{TopKVecAggregator, VecMeanAggregator, VectorFunctions}
+import graft.functions.{TopKAggregator, VecMeanAggregator, VectorFunctions}
 import graft.ops.KnnJoin
 import graft.ops.graph.{BspBeamSearch, OcclusionPrune}
 import org.apache.spark.sql.{Column, DataFrame}
@@ -38,8 +38,8 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   * flags). Every phase is keyed dataflow:
   *
   *   - phase 1 (G3/G7): kNN lists → (pivot, cand) edges → vector joins →
-  *     bounded per-pivot candidate aggregation (TopKVecAggregator — a hub
-  *     pivot cannot blow up its group) → group-local occlusion prune;
+  *     bounded per-pivot candidate aggregation (TopKAggregator.topKVec —
+  *     a hub pivot cannot blow up its group) → group-local occlusion prune;
   *   - phase 1b/1c (G8/G5): reverse edges by explode, bounded per-node
   *     reverse-candidate aggregation, deterministic merge + overflow
   *     re-prune — the shuffle-keyed replacement for the reference's
@@ -251,7 +251,7 @@ object DistRoarGraphBuilder {
         .filter(col("cand") =!= col("pivot"))
         .distinct()
       val capC = math.max(params.mSq, 4 * m)
-      val topCand = TopKVecAggregator.topKVec(capC)
+      val topCand = TopKAggregator.topKVec(capC)
       val fwdLists = edges
         .join(candVecs, "cand")
         .join(pivotVecs, "pivot")
@@ -922,7 +922,7 @@ object DistRoarGraphBuilder {
     // computed right there — Metric.dist accumulates in double exactly
     // like the Catalyst expression this replaces (the engine-wide shared
     // float64 contract, Types.scala), so results are bit-identical
-    val topRev = TopKVecAggregator.topKVec(capRev)
+    val topRev = TopKAggregator.topKVec(capRev)
     val revE = spark.createDataset(
       BspBeamSearch.lookupVec(
         BspBeamSearch.lookupVec(

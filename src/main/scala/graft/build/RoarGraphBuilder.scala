@@ -1,6 +1,6 @@
 package graft.build
 
-import graft.core.{BuildParams, Metric, SearchParams}
+import graft.core.{BuildParams, Neighbor, SearchParams}
 import graft.ops.KnnJoin
 import graft.ops.graph.{BeamSearch, OcclusionPrune, VecStore}
 import org.apache.spark.broadcast.Broadcast
@@ -79,7 +79,7 @@ object RoarGraphBuilder {
       .mapPartitions { it =>
         val vs = bcVs.value
         it.map { case (qid, qv0) =>
-          val qv = normalizeIfNeeded(qv0, vs.metric)
+          val qv = VecStore.asStored(qv0, vs.metric)
           val heap = new KnnJoin.BoundedTopK(mSq)
           var i = 0
           while (i < vs.n) { heap.push(vs.distTo(i, qv), i.toLong); i += 1 }
@@ -88,16 +88,8 @@ object RoarGraphBuilder {
       }.toDF("query_id", "knn")
   }
 
-  private def normalizeIfNeeded(v: Array[Float], metric: Metric): Array[Float] =
-    if (!metric.needNormalize) v
-    else {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
-      val nrm = math.sqrt(s)
-      if (nrm == 0.0) v
-      else { val o = new Array[Float](v.length); i = 0
-        while (i < v.length) { o(i) = (v(i) / nrm).toFloat; i += 1 }; o }
-    }
+  /** (dense id, dist) pairs in the [[Neighbor]] order. */
+  private val ByDist = Neighbor.orderingOf[(Int, Double)](_._2, _._1)
 
   /** Entry point = argmin over base of SQUARED L2 dist(vec, centroid), ties
     * by id. The reference's CalculateProjectionep (src/index_bipartite.cpp:
@@ -140,7 +132,7 @@ object RoarGraphBuilder {
                            backfill: Boolean): Array[Int] = {
     val have = fwd.toSet
     val newRev = rev.distinct.filter(r => r != node && !have.contains(r))
-      .map(r => (r, vs.dist(node, r))).sortBy(p => (p._2, p._1))
+      .map(r => (r, vs.dist(node, r))).sorted(ByDist)
     if (fwd.length + newRev.length <= appendCap) fwd ++ newRev.map(_._1)
     else {
       val all = fwd.map(f => (f, vs.dist(node, f))) ++ newRev
@@ -233,13 +225,14 @@ object RoarGraphBuilder {
       val visited = new BeamSearch.Visited(v.n)
       it.map { nodeL =>
         val node = nodeL.toInt
-        val res = BeamSearch.search(supply, v, v.row(node), params.mPjbp,
+        val row = v.row(node)
+        val res = BeamSearch.search(supply, v.distTo(_, row), params.mPjbp,
           params.lPjpq, ep, visited, exclude = node, collectPool = true)
         val pool = res.pool.filter(_._1 != node)
         // G9 prune: first kept element skips nodes already linked forward
         // (src/index_bipartite.cpp:1861-1866); strict pass only, no backfill
         val linked = supply(node).toSet
-        val sorted = pool.sortBy(p => (p._2, p._1))
+        val sorted = pool.sorted(ByDist)
         val startIdx = sorted.indexWhere(p => !linked.contains(p._1))
         val eff = if (startIdx <= 0) sorted else
           sorted(startIdx) +: (sorted.take(startIdx) ++ sorted.drop(startIdx + 1))
@@ -317,7 +310,7 @@ object RoarGraphBuilder {
             while (r < hi) {
               if (seen(r)) {
                 val d = index.vs.dist(r, u)
-                if (d < bd || (d == bd && r < b)) { bd = d; b = r }
+                if (b == -1 || Neighbor.less(d, r, bd, b)) { bd = d; b = r }
               }
               r += 1
             }
@@ -326,8 +319,7 @@ object RoarGraphBuilder {
           .reduce((Double.MaxValue, -1),
             (a: (Double, Int), b: (Double, Int)) =>
               if (b._2 == -1) a
-              else if (a._2 == -1 || b._1 < a._1 ||
-                (b._1 == a._1 && b._2 < a._2)) b
+              else if (a._2 == -1 || Neighbor.less(b._1, b._2, a._1, a._2)) b
               else a)
         adj(best) = adj(best) :+ u
         seen(u) = true
@@ -355,10 +347,10 @@ object RoarGraphBuilder {
         val idx = bc.value
         val visited = new BeamSearch.Visited(idx.n)
         it.map { case (qid, qv0) =>
-          val qv = normalizeIfNeeded(qv0, idx.vs.metric)
+          val qv = VecStore.asStored(qv0, idx.vs.metric)
           val seeds = seedsFor(qid, numSeeds, idx.n)
-          val r = BeamSearch.search(idx.adj, idx.vs, qv, k, l, idx.ep, visited,
-            seeds = seeds)
+          val r = BeamSearch.search(idx.adj, idx.vs.distTo(_, qv), k, l,
+            idx.ep, visited, seeds = seeds)
           (qid, r.ids.map(idx.ids(_)), r.dists, r.cmps, r.hops)
         }
       }.toDF("query_id", "ids", "dists", "cmps", "hops")

@@ -93,17 +93,52 @@ final case class SearchParams(
 final case class Neighbor(id: Long, dist: Double)
 
 object Neighbor {
-  implicit val ordering: Ordering[Neighbor] =
-    Ordering.by(n => (n.dist, n.id))
+  /** THE engine-wide (dist, id) order — every heap, queue, aggregator,
+    * prune and sort ranks neighbors through this one comparison.
+    *
+    * Distances compare as Spark SQL compares doubles
+    * (`SQLOrderingUtil.compareDoubles`): NaN sorts after every number and
+    * equals NaN, and -0.0 equals 0.0. Equal distances then break by
+    * ascending id. It must agree with Spark SQL because the kernels'
+    * partial top-ks are merged with `sort_array` (KnnJoin.blockedTopK,
+    * ShardedRoarGraph, StreamingAnn, DistRoarGraphBuilder): a partial that
+    * ranked differently from its merge could drop a row the merge keeps.
+    * A NaN distance therefore never displaces a number, and never freezes
+    * a bounded heap it entered first.
+    *
+    * The finite case costs two double compares (the first test is the
+    * plain `d1 < d2`); only NaNs reach the slow branch. */
+  def compare(d1: Double, id1: Long, d2: Double, id2: Long): Int =
+    if (d1 < d2) -1
+    else if (d1 > d2) 1
+    else if (d1 == d2) java.lang.Long.compare(id1, id2)
+    else nanCompare(d1, id1, d2, id2)
+
+  private def nanCompare(d1: Double, id1: Long, d2: Double, id2: Long): Int = {
+    val nan1 = java.lang.Double.isNaN(d1)
+    if (nan1 != java.lang.Double.isNaN(d2)) { if (nan1) 1 else -1 }
+    else java.lang.Long.compare(id1, id2)
+  }
+
+  /** `(d1, id1)` ranks strictly before `(d2, id2)`. */
+  def less(d1: Double, id1: Long, d2: Double, id2: Long): Boolean =
+    compare(d1, id1, d2, id2) < 0
+
+  /** The order over any row that carries a distance and an id. */
+  def orderingOf[T](dist: T => Double, id: T => Long): Ordering[T] =
+    new Ordering[T] {
+      def compare(a: T, b: T): Int = Neighbor.compare(dist(a), id(a), dist(b), id(b))
+    }
+
+  implicit val ordering: Ordering[Neighbor] = orderingOf(_.dist, _.id)
 }
 
 /** A scored neighbor carrying its vector — the payload of the distributed
   * build's candidate groups, where occlusion pruning needs candidate↔
-  * candidate distances without a global vector store. Same (dist, id)
-  * tie-break as [[Neighbor]]. */
+  * candidate distances without a global vector store. Ranked by the
+  * [[Neighbor]] order. */
 final case class NeighborVec(id: Long, dist: Double, vec: Array[Float])
 
 object NeighborVec {
-  implicit val ordering: Ordering[NeighborVec] =
-    Ordering.by(n => (n.dist, n.id))
+  implicit val ordering: Ordering[NeighborVec] = Neighbor.orderingOf(_.dist, _.id)
 }

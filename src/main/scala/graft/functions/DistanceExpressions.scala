@@ -33,8 +33,12 @@ abstract class DistanceExpression extends BinaryExpression {
 
   protected def evalArrays(x: ArrayData, y: ArrayData): Double
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    evalArrays(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    DistanceExpression.requireSameDim(prettyName, x.numElements(), y.numElements())
+    evalArrays(x, y)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -43,6 +47,7 @@ abstract class DistanceExpression extends BinaryExpression {
       val s = ctx.freshName("s")
       s"""
          |int $n = $a.numElements();
+         |${DistanceExpression.genRequireSameDim(prettyName, n, s"$b.numElements()")}
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  ${loopBody(s"((double) $a.getFloat($i))", s"((double) $b.getFloat($i))")
@@ -108,6 +113,7 @@ case class CosineDistance(left: Expression, right: Expression)
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = x.numElements()
+    DistanceExpression.requireSameDim(prettyName, n, y.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
@@ -128,6 +134,7 @@ case class CosineDistance(left: Expression, right: Expression)
       val nb = ctx.freshName("nb")
       s"""
          |int $n = $a.numElements();
+         |${DistanceExpression.genRequireSameDim(prettyName, n, s"$b.numElements()")}
          |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double xa = (double) $a.getFloat($i);
@@ -143,6 +150,17 @@ case class CosineDistance(left: Expression, right: Expression)
 }
 
 object DistanceExpression {
+  /** Both vectors of one row must have the same length: the loops run to
+    * the left one's length and would otherwise read past a shorter right
+    * one and return a silently wrong distance. */
+  def requireSameDim(name: String, n: Int, m: Int): Unit =
+    if (n != m) throw new IllegalArgumentException(
+      s"$name: vector dimension mismatch ($n vs $m)")
+
+  /** [[requireSameDim]] as a generated-code statement. */
+  private[functions] def genRequireSameDim(name: String, n: String, m: String): String =
+    s"graft.functions.DistanceExpression.requireSameDim(\"$name\", $n, $m);"
+
   private[functions] def checkFloatArrays(name: String, left: Expression,
                                           right: Expression): TypeCheckResult = {
     val ok = ArrayType(FloatType)

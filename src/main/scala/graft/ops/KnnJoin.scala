@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Metric
+import graft.core.{Metric, Neighbor}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,13 +27,14 @@ import graft.functions.VectorFunctions
   */
 object KnnJoin {
 
-  /** Bounded max-heap of (dist, id), keeping the k smallest; ties by id. */
+  /** Bounded max-heap keeping the k smallest under the [[Neighbor]] order. */
   final class BoundedTopK(k: Int) {
     private val d = new Array[Double](k)
     private val ids = new Array[Long](k)
     private var n = 0
+    // max-heap: i sits above j when it ranks after j
     @inline private def less(i: Int, j: Int): Boolean =
-      d(i) > d(j) || (d(i) == d(j) && ids(i) > ids(j)) // max-heap on (dist,id)
+      Neighbor.less(d(j), ids(j), d(i), ids(i))
     private def swap(i: Int, j: Int): Unit = {
       val td = d(i); d(i) = d(j); d(j) = td
       val ti = ids(i); ids(i) = ids(j); ids(j) = ti
@@ -43,7 +44,7 @@ object KnnJoin {
         d(n) = dist; ids(n) = id; n += 1
         var i = n - 1
         while (i > 0 && less(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
-      } else if (dist < d(0) || (dist == d(0) && id < ids(0))) {
+      } else if (Neighbor.less(dist, id, d(0), ids(0))) {
         d(0) = dist; ids(0) = id
         var i = 0
         var cont = true
@@ -58,10 +59,12 @@ object KnnJoin {
     }
     def result(): Array[(Double, Long)] = {
       val out = Array.tabulate(n)(i => (d(i), ids(i)))
-      scala.util.Sorting.stableSort(out)
+      java.util.Arrays.sort(out, ResultOrder)
       out
     }
   }
+
+  private val ResultOrder = Neighbor.orderingOf[(Double, Long)](_._1, _._2)
 
   private[graft] def widen(v: Array[Float], normalize: Boolean): Array[Double] = {
     val out = new Array[Double](v.length)

@@ -72,12 +72,6 @@ object NearDup {
     sort_array(array_distinct(transform(shingleStrs, charHash _)))
   }
 
-  /** Convenience single-expression form over a text column — ONLY for
-    * contexts that cannot pre-project the token array; see the
-    * re-tokenization caveat on [[shingleHashesFromTokens]]. */
-  def shingleHashes(text: Column, n: Int = ShingleSize): Column =
-    shingleHashesFromTokens(split(text, " "), n)
-
   /** MinHash signature: array of min((a_i*x + b_i) mod M) over shingles. */
   def minHashSignature(shingles: Column): Column =
     array(MinHashParams.map { case (a, b) =>

@@ -1,6 +1,6 @@
 package graft.ops.graph
 
-import graft.core.Metric
+import graft.core.{Metric, Neighbor}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -44,8 +44,12 @@ import org.apache.spark.sql.functions._
   */
 object BspBeamSearch {
 
-  /** (dist, id, expanded) pool entry; pools stay sorted by (dist, id). */
+  /** (dist, id, expanded) pool entry; pools stay sorted by the
+    * [[Neighbor]] order. */
   final case class Entry(dist: Double, id: Long, expanded: Boolean)
+  object Entry {
+    val ordering: Ordering[Entry] = Neighbor.orderingOf(_.dist, _.id)
+  }
 
   /** Hard cap on the per-search query-vector broadcast (rows). 1M × 200d
     * floats ≈ 850 MB on the driver + per-executor copy — the top of the
@@ -259,7 +263,7 @@ object BspBeamSearch {
       val it = seen.values().iterator()
       var i = 0
       while (it.hasNext) { arr(i) = it.next(); i += 1 }
-      arr.sortBy(e => (e.dist, e.id)).take(l)
+      arr.sorted(Entry.ordering).take(l)
     }
 
     // ---- init: every pool = {ep} ∪ extraSeeds (seed vectors are a
@@ -288,7 +292,7 @@ object BspBeamSearch {
       .map { case (qid, qv) =>
         val pool = seeds.map { case (id, v) =>
           Entry(metric.dist(qv, v), id, expanded = false)
-        }.sortBy(e => (e.dist, e.id)).take(l)
+        }.sorted(Entry.ordering).take(l)
         (qid, pool)
       }
       .partitionBy(qPart)

@@ -1,6 +1,6 @@
 package graft.ops.graph
 
-import graft.core.Metric
+import graft.core.{Metric, Neighbor}
 
 /** In-memory kernels for graph index build & search — the per-task compute
   * that runs inside `mapPartitions` over a broadcast index. These mirror the
@@ -75,24 +75,35 @@ object VecStore {
     while (i < n) {
       val v = rows(i)
       require(v.length == dim, s"ragged vectors: row $i has ${v.length} != $dim")
-      if (metric.needNormalize) {
-        var s = 0.0; var d = 0
-        while (d < dim) { s += v(d).toDouble * v(d); d += 1 }
-        val nrm = math.sqrt(s)
-        d = 0
-        if (nrm != 0.0) {
-          while (d < dim) { data(i * dim + d) = (v(d) / nrm).toFloat; d += 1 }
-        } else System.arraycopy(v, 0, data, i * dim, dim)
-      } else System.arraycopy(v, 0, data, i * dim, dim)
+      System.arraycopy(asStored(v, metric), 0, data, i * dim, dim)
       i += 1
     }
     new VecStore(n, dim, data, metric)
   }
+
+  /** A row as the store holds it under `metric`: L2-normalized when the
+    * metric needs it (float32 of v/‖v‖, the norm accumulated in double),
+    * else `v` itself. A zero row is left as is. Queries go through this
+    * too, so a cosine query meets rows normalized the same way. */
+  def asStored(v: Array[Float], metric: Metric): Array[Float] =
+    if (!metric.needNormalize) v
+    else {
+      var s = 0.0; var d = 0
+      while (d < v.length) { s += v(d).toDouble * v(d); d += 1 }
+      val nrm = math.sqrt(s)
+      if (nrm == 0.0) v
+      else {
+        val out = new Array[Float](v.length)
+        d = 0
+        while (d < v.length) { out(d) = (v(d) / nrm).toFloat; d += 1 }
+        out
+      }
+    }
 }
 
-/** Bounded best-first beam pool: sorted-by-(dist,id) fixed-capacity array
-  * with an "closest unexpanded" cursor and id-dedup on insert. Faithful port
-  * of the reference's NeighborPriorityQueue semantics
+/** Bounded best-first beam pool: fixed-capacity array sorted by the
+  * [[Neighbor]] order, with a "closest unexpanded" cursor and id-dedup on
+  * insert. Faithful port of the reference's NeighborPriorityQueue semantics
   * (include/efanna2e/neighbor.h:138-223): insert drops items worse than the
   * current worst once full; ties break by ascending id (neighbor.h:29-33).
   */
@@ -104,7 +115,7 @@ final class NeighborQueue(val capacity: Int) {
   private var cur = 0
 
   @inline private def lessAt(d: Double, id: Int, i: Int): Boolean =
-    d < ds(i) || (d == ds(i) && id < ids(i))
+    Neighbor.less(d, id, ds(i), ids(i))
 
   def insert(id: Int, d: Double): Unit = {
     if (_size == capacity && !lessAt(d, id, _size - 1)) return
@@ -166,47 +177,10 @@ object OcclusionPrune {
     * @return kept dense ids, in kept order (ascending dist-to-target prefix)
     */
   def prune(cands: Array[(Int, Double)], target: Int, m: Int, vs: VecStore,
-            backfill: Boolean = true): Array[Int] = {
-    if (cands.isEmpty) return Array.empty
-    // dedup by id keeping smallest dist, exclude target, sort by (dist, id)
-    val best = new java.util.HashMap[Int, Double]()
-    cands.foreach { case (id, d) =>
-      if (id != target) {
-        val prev = best.get(id)
-        if (!best.containsKey(id) || d < prev) best.put(id, d)
-      }
-    }
-    if (best.isEmpty) return Array.empty
-    val pool = new Array[(Int, Double)](best.size)
-    var i = 0
-    val it = best.entrySet().iterator()
-    while (it.hasNext) { val e = it.next(); pool(i) = (e.getKey, e.getValue); i += 1 }
-    java.util.Arrays.sort(pool, Ordering.by((p: (Int, Double)) => (p._2, p._1)))
-
-    val result = new scala.collection.mutable.ArrayBuffer[Int](m)
-    result += pool(0)._1
-    var s = 1
-    while (result.length < m && s < pool.length) {
-      val (pid, pdist) = pool(s)
-      var occlude = false
-      var t = 0
-      while (!occlude && t < result.length) {
-        if (result(t) == pid) occlude = true
-        else if (vs.dist(pid, result(t)) < pdist) occlude = true
-        t += 1
-      }
-      if (!occlude) result += pid
-      s += 1
-    }
-    if (backfill) {
-      s = 1
-      while (result.length < m && s < pool.length) {
-        if (!result.contains(pool(s)._1)) result += pool(s)._1
-        s += 1
-      }
-    }
-    result.toArray
-  }
+            backfill: Boolean = true): Array[Int] =
+    keep(sortedPool(cands.length, cands(_)._1, cands(_)._2, target),
+      cands(_)._2, m, backfill)((c, k) => vs.dist(cands(c)._1, cands(k)._1))
+      .map(cands(_)._1)
 
   /** The same prune over candidates that CARRY their vectors — the
     * distributed-build variant, where no global [[VecStore]] exists and
@@ -214,58 +188,67 @@ object OcclusionPrune {
     * vectors (external long ids). `cands`: (id, distToTarget, vec), may
     * contain duplicates and the target itself (`targetId` excluded). */
   def pruneVecs(cands: Array[(Long, Double, Array[Float])], targetId: Long,
-                m: Int, metric: graft.core.Metric,
-                backfill: Boolean = true): Array[Long] = {
-    if (cands.isEmpty) return Array.empty
-    val best = new java.util.HashMap[Long, (Double, Array[Float])]()
-    cands.foreach { case (id, d, v) =>
-      if (id != targetId) {
-        val prev = best.get(id)
-        if (prev == null || d < prev._1) best.put(id, (d, v))
-      }
-    }
-    if (best.isEmpty) return Array.empty
-    val pool = new Array[(Long, Double, Array[Float])](best.size)
-    var i = 0
-    val it = best.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      pool(i) = (e.getKey, e.getValue._1, e.getValue._2); i += 1
-    }
-    java.util.Arrays.sort(pool,
-      Ordering.by((p: (Long, Double, Array[Float])) => (p._2, p._1)))
+                m: Int, metric: Metric,
+                backfill: Boolean = true): Array[Long] =
+    keep(sortedPool(cands.length, cands(_)._1, cands(_)._2, targetId),
+      cands(_)._2, m, backfill)((c, k) => metric.dist(cands(c)._3, cands(k)._3))
+      .map(cands(_)._1)
 
-    val kept = new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])](m)
-    kept += ((pool(0)._1, pool(0)._3))
-    var s = 1
-    while (kept.length < m && s < pool.length) {
-      val (pid, pdist, pvec) = pool(s)
-      var occlude = false
-      var t = 0
-      while (!occlude && t < kept.length) {
-        if (kept(t)._1 == pid) occlude = true
-        else if (metric.dist(pvec, kept(t)._2) < pdist) occlude = true
-        t += 1
+  /** Positions (into a candidate array of `n`) of each id's best entry,
+    * the target excluded, in ascending [[Neighbor]] order. */
+  private def sortedPool(n: Int, id: Int => Long, dist: Int => Double,
+                         target: Long): Array[Int] = {
+    val best = new java.util.HashMap[java.lang.Long, Integer]()
+    var i = 0
+    while (i < n) {
+      val c = id(i)
+      if (c != target) {
+        val prev = best.get(c)
+        if (prev == null || Neighbor.less(dist(i), c, dist(prev), c)) best.put(c, i)
       }
-      if (!occlude) kept += ((pid, pvec))
+      i += 1
+    }
+    val pool = best.values().toArray(new Array[Integer](best.size))
+    java.util.Arrays.sort(pool, Neighbor.orderingOf[Integer](dist(_), id(_)))
+    pool.map(_.intValue)
+  }
+
+  /** The occlusion scan over a sorted, deduplicated `pool` of candidate
+    * positions: keep p unless some already-kept k has
+    * `pairDist(p, k) < dist(p)`; `backfill` then tops up to m in pool
+    * order. Returns kept positions, in kept order. */
+  private def keep(pool: Array[Int], dist: Int => Double, m: Int,
+                   backfill: Boolean)(pairDist: (Int, Int) => Double): Array[Int] = {
+    if (pool.isEmpty) return Array.empty
+    val kept = new Array[Int](math.max(1, math.min(m, pool.length)))
+    val taken = new Array[Boolean](pool.length)
+    kept(0) = pool(0); taken(0) = true
+    var nk = 1
+    var s = 1
+    while (nk < m && s < pool.length) {
+      val p = pool(s)
+      val pd = dist(p)
+      var t = 0
+      while (t < nk && !(pairDist(p, kept(t)) < pd)) t += 1
+      if (t == nk) { kept(nk) = p; nk += 1; taken(s) = true }
       s += 1
     }
-    val result = kept.map(_._1)
     if (backfill) {
       s = 1
-      while (result.length < m && s < pool.length) {
-        if (!result.contains(pool(s)._1)) result += pool(s)._1
+      while (nk < m && s < pool.length) {
+        if (!taken(s)) { kept(nk) = pool(s); nk += 1 }
         s += 1
       }
     }
-    result.toArray
+    java.util.Arrays.copyOf(kept, nk)
   }
 }
 
 /** Best-first beam search over an adjacency graph (Q1 SearchRoarGraph,
   * src/index_bipartite.cpp:2311-2420, and Q4 SearchProjectionGraphInternal,
   * :1279-1350, unified). Runs inside one Spark task; the caller broadcasts
-  * (adjacency, VecStore) and maps query partitions through [[search]].
+  * (adjacency, vectors or codes) and maps query partitions through
+  * [[search]].
   */
 object BeamSearch {
 
@@ -289,13 +272,15 @@ object BeamSearch {
     @inline def set(i: Int): Unit = tags(i) = epoch
   }
 
-  /** One query. `exclude` (build-time self-search) skips that node during
+  /** One query, scored by `dist(i)`: node i's distance to it — a
+    * [[VecStore]] row distance, or PqGraphSearch's ADC table lookup.
+    * `exclude` (build-time self-search) skips that node during
     * expansion exactly like Q4's `nbr == tgt` check (:1330). `seeds` adds
     * extra entry nodes beside `ep` — the deterministic analogue of the
     * reference's random multi-seeding (src/index_bipartite.cpp:287-294),
     * which rescues recall on graphs where parts are unreachable from the
     * single entry point. */
-  def search(adj: Array[Array[Int]], vs: VecStore, query: Array[Float],
+  def search(adj: Array[Array[Int]], dist: Int => Double,
              k: Int, l: Int, ep: Int, visited: Visited,
              exclude: Int = -1, collectPool: Boolean = false,
              seeds: Array[Int] = Array.empty): Result = {
@@ -303,14 +288,14 @@ object BeamSearch {
     visited.nextEpoch()
     var cmps = 0
     var hops = 0
-    queue.insert(ep, vs.distTo(ep, query))
+    queue.insert(ep, dist(ep))
     visited.set(ep)
     var si = 0
     while (si < seeds.length) {
       val s = seeds(si)
       if (s != exclude && !visited.test(s)) {
         visited.set(s)
-        queue.insert(s, vs.distTo(s, query))
+        queue.insert(s, dist(s))
         cmps += 1
       }
       si += 1
@@ -328,7 +313,7 @@ object BeamSearch {
         val nbr = nbrs(j)
         if (nbr != exclude && !visited.test(nbr)) {
           visited.set(nbr)
-          val d = vs.distTo(nbr, query)
+          val d = dist(nbr)
           cmps += 1
           queue.insert(nbr, d)
         }

@@ -194,8 +194,8 @@ object PqGraphSearch {
     lut
   }
 
-  /** Approximate top-`refineK` per query: beam over the graph scoring
-    * candidates through the per-query LUT. Output
+  /** Approximate top-`refineK` per query: [[BeamSearch.search]] over the
+    * graph, scoring candidates through the per-query LUT. Output
     * (query_id, knn: array&lt;struct&lt;id, dist&gt;&gt;, cmps, hops) with
     * PQ-domain dists — feed to [[searchRefined]] (or
     * [[Quantize.refineTopK]]) for exact final ranking. */
@@ -214,48 +214,16 @@ object PqGraphSearch {
         val mm = x.m; val kc = x.kCodes; val codes = x.codes
         it.map { case (qid, q) =>
           val lut = lutFor(q, x)
-          @inline def distTo(i: Int): Double = {
+          val adc: Int => Double = { i =>
             val off = i * mm
             var s = 0; var d = 0.0
             while (s < mm) { d += lut(s * kc + (codes(off + s) & 0xFF)); s += 1 }
             d
           }
-          val queue = new NeighborQueue(l)
-          visited.nextEpoch()
-          var cmps = 0; var hops = 0
-          queue.insert(x.ep, distTo(x.ep))
-          visited.set(x.ep)
-          val seeds = graft.build.RoarGraphBuilder.seedsFor(qid, numSeeds, x.n)
-          var si = 0
-          while (si < seeds.length) {
-            val sd = seeds(si)
-            if (!visited.test(sd)) {
-              visited.set(sd); queue.insert(sd, distTo(sd)); cmps += 1
-            }
-            si += 1
-          }
-          while (queue.hasUnexpanded) {
-            val (cur, _) = queue.closestUnexpanded()
-            hops += 1
-            val nbrs = x.adj(cur)
-            var j = 0
-            while (j < nbrs.length) {
-              val nb = nbrs(j)
-              if (!visited.test(nb)) {
-                visited.set(nb)
-                queue.insert(nb, distTo(nb))
-                cmps += 1
-              }
-              j += 1
-            }
-          }
-          val kk = math.min(refineK, queue.size)
-          val out = new Array[(Long, Double)](kk)
-          var i = 0
-          while (i < kk) {
-            out(i) = (x.ids(queue.idAt(i)), queue.distAt(i)); i += 1
-          }
-          (qid, out, cmps, hops)
+          val r = BeamSearch.search(x.adj, adc, refineK, l, x.ep, visited,
+            seeds = graft.build.RoarGraphBuilder.seedsFor(qid, numSeeds, x.n))
+          (qid, r.ids.zip(r.dists).map { case (i, d) => (x.ids(i), d) },
+            r.cmps, r.hops)
         }
       }.toDF("query_id", "knn", "cmps", "hops")
       .withColumn("knn", expr(

@@ -243,7 +243,7 @@ object QueriesAnn {
   // 16 bytes of codes vs 256 vector bytes = a true 16× compression; the
   // earlier 8×64 layout quantized 8-d cells with 6-bit codebooks — coarse
   // cells were the recall floor (0.47), not the code count
-  // 1 Lloyd iteration: measured (tools/PqLab) — extra iterations move
+  // 1 Lloyd iteration: measured — extra iterations move
   // recall by 0.000 on this corpus at every tested cap, the refine stage
   // dominates quality anyway, and each iteration costs ~1.5 s engine-side
   // plus 16 unrolled CTE chains oracle-side

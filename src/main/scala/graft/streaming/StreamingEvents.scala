@@ -33,20 +33,6 @@ object StreamingEvents {
   def hourlyRollup(stream: DataFrame): DataFrame =
     EventOps.hourlyRollup(stream)
 
-  /** Watermarked, append-mode hourly rollup: the production shape — late
-    * events beyond 1h are dropped, closed windows emit exactly once. */
-  def hourlyRollupWatermarked(stream: DataFrame): DataFrame = {
-    val withTs = stream
-      .withColumn("event_ts", timestamp_millis(EventOps.tsMs(stream)))
-    withTs
-      .withWatermark("event_ts", "1 hour")
-      .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
-      .agg(count("*").as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-      .select(unix_millis(col("window.start")).as("hour_ms"),
-        col("event_type"), col("n"), col("sum_value"))
-  }
-
   /** One closed user session (mirrors EventOps.sessionize's output row). */
   final case class Session(user_id: Long, session_start_ms: Long,
                            session_end_ms: Long, n_events: Long,

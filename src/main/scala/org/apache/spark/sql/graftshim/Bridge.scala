@@ -1,22 +1,15 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal visibility bridge: Column ⇄ catalyst Expression conversion and
-  * DataFrame-from-LogicalPlan are `private[sql]` in Spark 4's classic API;
-  * custom native expressions (graft.functions.DistanceExpressions) and the
-  * custom KnnJoin plan node (graft.plans) need exactly these calls. No
-  * behavior — pure forwarding. */
+/** Minimal visibility bridge: Column ⇄ catalyst Expression conversion is
+  * `private[sql]` in Spark 4's classic API, and the custom native
+  * expressions (graft.functions: DistanceExpressions, MatVecRotate,
+  * CharPolyHash) need exactly these calls. No behavior — pure
+  * forwarding. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 }

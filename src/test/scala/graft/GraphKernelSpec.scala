@@ -86,7 +86,7 @@ class GraphKernelSpec extends AnyFunSuite {
     }
     val visited = new BeamSearch.Visited(n * n)
     val q = Array(5.2f, 3.1f) // nearest = (5,3) = 43
-    val res = BeamSearch.search(adj, vs, q, 3, 20, ep = 0, visited)
+    val res = BeamSearch.search(adj, vs.distTo(_, q), 3, 20, ep = 0, visited)
     assert(res.ids.head == 43)
     assert(res.hops > 0 && res.cmps > 0)
     // dists ascending
@@ -103,7 +103,8 @@ class GraphKernelSpec extends AnyFunSuite {
         .map { case (a, b) => a * n + b }.toArray
     }
     val visited = new BeamSearch.Visited(n * n)
-    val res = BeamSearch.search(adj, vs, vs.row(5), 5, 16, ep = 0, visited,
+    val q = vs.row(5)
+    val res = BeamSearch.search(adj, vs.distTo(_, q), 5, 16, ep = 0, visited,
       exclude = 5, collectPool = true)
     assert(!res.ids.contains(5))
     assert(res.pool.nonEmpty && !res.pool.exists(_._1 == 5))

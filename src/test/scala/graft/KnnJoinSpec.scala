@@ -254,6 +254,18 @@ class KnnJoinSpec extends SparkSpec {
       partial.schema("knn").dataType)
   }
 
+  test("a NaN distance never displaces a finite neighbor (k=2 join)") {
+    import spark.implicits._
+    val q = Seq((0L, Array(0f, 0f))).toDF("id", "vec")
+    // one partition, NaN row first: it enters the partial heap first
+    val b = Seq((0L, Array(Float.NaN, 0f)), (1L, Array(5f, 5f)),
+      (2L, Array(2f, 0f)), (3L, Array(1f, 0f))).toDF("id", "vec").coalesce(1)
+    val knn = KnnJoin(q, b, 2, Metric.L2).head()
+      .getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("knn")
+    assert(knn.map(_.getAs[Long]("id")) == Seq(3L, 2L))
+    assert(knn.map(_.getAs[Double]("dist")) == Seq(1.0, 4.0))
+  }
+
   test("BoundedTopK keeps k smallest with (dist, id) tie-break") {
     val h = new KnnJoin.BoundedTopK(3)
     Seq((5.0, 1L), (1.0, 9L), (1.0, 2L), (3.0, 7L), (0.5, 4L), (9.0, 0L))

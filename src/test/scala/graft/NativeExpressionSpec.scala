@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Tables
 import graft.functions.VectorFunctions
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The native codegen distance expressions must be bit-identical to their
@@ -73,6 +74,36 @@ class NativeExpressionSpec extends SparkSpec {
     val e = L2SqDistance(null, null)
     val d = e.nullSafeEval(x, y).asInstanceOf[Double]
     assert(math.abs(d - (0.25 + 4.0 + 16.0)) < 1e-12)
+  }
+
+  test("mismatched vector dimensions fail by name, codegen on and off") {
+    // computed (not literal) arrays, so no constant folding evaluates the
+    // expression at planning time: the row reaches the compiled or the
+    // interpreted operator
+    val x = col("id").cast("float")
+    val rows = spark.range(1).select(array(x, x, x, x).as("a"),
+      array((col("id") + 1).cast("float")).as("b"))
+    def cause(t: Throwable): Option[IllegalArgumentException] = t match {
+      case null => None
+      case e: IllegalArgumentException => Some(e)
+      case e => cause(e.getCause)
+    }
+    for ((wholeStage, factory) <- Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN"));
+         (name, f) <- Seq[(String, (Column, Column) => Column)](
+           "graft_l2sq" -> VectorFunctions.l2Sq, "graft_negip" -> VectorFunctions.negIp,
+           "graft_cosine" -> VectorFunctions.cosineDist)) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try {
+        val e = intercept[Exception](rows.select(f(col("a"), col("b"))).collect())
+        assert(cause(e).exists(_.getMessage.contains(
+          s"$name: vector dimension mismatch (4 vs 1)")),
+          s"$name (wholeStage=$wholeStage, $factory): $e")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
   }
 
   test("native mat-rotate matches the HOF formulation bit-exactly and stays codegen'd") {

@@ -37,7 +37,7 @@ class TopKAggregatorSpec extends SparkSpec {
 
   test("merge of partial top-ks equals top-k of the union") {
     val k = 4
-    val a = new TopKAggregator(k)
+    val a = TopKAggregator(k)
     val xs = Seq(Neighbor(1, 5.0), Neighbor(2, 1.0), Neighbor(3, 3.0))
     val ys = Seq(Neighbor(4, 0.5), Neighbor(5, 2.0), Neighbor(6, 9.0))
     val bufA = xs.foldLeft(a.zero)(a.reduce)
@@ -45,5 +45,20 @@ class TopKAggregatorSpec extends SparkSpec {
     val merged = a.finish(a.merge(bufA, bufB))
     val naive = (xs ++ ys).sorted(Neighbor.ordering).take(k)
     assert(merged.toSeq == naive)
+
+    // a NaN partial, and -0.0 beside 0.0: the merge must rank exactly as
+    // Spark SQL's sort_array, which merges the kernels' partials
+    import spark.implicits._
+    val nan = Seq(Neighbor(7, Double.NaN), Neighbor(10, -0.0), Neighbor(9, 2.0))
+    val zeros = Seq(Neighbor(8, 0.0), Neighbor(11, Double.NaN), Neighbor(3, 2.0))
+    val sqlIds = (nan ++ zeros).map(n => (n.dist, n.id)).toDF("dist", "id")
+      .agg(sort_array(collect_list(struct(col("dist"), col("id")))).as("s"))
+      .select(col("s.id")).as[Seq[Long]].head()
+    for (k2 <- 1 to 6) {
+      val b = TopKAggregator(k2)
+      val got = b.finish(b.merge(nan.foldLeft(b.zero)(b.reduce),
+        zeros.foldLeft(b.zero)(b.reduce)))
+      assert(got.map(_.id).toSeq == sqlIds.take(k2), s"k=$k2")
+    }
   }
 }
