@@ -5,6 +5,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import scala.reflect.ClassTag
 
 /** Exact kNN join (SURVEY.md §2.3 A1): for every query vector, the k nearest
   * base vectors under a metric. The reference consumes this as a precomputed
@@ -116,15 +119,76 @@ object KnnJoin {
         -s
     }
 
-  /** Shared lazy-block top-k drain (used by this join and
-    * [[graft.ops.Quantize.adcTopK]]): stream query blocks through the
-    * driver one at a time (`toLocalIterator` runs one job per partition
-    * lazily — the driver never holds the whole query side), broadcast one
-    * block, materialize its partial top-k eagerly (PlanUtil.cutDF:
-    * reliable checkpoint when the session has a checkpoint dir, local
-    * otherwise) so the block's broadcast can be destroyed before the next
-    * block is drained — no accumulation of broadcasts or query bytes
-    * across the job's lifetime.
+  /** Named failure for a vector whose length differs from its block's
+    * dimension `dim` (the style of the Catalyst distance expressions). */
+  private def checkDim(dim: Int, n: Int): Unit =
+    if (n != dim)
+      throw new IllegalArgumentException(s"kNN join: vector dimension mismatch ($dim vs $n)")
+
+  /** Driver-side row map of the query vectors: widens each one and holds
+    * it to the first query's dimension (once per row, never per pair). */
+  private def queryWidener(normalize: Boolean): Array[Float] => Array[Double] = {
+    var dim = -1
+    v => {
+      if (dim < 0) dim = v.length
+      checkDim(dim, v.length)
+      widen(v, normalize)
+    }
+  }
+
+  /** The query side as position-tiled blocks of at most `blockRows` rows,
+    * each row mapped by `rowMap` on the driver. Rows come to the driver
+    * with one `runJob` per group of consecutive partitions, not one job per
+    * partition: the first group is one partition; each later one is sized
+    * from the rows per partition seen so far to fill the rest of the
+    * current block, or, while no row has been seen, is 4x the partitions
+    * scanned (Spark's own `executeTake` scale-up). Partition order is
+    * kept and each partition is computed once, so the blocks are exactly
+    * the position tiling of the query side. The driver holds at most one
+    * block plus one fetched group. Rows travel as the plan's own binary
+    * rows and are decoded on the driver, as `collect` does. */
+  private def queryBlocks[R, Q: ClassTag](queries: Dataset[R],
+      rowMap: R => Q, blockRows: Int): Iterator[Array[Q]] = {
+    val qe = queries.queryExecution
+    val rdd = qe.toRdd
+    val decode = encoderFor(queries.encoder)
+      .resolveAndBind(qe.analyzed.output).createDeserializer()
+    val nParts = rdd.getNumPartitions
+    var scanned = 0 // partitions fetched so far
+    var seen = 0L // rows in them
+    var pending: Iterator[InternalRow] = Iterator.empty // fetched, not yet in a block
+    Iterator.continually {
+      val blk = Array.newBuilder[Q]
+      var n = 0
+      while (n < blockRows && (pending.hasNext || scanned < nParts)) {
+        if (pending.hasNext) { blk += rowMap(decode(pending.next())); n += 1 }
+        else {
+          val want =
+            if (scanned == 0) 1.0
+            else if (seen == 0) 4.0 * scanned
+            else math.ceil((blockRows - n).toDouble * scanned / seen)
+          val parts = scanned until
+            scanned + math.max(1, math.min(nParts - scanned, want).toInt)
+          val group = rdd.sparkContext.runJob(rdd,
+            (it: Iterator[InternalRow]) => it.map(_.copy()).toArray, parts)
+          scanned = parts.end
+          seen += group.iterator.map(_.length.toLong).sum
+          pending = group.iterator.flatMap(_.iterator)
+        }
+      }
+      blk.result()
+    }.takeWhile(_.nonEmpty)
+  }
+
+  /** Shared blocked top-k drain (used by this join, [[ivfApprox]] and
+    * the ADC drains of [[graft.ops.Quantize]]): pull the query side to the
+    * driver one block at a time ([[queryBlocks]]: one job per group of
+    * partitions, and the driver never holds the whole query side),
+    * broadcast one block, materialize its partial top-k eagerly
+    * (PlanUtil.cutDF: reliable checkpoint when the session has a checkpoint
+    * dir, local otherwise) so the block's broadcast can be destroyed before
+    * the next block is drained — no accumulation of broadcasts or query
+    * bytes across the job's lifetime.
     *
     * Blocks tile the QUERY set disjointly, so the per-query merge is
     * applied PER BLOCK and the block's per-(query, partition) partial
@@ -142,7 +206,7 @@ object KnnJoin {
     * materialized (a union of per-block cuts).
     *
     * PRECONDITION: query ids must be UNIQUE across the whole drain.
-    * Blocks tile the iterator by POSITION, not by id, so a duplicated id
+    * Blocks tile the query side by POSITION, not by id, so a duplicated id
     * that lands in two blocks produces two output rows (one per-block
     * top-k each) instead of one globally merged top-k. Every current
     * caller ([[apply]], [[ivfApprox]], Quantize.adcTopK) feeds ids from
@@ -162,16 +226,16 @@ object KnnJoin {
     * or a marker written by an older kernel version) fails loudly rather
     * than serving a stale block — delete the stale `block_<i>` dir and
     * its `.marker` to recompute that block under the current code. */
-  private[graft] def blockedTopK[Q](spark: org.apache.spark.sql.SparkSession,
-      qIt: Iterator[Q], blockRows: Int, k: Int, emptyMsg: String,
+  private[graft] def blockedTopK[R, Q: ClassTag](queries: Dataset[R],
+      rowMap: R => Q, blockRows: Int, k: Int, emptyMsg: String,
       checkpointDir: Option[String] = None, blockKey: Q => Long = null,
       markerContext: String = "")(
-      partial: org.apache.spark.broadcast.Broadcast[Array[Q]] => DataFrame)(
-      implicit ct: scala.reflect.ClassTag[Q]): DataFrame = {
-    require(qIt.hasNext, emptyMsg)
+      partial: org.apache.spark.broadcast.Broadcast[Array[Q]] => DataFrame): DataFrame = {
     require(checkpointDir.isEmpty == (blockKey == null),
       "blockedTopK: checkpointDir and blockKey come together")
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
+    implicit val spark: org.apache.spark.sql.SparkSession = queries.sparkSession
+    val blocks = queryBlocks(queries, rowMap, blockRows)
+    require(blocks.hasNext, emptyMsg)
     // order-sensitive identity of a block slice (position-tiled blocks),
     // versioned (v2) and bound to the tiling (block index + blockRows)
     // and the caller's knob/kernel context — a marker from a different
@@ -182,8 +246,7 @@ object KnnJoin {
       while (i < blk.length) { h = h * 31 + blockKey(blk(i)); i += 1 }
       s"v2:b$bi:r$blockRows:${blk.length}:$h:$markerContext"
     }
-    val mergedBlocks = qIt.grouped(blockRows).zipWithIndex.map { case (blkSeq, bi) =>
-      val blk = blkSeq.toArray
+    val mergedBlocks = blocks.zipWithIndex.map { case (blk, bi) =>
       val cpPath = checkpointDir.map(d => s"$d/block_$bi")
       val markerPath = cpPath.map(p => s"$p.marker")
       val hit = cpPath.exists(p =>
@@ -228,7 +291,9 @@ object KnnJoin {
 
   /** Exact kNN join. Inputs must expose (`id`: long, `vec`: array<float>).
     * Returns [query_id: long, knn: array<struct<dist: double, id: long>>],
-    * `knn` sorted by (dist, id) ascending, length <= k.
+    * `knn` sorted by (dist, id) ascending, length <= k. Every query and
+    * base vector must have the same dimension; a mismatch fails with a
+    * named `IllegalArgumentException`.
     *
     * @param queryBlockRows max queries collected+broadcast per block; base
     *        side makes one pass per block (tune so a block is ~10s of MB).
@@ -240,29 +305,86 @@ object KnnJoin {
 
     val baseDs: Dataset[(Long, Array[Float])] =
       base.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])]
-    import scala.jdk.CollectionConverters._
-    val norm = metric.needNormalize
-    val qIt = queries.select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].toLocalIterator().asScala
-      .map { case (id, v) => (id, widen(v, norm)) }
+    val qDs = queries.select(col("id").cast("long"), col("vec"))
+      .as[(Long, Array[Float])]
+    val widenQ = queryWidener(metric.needNormalize)
 
-    blockedTopK(spark, qIt, queryBlockRows, k, "kNN join: empty query set") { bc =>
+    blockedTopK(qDs, (q: (Long, Array[Float])) => (q._1, widenQ(q._2)),
+        queryBlockRows, k, "kNN join: empty query set") { bc =>
       baseDs.mapPartitions { it =>
         val qs = bc.value
-        val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-        it.foreach { case (bid, bvec) =>
-          val bv = widen(bvec, norm)
-          var qi = 0
-          while (qi < qs.length) {
-            heaps(qi).push(distD(metric, qs(qi)._2, bv), bid)
-            qi += 1
-          }
-        }
-        Iterator.range(0, qs.length).flatMap { qi =>
-          val r = heaps(qi).result()
-          if (r.isEmpty) None else Some((qs(qi)._1, r))
-        }
+        val all = Array.range(0, qs.length)
+        sweep(qs.map(_._1), qs.map(_._2), it.map { case (id, v) => (id, v, 0) },
+          _ => all, k, metric)
       }.toDF("query_id", "partial")
+    }
+  }
+
+  /** Base rows buffered per run in [[sweep]]: 64 widened 200-d rows are
+    * ~100 KB, L2-resident. */
+  private val RunBuf = 64
+
+  /** The scoring loop of [[apply]] and [[ivfApprox]]: one bounded heap per
+    * block query, fed by one pass over a partition's base rows. Each row
+    * carries a run key, and `probers(key)` lists the block queries that
+    * score rows of that key: every query under one key for the exact join,
+    * the queries probing the row's IVF list for [[ivfApprox]].
+    *
+    * Run-blocked (the measured 10M bottleneck was MEMORY, not FLOPs:
+    * row-major iteration touches ~|probers|·1.6 KB of RANDOM query-vector
+    * reads PER ROW, and 24 threads' prober sets evict each other out of
+    * shared L3 — ~60-85 min per 100k-query block). Consecutive rows of one
+    * key are buffered in runs of <= RunBuf, and each run is swept with its
+    * probing queries OUTER x buffered rows INNER. Each query vector is read
+    * once per run (sequentially, prefetcher-friendly) instead of once per
+    * row, and the heap reference is hoisted per (query, run).
+    * Result-neutral: the same (query, row) pairs meet the same `distD`, and
+    * BoundedTopK is insertion-order-independent ((dist, id) tie-break,
+    * spec-pinned).
+    *
+    * Each base row's length is held to the block's dimension once per row.
+    * Returns the non-empty (query id, partial top-k) rows. */
+  private def sweep(qids: Array[Long], qvs: Array[Array[Double]],
+                    rows: Iterator[(Long, Array[Float], Int)],
+                    probers: Int => Array[Int], k: Int,
+                    metric: Metric): Iterator[(Long, Array[(Double, Long)])] = {
+    val dim = qvs(0).length
+    val norm = metric.needNormalize
+    val heaps = Array.fill(qvs.length)(new BoundedTopK(k))
+    val bufIds = new Array[Long](RunBuf)
+    val bufVecs = new Array[Array[Double]](RunBuf)
+    var bufN = 0
+    var bufKey = -1
+    var probing: Array[Int] = Array.emptyIntArray
+    def flushRun(): Unit = if (bufN > 0) {
+      var j = 0
+      while (j < probing.length) {
+        val qi = probing(j)
+        val qv = qvs(qi)
+        val h = heaps(qi)
+        var r = 0
+        while (r < bufN) {
+          h.push(distD(metric, qv, bufVecs(r)), bufIds(r))
+          r += 1
+        }
+        j += 1
+      }
+      bufN = 0
+    }
+    rows.foreach { case (bid, bvec, key) =>
+      checkDim(dim, bvec.length)
+      if (key != bufKey) { flushRun(); bufKey = key; probing = probers(key) }
+      else if (bufN == RunBuf) flushRun()
+      if (probing.length > 0) {
+        bufIds(bufN) = bid
+        bufVecs(bufN) = widen(bvec, norm)
+        bufN += 1
+      }
+    }
+    flushRun()
+    Iterator.range(0, qvs.length).flatMap { qi =>
+      val r = heaps(qi).result()
+      if (r.isEmpty) None else Some((qids(qi), r))
     }
   }
 
@@ -270,10 +392,12 @@ object KnnJoin {
     * ascending centroid id — the IVF coarse-quantization step of
     * [[ivfApprox]], a pure function of (vector, centroid grid) so the
     * distributed assignment pass and any driver-side check agree
-    * exactly (spec-gated). */
+    * exactly (spec-gated). A query whose dimension differs from the
+    * grid's fails with the join's named error. */
   private[graft] def probesFor(raw: Array[Double],
                                centsD: Array[Array[Double]],
                                nprobe: Int): Array[Int] = {
+    if (centsD.nonEmpty) checkDim(raw.length, centsD(0).length)
     val heap = new BoundedTopK(nprobe)
     var c = 0
     while (c < centsD.length) {
@@ -357,8 +481,8 @@ object KnnJoin {
     * array (never a silently missing row — a dropped row would silently
     * lose the query's phase-1 edges downstream and overstate
     * inner-join agreement metrics). */
-  /** Base size below which [[ivfApprox]]'s routed table is NOT
-    * checkpointed (see the size-derived rationale at its use site). */
+  /** Base size up to which [[ivfApprox]]'s first query block scans the
+    * routing plan uncut (see the size-derived rationale at its use site). */
   private val SingleScanMaxRows = 1000000L
 
   def ivfApprox(queries: DataFrame, base: DataFrame, k: Int, metric: Metric,
@@ -443,28 +567,35 @@ object KnnJoin {
       cents.toSeq.toDF("centroid_id", "vec"))
       .select(col("id"), col("vec"), col("centroid_id").cast("int"))
       .sortWithinPartitions(col("centroid_id"))
-    val (routed, releaseRouted) = checkpointDir match {
-      case Some(d) =>
-        if (!hasCp("routed"))
-          routedPlan.write.mode("overwrite").parquet(s"$d/routed")
-        // cut the parquet read: the drain makes one full pass PER BLOCK,
-        // and re-deserializing the routed table from parquet every pass
-        // (~8 GB at the 10M regime) is minutes of per-block overhead the
-        // in-session cut pays once
-        graft.ops.graph.PlanUtil.cutReleasable(
-          spark.read.parquet(s"$d/routed").as[(Long, Array[Float], Int)])
-      case None =>
-        // size-derived (the item-10 rule): below SingleScanMaxRows the
-        // drain is a single query block (queryBlockRows defaults to 100k
-        // and the routed recompute is one cheap kernel pass even if not),
-        // so materializing the routed table buys nothing and costs a
-        // checkpoint job + a pinned copy. Above it — or whenever the
-        // durable path is in play — the per-block re-scan cost is real and
-        // the cut stays.
-        if (nBaseRows >= 0 && nBaseRows <= SingleScanMaxRows)
-          (routedPlan.as[(Long, Array[Float], Int)], () => ())
-        else graft.ops.graph.PlanUtil.cutReleasable(
-          routedPlan.as[(Long, Array[Float], Int)])
+    val routedDs = routedPlan.as[(Long, Array[Float], Int)]
+    var routedCut: (Dataset[(Long, Array[Float], Int)], () => Unit) =
+      checkpointDir match {
+        case Some(d) =>
+          if (!hasCp("routed"))
+            routedPlan.write.mode("overwrite").parquet(s"$d/routed")
+          // cut the parquet read: the drain makes one full pass PER BLOCK,
+          // and re-deserializing the routed table from parquet every pass
+          // (~8 GB at the 10M regime) is minutes of per-block overhead the
+          // in-session cut pays once
+          graft.ops.graph.PlanUtil.cutReleasable(
+            spark.read.parquet(s"$d/routed").as[(Long, Array[Float], Int)])
+        case None if nBaseRows < 0 || nBaseRows > SingleScanMaxRows =>
+          graft.ops.graph.PlanUtil.cutReleasable(routedDs)
+        case None => null
+      }
+    // size-derived (the item-10 rule): below SingleScanMaxRows the first
+    // block scans the routing plan itself — a one-block drain runs the
+    // routing kernel once, inside its scan, and a cut would cost a
+    // checkpoint job + a pinned copy. A second block would re-run the
+    // kernel, so the table is cut before the second block is scanned.
+    // Above it — or whenever the durable path is in play — the cut is made
+    // up front.
+    var blocksScanned = 0
+    def routedForBlock(): Dataset[(Long, Array[Float], Int)] = {
+      if (routedCut == null && blocksScanned > 0)
+        routedCut = graft.ops.graph.PlanUtil.cutReleasable(routedDs)
+      blocksScanned += 1
+      if (routedCut == null) routedDs else routedCut._1
     }
 
     val norm = metric.needNormalize
@@ -475,8 +606,7 @@ object KnnJoin {
     // are executor work. Probe sets are deterministic per query
     // (BoundedTopK over (dist, centroid id)) regardless of partitioning.
     val centsBc = spark.sparkContext.broadcast(centsD)
-    import scala.jdk.CollectionConverters._
-    val qIt = queries.select(col("id").cast("long"), col("vec"))
+    val qDs = queries.select(col("id").cast("long"), col("vec"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val cd = centsBc.value
@@ -484,8 +614,7 @@ object KnnJoin {
           (id, v, probesFor(widen(v, normalize = false), cd, nprobe))
         }
       }
-      .toLocalIterator().asScala
-      .map { case (id, v, ps) => (id, widen(v, norm), ps) }
+    val widenQ = queryWidener(norm)
 
     // base-identity proxy for the block markers: the centroid grid is a
     // deterministic function of the base corpus (hash-sampled, persisted
@@ -500,14 +629,15 @@ object KnnJoin {
       }
       h
     }
-    val out = blockedTopK(spark, qIt, queryBlockRows, k,
-      "IVF kNN join: empty query set",
+    val out = blockedTopK(qDs,
+      (q: (Long, Array[Float], Array[Int])) => (q._1, widenQ(q._2), q._3),
+      queryBlockRows, k, "IVF kNN join: empty query set",
       checkpointDir = checkpointDir,
       blockKey = if (checkpointDir.isEmpty) null
                  else (q: (Long, Array[Double], Array[Int])) => q._1,
       markerContext = s"k=$k,np=$nprobe,cents=$centIdHash," +
         graft.core.CpIO.KernelVersion) { bc =>
-      routed.mapPartitions { it =>
+      routedForBlock().mapPartitions { it =>
         val qs = bc.value
         // centroid → indices of the block's queries probing it, so a base
         // row costs exactly |queries probing its list| distance evals.
@@ -517,57 +647,13 @@ object KnnJoin {
         // boxed buffers it used) OOM'd a 12 GiB heap at 16 concurrent
         // tasks; the counting-sort build below allocates primitives only
         val byCent = centIndexFor(qs, nlist)
-        val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-        // Run-blocked sweep (the measured 10M bottleneck was MEMORY, not
-        // FLOPs: row-major iteration touches ~|probers|·1.6 KB of RANDOM
-        // query-vector reads PER ROW, and 24 threads' prober sets evict
-        // each other out of shared L3 — ~60-85 min per 100k-query block).
-        // The routed input is centroid-sorted within partitions, so rows
-        // of one list arrive consecutively: buffer a run of <= RunBuf rows
-        // (~100 KB — L2-resident), then sweep its probing queries OUTER x
-        // buffered rows INNER. Each query vector is now read once per RUN
-        // (sequentially, prefetcher-friendly) instead of once per row, and
-        // the heap reference is hoisted per (query, run). Result-neutral:
-        // same (query, row) pair set, and BoundedTopK is
-        // insertion-order-independent ((dist, id) tie-break, spec-pinned).
-        val RunBuf = 64
-        val bufIds = new Array[Long](RunBuf)
-        val bufVecs = new Array[Array[Double]](RunBuf)
-        var bufN = 0
-        var bufCid = -1
-        def flushRun(): Unit = if (bufN > 0) {
-          val probing = byCent(bufCid)
-          var j = 0
-          while (j < probing.length) {
-            val qi = probing(j)
-            val qv = qs(qi)._2
-            val h = heaps(qi)
-            var r = 0
-            while (r < bufN) {
-              h.push(distD(metric, qv, bufVecs(r)), bufIds(r))
-              r += 1
-            }
-            j += 1
-          }
-          bufN = 0
-        }
-        it.foreach { case (bid, bvec, cid) =>
-          if (cid != bufCid) { flushRun(); bufCid = cid }
-          else if (bufN == RunBuf) flushRun()
-          if (byCent(cid).length > 0) {
-            bufIds(bufN) = bid
-            bufVecs(bufN) = widen(bvec, norm)
-            bufN += 1
-          }
-        }
-        flushRun()
-        Iterator.range(0, qs.length).flatMap { qi =>
-          val r = heaps(qi).result()
-          if (r.isEmpty) None else Some((qs(qi)._1, r))
-        }
+        // the routed input is centroid-sorted within partitions, so rows
+        // of one list arrive consecutively as one run of the sweep
+        sweep(qs.map(_._1), qs.map(_._2), it, byCent(_), k, metric)
       }.toDF("query_id", "partial")
     }
-    releaseRouted() // blockedTopK returns materialized; the routing is dead
+    // blockedTopK returns materialized; the routing is dead
+    if (routedCut != null) routedCut._2()
     centsBc.destroy() // the drain is complete; the centroid grid is dead
     // full probe scores every (query, base) pair, so with a known non-empty
     // base every drained query already has a non-empty heap — the coverage

@@ -281,15 +281,14 @@ object Quantize {
 
     val codesDs = codes.select(col("id").cast("long"), col("codes"))
       .as[(Long, Array[Int])]
-    import scala.jdk.CollectionConverters._
-    val qIt = queries.select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].toLocalIterator().asScala
+    val qDs = queries.select(col("id").cast("long"), col("vec"))
+      .as[(Long, Array[Float])]
 
-    // the shared lazy-block drain (KnnJoin.blockedTopK) materializes each
+    // the shared blocked drain (KnnJoin.blockedTopK) materializes each
     // block's partials eagerly, so by the time it returns every task that
     // read bcCb has run — the codebook broadcast can then be destroyed too
-    val out = KnnJoin.blockedTopK(spark, qIt, queryBlockRows, k,
-      "ADC top-k: empty query set") { bc =>
+    val out = KnnJoin.blockedTopK(qDs, identity[(Long, Array[Float])],
+        queryBlockRows, k, "ADC top-k: empty query set") { bc =>
       codesDs.mapPartitions { it =>
         val qs = bc.value
         val books = bcCb.value
@@ -668,11 +667,10 @@ object Quantize {
     val bcProbes = spark.sparkContext.broadcast(probeMap)
     val codesDs = assignedCodes.select(col("centroid_id").cast("int"),
       col("id").cast("long"), col("codes")).as[(Int, Long, Array[Int])]
-    import scala.jdk.CollectionConverters._
-    val qIt = queriesRot.select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].toLocalIterator().asScala
-    val out = KnnJoin.blockedTopK(spark, qIt, queryBlockRows, r,
-      "IVF-ADC top-k: empty query set") { bc =>
+    val qDs = queriesRot.select(col("id").cast("long"), col("vec"))
+      .as[(Long, Array[Float])]
+    val out = KnnJoin.blockedTopK(qDs, identity[(Long, Array[Float])],
+        queryBlockRows, r, "IVF-ADC top-k: empty query set") { bc =>
       codesDs.mapPartitions { it =>
         val qs = bc.value
         val books = bcCb.value

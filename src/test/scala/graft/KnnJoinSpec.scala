@@ -2,9 +2,34 @@ package graft
 
 import graft.core.{Metric, Tables}
 import graft.ops.KnnJoin
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class KnnJoinSpec extends SparkSpec {
+
+  private def ranks(df: DataFrame): DataFrame =
+    KnnJoin.explodeRanks(df).select("query_id", "rank", "base_id")
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  private def vecRows(df: DataFrame): Array[(Long, Array[Float])] = {
+    import spark.implicits._
+    df.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])]
+      .collect().sortBy(_._1)
+  }
+
+  /** `rows` as an (id, vec) DataFrame of `nParts` partitions, row i in
+    * partition `partOf(i)`, built without a shuffle. */
+  private def spread(rows: Array[(Long, Array[Float])], nParts: Int)(
+      partOf: Int => Int): DataFrame = {
+    import spark.implicits._
+    val placed = rows.indices.map(i => (partOf(i), rows(i)))
+    spark.sparkContext.parallelize(0 until nParts, nParts)
+      .mapPartitionsWithIndex((p, _) =>
+        placed.iterator.collect { case (`p`, r) => r })
+      .toDF("id", "vec")
+  }
 
   private def roundTrip(metric: Metric): Unit = {
     val emb = Tables.vectors(spark, sf0001)
@@ -264,6 +289,95 @@ class KnnJoinSpec extends SparkSpec {
       .getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("knn")
     assert(knn.map(_.getAs[Long]("id")) == Seq(3L, 2L))
     assert(knn.map(_.getAs[Double]("dist")) == Seq(1.0, 4.0))
+  }
+
+  test("ivfApprox at nprobe == nlist over several query blocks is " +
+       "row-identical to the exact join (routed cut before block 2)") {
+    // queryBlockRows = 3 drains 4 blocks: the first scans the routing
+    // plan itself, the routed table is cut before the second
+    val emb = Tables.vectors(spark, sf0001)
+    val q = emb.filter(col("id") < 10)
+    val b = emb.filter(col("id") >= 10)
+    for (metric <- Seq(Metric.L2, Metric.Cosine)) {
+      val exact = ranks(KnnJoin(q, b, 5, metric))
+      val full = ranks(KnnJoin.ivfApprox(q, b, 5, metric, nlist = 8,
+        nprobe = 8, kmIters = 2, queryBlockRows = 3))
+      assert(sameRows(full, exact),
+        s"multi-block full-probe ivfApprox != exact join for $metric")
+    }
+  }
+
+  test("grouped query fetch: 16 partitions, some empty, blocks smaller " +
+       "than a partition") {
+    // partitions 0, 3, ..., 15 are empty (the first group finds no row
+    // and the next one scales up 4x); the other ten hold 4 rows each, so
+    // every 3-row block is cut from inside a fetched group
+    val emb = Tables.vectors(spark, sf0001)
+    val rows = vecRows(emb.filter(col("id") < 40))
+    val nonEmpty = (0 until 16).filter(_ % 3 != 0)
+    val q = spread(rows, 16)(i => nonEmpty(i / 4))
+    assert(q.rdd.getNumPartitions == 16)
+    val b = emb.filter(col("id") >= 40)
+    val tiled = KnnJoin(q, b, 5, Metric.L2, queryBlockRows = 3)
+    assert(tiled.count() == rows.length &&
+      tiled.select("query_id").distinct().count() == rows.length,
+      "expected one row per query")
+    assert(sameRows(ranks(tiled),
+      KnnJoin.crossWindow(q, b, 5, Metric.L2).select("query_id", "rank", "base_id")),
+      "grouped fetch != crossWindow")
+    assert(sameRows(ranks(tiled), ranks(KnnJoin(q, b, 5, Metric.L2))),
+      "grouped fetch != one-block join")
+  }
+
+  test("a one-block query side of 12 partitions starts at most one more " +
+       "job than the same rows in one partition") {
+    val emb = Tables.vectors(spark, sf0001)
+    val rows = vecRows(emb.filter(col("id") < 48))
+    val b = emb.filter(col("id") >= 48)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(q: DataFrame): Int = {
+      org.apache.spark.ListenerBusDrain(sc)
+      val before = jobs.get
+      KnnJoin(q, b, 5, Metric.L2).collect()
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.get - before
+    }
+    sc.addSparkListener(listener)
+    try {
+      val one = jobsOf(spread(rows, 1)(_ => 0))
+      val twelve = jobsOf(spread(rows, 12)(_ % 12))
+      assert(twelve - one <= 1, s"12 partitions: $twelve jobs, 1 partition: $one")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("mismatched vector dimensions fail with a named error " +
+       "(exact and IVF, query longer and shorter)") {
+    import spark.implicits._
+    val b = spark.range(16).map(i => (i, Array(i.toFloat, 1f))).toDF("id", "vec")
+    def q(dim: Int) = Seq((100L, Array.fill(dim)(0.5f)), (101L, Array.fill(dim)(2f)))
+      .toDF("id", "vec")
+    def named(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException in $e"))
+    }
+    for (dim <- Seq(3, 1)) {
+      val want = s"kNN join: vector dimension mismatch ($dim vs 2)"
+      assert(named(KnnJoin(q(dim), b, 2, Metric.L2).collect()) == want)
+      assert(named(KnnJoin.ivfApprox(q(dim), b, 2, Metric.L2, nlist = 2,
+        nprobe = 2, kmIters = 1).collect()) == want)
+    }
+    // the query side is held to its first row's dimension on the driver
+    val mixed = Seq((100L, Array(0f, 1f)), (101L, Array(0f, 1f, 2f)))
+      .toDF("id", "vec").coalesce(1)
+    assert(named(KnnJoin(mixed, b, 2, Metric.L2).collect()) ==
+      "kNN join: vector dimension mismatch (2 vs 3)")
   }
 
   test("BoundedTopK keeps k smallest with (dist, id) tie-break") {
