@@ -162,7 +162,7 @@ object AnnSearch {
     * centroid id) as (query_id, qvec, centroid_id) — the coarse-quantizer
     * front half of IVF, exposed for composites that scan a different
     * payload than the raw vectors (e.g. the IVF+PQ byte-domain scan,
-    * [[Quantize.ivfAdcTopK]]). Shuffle-free: centroid scoring is a
+    * [[Quantize.ivfAdcTopKKernel]]). Shuffle-free: centroid scoring is a
     * literal fold, probe selection is sort_array + slice in the same
     * projection — no join, no window. */
   def probeCentroids(queries: DataFrame, centroids: DataFrame,

@@ -1,8 +1,8 @@
 package graft.ops.graph
 
 import graft.core.Metric
-import graft.ops.Quantize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.{PqCodebook, Quantize}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PQ-guided beam search — the DiskANN-style serving tier for corpora
@@ -28,37 +28,25 @@ import org.apache.spark.sql.functions._
   * codes+graph, and the refine join reads r raw rows per query from the
   * bucketed at-rest layout instead of holding any of them resident.
   *
-  * Correctness contract (PqBeamSpec): ADC accumulation is Double in
-  * subspace order — the SAME association as the oracle-checked
-  * [[Quantize.adcTopK]] — so an exhaustive beam (l ≥ n over a fully
-  * reachable graph) reproduces the ADC scan's ranking exactly, which
-  * transitively pins the LUT math to the DuckDB oracle.
+  * Correctness contract (PqBeamSpec): the lookup tables and code sums
+  * are [[PqCodebook]]'s, the ones the oracle-checked [[Quantize.adcTopK]]
+  * runs — so an exhaustive beam (l ≥ n over a fully reachable graph)
+  * reproduces the ADC scan's ranking exactly, which transitively pins
+  * the LUT math to the DuckDB oracle.
   */
 object PqGraphSearch {
 
   /** In-RAM PQ graph index: adjacency + flat byte codes, never raw
     * vectors. `codes` is row-major n×m (code of node i, subspace s at
-    * i*m+s, unsigned byte); `books(s)(c)` is the subDim-float centroid.
-    * Dense node ids are positions in `ids` (ascending external id). */
+    * i*m+s, unsigned byte) over the codebook `book`. Dense node ids are
+    * positions in `ids` (ascending external id). */
   final case class PqGraphIndex(
-      adj: Array[Array[Int]], ids: Array[Long], ep: Int,
-      m: Int, kCodes: Int, subDim: Int, codes: Array[Byte],
-      books: Array[Array[Array[Float]]], metric: Metric) {
+      adj: Array[Array[Int]], ids: Array[Long], ep: Int, codes: Array[Byte],
+      book: PqCodebook, metric: Metric) {
     def n: Int = ids.length
     /** In-RAM bytes of the PQ payload vs the raw vectors it replaces. */
     def codeBytes: Long = codes.length.toLong
-    def rawBytes: Long = ids.length.toLong * subDim * m * 4L
-
-    /** The trained codebooks in DataFrame form (subspace, centroid_id,
-      * vec) — bit-identical input for [[Quantize.adcTopK]] /
-      * [[Quantize.pqEncodeKernel]], so specs can run the oracle-shaped
-      * scan against the exact books the beam used. */
-    def codebooksDf(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      books.iterator.zipWithIndex.flatMap { case (book, s) =>
-        book.iterator.zipWithIndex.map { case (c, j) => (s, j, c) }
-      }.toSeq.toDF("subspace", "centroid_id", "vec")
-    }
+    def rawBytes: Long = ids.length.toLong * book.dim * 4L
   }
 
   /** Assemble the PQ tier from any (adjacency, vectors) pair: train
@@ -108,19 +96,8 @@ object PqGraphSearch {
       .select(col("id").cast("long"), col("codes"))
       .as[(Long, Array[Int])].collect().sortBy(_._1)
     val m = codeRows.head._2.length
-    val books = {
-      val rows = codebooks.select(col("subspace").cast("int"),
-        col("centroid_id").cast("int"), col("vec"))
-        .as[(Int, Int, Array[Float])].collect()
-      val kMax = rows.iterator.map(_._2).max + 1
-      require(rows.length == m * kMax,
-        s"codebook grid not dense: ${rows.length} rows for $m x $kMax")
-      require(kMax <= 256, s"byte-wide codes need kCodes <= 256: $kMax")
-      val grid = Array.ofDim[Array[Float]](m, kMax)
-      rows.foreach { case (s, c, v) => grid(s)(c) = v }
-      grid
-    }
-    val kCodes = books.head.length
+    val book = PqCodebook.load(codebooks, m)
+    require(book.kCodes <= 256, s"byte-wide codes need kCodes <= 256: ${book.kCodes}")
 
     val ids = codeRows.map(_._1)
     val n = ids.length
@@ -128,6 +105,7 @@ object PqGraphSearch {
     var i = 0
     while (i < n) {
       val cs = codeRows(i)._2
+      book.requireCodes(cs)
       var s = 0
       while (s < m) { flat(i * m + s) = (cs(s) & 0xFF).toByte; s += 1 }
       i += 1
@@ -151,47 +129,7 @@ object PqGraphSearch {
       require(d >= 0, s"entry point $ep not present in vectors")
       d
     }
-    PqGraphIndex(adjArr, ids, epDense, m, kCodes, books.head.head.length,
-      flat, books, metric)
-  }
-
-  /** The distributed-layout entry: PQ tier over a [[graft.build.DistIndex]]
-    * and its persisted vectors (the bucketed at-rest form). */
-  def fromDist(di: graft.build.DistIndex, vectors: DataFrame, m: Int,
-               kCodes: Int = 256, iters: Int = 4,
-               trainCap: Int = 65536): PqGraphIndex =
-    fromDF(di.adj, vectors, di.ep, di.metric, m, kCodes, iters, trainCap)
-
-  /** Per-query m×kCodes ADC table: partial distance between the query's
-    * sub-vector s and centroid (s,c), Double accumulation in ascending
-    * dimension order — the association [[Quantize.adcTopK]] uses. */
-  private def lutFor(q: Array[Float], idx: PqGraphIndex): Array[Double] = {
-    val lut = new Array[Double](idx.m * idx.kCodes)
-    var s = 0
-    while (s < idx.m) {
-      val book = idx.books(s)
-      val off = s * idx.subDim
-      var c = 0
-      while (c < book.length) {
-        val cent = book(c)
-        var d = 0.0
-        var t = 0
-        idx.metric match {
-          case Metric.L2 =>
-            while (t < idx.subDim) {
-              val x = q(off + t).toDouble - cent(t); d += x * x; t += 1
-            }
-          case _ => // InnerProduct / Cosine (pre-normalized): negated dot
-            while (t < idx.subDim) {
-              d -= q(off + t).toDouble * cent(t); t += 1
-            }
-        }
-        lut(s * idx.kCodes + c) = d
-        c += 1
-      }
-      s += 1
-    }
-    lut
+    PqGraphIndex(adjArr, ids, epDense, flat, book, metric)
   }
 
   /** Approximate top-`refineK` per query: [[BeamSearch.search]] over the
@@ -211,16 +149,11 @@ object PqGraphSearch {
       .mapPartitions { it =>
         val x = bc.value
         val visited = new BeamSearch.Visited(x.n)
-        val mm = x.m; val kc = x.kCodes; val codes = x.codes
+        val book = x.book
         it.map { case (qid, q) =>
-          val lut = lutFor(q, x)
-          val adc: Int => Double = { i =>
-            val off = i * mm
-            var s = 0; var d = 0.0
-            while (s < mm) { d += lut(s * kc + (codes(off + s) & 0xFF)); s += 1 }
-            d
-          }
-          val r = BeamSearch.search(x.adj, adc, refineK, l, x.ep, visited,
+          val lut = book.lut(q, x.metric)
+          val r = BeamSearch.search(x.adj, i => book.adc(lut, x.codes, i * book.m),
+            refineK, l, x.ep, visited,
             seeds = graft.build.RoarGraphBuilder.seedsFor(qid, numSeeds, x.n))
           (qid, r.ids.zip(r.dists).map { case (i, d) => (x.ids(i), d) },
             r.cmps, r.hops)

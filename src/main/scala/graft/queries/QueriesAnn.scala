@@ -291,7 +291,7 @@ object QueriesAnn {
       val train = pqTrainSet(s, dir)
       val rotTrain = Quantize.opqRotate(train, PqDim)
       val perm = Quantize.opqPermutation(rotTrain, PqDim, PqM)
-      // cache the rotated+permuted tables (pqTrain/pqEncode re-scan them);
+      // cache the rotated+permuted tables (pqTrain re-scans them);
       // rotate+permute fused into one row-permuted MatVecRotate —
       // bit-identical, and the staged form's collapsed projection carried
       // dim copies of the matrix expression (see opqRotatePermuted doc)
@@ -299,8 +299,8 @@ object QueriesAnn {
       val qP = Quantize.opqRotatePermuted(qSide(s, dir), PqDim, perm).cache()
       val trainP = Quantize.opqRotatePermuted(train, PqDim, perm)
         .cache()
-      // materialize the cached rotations EAGERLY: pqTrain/pqEncode scan
-      // them through the subspace posexplode, and racing tasks over a
+      // materialize the cached rotations EAGERLY: pqTrain scans them
+      // through the subspace posexplode, and racing tasks over a
       // lazily-cached table each re-evaluate the Hadamard fold (the
       // chain's dominant expression) instead of reading the cache.
       // bP's materialization is independent of the trainer (pqTrain reads
@@ -319,7 +319,7 @@ object QueriesAnn {
           try Quantize.pqTrain(trainP, PqM, PqK, PqIters).cache()
           finally Await.ready(fB, Duration.Inf)
         Await.result(fB, Duration.Inf)
-        val codes = Quantize.pqEncode(bP, cb, PqM, dim = PqDim).cache()
+        val codes = Quantize.pqEncodeKernel(bP, cb, PqM).cache()
         (cb, codes, qP)
       }
     }
@@ -565,7 +565,7 @@ object QueriesAnn {
     // Scalar k0..k7 columns rather than codes: array<int> — the driver's
     // oracle comparator sorts result columns with pandas before hashing,
     // and an array-typed column is unsortable there (r6 red row).
-    Quantize.pqEncode(bP, cb, Pq200M, dim = Pq200Pad)
+    Quantize.pqEncodeKernel(bP, cb, Pq200M)
       .select(col("id") +:
         (0 until Pq200M).map(s =>
           element_at(col("codes"), s + 1).as(s"k$s")): _*)
@@ -636,15 +636,12 @@ object QueriesAnn {
       .select(col("centroid_id"), col("base_id").as("id"))
       .join(codes, "id")
     val probes = AnnSearch.probeCentroids(qSide(s, dir), cents, NProbe)
-    // kernel ADC (ivfAdcTopKKernel, result-identical, IvfPqSpec-gated) —
-    // the same engine/oracle relationship as ann_pq_adc_topk, which has
-    // always served the kernel adcTopK: the relational composite embeds
-    // the m×k×subDim codebook as a 16k-float literal, making a ~485 KB
-    // plan whose analysis/canonicalization walks dominated the query's
-    // steady wall, and its per-row distance is an interpreted HOF fold.
-    // ivfAdcTopK remains the DuckDB-mirroring form (IvfPqSpec pins
-    // equality); the oracle hash is checked on this query's output as
-    // before.
+    // kernel ADC, the same scan ann_pq_adc_topk serves; the relational
+    // composite that mirrors the DuckDB oracle (PqOracle.ivfAdcTopK in
+    // the specs, IvfPqSpec pins equality) embeds the m×k×subDim codebook
+    // as a 16k-float literal, making a ~485 KB plan whose analysis walks
+    // dominated the query's wall, and its per-row distance is an
+    // interpreted HOF fold
     val cand = Quantize.ivfAdcTopKKernel(probes, qP, assignedCodes, cb,
       IvfPqRefine)
     val refined = Quantize.refineTopK(cand, qSide(s, dir), bSide(s, dir), K)

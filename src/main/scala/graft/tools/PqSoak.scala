@@ -149,7 +149,7 @@ object PqSoak {
     }
     val (ivfRecall, ivfServeSec) = timed(s"IVF-PQ serve: probe $nprobe/$ivfK + ADC + refine") {
       val probes = AnnSearch.probeCentroids(eval, cents, nprobe)
-      val c = Quantize.ivfPqTopKTable(spark, ivfPath, probes, qP, adcR, kernel = true)
+      val c = Quantize.ivfPqTopKTable(spark, ivfPath, probes, qP, adcR)
       val r = Quantize.refineTopK(c, eval, base, 10)
         .select(col("query_id"), transform(col("knn"), _("id")).as("ids")).cache()
       r.count()

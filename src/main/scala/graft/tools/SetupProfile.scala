@@ -91,8 +91,8 @@ object SetupProfile {
     val cb = lap("pq: pqTrain") {
       val c = Quantize.pqTrain(trainP, PqM, PqK, 1).cache(); c.count(); c
     }
-    val codes = lap("pq: pqEncode") {
-      val c = Quantize.pqEncode(bP, cb, PqM).cache(); c.count(); c
+    val codes = lap("pq: pqEncodeKernel") {
+      val c = Quantize.pqEncodeKernel(bP, cb, PqM).cache(); c.count(); c
     }
     lap("pq: qP materialize") { qP.count() }
 

@@ -156,8 +156,8 @@ object TierCurves {
       val pqSeeds = a.getOrElse("pqSeeds", "0").toInt
       println(s"[curves] training + encoding pq tier (m=$pqM)")
       val tpq = System.nanoTime()
-      val pqIdx = graft.ops.graph.PqGraphSearch.fromDist(di, bVecs, m = pqM,
-        iters = a.getOrElse("pqIters", "4").toInt)
+      val pqIdx = graft.ops.graph.PqGraphSearch.fromDF(di.adj, bVecs, di.ep,
+        di.metric, m = pqM, iters = a.getOrElse("pqIters", "4").toInt)
       println(f"[curves] pq index ${(System.nanoTime() - tpq) / 1e9}%.1f s; " +
         s"codes ${pqIdx.codeBytes / (1 << 20)} MiB vs raw " +
         s"${pqIdx.rawBytes / (1 << 20)} MiB")

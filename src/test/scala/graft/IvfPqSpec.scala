@@ -2,7 +2,10 @@ package graft
 
 import graft.core.{Metric, Tables}
 import graft.ops.{AnnSearch, KnnJoin, Quantize}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** IVF+PQ composite (coarse probe → byte-domain ADC over probed lists →
   * exact refine): semantics, the persisted partition-pruned layout, and
@@ -25,7 +28,7 @@ class IvfPqSpec extends SparkSpec {
     val bP = Quantize.permute(Quantize.opqRotate(b, Dim), perm).cache()
     val qP = Quantize.permute(Quantize.opqRotate(q, Dim), perm).cache()
     val cb = Quantize.pqTrain(bP, M, 64, iters = 1).cache()
-    val codes = Quantize.pqEncode(bP, cb, M)
+    val codes = PqOracle.pqEncode(bP, cb, M)
     val assignedCodes = AnnSearch.assignToCentroids(
         b.select(col("id"), col("vec")), cents)
       .select(col("centroid_id"), col("id"))
@@ -36,8 +39,8 @@ class IvfPqSpec extends SparkSpec {
 
   test("ivfAdcTopK is deterministic and scans only the probed lists") {
     val (_, _, qP, cb, assignedCodes, probes) = fixture
-    val r1 = Quantize.ivfAdcTopK(probes, qP, assignedCodes, cb, K)
-    val r2 = Quantize.ivfAdcTopK(probes, qP, assignedCodes, cb, K)
+    val r1 = PqOracle.ivfAdcTopK(probes, qP, assignedCodes, cb, K)
+    val r2 = PqOracle.ivfAdcTopK(probes, qP, assignedCodes, cb, K)
     val e1 = KnnJoin.explodeRanks(r1).cache()
     val e2 = KnnJoin.explodeRanks(r2)
     assert(e1.exceptAll(e2).isEmpty && e2.exceptAll(e1).isEmpty,
@@ -58,7 +61,7 @@ class IvfPqSpec extends SparkSpec {
     // exploded rank tables must be identical.
     val (_, _, qP, cb, assignedCodes, probes) = fixture
     val rel = KnnJoin.explodeRanks(
-      Quantize.ivfAdcTopK(probes, qP, assignedCodes, cb, K))
+      PqOracle.ivfAdcTopK(probes, qP, assignedCodes, cb, K))
     val ker = KnnJoin.explodeRanks(
       Quantize.ivfAdcTopKKernel(probes, qP, assignedCodes, cb, K))
     assert(ker.exceptAll(rel).isEmpty && rel.exceptAll(ker).isEmpty,
@@ -82,21 +85,33 @@ class IvfPqSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
     Quantize.saveIvfPq(assignedCodes, cb, dir)
     val direct = KnnJoin.explodeRanks(
-      Quantize.ivfAdcTopK(probes, qP, assignedCodes, cb, K))
-    val fromTable = Quantize.ivfPqTopKTable(spark, dir, probes, qP, K)
+      PqOracle.ivfAdcTopK(probes, qP, assignedCodes, cb, K))
+    // the kernel scans the codes inside the call, so the plans it runs
+    // are captured there
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val fromTable =
+      try Quantize.ivfPqTopKTable(spark, dir, probes, qP, K)
+      finally {
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
     val ft = KnnJoin.explodeRanks(fromTable)
     assert(ft.exceptAll(direct).isEmpty && direct.exceptAll(ft).isEmpty,
       "persisted-layout IVF+PQ diverges from the direct composite")
     // probing must reach the codes scan as a partition filter
-    ft.collect()
-    val plan = ft.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [centroid_id"),
-      s"probe set not pushed as a partition filter:\n$plan")
+    assert(plans.asScala.exists(_.contains("PartitionFilters: [centroid_id")),
+      s"probe set not pushed as a partition filter:\n${plans.asScala.mkString("\n")}")
   }
 
   test("refined IVF+PQ matches exact kNN restricted to the probed lists") {
     val (q, b, qP, cb, assignedCodes, probes) = fixture
-    val cand = Quantize.ivfAdcTopK(probes, qP, assignedCodes, cb, 10 * K)
+    val cand = Quantize.ivfAdcTopKKernel(probes, qP, assignedCodes, cb, 10 * K)
     val refined = Quantize.refineTopK(cand, q, b, K)
       .select(col("query_id"), transform(col("knn"), _("id")).as("ids"))
     // ground truth: exact kNN over the raw vectors of the probed lists

@@ -361,22 +361,16 @@ class KnnJoinSpec extends SparkSpec {
     val b = spark.range(16).map(i => (i, Array(i.toFloat, 1f))).toDF("id", "vec")
     def q(dim: Int) = Seq((100L, Array.fill(dim)(0.5f)), (101L, Array.fill(dim)(2f)))
       .toDF("id", "vec")
-    def named(body: => Any): String = {
-      val e = intercept[Exception](body)
-      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .collectFirst { case x: IllegalArgumentException => x.getMessage }
-        .getOrElse(fail(s"no IllegalArgumentException in $e"))
-    }
     for (dim <- Seq(3, 1)) {
       val want = s"kNN join: vector dimension mismatch ($dim vs 2)"
-      assert(named(KnnJoin(q(dim), b, 2, Metric.L2).collect()) == want)
-      assert(named(KnnJoin.ivfApprox(q(dim), b, 2, Metric.L2, nlist = 2,
+      assert(namedError(KnnJoin(q(dim), b, 2, Metric.L2).collect()) == want)
+      assert(namedError(KnnJoin.ivfApprox(q(dim), b, 2, Metric.L2, nlist = 2,
         nprobe = 2, kmIters = 1).collect()) == want)
     }
     // the query side is held to its first row's dimension on the driver
     val mixed = Seq((100L, Array(0f, 1f)), (101L, Array(0f, 1f, 2f)))
       .toDF("id", "vec").coalesce(1)
-    assert(named(KnnJoin(mixed, b, 2, Metric.L2).collect()) ==
+    assert(namedError(KnnJoin(mixed, b, 2, Metric.L2).collect()) ==
       "kNN join: vector dimension mismatch (2 vs 3)")
   }
 

@@ -43,7 +43,7 @@ class PqBeamSpec extends SparkSpec {
     // same Double association, same tie order. This transitively pins the
     // beam's LUT math to the ann_pq_adc_topk DuckDB oracle.
     assert(graphIdx.reachableFromEp == graphIdx.n)
-    val cbDf = pqIdx.codebooksDf(spark)
+    val cbDf = PqOracle.codebooksDf(pqIdx.book, spark)
     val codesDf = Quantize.pqEncodeKernel(baseDf, cbDf, M)
     val adc = KnnJoin.explodeRanks(Quantize.adcTopK(queriesDf, codesDf, cbDf, 10))
       .select(col("query_id"), col("rank"), col("base_id"),
@@ -99,21 +99,46 @@ class PqBeamSpec extends SparkSpec {
       val q = qVecs(qid)
       val dense = codeOf(bid)
       var expected = 0.0
-      for (s <- 0 until ipIdx.m) {
-        val cent = ipIdx.books(s)(ipIdx.codes(dense * ipIdx.m + s) & 0xFF)
+      for (s <- 0 until ipIdx.book.m) {
+        val cent = ipIdx.book.books(s)(ipIdx.codes(dense * ipIdx.book.m + s) & 0xFF)
         var part = 0.0
-        for (t <- 0 until ipIdx.subDim)
-          part -= q(s * ipIdx.subDim + t).toDouble * cent(t)
+        for (t <- 0 until ipIdx.book.subDim)
+          part -= q(s * ipIdx.book.subDim + t).toDouble * cent(t)
         expected += part
       }
       assert(dist == expected, s"q=$qid b=$bid: $dist != $expected")
     }
   }
 
+  test("beam search fails by name on a query of the wrong dimension") {
+    for (dim <- Seq(63, 65)) {
+      val q = queriesDf.select(col("id"),
+        slice(concat(col("vec"), col("vec")), 1, dim).as("vec"))
+      assert(namedError(PqGraphSearch.searchApprox(pqIdx, q, 10, 64).collect()) ==
+        s"PQ: vector dimension mismatch ($dim vs 64)")
+    }
+  }
+
+  test("fromPrecomputed names a codebook hole and subspace ids past the code width") {
+    import spark.implicits._
+    val codes = Seq((100L, Array(0, 1)), (101L, Array(1, 0))).toDF("id", "codes")
+    val adj = Seq((100L, Array(101L)), (101L, Array(100L))).toDF("src", "nbrs")
+    def books(cells: (Int, Int)*) = cells.map { case (s, c) =>
+      (s, c, Array(s.toFloat, c.toFloat)) }.toDF("subspace", "centroid_id", "vec")
+    def load(cb: org.apache.spark.sql.DataFrame) =
+      PqGraphSearch.fromPrecomputed(adj, codes, cb, 100L, Metric.L2)
+    assert(load(books((0, 0), (0, 1), (1, 0), (1, 1))).n == 2)
+    // (1, 0) twice and (1, 1) missing: as many rows as a dense 2 x 2 grid
+    assert(namedError(load(books((0, 0), (0, 1), (1, 0), (1, 0)))).contains(
+      "codebook missing (subspace=1, centroid_id=1)"))
+    assert(namedError(load(books((0, 0), (0, 1), (1, 0), (1, 1), (2, 0), (2, 1))))
+      .contains("codebook has 3 subspaces, expected 2"))
+  }
+
   test("PQ payload is an order of magnitude smaller than raw vectors") {
     // 64d x 4B = 256 B/node raw vs m = 16 code bytes: 16x
     assert(pqIdx.codeBytes * 10 <= pqIdx.rawBytes,
       s"codes ${pqIdx.codeBytes} B vs raw ${pqIdx.rawBytes} B")
-    assert(pqIdx.n == 400 && pqIdx.subDim == 4)
+    assert(pqIdx.n == 400 && pqIdx.book.subDim == 4)
   }
 }

@@ -30,8 +30,8 @@ class SamplingQuantizeSpec extends SparkSpec {
 
   test("kernel encode == relational encode (codes identical, 200-d padded chain)") {
     // pqEncodeKernel is the at-scale encode (broadcast codebook grid +
-    // one mapPartitions pass); pqEncode is the oracle-checkable relational
-    // form. Same double-accumulated L2, same lowest-centroid-id tie-break
+    // one mapPartitions pass); PqOracle.pqEncode is the relational form
+    // the DuckDB oracle mirrors. Same double-accumulated L2, same lowest-centroid-id tie-break
     // — the code tables must be IDENTICAL, here through the full 200-d
     // rotate+permute chain the soak runs (padDim 256, m 16).
     import spark.implicits._
@@ -52,7 +52,7 @@ class SamplingQuantizeSpec extends SparkSpec {
     val perm = Quantize.opqPermutation(rotB, Quantize.hadamardDim(dim), m)
     val bP = Quantize.permute(rotB, perm).cache()
     val cb = Quantize.pqTrain(bP, m, k = 32, iters = 2).cache()
-    val rel = Quantize.pqEncode(bP, cb, m)
+    val rel = PqOracle.pqEncode(bP, cb, m)
       .select(col("id").cast("long").as("id"), col("codes"))
     val ker = Quantize.pqEncodeKernel(bP, cb, m)
     assert(ker.count() == 300)
@@ -65,6 +65,34 @@ class SamplingQuantizeSpec extends SparkSpec {
       "fused opqEncodeKernel and relational PQ codes differ")
   }
 
+  test("PQ kernels fail by name on mismatched vector dimensions " +
+       "(encode, fused encode, ADC, IVF-ADC; rows shorter and longer)") {
+    import spark.implicits._
+    val m = 4 // 4 subspaces x 2-d centroids: vectors must be 8 floats
+    val cb = (for (s <- 0 until m; c <- 0 until 2)
+      yield (s, c, Array(c.toFloat, s.toFloat))).toDF("subspace", "centroid_id", "vec")
+    def vecs(dim: Int) = Seq((1L, Array.fill(dim)(0.5f)), (2L, Array.fill(dim)(1f)))
+      .toDF("id", "vec")
+    val codes = Seq((1L, Array(0, 1, 0, 1)), (2L, Array(1, 1, 0, 0))).toDF("id", "codes")
+    val assigned = codes.withColumn("centroid_id", lit(3))
+    val probes = Seq((1L, 3), (2L, 3)).toDF("query_id", "centroid_id")
+    assert(Quantize.pqEncodeKernel(vecs(8), cb, m).collect().length == 2)
+    assert(Quantize.adcTopK(vecs(8), codes, cb, 1).collect().length == 2)
+    for (dim <- Seq(7, 9)) {
+      val want = s"PQ: vector dimension mismatch ($dim vs 8)"
+      assert(namedError(Quantize.pqEncodeKernel(vecs(dim), cb, m).collect()) == want)
+      assert(namedError(Quantize.adcTopK(vecs(dim), codes, cb, 1).collect()) == want)
+      assert(namedError(Quantize.ivfAdcTopKKernel(probes, vecs(dim), assigned, cb, 1)
+        .collect()) == want)
+    }
+    // the fused kernel holds each row to its input dimension (6, padded to 8)
+    val perm = Array.range(0, 8)
+    assert(Quantize.opqEncodeKernel(vecs(6), cb, m, 6, perm).collect().length == 2)
+    for (dim <- Seq(5, 7))
+      assert(namedError(Quantize.opqEncodeKernel(vecs(dim), cb, m, 6, perm).collect()) ==
+        s"PQ: vector dimension mismatch ($dim vs 6)")
+  }
+
   test("ADC top-k ids == exact kNN over PQ reconstructions") {
     import graft.core.Metric
     import graft.ops.{KnnJoin, Quantize}
@@ -72,7 +100,7 @@ class SamplingQuantizeSpec extends SparkSpec {
     val q = emb.filter(col("id") < 20)
     val b = emb.filter(col("id") >= 20)
     val cb = Quantize.pqTrain(b, m = 8, k = 32, iters = 2)
-    val codes = Quantize.pqEncode(b, cb, m = 8)
+    val codes = PqOracle.pqEncode(b, cb, m = 8)
     val adc = KnnJoin.explodeRanks(Quantize.adcTopK(q, codes, cb, 10))
       .select("query_id", "rank", "base_id")
     val rec = Quantize.pqReconstruct(codes, cb)
@@ -145,7 +173,7 @@ class SamplingQuantizeSpec extends SparkSpec {
     val b = emb.filter(col("id") >= 20).cache()
     val n = b.count().toInt
     val cb = Quantize.pqTrain(b, m = 8, k = 32, iters = 2)
-    val codes = Quantize.pqEncode(b, cb, m = 8)
+    val codes = PqOracle.pqEncode(b, cb, m = 8)
     // R = n: every base row is a candidate, so refine == exact kNN
     val cand = Quantize.adcTopK(q, codes, cb, n)
     val refined = Quantize.refineTopK(cand, q, b, 10)
@@ -192,7 +220,7 @@ class SamplingQuantizeSpec extends SparkSpec {
     val bP = Quantize.permute(rotB, perm).cache()
     val qP = Quantize.permute(Quantize.opqRotate(q, dim), perm).cache()
     val cb = Quantize.pqTrain(bP, m, k = 32, iters = 1)
-    val codes = Quantize.pqEncode(bP, cb, m)
+    val codes = PqOracle.pqEncode(bP, cb, m)
     val cand = Quantize.adcTopK(qP, codes, cb, 50)
     val refined = Quantize.refineTopK(cand, q, b, 10)
       .select(col("query_id"), transform(col("knn"), _("id")).as("ids"))

@@ -24,4 +24,13 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** The message of the first IllegalArgumentException in the cause chain
+    * of what `body` throws (a task failure arrives wrapped by Spark). */
+  def namedError(body: => Any): String = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case x: IllegalArgumentException => x.getMessage }
+      .getOrElse(fail(s"no IllegalArgumentException in $e"))
+  }
 }
