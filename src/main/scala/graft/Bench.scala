@@ -30,6 +30,33 @@ object Bench {
     }
   }
 
+  /** The memory-sink table of [[warmStreaming]]. */
+  private[graft] val WarmStreamTable = "graft_bench_warm_stream"
+
+  /** Streaming plan shapes compile their own codegen classes (state-store
+    * save/restore, the streaming aggregate) that nothing else primes —
+    * measured ~1.2 s of streaming_hourly's bench wall was this one-time
+    * compile. Runs the SAME hourly-rollup aggregation over a 200-row slice
+    * of the events table through the same memory-sink path; the timed
+    * query still computes everything from its own fresh state. The slice's
+    * temp dir and the memory sink's table are removed when it is done,
+    * whether or not it succeeds. */
+  private[graft] def warmStreaming(spark: SparkSession, sfDir: String): Unit = {
+    val warmDir = java.nio.file.Files.createTempDirectory("graft_warm_ev")
+    try {
+      spark.read.parquet(s"$sfDir/events.parquet").limit(200)
+        .write.mode("overwrite").parquet(s"$warmDir/events.parquet")
+      graft.streaming.StreamingEvents.runToMemory(
+        graft.streaming.StreamingEvents.hourlyRollup(
+          graft.streaming.StreamingEvents.readEvents(
+            spark, s"$warmDir/events.parquet")),
+        WarmStreamTable, statePartitions = Some(1)).count()
+    } finally {
+      spark.catalog.dropTempView(WarmStreamTable)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(warmDir.toFile)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -59,22 +86,7 @@ object Bench {
     graft.ops.NearDup.simHashPairs(warmDocs).count()
     graft.ops.NearDup.minHashLsh(warmDocs).count()
     warmDocs.unpersist()
-    // streaming plan shapes compile their own codegen classes (state-store
-    // save/restore, the streaming aggregate) that nothing else primes —
-    // measured ~1.2 s of streaming_hourly's bench wall was this one-time
-    // compile. Run the SAME hourly-rollup aggregation over a 200-row
-    // slice of the events table through the same memory-sink path; the
-    // timed query still computes everything from its own fresh state.
-    locally {
-      val warmDir = java.nio.file.Files.createTempDirectory("graft_warm_ev")
-      spark.read.parquet(s"$sfDir/events.parquet").limit(200)
-        .write.mode("overwrite").parquet(s"$warmDir/events.parquet")
-      graft.streaming.StreamingEvents.runToMemory(
-        graft.streaming.StreamingEvents.hourlyRollup(
-          graft.streaming.StreamingEvents.readEvents(
-            spark, s"$warmDir/events.parquet")),
-        "graft_bench_warm_stream", statePartitions = Some(1)).count()
-    }
+    warmStreaming(spark, sfDir)
 
     // ---- session-shared artifacts, billed as their own phase ----
     // (PQ training/rotation/codes + exact GT are memoized per session and

@@ -78,11 +78,13 @@ object RoarGraphBuilder {
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val vs = bcVs.value
+        val all = Array.range(0, vs.n)
+        val ds = new Array[Double](vs.n)
         it.map { case (qid, qv0) =>
-          val qv = VecStore.asStored(qv0, vs.metric)
+          vs.distToMany(all, vs.n, vs.asQuery(qv0), ds)
           val heap = new KnnJoin.BoundedTopK(mSq)
           var i = 0
-          while (i < vs.n) { heap.push(vs.distTo(i, qv), i.toLong); i += 1 }
+          while (i < vs.n) { heap.push(ds(i), i.toLong); i += 1 }
           (qid, heap.result().map(_._2.toInt))
         }
       }.toDF("query_id", "knn")
@@ -225,8 +227,7 @@ object RoarGraphBuilder {
       val visited = new BeamSearch.Visited(v.n)
       it.map { nodeL =>
         val node = nodeL.toInt
-        val row = v.row(node)
-        val res = BeamSearch.search(supply, v.distTo(_, row), params.mPjbp,
+        val res = BeamSearch.search(supply, v.scorer(v.row(node)), params.mPjbp,
           params.lPjpq, ep, visited, exclude = node, collectPool = true)
         val pool = res.pool.filter(_._1 != node)
         // G9 prune: first kept element skips nodes already linked forward
@@ -347,9 +348,8 @@ object RoarGraphBuilder {
         val idx = bc.value
         val visited = new BeamSearch.Visited(idx.n)
         it.map { case (qid, qv0) =>
-          val qv = VecStore.asStored(qv0, idx.vs.metric)
           val seeds = seedsFor(qid, numSeeds, idx.n)
-          val r = BeamSearch.search(idx.adj, idx.vs.distTo(_, qv), k, l,
+          val r = BeamSearch.search(idx.adj, idx.vs.scorer(idx.vs.asQuery(qv0)), k, l,
             idx.ep, visited, seeds = seeds)
           (qid, r.ids.map(idx.ids(_)), r.dists, r.cmps, r.hops)
         }

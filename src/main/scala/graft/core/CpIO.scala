@@ -27,6 +27,11 @@ private[graft] object CpIO {
     *
     *  - k2: 4-way-unrolled `KnnJoin.distD` (round 11; reassociates the FP
     *    sum vs the serial round-<=10 form).
+    *
+    * The graph tier's batched `VecStore.distToMany` (four rows per pass)
+    * changes no bit, so it stays under k2: each row keeps its own
+    * accumulator summed in `distTo`'s order, and its IP multiply-adds are
+    * fused only because a float×float product is exact in double.
     */
   val KernelVersion = "k2"
 

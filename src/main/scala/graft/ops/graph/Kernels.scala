@@ -40,6 +40,63 @@ final class VecStore(val n: Int, val dim: Int, val data: Array[Float],
     }
   }
 
+  /** Batched [[distTo]]: `out(j) = distTo(ids(j), q)` for `j < n`, bit for
+    * bit. Four rows are scored per pass over `q`, each with its own
+    * accumulator summed in the same `d` order as [[distTo]], so the four
+    * add chains overlap instead of one chain waiting on its own add
+    * latency; the `n % 4` tail rows go through [[distTo]]. For IP the
+    * multiply-add is fused: a float×float product is exact in double, so
+    * `fma(row, q, s)` rounds once exactly where `s + row * q` does
+    * (`Math.fma` is a JIT intrinsic on CPUs with FMA: x86-64 since
+    * Haswell, AArch64). L2 keeps multiply-then-add: `(row − q)²` is not
+    * exact. `ids` may repeat; `q` holds at least `dim` floats (callers
+    * check the dimension once per query, [[asQuery]]). */
+  def distToMany(ids: Array[Int], n: Int, q: Array[Float], out: Array[Double]): Unit = {
+    var j = 0
+    while (j + 4 <= n) {
+      val o0 = ids(j) * dim; val o1 = ids(j + 1) * dim
+      val o2 = ids(j + 2) * dim; val o3 = ids(j + 3) * dim
+      var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+      var d = 0
+      if (ip) {
+        while (d < dim) {
+          val x = q(d).toDouble
+          s0 = Math.fma(data(o0 + d).toDouble, x, s0)
+          s1 = Math.fma(data(o1 + d).toDouble, x, s1)
+          s2 = Math.fma(data(o2 + d).toDouble, x, s2)
+          s3 = Math.fma(data(o3 + d).toDouble, x, s3)
+          d += 1
+        }
+        out(j) = -s0; out(j + 1) = -s1; out(j + 2) = -s2; out(j + 3) = -s3
+      } else {
+        while (d < dim) {
+          val x = q(d).toDouble
+          val x0 = data(o0 + d) - x; s0 += x0 * x0
+          val x1 = data(o1 + d) - x; s1 += x1 * x1
+          val x2 = data(o2 + d) - x; s2 += x2 * x2
+          val x3 = data(o3 + d) - x; s3 += x3 * x3
+          d += 1
+        }
+        out(j) = s0; out(j + 1) = s1; out(j + 2) = s2; out(j + 3) = s3
+      }
+      j += 4
+    }
+    while (j < n) { out(j) = distTo(ids(j), q); j += 1 }
+  }
+
+  /** [[distToMany]] against one query, as the beam's batch scorer. */
+  def scorer(q: Array[Float]): BeamSearch.Scorer =
+    (ids, n, out) => distToMany(ids, n, q, out)
+
+  /** `v` as a query of this store: held to [[dim]] (once per query, never
+    * per pair) and normalized like the rows ([[VecStore.asStored]]). */
+  def asQuery(v: Array[Float]): Array[Float] = {
+    if (v.length != dim)
+      throw new IllegalArgumentException(
+        s"graph search: vector dimension mismatch (${v.length} vs $dim)")
+    VecStore.asStored(v, metric)
+  }
+
   /** Distance between two stored rows. */
   def dist(i: Int, j: Int): Double = {
     val oi = i * dim; val oj = j * dim
@@ -252,6 +309,13 @@ object OcclusionPrune {
   */
 object BeamSearch {
 
+  /** Batch scorer of one query: `score(ids, n, out)` sets `out(j)` to node
+    * `ids(j)`'s distance to the query for every `j < n` — a
+    * [[VecStore.distToMany]] row batch, or PqGraphSearch's ADC table
+    * lookups. `ids` and `out` are the search's scratch: read and written
+    * only during the call. */
+  trait Scorer { def score(ids: Array[Int], n: Int, out: Array[Double]): Unit }
+
   /** @param ids  top-k dense ids (ascending (dist,id))
     * @param dists matching distances
     * @param cmps  number of distance computations (≅ reference `cmps`)
@@ -272,15 +336,20 @@ object BeamSearch {
     @inline def set(i: Int): Unit = tags(i) = epoch
   }
 
-  /** One query, scored by `dist(i)`: node i's distance to it — a
-    * [[VecStore]] row distance, or PqGraphSearch's ADC table lookup.
+  /** One query, scored through `scorer`. Expanding a node collects its
+    * unvisited neighbors (marking each visited as it is collected, so a
+    * repeated neighbor is scored once), scores them in one
+    * [[Scorer.score]] call and inserts them in adjacency order; the extra
+    * `seeds` are scored the same way. Every distance is the one a
+    * per-node scorer would give, so ids, dists, `cmps`, `hops` and the
+    * pool are those of the one-neighbor-at-a-time loop.
     * `exclude` (build-time self-search) skips that node during
     * expansion exactly like Q4's `nbr == tgt` check (:1330). `seeds` adds
     * extra entry nodes beside `ep` — the deterministic analogue of the
     * reference's random multi-seeding (src/index_bipartite.cpp:287-294),
     * which rescues recall on graphs where parts are unreachable from the
     * single entry point. */
-  def search(adj: Array[Array[Int]], dist: Int => Double,
+  def search(adj: Array[Array[Int]], scorer: Scorer,
              k: Int, l: Int, ep: Int, visited: Visited,
              exclude: Int = -1, collectPool: Boolean = false,
              seeds: Array[Int] = Array.empty): Result = {
@@ -288,18 +357,26 @@ object BeamSearch {
     visited.nextEpoch()
     var cmps = 0
     var hops = 0
-    queue.insert(ep, dist(ep))
+    var batch = new Array[Int](math.max(16, seeds.length))
+    var scores = new Array[Double](batch.length)
+    /** Scores `b(0 until nb)` into `out`, inserts it in order, returns `nb`. */
+    def scoreAndInsert(b: Array[Int], out: Array[Double], nb: Int): Int = {
+      scorer.score(b, nb, out)
+      var j = 0
+      while (j < nb) { queue.insert(b(j), out(j)); j += 1 }
+      nb
+    }
+    batch(0) = ep
     visited.set(ep)
+    scoreAndInsert(batch, scores, 1) // the entry point is not counted in cmps
+    var nb = 0
     var si = 0
     while (si < seeds.length) {
       val s = seeds(si)
-      if (s != exclude && !visited.test(s)) {
-        visited.set(s)
-        queue.insert(s, dist(s))
-        cmps += 1
-      }
+      if (s != exclude && !visited.test(s)) { visited.set(s); batch(nb) = s; nb += 1 }
       si += 1
     }
+    cmps += scoreAndInsert(batch, scores, nb)
     val pool =
       if (collectPool) new scala.collection.mutable.ArrayBuffer[(Int, Double)](l)
       else null
@@ -308,17 +385,17 @@ object BeamSearch {
       if (collectPool) pool += ((cur, curDist))
       hops += 1
       val nbrs = adj(cur)
+      if (nbrs.length > batch.length) {
+        batch = new Array[Int](nbrs.length); scores = new Array[Double](nbrs.length)
+      }
+      nb = 0
       var j = 0
       while (j < nbrs.length) {
         val nbr = nbrs(j)
-        if (nbr != exclude && !visited.test(nbr)) {
-          visited.set(nbr)
-          val d = dist(nbr)
-          cmps += 1
-          queue.insert(nbr, d)
-        }
+        if (nbr != exclude && !visited.test(nbr)) { visited.set(nbr); batch(nb) = nbr; nb += 1 }
         j += 1
       }
+      cmps += scoreAndInsert(batch, scores, nb)
     }
     val kk = math.min(k, queue.size)
     val ids = new Array[Int](kk)

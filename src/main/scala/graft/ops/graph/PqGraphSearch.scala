@@ -152,8 +152,11 @@ object PqGraphSearch {
         val book = x.book
         it.map { case (qid, q) =>
           val lut = book.lut(q, x.metric)
-          val r = BeamSearch.search(x.adj, i => book.adc(lut, x.codes, i * book.m),
-            refineK, l, x.ep, visited,
+          val adc: BeamSearch.Scorer = (ids, n, out) => {
+            var j = 0
+            while (j < n) { out(j) = book.adc(lut, x.codes, ids(j) * book.m); j += 1 }
+          }
+          val r = BeamSearch.search(x.adj, adc, refineK, l, x.ep, visited,
             seeds = graft.build.RoarGraphBuilder.seedsFor(qid, numSeeds, x.n))
           (qid, r.ids.zip(r.dists).map { case (i, d) => (x.ids(i), d) },
             r.cmps, r.hops)

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Metric
 import graft.ops.KnnJoin
-import graft.ops.graph.{NeighborQueue, OcclusionPrune, VecStore}
+import graft.ops.graph.{BeamSearch, NeighborQueue, OcclusionPrune, VecStore}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
@@ -154,6 +154,83 @@ class KernelPropertySpec extends AnyFunSuite {
         val out = OcclusionPrune.prune(cands, 0, m, vs, backfill = true)
         out.length == math.min(m, distinctIds)
       }
+    })
+  }
+
+  // vector components include every value class the batched kernel must
+  // carry through unchanged: NaN, ±Inf, ±0.0, subnormals, the float range;
+  // magnitudes 2^-24..2^24 apart make differences whose squares are not
+  // exact in double, where a fused L2 step would round differently
+  private val floats: Gen[Float] = Gen.frequency(
+    50 -> Gen.chooseNum(-10f, 10f),
+    50 -> Gen.zip(Gen.chooseNum(-2f, 2f), Gen.chooseNum(-24, 24))
+      .map { case (m, e) => m * math.scalb(1f, e) },
+    10 -> Gen.oneOf(1f, -1f, 2f),
+    1 -> Gen.oneOf(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity),
+    1 -> Gen.oneOf(0f, -0f),
+    1 -> Gen.oneOf(Float.MinPositiveValue, -1e-40f, 1.17e-38f),
+    1 -> Gen.oneOf(Float.MaxValue, -3e38f, 1e-20f))
+  private val metrics: Gen[Metric] =
+    Gen.oneOf(Metric.L2, Metric.InnerProduct, Metric.Cosine)
+  private def sameBits(a: Double, b: Double): Boolean =
+    java.lang.Double.doubleToRawLongBits(a) == java.lang.Double.doubleToRawLongBits(b) ||
+      (a.isNaN && b.isNaN)
+
+  test("VecStore.distToMany == distTo bit for bit (L2, IP, cosine; every tail length)") {
+    val in = for {
+      metric <- metrics
+      dim <- Gen.chooseNum(1, 33)
+      rows <- Gen.chooseNum(1, 12)
+      data <- Gen.listOfN(rows * dim, floats)
+      q <- Gen.listOfN(dim, floats)
+      n <- Gen.chooseNum(0, 9)
+      ids <- Gen.listOfN(n, Gen.chooseNum(0, rows - 1))
+    } yield (metric, dim, data, q, ids)
+    check("distToMany", Prop.forAllNoShrink(in) { case (metric, dim, data, q, ids) =>
+      val vs = VecStore(data.grouped(dim).map(_.toArray).toArray, metric)
+      val qv = VecStore.asStored(q.toArray, metric)
+      val out = Array.fill(ids.length + 2)(-7.0)
+      vs.distToMany(ids.toArray, ids.length, qv, out)
+      ids.indices.forall(j => sameBits(out(j), vs.distTo(ids(j), qv))) &&
+        out.drop(ids.length).forall(_ == -7.0)
+    })
+  }
+
+  test("batched BeamSearch.search == the one-neighbor-at-a-time BeamOracle") {
+    // random graphs with self-loops and repeated neighbors; small-integer
+    // and NaN components give tied and NaN distances
+    val comps: Gen[Float] = Gen.frequency(8 -> Gen.chooseNum(-3, 3).map(_.toFloat),
+      1 -> Gen.const(Float.NaN), 1 -> Gen.chooseNum(-3f, 3f))
+    val in = for {
+      metric <- metrics
+      n <- Gen.chooseNum(1, 30)
+      dim <- Gen.chooseNum(1, 6)
+      data <- Gen.listOfN(n * dim, comps)
+      adj <- Gen.listOfN(n, Gen.choose(0, 9).flatMap(Gen.listOfN(_, Gen.chooseNum(0, n - 1))))
+      q <- Gen.listOfN(dim, comps)
+      k <- Gen.chooseNum(1, 10)
+      l <- Gen.chooseNum(1, 12)
+      ep <- Gen.chooseNum(0, n - 1)
+      exclude <- Gen.oneOf(Gen.const(-1), Gen.chooseNum(0, n - 1))
+      collectPool <- Gen.oneOf(true, false)
+      seeds <- Gen.choose(0, 6).flatMap(Gen.listOfN(_, Gen.chooseNum(0, n - 1)))
+    } yield (metric, dim, data, adj, q, k, l, ep, exclude, collectPool, seeds)
+    check("beam", Prop.forAllNoShrink(in) {
+      case (metric, dim, data, adj0, q, k, l, ep, exclude, collectPool, seeds0) =>
+        val vs = VecStore(data.grouped(dim).map(_.toArray).toArray, metric)
+        val adj = adj0.map(_.toArray).toArray
+        val qv = VecStore.asStored(q.toArray, metric)
+        val seeds = seeds0.toArray
+        val got = BeamSearch.search(adj, vs.scorer(qv), k, l, ep,
+          new BeamSearch.Visited(vs.n), exclude, collectPool, seeds)
+        val want = BeamOracle.search(adj, vs.distTo(_, qv), k, l, ep,
+          new BeamSearch.Visited(vs.n), exclude, collectPool, seeds)
+        def pairsSame(a: Seq[(Int, Double)], b: Seq[(Int, Double)]): Boolean =
+          a.length == b.length && a.zip(b).forall { case ((i, x), (j, y)) =>
+            i == j && sameBits(x, y) }
+        pairsSame(got.ids.toSeq.zip(got.dists), want.ids.toSeq.zip(want.dists)) &&
+          got.cmps == want.cmps && got.hops == want.hops &&
+          pairsSame(got.pool.toSeq, want.pool.toSeq)
     })
   }
 }

@@ -101,6 +101,20 @@ class RoarGraphSpec extends SparkSpec {
     assert(topIds(16) == seeded)
   }
 
+  test("graph search and build fail by name on a query of the wrong dimension") {
+    // one check per query, before any pair is scored: a shorter query used
+    // to die inside a task with a bare ArrayIndexOutOfBoundsException and
+    // a longer one to score its first 64 floats silently
+    for (dim <- Seq(63, 65)) {
+      val q = queriesDf.select(col("id"),
+        slice(concat(col("vec"), col("vec")), 1, dim).as("vec"))
+      val msg = s"graph search: vector dimension mismatch ($dim vs 64)"
+      assert(namedError(RoarGraphBuilder.searchBatch(index, q,
+        SearchParams(k = 10, lPq = 20, metric = Metric.L2)).collect()) == msg)
+      assert(namedError(RoarGraphBuilder.build(baseDf, q, params)) == msg)
+    }
+  }
+
   test("graph save/load round-trips") {
     implicit val s = spark
     val dir = java.nio.file.Files.createTempDirectory("graft-graph").toString

@@ -93,4 +93,18 @@ class StreamingSpec extends SparkSpec {
     assert(resCmp.exceptAll(batchCmp).isEmpty && batchCmp.exceptAll(resCmp).isEmpty,
       s"stream=${resCmp.count()} batch=${batchCmp.count()}")
   }
+
+  test("the bench's streaming warm-up removes its temp dir and memory table") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def warmDirs: Set[String] =
+      tmp.list().filter(_.startsWith("graft_warm_ev")).toSet
+    val before = warmDirs
+    Bench.warmStreaming(spark, sf0001)
+    assert(warmDirs == before)
+    assert(!spark.catalog.tableExists(Bench.WarmStreamTable))
+    // and on failure: a missing events table
+    intercept[Exception](Bench.warmStreaming(spark, s"$sf0001/no_such_sf"))
+    assert(warmDirs == before)
+    assert(!spark.catalog.tableExists(Bench.WarmStreamTable))
+  }
 }
