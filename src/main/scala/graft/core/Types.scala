@@ -99,10 +99,11 @@ object Neighbor {
     * Distances compare as Spark SQL compares doubles
     * (`SQLOrderingUtil.compareDoubles`): NaN sorts after every number and
     * equals NaN, and -0.0 equals 0.0. Equal distances then break by
-    * ascending id. It must agree with Spark SQL because the kernels'
-    * partial top-ks are merged with `sort_array` (KnnJoin.blockedTopK,
-    * ShardedRoarGraph, StreamingAnn, DistRoarGraphBuilder): a partial that
-    * ranked differently from its merge could drop a row the merge keeps.
+    * ascending id. It must agree with Spark SQL because some kernels'
+    * partial top-ks are merged with `sort_array` (ShardedRoarGraph,
+    * StreamingAnn, DistRoarGraphBuilder): a partial that ranked
+    * differently from its merge could drop a row the merge keeps.
+    * KnnJoin.blockedTopK merges its partials on the driver in this order.
     * A NaN distance therefore never displaces a number, and never freezes
     * a bounded heap it entered first.
     *

@@ -1,12 +1,16 @@
 package graft.ops
 
 import graft.core.{Metric, Neighbor}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.types._
 import scala.reflect.ClassTag
 
 /** Exact kNN join (SURVEY.md §2.3 A1): for every query vector, the k nearest
@@ -14,16 +18,19 @@ import scala.reflect.ClassTag
   * file (src/index_bipartite.cpp:2622-2639 LoadLearnBaseKNN, built by external
   * DiskANN-era tooling); here it is a first-class distributed operator.
   *
-  * Physical design (the Spark partial+final aggregation pattern):
+  * Physical design (partial top-k per partition, final merge on the
+  * coordinator, as REPOSE does):
   *   1. queries are tiled into broadcast-sized blocks (driver collects one
   *      block at a time — at 100 TB scale the base side is the big one and
   *      streams through executors exactly once per block);
   *   2. `mapPartitions` over the base: one bounded max-heap per query per
   *      partition (the analogue of the reference's NeighborPriorityQueue,
-  *      include/efanna2e/neighbor.h:138-223) → partial top-k, so only
-  *      numPartitions*k rows per query ever shuffle, never the cross product;
-  *   3. `groupBy(query)` + flatten + sort_array + slice = final top-k, all
-  *      codegen'd built-ins.
+  *      include/efanna2e/neighbor.h:138-223) → partial top-k, so at most
+  *      numPartitions*k entries per query ever leave the executors, never
+  *      the cross product;
+  *   3. the scoring job returns each partition's heaps to the driver, which
+  *      merges them into the final top-k as the tasks finish: one job per
+  *      block, no shuffle (see [[blockedTopK]]).
   *
   * Ties break by ascending id (reference: neighbor.h:29-33). Distances are
   * computed in float64 so results are reproducible and oracle-comparable.
@@ -180,113 +187,243 @@ object KnnJoin {
     }.takeWhile(_.nonEmpty)
   }
 
+  /** One base partition's partial top-ks for a query block, in flat
+    * primitive arrays (a scoring task's result): block query `qis(j)`
+    * owns entries `ends(j - 1) until ends(j)` (from 0 for `j == 0`) of
+    * `dists` and `ids`, in the [[Neighbor]] order. Queries whose heap
+    * stayed empty are left out. */
+  private[graft] final class Partials(val qis: Array[Int], val ends: Array[Int],
+      val dists: Array[Double], val ids: Array[Long]) extends Serializable
+
+  private[graft] object Partials {
+    /** The non-empty heaps of one partition, block query `qi` at `heaps(qi)`. */
+    def of(heaps: Array[BoundedTopK]): Partials = {
+      val res = heaps.map(_.result())
+      val qis = res.indices.filter(res(_).nonEmpty).toArray
+      val ends = new Array[Int](qis.length)
+      val n = qis.iterator.map(res(_).length).sum
+      val dists = new Array[Double](n)
+      val ids = new Array[Long](n)
+      var o = 0
+      var j = 0
+      while (j < qis.length) {
+        res(qis(j)).foreach { case (d, id) => dists(o) = d; ids(o) = id; o += 1 }
+        ends(j) = o
+        j += 1
+      }
+      new Partials(qis, ends, dists, ids)
+    }
+  }
+
+  /** The driver-side merge of a block's partials: one top-k per block
+    * query, folded in as each task's [[Partials]] arrive, in any order.
+    * The result is the first k of the stable sort, in the [[Neighbor]]
+    * order, of the partials concatenated in partition order: among
+    * entries the order calls equal (one base id seen in two partitions,
+    * -0.0 against 0.0, two NaNs) the lower partition comes first,
+    * whichever task finishes first. Each fold is a two-way merge of
+    * sorted runs, O(k) per (query, partition). */
+  private[graft] final class TopKMerge(nq: Int, k: Int) {
+    private val size = Math.multiplyExact(nq, k)
+    private val d = new Array[Double](size)
+    private val ids = new Array[Long](size)
+    private val parts = new Array[Int](size)
+    private val len = new Array[Int](nq)
+    private val td = new Array[Double](k)
+    private val tid = new Array[Long](k)
+    private val tpart = new Array[Int](k)
+
+    /** Fold in partition `part`'s partials (each partition once). */
+    def add(part: Int, p: Partials): Unit = {
+      var j = 0
+      while (j < p.qis.length) {
+        fold(p.qis(j), part, p, if (j == 0) 0 else p.ends(j - 1), p.ends(j))
+        j += 1
+      }
+    }
+
+    private def fold(qi: Int, part: Int, p: Partials, from: Int, until: Int): Unit = {
+      val base = qi * k
+      val n = len(qi)
+      var a = 0
+      var b = from
+      var o = 0
+      while (o < k && (a < n || b < until)) {
+        val keepOld = b == until || a < n && {
+          val c = Neighbor.compare(d(base + a), ids(base + a), p.dists(b), p.ids(b))
+          c < 0 || c == 0 && parts(base + a) < part
+        }
+        if (keepOld) {
+          td(o) = d(base + a); tid(o) = ids(base + a); tpart(o) = parts(base + a); a += 1
+        } else {
+          td(o) = p.dists(b); tid(o) = p.ids(b); tpart(o) = part; b += 1
+        }
+        o += 1
+      }
+      System.arraycopy(td, 0, d, base, o)
+      System.arraycopy(tid, 0, ids, base, o)
+      System.arraycopy(tpart, 0, parts, base, o)
+      len(qi) = o
+    }
+
+    /** Block query `qi`'s merged top-k, in order; empty if no partition
+      * scored it. */
+    def result(qi: Int): Array[(Double, Long)] =
+      Array.tabulate(len(qi))(i => (d(qi * k + i), ids(qi * k + i)))
+  }
+
+  /** Upper bound, in bytes, on one scoring task's result: a [[Partials]]
+    * of `nq` block queries at `k` (per query an index and an end, per
+    * entry a double and a long, plus 1 KiB for the serialized header). */
+  private[graft] def partialsBytes(nq: Int, k: Int): Long =
+    nq.toLong * (8L + 16L * k) + 1024L
+
+  /** The size rule that groups a block's `nParts` base partitions into
+    * scoring jobs. Spark aborts a job whose task results sum past
+    * `spark.driver.maxResultSize` (`maxResultBytes`; 0 means no limit).
+    * So each job takes as many consecutive partitions as fit, at their
+    * bound [[partialsBytes]], in half that limit (the other half is
+    * headroom for serialization), and at least one. At the 10M knobs
+    * (100k queries, k = 10, the default 1 GiB) a task returns at most
+    * 16.8 MB and a job takes 31 partitions; every smaller block fits in
+    * one job. */
+  private[graft] def scoringGroups(nParts: Int, nq: Int, k: Int,
+                                   maxResultBytes: Long): Seq[Range] = {
+    val per =
+      if (maxResultBytes <= 0) nParts.toLong
+      else maxResultBytes / 2 / partialsBytes(nq, k)
+    val step = math.max(1L, math.min(per, Int.MaxValue.toLong)).toInt
+    (0 until nParts by step).map(s => s until math.min(nParts, s + step))
+  }
+
+  /** The drain's output schema: [query_id, knn: array<struct<dist, id>>]. */
+  private val KnnSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("knn", ArrayType(StructType(Seq(
+      StructField("dist", DoubleType), StructField("id", LongType))),
+      containsNull = false), nullable = false)))
+
   /** Shared blocked top-k drain (used by this join, [[ivfApprox]] and
     * the ADC drains of [[graft.ops.Quantize]]): pull the query side to the
     * driver one block at a time ([[queryBlocks]]: one job per group of
     * partitions, and the driver never holds the whole query side),
-    * broadcast one block, materialize its partial top-k eagerly
-    * (PlanUtil.cutDF: reliable checkpoint when the session has a checkpoint
-    * dir, local otherwise) so the block's broadcast can be destroyed before
-    * the next block is drained — no accumulation of broadcasts or query
-    * bytes across the job's lifetime.
+    * broadcast one block, and score it in one pass over the base.
     *
-    * Blocks tile the QUERY set disjointly, so the per-query merge is
-    * applied PER BLOCK and the block's per-(query, partition) partial
-    * rows — the job's largest transient, partitions×k rows per query —
-    * are released as soon as the block's merged top-k lands. What stays
-    * pinned across blocks is only the final k rows per query (the result
-    * itself); the shuffle volume is identical to one global merge (the
-    * groupBy keys are disjoint across blocks). Pre-10M hardening: the
-    * previous shape pinned EVERY block's partials until one global
-    * groupBy at the end — partitions× the result size, all live at once.
+    * `partial(bc)` returns an RDD with exactly one [[Partials]] per base
+    * partition: that partition's bounded heap per block query. The
+    * scoring job hands each task's partials straight back to the driver,
+    * where [[TopKMerge]] folds them in as they arrive (the one merge, in
+    * the one [[Neighbor]] order). So a block costs one job, with no
+    * shuffle and no checkpoint; the broadcast is destroyed as soon as its
+    * job ends. When the block's partials could pass
+    * `spark.driver.maxResultSize`, [[scoringGroups]] splits the base
+    * partitions over several jobs, each merged the same way.
     *
-    * `partial(bc)` must return a [query_id: long,
-    * partial: array<struct<_1: double, _2: long>>] DataFrame of per-block
-    * per-partition partial top-k rows. The returned DataFrame is already
-    * materialized (a union of per-block cuts).
+    * Blocks tile the QUERY set disjointly, so each block's merged top-k
+    * is final the moment its last task lands and becomes a small local
+    * DataFrame (at most k entries per block query). A single-block drain
+    * returns it as is. In a drain of several blocks every block but the
+    * last is handed off before the next is scored (PlanUtil.cutDF:
+    * reliable checkpoint when the session has a checkpoint dir, local
+    * otherwise), so the driver holds the rows of one block at a time.
     *
-    * PRECONDITION: query ids must be UNIQUE across the whole drain.
-    * Blocks tile the query side by POSITION, not by id, so a duplicated id
-    * that lands in two blocks produces two output rows (one per-block
-    * top-k each) instead of one globally merged top-k. Every current
-    * caller ([[apply]], [[ivfApprox]], Quantize.adcTopK) feeds ids from
-    * an `id` key column, which satisfies this; a new caller with
-    * duplicate ids must pre-merge them.
+    * The result is [query_id: long, knn: array<struct<dist: double,
+    * id: long>>], `knn` in the [[Neighbor]] order, length <= k. A block
+    * query that no partition scored gets an EMPTY `knn` row when `cover`
+    * is set (IVF drains: a query whose probed lists hold no rows must not
+    * go missing), and no row otherwise.
     *
-    * `checkpointDir` + `blockKey` (both or neither) make the drain
-    * PREEMPTIBLE: each block's merged top-k is persisted as parquet under
-    * `dir/block_<i>` the moment it lands, and a relaunched drain whose
-    * block slice matches the persisted block's identity marker (block
-    * index + blockRows + row count + order-sensitive qid hash — blocks
-    * tile by position, so identity includes order — plus the caller's
-    * `markerContext` knob/kernel token) skips that block's scan entirely.
-    * At the 10M regime one block is ~40-60 min of scan; without this a
-    * kill at a measurement-window boundary loses the whole multi-hour
-    * drain. A marker mismatch (different query set/order/blockRows/knobs,
-    * or a marker written by an older kernel version) fails loudly rather
-    * than serving a stale block — delete the stale `block_<i>` dir and
-    * its `.marker` to recompute that block under the current code. */
+    * PRECONDITION: query ids (`queryId`) must be UNIQUE across the whole
+    * drain. Blocks tile the query side by POSITION, not by id, so a
+    * duplicated id yields one row per occurrence instead of one merged
+    * top-k. Every current caller ([[apply]], [[ivfApprox]],
+    * Quantize.adcTopK, Quantize.ivfAdcTopKKernel) feeds ids from an `id`
+    * key column, which satisfies this; a new caller with duplicate ids
+    * must pre-merge them.
+    *
+    * `checkpointDir` makes the drain PREEMPTIBLE: each block's merged
+    * top-k is persisted as parquet under `dir/block_<i>` the moment it
+    * lands, and a relaunched drain whose block slice matches the
+    * persisted block's identity marker (block index + blockRows + row
+    * count + order-sensitive query id hash — blocks tile by position, so
+    * identity includes order — plus the caller's `markerContext`
+    * knob/kernel token) skips that block's scan entirely. At the 10M
+    * regime one block is ~40-60 min of scan; without this a kill at a
+    * measurement-window boundary loses the whole multi-hour drain. A
+    * marker mismatch (different query set/order/blockRows/knobs, or a
+    * marker written by an older drain version) fails loudly rather than
+    * serving a stale block — delete the stale `block_<i>` dir and its
+    * `.marker` to recompute that block under the current code. */
   private[graft] def blockedTopK[R, Q: ClassTag](queries: Dataset[R],
-      rowMap: R => Q, blockRows: Int, k: Int, emptyMsg: String,
-      checkpointDir: Option[String] = None, blockKey: Q => Long = null,
-      markerContext: String = "")(
-      partial: org.apache.spark.broadcast.Broadcast[Array[Q]] => DataFrame): DataFrame = {
-    require(checkpointDir.isEmpty == (blockKey == null),
-      "blockedTopK: checkpointDir and blockKey come together")
-    implicit val spark: org.apache.spark.sql.SparkSession = queries.sparkSession
+      rowMap: R => Q, queryId: Q => Long, blockRows: Int, k: Int,
+      emptyMsg: String, cover: Boolean = false,
+      checkpointDir: Option[String] = None, markerContext: String = "")(
+      partial: Broadcast[Array[Q]] => RDD[Partials]): DataFrame = {
+    implicit val spark: SparkSession = queries.sparkSession
+    val sc = spark.sparkContext
+    val maxResultBytes = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
     val blocks = queryBlocks(queries, rowMap, blockRows)
     require(blocks.hasNext, emptyMsg)
     // order-sensitive identity of a block slice (position-tiled blocks),
-    // versioned (v2) and bound to the tiling (block index + blockRows)
-    // and the caller's knob/kernel context — a marker from a different
-    // tiling, knob set, or kernel version never silently resumes
+    // versioned (v3: blocks in the drain's output schema, covered
+    // queries included) and bound to the tiling (block index +
+    // blockRows) and the caller's knob/kernel context — a marker from a
+    // different tiling, knob set, or drain version never silently resumes
     def markerOf(blk: Array[Q], bi: Int): String = {
       var h = 1125899906842597L
       var i = 0
-      while (i < blk.length) { h = h * 31 + blockKey(blk(i)); i += 1 }
-      s"v2:b$bi:r$blockRows:${blk.length}:$h:$markerContext"
+      while (i < blk.length) { h = h * 31 + queryId(blk(i)); i += 1 }
+      s"v3:b$bi:r$blockRows:${blk.length}:$h:$markerContext"
     }
-    val mergedBlocks = blocks.zipWithIndex.map { case (blk, bi) =>
+    def scored(blk: Array[Q]): DataFrame = {
+      val bc = sc.broadcast(blk)
+      val merge = new TopKMerge(blk.length, k)
+      val rdd = partial(bc)
+      scoringGroups(rdd.getNumPartitions, blk.length, k, maxResultBytes)
+        .foreach { parts =>
+          sc.runJob(rdd, (_: TaskContext, it: Iterator[Partials]) => it.next(),
+            parts, (i: Int, p: Partials) => merge.add(parts(i), p))
+        }
+      bc.destroy() // every task that read bc has run
+      val rows = new java.util.ArrayList[Row](blk.length)
+      var qi = 0
+      while (qi < blk.length) {
+        val knn = merge.result(qi)
+        if (cover || knn.nonEmpty)
+          rows.add(Row(queryId(blk(qi)), knn.map { case (d, id) => Row(d, id) }.toSeq))
+        qi += 1
+      }
+      spark.createDataFrame(rows, KnnSchema)
+    }
+    val out = List.newBuilder[DataFrame]
+    var bi = 0
+    while (blocks.hasNext) {
+      val blk = blocks.next()
       val cpPath = checkpointDir.map(d => s"$d/block_$bi")
       val markerPath = cpPath.map(p => s"$p.marker")
       val hit = cpPath.exists(p =>
         graft.core.CpIO.exists(s"$p/_SUCCESS") &&
           markerPath.exists(graft.core.CpIO.exists(_)))
-      if (hit) {
+      out += (if (hit) {
         val prev = graft.core.CpIO.readString(markerPath.get).trim
         require(prev == markerOf(blk, bi),
           s"blockedTopK checkpoint ${cpPath.get} was written for a different " +
             s"block slice ($prev vs ${markerOf(blk, bi)}) — refusing stale resume")
         spark.read.parquet(cpPath.get)
       } else {
-        val bc = spark.sparkContext.broadcast(blk)
-        // ONE materialization per block (guide §1.2): partials stream
-        // straight into the merge exchange. The previous shape checkpointed
-        // the partials first (an extra job per block and a full extra copy
-        // of the block's largest transient) solely so the broadcast could
-        // be destroyed before the merge ran; destroying it after the fused
-        // materialization is just as early in the block lifecycle — the
-        // merge IS the block's materialization. Memory shrinks too: the
-        // partitions×k-per-query partial rows now live only inside the
-        // exchange, never as pinned checkpoint blocks.
-        val mergedPlan = partial(bc).groupBy("query_id")
-          .agg(slice(sort_array(flatten(collect_list(col("partial")))), 1, k)
-            .as("knn0"))
-        val merged = cpPath match {
+        val merged = scored(blk)
+        cpPath match {
           case Some(p) =>
-            mergedPlan.write.mode("overwrite").parquet(p)
+            merged.write.mode("overwrite").parquet(p)
             graft.core.CpIO.writeString(markerPath.get, markerOf(blk, bi))
             spark.read.parquet(p)
-          case None => graft.ops.graph.PlanUtil.cutDF(mergedPlan)
+          case None if blocks.hasNext => graft.ops.graph.PlanUtil.cutDF(merged)
+          case None => merged
         }
-        bc.destroy() // merged is materialized; every task that read bc ran
-        merged
-      }
-    }.toList
-    mergedBlocks.reduce(_ union _)
-      .select(col("query_id"),
-        transform(col("knn0"),
-          x => struct(x("_1").as("dist"), x("_2").as("id"))).as("knn"))
+      })
+      bi += 1
+    }
+    out.result().reduce(_ union _)
   }
 
   /** Exact kNN join. Inputs must expose (`id`: long, `vec`: array<float>).
@@ -310,13 +447,14 @@ object KnnJoin {
     val widenQ = queryWidener(metric.needNormalize)
 
     blockedTopK(qDs, (q: (Long, Array[Float])) => (q._1, widenQ(q._2)),
-        queryBlockRows, k, "kNN join: empty query set") { bc =>
-      baseDs.mapPartitions { it =>
-        val qs = bc.value
-        val all = Array.range(0, qs.length)
-        sweep(qs.map(_._1), qs.map(_._2), it.map { case (id, v) => (id, v, 0) },
-          _ => all, k, metric)
-      }.toDF("query_id", "partial")
+        (q: (Long, Array[Double])) => q._1, queryBlockRows, k,
+        "kNN join: empty query set") { bc =>
+      baseDs.rdd.mapPartitions { it =>
+        val qvs = bc.value.map(_._2)
+        val all = Array.range(0, qvs.length)
+        Iterator.single(sweep(qvs, it.map { case (id, v) => (id, v, 0) },
+          _ => all, k, metric))
+      }
     }
   }
 
@@ -343,11 +481,11 @@ object KnnJoin {
     * spec-pinned).
     *
     * Each base row's length is held to the block's dimension once per row.
-    * Returns the non-empty (query id, partial top-k) rows. */
-  private def sweep(qids: Array[Long], qvs: Array[Array[Double]],
+    * Returns the partition's [[Partials]]. */
+  private def sweep(qvs: Array[Array[Double]],
                     rows: Iterator[(Long, Array[Float], Int)],
                     probers: Int => Array[Int], k: Int,
-                    metric: Metric): Iterator[(Long, Array[(Double, Long)])] = {
+                    metric: Metric): Partials = {
     val dim = qvs(0).length
     val norm = metric.needNormalize
     val heaps = Array.fill(qvs.length)(new BoundedTopK(k))
@@ -382,10 +520,7 @@ object KnnJoin {
       }
     }
     flushRun()
-    Iterator.range(0, qvs.length).flatMap { qi =>
-      val r = heaps(qi).result()
-      if (r.isEmpty) None else Some((qids(qi), r))
-    }
+    Partials.of(heaps)
   }
 
   /** The `nprobe` nearest centroids of `raw` by raw-space L2, ties by
@@ -450,11 +585,11 @@ object KnnJoin {
     *
     * Same blocked heap kernel as the exact join — the base side streams
     * through executors once per query block and only partial top-k rows
-    * shuffle — but each base row is scored ONLY against the queries whose
-    * probe set contains the row's IVF list: a k-means over a sample
-    * routes every base row to its nearest centroid (one extra map pass
-    * over the base, nlist·dim flops/row), each query probes its `nprobe`
-    * nearest centroids (computed DISTRIBUTED, one mapPartitions pass
+    * reach the driver's merge — but each base row is scored ONLY against
+    * the queries whose probe set contains the row's IVF list: a k-means
+    * over a sample routes every base row to its nearest centroid (one
+    * extra map pass over the base, nlist·dim flops/row), each query
+    * probes its `nprobe` nearest centroids (computed DISTRIBUTED, one mapPartitions pass
     * against the broadcast centroid grid, before the driver drains query
     * blocks — at the 10M regime a driver-side q·nlist·dim loop would be
     * ~1-2 h of serial work in front of the scan), and the per-partition
@@ -478,9 +613,9 @@ object KnnJoin {
     *
     * Coverage: every query id appears in the output exactly once. A
     * query whose probed lists contain no base rows gets an EMPTY `knn`
-    * array (never a silently missing row — a dropped row would silently
-    * lose the query's phase-1 edges downstream and overstate
-    * inner-join agreement metrics). */
+    * array from the drain itself (never a silently missing row — a
+    * dropped row would silently lose the query's phase-1 edges
+    * downstream and overstate inner-join agreement metrics). */
   /** Base size up to which [[ivfApprox]]'s first query block scans the
     * routing plan uncut (see the size-derived rationale at its use site). */
   private val SingleScanMaxRows = 1000000L
@@ -518,8 +653,8 @@ object KnnJoin {
     def hasCp(name: String): Boolean = checkpointDir.exists(d =>
       graft.core.CpIO.exists(s"$d/$name/_SUCCESS")(spark))
     // base row count: sizes the trainer sample AND the size-derived drain
-    // shape below (routed-cut skip, coverage skip); -1 = unknown (resumed
-    // from persisted centroids, where the durable path is taken anyway)
+    // shape below (the routed-cut skip); -1 = unknown (resumed from
+    // persisted centroids, where the durable path is taken anyway)
     var nBaseRows = -1L
     val cents: Array[(Int, Array[Float])] =
       if (hasCp("centroids"))
@@ -631,13 +766,12 @@ object KnnJoin {
     }
     val out = blockedTopK(qDs,
       (q: (Long, Array[Float], Array[Int])) => (q._1, widenQ(q._2), q._3),
-      queryBlockRows, k, "IVF kNN join: empty query set",
+      (q: (Long, Array[Double], Array[Int])) => q._1,
+      queryBlockRows, k, "IVF kNN join: empty query set", cover = true,
       checkpointDir = checkpointDir,
-      blockKey = if (checkpointDir.isEmpty) null
-                 else (q: (Long, Array[Double], Array[Int])) => q._1,
       markerContext = s"k=$k,np=$nprobe,cents=$centIdHash," +
         graft.core.CpIO.KernelVersion) { bc =>
-      routedForBlock().mapPartitions { it =>
+      routedForBlock().rdd.mapPartitions { it =>
         val qs = bc.value
         // centroid → indices of the block's queries probing it, so a base
         // row costs exactly |queries probing its list| distance evals.
@@ -649,35 +783,13 @@ object KnnJoin {
         val byCent = centIndexFor(qs, nlist)
         // the routed input is centroid-sorted within partitions, so rows
         // of one list arrive consecutively as one run of the sweep
-        sweep(qs.map(_._1), qs.map(_._2), it, byCent(_), k, metric)
-      }.toDF("query_id", "partial")
+        Iterator.single(sweep(qs.map(_._2), it, byCent(_), k, metric))
+      }
     }
-    // blockedTopK returns materialized; the routing is dead
+    // blockedTopK has run every scoring job; the routing is dead
     if (routedCut != null) routedCut._2()
     centsBc.destroy() // the drain is complete; the centroid grid is dead
-    // full probe scores every (query, base) pair, so with a known non-empty
-    // base every drained query already has a non-empty heap — the coverage
-    // re-attach join is an identity; skip its exchange. Partial probing
-    // (or an unknown row count on resume) keeps it: a query whose probed
-    // lists are all empty must still emit an empty-knn row.
-    if (nprobe == nlist && nBaseRows > 0) out
-    else ensureQueryCoverage(queries, out)
-  }
-
-  /** Re-attach queries missing from a kNN result as rows with an EMPTY
-    * `knn` array (one left join keyed on the small query side; a no-op
-    * when nothing was dropped). [[ivfApprox]] under partial probing can
-    * find no base rows for a query whose probed lists are all empty —
-    * a silently missing row would lose the query's phase-1 edges
-    * downstream and overstate inner-join agreement metrics, an empty
-    * row is a detectable coverage gap. */
-  private[graft] def ensureQueryCoverage(queries: DataFrame,
-                                         out: DataFrame): DataFrame = {
-    val knnType = out.schema("knn").dataType
-    queries.select(col("id").cast("long").as("query_id"))
-      .join(out, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("knn"), array().cast(knnType)).as("knn"))
+    out
   }
 
   /** Reference implementation via crossJoin + window — the oracle-shaped

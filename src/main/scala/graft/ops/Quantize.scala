@@ -196,7 +196,9 @@ object Quantize {
     * each query block's lookup tables are built once per partition, then
     * every (centroid_id, id, codes) row is scored against each query
     * whose probe set holds its list (every query when `probes` is None)
-    * into per-query bounded heaps. */
+    * into per-query bounded heaps. With `probes`, every query gets a row:
+    * one with no probe row, or whose probed lists hold no codes, gets an
+    * empty `knn`. */
   private def adcDrain(queries: DataFrame, codes: DataFrame, book: PqCodebook,
                        probes: Option[Map[Long, Array[Int]]], k: Int,
                        queryBlockRows: Int, what: String): DataFrame = {
@@ -208,12 +210,13 @@ object Quantize {
       col("id").cast("long"), col("codes")).as[(Int, Long, Array[Int])]
     val qDs = queries.select(col("id").cast("long"), col("vec"))
       .as[(Long, Array[Float])]
-    // the shared blocked drain (KnnJoin.blockedTopK) materializes each
-    // block's partials eagerly, so by the time it returns every task that
-    // read the broadcasts has run — they can then be destroyed too
+    // the shared blocked drain (KnnJoin.blockedTopK) runs every scoring
+    // job before it returns, so every task that read the broadcasts has
+    // run — they can then be destroyed too
     val out = KnnJoin.blockedTopK(qDs, identity[(Long, Array[Float])],
-        queryBlockRows, k, s"$what: empty query set") { bc =>
-      codesDs.mapPartitions { it =>
+        (q: (Long, Array[Float])) => q._1, queryBlockRows, k,
+        s"$what: empty query set", cover = probes.isDefined) { bc =>
+      codesDs.rdd.mapPartitions { it =>
         val qs = bc.value
         val cb = bcCb.value
         val tables = qs.map(q => cb.lut(q._2, graft.core.Metric.L2))
@@ -230,11 +233,8 @@ object Quantize {
             qi += 1
           }
         }
-        Iterator.range(0, qs.length).flatMap { qi =>
-          val r = heaps(qi).result()
-          if (r.isEmpty) None else Some((qs(qi)._1, r))
-        }
-      }.toDF("query_id", "partial")
+        Iterator.single(KnnJoin.Partials.of(heaps))
+      }
     }
     bcCb.destroy()
     bcProbes.foreach(_.destroy())
@@ -455,7 +455,9 @@ object Quantize {
     * queries that probe its list: no join, no codebook literal, so the
     * plan stays small at any m×k. The specs pin it equal to a relational
     * composite (a join plus a column-expression ADC fold) that mirrors
-    * the DuckDB oracle. */
+    * the DuckDB oracle. Every query of `queriesRot` gets a row: one with
+    * no probe row, or whose probed lists hold no codes, gets an empty
+    * `knn`. */
   def ivfAdcTopKKernel(probes: DataFrame, queriesRot: DataFrame,
                        assignedCodes: DataFrame, codebooks: DataFrame,
                        r: Int, queryBlockRows: Int = 1024): DataFrame = {

@@ -59,7 +59,14 @@ object StreamingAnn {
 
   /** Resolve the currently published snapshot dir, if any. */
   private def latestVersion(spark: SparkSession, dir: String): Option[String] = {
-    val (fs, _) = hadoopFs(spark, dir)
+    // read the pointer past any client-side checksum: a checksummed local
+    // FS renames `_latest` and its `.crc` one after the other, so a read
+    // between the two renames checks the new pointer against the old
+    // checksum and fails. The rename of the pointer itself is atomic.
+    val fs = hadoopFs(spark, dir)._1 match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
     val ptr = new org.apache.hadoop.fs.Path(s"$dir/_latest")
     if (!fs.exists(ptr)) None
     else {

@@ -1,9 +1,10 @@
 package graft
 
 import graft.core.{Metric, Tables}
-import graft.ops.KnnJoin
-import org.apache.spark.sql.DataFrame
+import graft.ops.{KnnJoin, Quantize}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 class KnnJoinSpec extends SparkSpec {
 
@@ -29,6 +30,35 @@ class KnnJoinSpec extends SparkSpec {
       .mapPartitionsWithIndex((p, _) =>
         placed.iterator.collect { case (`p`, r) => r })
       .toDF("id", "vec")
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(rmTree); f.delete()
+  }
+
+  /** A drain result as (query_id, [(dist bits, id)]), by query id. */
+  private def knnBits(df: DataFrame): Seq[(Long, Seq[(Long, Long)])] =
+    df.collect().map(r => r.getLong(0) -> r.getSeq[Row](1).map(n =>
+      (java.lang.Double.doubleToLongBits(n.getDouble(0)), n.getLong(1))).toSeq)
+      .sortBy(_._1).toSeq
+
+  /** Jobs started and shuffle bytes written while `body` runs. */
+  private def jobsAndShuffle(body: => Any): (Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val shuffle = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    (jobs.get, shuffle.get)
   }
 
   private def roundTrip(metric: Metric): Unit = {
@@ -259,24 +289,49 @@ class KnnJoinSpec extends SparkSpec {
       "ivfApprox must cover every query id exactly once")
   }
 
-  test("ensureQueryCoverage re-attaches dropped queries with an empty knn") {
+  test("IVF drains emit an empty knn row for every unscored query (fresh and resumed)") {
     import spark.implicits._
-    val q = spark.range(4).map(i => (i, Array(i.toFloat))).toDF("id", "vec")
-    val partial = Seq((0L, Seq((1.5, 7L))), (2L, Seq((0.5, 3L))))
-      .toDF("query_id", "knn0")
-      .select(col("query_id"),
-        transform(col("knn0"),
-          x => struct(x("_1").as("dist"), x("_2").as("id"))).as("knn"))
-    val covered = KnnJoin.ensureQueryCoverage(q, partial)
-      .orderBy("query_id").collect()
-    assert(covered.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L))
-    val sizes = covered.map(
-      _.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("knn").length)
-    assert(sizes.toSeq == Seq(1, 0, 1, 0),
-      "dropped queries must carry an EMPTY knn array")
-    // the filled rows keep the result schema (dist: double, id: long)
-    assert(covered(0).schema("knn").dataType ==
-      partial.schema("knn").dataType)
+    // IVF-ADC: query 1 probes list 3 (codes), query 2 only list 5 (no
+    // codes), query 3 has no probe row at all
+    val m = 4
+    val cb = (for (s <- 0 until m; c <- 0 until 2)
+      yield (s, c, Array(c.toFloat, s.toFloat))).toDF("subspace", "centroid_id", "vec")
+    val qs = Seq(1L, 2L, 3L).map(i => (i, Array.fill(8)(i.toFloat))).toDF("id", "vec")
+    val assigned = Seq((10L, Array(0, 1, 0, 1)), (11L, Array(1, 1, 0, 0)))
+      .toDF("id", "codes").withColumn("centroid_id", lit(3))
+    val probes = Seq((1L, 3), (2L, 5)).toDF("query_id", "centroid_id")
+    val adc = Quantize.ivfAdcTopKKernel(probes, qs, assigned, cb, 1).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Row](1).length).sortBy(_._1)
+    assert(adc.toSeq == Seq(1L -> 1, 2L -> 0, 3L -> 0))
+
+    // the drain itself, fresh and resumed from its block checkpoints:
+    // partitions score only the even block positions
+    val q = (0L until 10L).map(i => (i, Array(i.toFloat))).toDF("id", "vec")
+      .as[(Long, Array[Float])].coalesce(1)
+    val cpDir = java.nio.file.Files
+      .createTempDirectory(java.nio.file.Paths.get("target"), "knn_cover")
+      .toString
+    def drain(): Seq[(Long, Int)] = KnnJoin.blockedTopK(q,
+        identity[(Long, Array[Float])], (r: (Long, Array[Float])) => r._1,
+        4, 2, "empty", cover = true, checkpointDir = Some(cpDir)) { bc =>
+      spark.sparkContext.parallelize(0 until 3, 3).map { p =>
+        val heaps = Array.fill(bc.value.length)(new KnnJoin.BoundedTopK(2))
+        heaps.indices.filter(_ % 2 == 0).foreach(qi => heaps(qi).push(p, qi))
+        KnnJoin.Partials.of(heaps)
+      }
+    }.collect().map(r => r.getLong(0) -> r.getSeq[Row](1).length).sortBy(_._1).toSeq
+    // blocks of 4: positions 0 and 2 of each block are scored
+    val want = (0L until 10L).map(i => i -> (if (i % 4 % 2 == 0) 2 else 0))
+    try {
+      assert(drain() == want, "fresh blocks")
+      assert(new java.io.File(s"$cpDir/block_2.marker").exists())
+      assert(drain() == want, "resumed blocks")
+    } finally rmTree(new java.io.File(cpDir))
+    // the exact join and ADC top-k keep no row for an unscored query
+    val none = Seq.empty[(Long, Array[Float])].toDF("id", "vec")
+    assert(KnnJoin(q.toDF(), none, 2, Metric.L2).collect().isEmpty)
+    val noCodes = Seq.empty[(Long, Array[Int])].toDF("id", "codes")
+    assert(Quantize.adcTopK(qs, noCodes, cb, 2).collect().isEmpty)
   }
 
   test("a NaN distance never displaces a finite neighbor (k=2 join)") {
@@ -379,5 +434,127 @@ class KnnJoinSpec extends SparkSpec {
     Seq((5.0, 1L), (1.0, 9L), (1.0, 2L), (3.0, 7L), (0.5, 4L), (9.0, 0L))
       .foreach { case (d, i) => h.push(d, i) }
     assert(h.result().toSeq == Seq((0.5, 4L), (1.0, 2L), (1.0, 9L)))
+  }
+
+  test("driver-side merge == the relational merge oracle (NaN, ±0.0, ±Inf, " +
+       "ties, one id in several partitions, empty partitions, k > candidates)") {
+    import spark.implicits._
+    val dist = Gen.frequency(
+      4 -> Gen.chooseNum(-5.0, 5.0),
+      3 -> Gen.oneOf(1.0, 2.0),
+      1 -> Gen.const(Double.NaN),
+      2 -> Gen.oneOf(-0.0, 0.0),
+      1 -> Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity))
+    // ids 0..4 only: the same id recurs across partitions and queries
+    val pushes = Gen.listOf(Gen.zip(dist, Gen.chooseNum(0L, 4L)))
+    val cases = for {
+      k <- Gen.chooseNum(1, 6)
+      nq <- Gen.chooseNum(1, 10)
+      nParts <- Gen.chooseNum(0, 5)
+      parts <- Gen.listOfN(nParts, Gen.frequency(
+        1 -> Gen.const(List.fill(nq)(List.empty[(Double, Long)])),
+        4 -> Gen.listOfN(nq, pushes)))
+      seed <- Gen.long
+    } yield (k, nq, parts, seed)
+    def agree(k: Int, nq: Int, parts: List[List[List[(Double, Long)]]],
+              seed: Long): Prop = {
+      val partials = parts.map(qs => KnnJoin.Partials.of(qs.map { xs =>
+        val h = new KnnJoin.BoundedTopK(k)
+        xs.foreach { case (d, i) => h.push(d, i) }
+        h
+      }.toArray))
+      // tasks finish in any order
+      val merge = new KnnJoin.TopKMerge(nq, k)
+      new scala.util.Random(seed).shuffle(partials.indices.toList)
+        .foreach(p => merge.add(p, partials(p)))
+      val driver = (0 until nq).map(qi => qi.toLong -> merge.result(qi).toSeq.map {
+        case (d, i) => (java.lang.Double.doubleToLongBits(d), i)
+      }).filter(_._2.nonEmpty)
+      // the oracle reads the partial rows in partition order
+      val rows = for {
+        p <- partials
+        j <- p.qis.indices
+        from = if (j == 0) 0 else p.ends(j - 1)
+      } yield (p.qis(j).toLong,
+        (from until p.ends(j)).map(e => (p.dists(e), p.ids(e))))
+      val oracle = knnBits(KnnMergeOracle.merge(
+        rows.toDF("query_id", "partial").coalesce(1), k))
+      Prop(driver == oracle) :| s"driver $driver\noracle $oracle"
+    }
+    // one id at 0.0 in partition 0 and at -0.0 in partition 1: the order
+    // calls them equal, the oracle keeps partition 0's, whichever task
+    // finishes first
+    for (seed <- 0L until 4L)
+      assert(SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(1),
+        agree(1, 1, List(List(List(0.0 -> 5L)), List(List(-0.0 -> 5L))), seed))
+        .passed)
+    val prop = Prop.forAllNoShrink(cases) { case (k, nq, parts, seed) =>
+      agree(k, nq, parts, seed)
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
+    assert(res.passed, res.toString)
+
+    // the drain's result has the relational merge's schema
+    val emb = Tables.vectors(spark, sf0001)
+    val q = emb.filter(col("id") < 3)
+    val b = emb.filter(col("id") >= 3)
+    val partials = Seq((0L, Seq((1.0, 2L)))).toDF("query_id", "partial")
+    assert(KnnJoin(q, b, 2, Metric.L2).schema ==
+      KnnMergeOracle.merge(partials, 2).schema)
+  }
+
+  test("a one-block exact join over a 12-partition base runs one scoring " +
+       "job after its query fetch and shuffles nothing") {
+    val emb = Tables.vectors(spark, sf0001)
+    val rows = vecRows(emb)
+    val q = spread(rows.take(20), 1)(_ => 0)
+    val b = spread(rows.drop(20), 12)(_ % 12)
+    // one job fetches the one-partition query side, one scores the block
+    val (jobs, shuffle) = jobsAndShuffle(KnnJoin(q, b, 5, Metric.L2).collect())
+    assert(jobs == 2, s"$jobs jobs")
+    assert(shuffle == 0L, s"$shuffle shuffle bytes")
+  }
+
+  test("scoring jobs follow the result-size rule and give the one-job " +
+       "result (exact and IVF)") {
+    // the pure rule: half the limit over the per-task bound, at least one
+    val per = KnnJoin.partialsBytes(40, 5)
+    assert(per == 40L * (8 + 16 * 5) + 1024)
+    assert(KnnJoin.scoringGroups(12, 40, 5, 0L) == Seq(0 until 12))
+    assert(KnnJoin.scoringGroups(12, 40, 5, 1L << 30) == Seq(0 until 12))
+    assert(KnnJoin.scoringGroups(12, 40, 5, 2 * per * 5) ==
+      Seq(0 until 5, 5 until 10, 10 until 12))
+    assert(KnnJoin.scoringGroups(3, 40, 5, per) == Seq(0 until 1, 1 until 2, 2 until 3))
+    assert(KnnJoin.scoringGroups(0, 40, 5, per).isEmpty)
+
+    // a 40-query block over 12 base partitions: at 24 KiB a job takes 2
+    // partitions (6 jobs); one job of all 12 (~45 KB of results) would
+    // be aborted by Spark's own limit
+    import spark.implicits._
+    val limit = 24L * 1024
+    val groups = KnnJoin.scoringGroups(12, 40, 5, limit)
+    assert(groups.map(_.size) == Seq.fill(6)(2))
+    def vec(i: Int) = Array.tabulate(4)(j => ((i * 7 + j * 13) % 17).toFloat)
+    val rows = (0 until 136).map(i => (i.toLong, vec(i))).toArray
+    val q = spread(rows.take(40), 1)(_ => 0)
+    val b = spread(rows.drop(40), 12)(_ % 12)
+    val sc = spark.sparkContext
+    def exact = KnnJoin(q, b, 5, Metric.L2)
+    def ivf = KnnJoin.ivfApprox(q, b, 5, Metric.L2, nlist = 4, nprobe = 4,
+      kmIters = 1)
+    for ((name, drain) <- Seq[(String, () => DataFrame)](
+        "exact" -> (() => exact), "IVF" -> (() => ivf))) {
+      var one: Seq[(Long, Seq[(Long, Long)])] = null
+      var split: Seq[(Long, Seq[(Long, Long)])] = null
+      val (oneJobs, _) = jobsAndShuffle { one = knnBits(drain()) }
+      val (splitJobs, _) = jobsAndShuffle {
+        split = org.apache.spark.DriverResultLimit(sc, limit)(knnBits(drain()))
+      }
+      assert(one.length == 40 && split == one, s"$name: split drain != one-job drain")
+      assert(splitJobs - oneJobs == groups.length - 1,
+        s"$name: $splitJobs jobs split, $oneJobs in one")
+    }
+    assert(exact.count() == 40, "the limit is restored")
   }
 }

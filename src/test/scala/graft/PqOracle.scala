@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * They mirror the DuckDB oracle SQL step by step, so the specs pin each
   * kernel to them: `pqEncodeKernel` and `opqEncodeKernel` must give
   * [[pqEncode]]'s codes, and `ivfAdcTopKKernel` (hence `ivfPqTopKTable`)
-  * [[ivfAdcTopK]]'s rankings, doubles included. */
+  * [[ivfAdcTopK]]'s rankings, doubles included. The specs compare exploded
+  * ranks: the kernel also emits an empty `knn` row for a query with no
+  * candidate, where [[ivfAdcTopK]] has no row. */
 object PqOracle {
 
   /** Encode: per subspace, the nearest codebook entry (ties by code id).
