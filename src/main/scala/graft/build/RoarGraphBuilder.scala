@@ -3,7 +3,9 @@ package graft.build
 import graft.core.{BuildParams, Neighbor, SearchParams}
 import graft.ops.KnnJoin
 import graft.ops.graph.{BeamSearch, OcclusionPrune, VecStore}
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,10 +53,11 @@ final case class GraphIndex(adj: Array[Array[Int]], ep: Int,
   * bulk-synchronously for Spark:
   *
   * every OpenMP `parallel for` over nodes becomes a distributed map over a
-  * node Dataset, and every lock-guarded read-modify-write of an adjacency
+  * node RDD, and every lock-guarded read-modify-write of an adjacency
   * list (`locks_`, include/index_bipartite.h:166) becomes a `groupByKey` +
-  * deterministic merge. The reference's results are thread-interleaving-
-  * dependent; ours are reproducible (SURVEY.md §7.4 item 2).
+  * deterministic merge (a reverse merge is one shuffle: [[reverseMerged]]).
+  * The reference's results are thread-interleaving-dependent; ours are
+  * reproducible (SURVEY.md §7.4 item 2).
   *
   * Scale model: the per-phase *compute* (kNN, prune, beam self-search) is
   * distributed over executors; the vectors and the evolving graph are
@@ -142,6 +145,32 @@ object RoarGraphBuilder {
     }
   }
 
+  /** One reverse-merge phase through one shuffle: every forward list
+    * `src → nbrs` is sent to `src` and each of its edges to the target as
+    * a reverse source, and `merge(node, forward, reverse sources)` runs
+    * once per node that has either. Returns the dense adjacency; a node
+    * with neither keeps an empty list. Reverse sources arrive in shuffle
+    * order, so `merge` must not depend on their order ([[mergeReverse]]
+    * sorts them). */
+  private def reverseMerged(n: Int, forward: RDD[(Int, Array[Int])], part: Partitioner)(
+      merge: (Int, Array[Int], Array[Int]) => Array[Int]): Array[Array[Int]] = {
+    val merged = forward.flatMap { case (src, nbrs) =>
+      Iterator[(Int, Either[Array[Int], Int])]((src, Left(nbrs))) ++
+        nbrs.iterator.map(d => (d, Right(src)))
+    }.groupByKey(part).map { case (node, recs) =>
+      var fwd = Array.empty[Int]
+      val rev = Array.newBuilder[Int]
+      recs.foreach {
+        case Left(f)  => fwd = f
+        case Right(s) => rev += s
+      }
+      (node, merge(node, fwd, rev.result()))
+    }.collect()
+    val adj = Array.fill(n)(Array.empty[Int])
+    merged.foreach { case (i, nb) => adj(i) = nb }
+    adj
+  }
+
   /** Build. `base`/`queries` expose (id: long, vec: array<float>). */
   def build(base: DataFrame, queries: DataFrame, params: BuildParams,
             precomputedKnn: Option[DataFrame] = None): GraphIndex = {
@@ -172,7 +201,12 @@ object RoarGraphBuilder {
     // per query: pivot = 1-NN; occlusion-prune the rest of its kNN list as
     // pivot's forward candidates. Queries sharing a pivot are merged
     // deterministically (the reference last-writer-wins under a lock).
-    val proposals = knn.select(col("knn")).as[Array[Int]]
+    // The whole phase is one RDD pipeline at the build's default
+    // parallelism: the kNN input is narrowed to that many partitions
+    // without a shuffle.
+    val part = new HashPartitioner(sc.defaultParallelism)
+    val forward = knn.select(col("knn")).as[Array[Int]].rdd
+      .coalesce(part.numPartitions)
       .mapPartitions { it =>
         val v = bcVs.value
         it.flatMap { nn =>
@@ -187,33 +221,20 @@ object RoarGraphBuilder {
           }
         }
       }
-    val forwardRdd = proposals.groupByKey(_._1)
-      .mapGroups { (pivot, it) =>
+      .groupByKey(part)
+      .map { case (pivot, lists) =>
         val v = bcVs.value
-        val union = it.flatMap(_._2).toArray.distinct
+        val union = lists.flatten.toArray.distinct
           .map(c => (c, v.dist(pivot, c)))
         (pivot, OcclusionPrune.prune(union, pivot, params.mPjbp, v))
-      }.rdd
+      }
 
     // ---- phase 1b/1c: reverse sweep + overflow re-prune (G4/G5/G8) ----
-    // stays distributed end-to-end: nodes without a forward list join in
-    // via leftOuterJoin; nothing reaches the driver until the phase-end
-    // broadcast snapshot (which the reference's shared-memory model also
-    // requires in full)
-    val fwdDs = sc.parallelize(0 until n, 32).map(i => (i, ()))
-      .leftOuterJoin(forwardRdd)
-      .map { case (i, (_, fwd)) => (i, fwd.getOrElse(Array.empty[Int])) }
-    val revDs = fwdDs.flatMap { case (src, nbrs) => nbrs.map(d => (d, src)) }
-    val projection: Array[Array[Int]] = {
-      val merged = fwdDs.cogroup(revDs).map { case (node, (fwdIt, revIt)) =>
-        val v = bcVs.value
-        val fwd = fwdIt.headOption.getOrElse(Array.empty[Int])
-        (node, mergeReverse(fwd, revIt.toArray, node, v,
-          appendCap = m, pruneTo = m, backfill = true))
-      }.collect()
-      val adj = Array.fill(n)(Array.empty[Int])
-      merged.foreach { case (i, nb) => adj(i) = nb }
-      adj
+    // nothing reaches the driver until the phase-end snapshot (which the
+    // reference's shared-memory model also requires in full)
+    val projection = reverseMerged(n, forward, part) { (node, fwd, rev) =>
+      mergeReverse(fwd, rev, node, bcVs.value,
+        appendCap = m, pruneTo = m, backfill = true)
     }
 
     // ---- phase 2: connectivity enhancement (G6, :1183-1276) ----
@@ -221,12 +242,11 @@ object RoarGraphBuilder {
     // supply graph (the reference mutates it concurrently — order-dependent;
     // the BSP snapshot is the deterministic translation).
     val bcSupply = sc.broadcast(projection)
-    val selfSearch = spark.range(n).as[Long].mapPartitions { it =>
+    val selfSearch = sc.parallelize(0 until n, part.numPartitions).mapPartitions { it =>
       val v = bcVs.value
       val supply = bcSupply.value
       val visited = new BeamSearch.Visited(v.n)
-      it.map { nodeL =>
-        val node = nodeL.toInt
+      it.map { node =>
         val res = BeamSearch.search(supply, v.scorer(v.row(node)), params.mPjbp,
           params.lPjpq, ep, visited, exclude = node, collectPool = true)
         val pool = res.pool.filter(_._1 != node)
@@ -239,26 +259,19 @@ object RoarGraphBuilder {
           sorted(startIdx) +: (sorted.take(startIdx) ++ sorted.drop(startIdx + 1))
         (node, OcclusionPrune.prune(eff, node, params.mPjbp, v, backfill = false))
       }
-    }.rdd
-    val supplyRev = selfSearch.flatMap { case (src, nbrs) => nbrs.map(d => (d, src)) }
-    val supplyMerged = selfSearch.cogroup(supplyRev).map {
-      case (node, (fwdIt, revIt)) =>
-        val v = bcVs.value
-        val fwd = fwdIt.headOption.getOrElse(Array.empty[Int])
-        // G12 cap 2m on append; G11 overflow prune to m (no backfill); then
-        // the reference's post-pass re-prunes any node still over m (:1224-48)
-        val merged = mergeReverse(fwd, revIt.toArray, node, v,
-          appendCap = 2 * m, pruneTo = m, backfill = false)
-        val capped =
-          if (merged.length <= m) merged
-          else OcclusionPrune.prune(
-            merged.map(c => (c, v.dist(node, c))), node, m, v, backfill = false)
-        (node, capped)
-    }.collect()
+    }
+    val supplyArr = reverseMerged(n, selfSearch, part) { (node, fwd, rev) =>
+      val v = bcVs.value
+      // G12 cap 2m on append; G11 overflow prune to m (no backfill); then
+      // the reference's post-pass re-prunes any node still over m (:1224-48)
+      val merged = mergeReverse(fwd, rev, node, v,
+        appendCap = 2 * m, pruneTo = m, backfill = false)
+      if (merged.length <= m) merged
+      else OcclusionPrune.prune(
+        merged.map(c => (c, v.dist(node, c))), node, m, v, backfill = false)
+    }
 
     // ---- merge supply into projection, ≤ 2m novel edges (:1251-1269) ----
-    val supplyArr = Array.fill(n)(Array.empty[Int])
-    supplyMerged.foreach { case (i, nb) => supplyArr(i) = nb }
     val adj = Array.tabulate(n) { i =>
       val have = projection(i).toSet
       val novel = supplyArr(i).filter(!have.contains(_)).take(2 * m)

@@ -226,16 +226,20 @@ object QueriesVector {
       .select(col("query_id"),
         transform(col("knn"), _("id").cast("int")).as("ids"),
         transform(col("knn"), _("dist").cast("float")).as("dists"))
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_gt_${math.abs(dir.hashCode)}.ibin"
-    graft.sources.FbinCodec.writeGtWithDist(
-      gt.select(col("query_id").as("id"), col("ids"), col("dists")), tmp)
+    // one file per call, so concurrent calls never share one; the read-back
+    // is collected before the file is deleted (the reader reads in tasks)
+    val tmp = new org.apache.hadoop.fs.Path(
+      s"${sys.props("java.io.tmpdir")}/graft_gt_${java.util.UUID.randomUUID}.ibin")
+    val back = try {
+      graft.sources.FbinCodec.writeGtWithDist(
+        gt.select(col("query_id").as("id"), col("ids"), col("dists")), tmp.toString)
+      graft.sources.FbinCodec.readGtWithDist(s, tmp.toString)
+        .select(col("id"), col("dists")).as[(Long, Array[Float])].collect()
+    } finally tmp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(tmp, false)
     // row i of the file ↔ i-th smallest query_id (positional contract)
     val qids = gt.select(col("query_id")).orderBy("query_id").as[Long].collect()
-    val mapping = qids.zipWithIndex
-      .map { case (q, i) => (i.toLong, q) }.toSeq.toDF("id", "query_id")
-    val gtBack = graft.sources.FbinCodec.readGtWithDist(s, tmp)
-      .join(broadcast(mapping), "id")
-      .select(col("query_id"), col("dists"))
+    val gtBack = back.map { case (i, d) => (qids(i.toInt), d) }.toSeq
+      .toDF("query_id", "dists")
     val res = graft.ops.AnnSearch.lshTopK(qSide(s, dir), bSide(s, dir), k, Metric.L2)
       .groupBy("query_id")
       .agg(sort_array(collect_list(struct(col("rank"), col("dist")))).as("rd0"))

@@ -14,24 +14,6 @@ class KnnJoinSpec extends SparkSpec {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
-  private def vecRows(df: DataFrame): Array[(Long, Array[Float])] = {
-    import spark.implicits._
-    df.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])]
-      .collect().sortBy(_._1)
-  }
-
-  /** `rows` as an (id, vec) DataFrame of `nParts` partitions, row i in
-    * partition `partOf(i)`, built without a shuffle. */
-  private def spread(rows: Array[(Long, Array[Float])], nParts: Int)(
-      partOf: Int => Int): DataFrame = {
-    import spark.implicits._
-    val placed = rows.indices.map(i => (partOf(i), rows(i)))
-    spark.sparkContext.parallelize(0 until nParts, nParts)
-      .mapPartitionsWithIndex((p, _) =>
-        placed.iterator.collect { case (`p`, r) => r })
-      .toDF("id", "vec")
-  }
-
   private def rmTree(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rmTree); f.delete()
   }

@@ -48,6 +48,58 @@ class RoarGraphSpec extends SparkSpec {
     assert(again.adj.zip(index.adj).forall { case (a, b) => a.sameElements(b) })
   }
 
+  test("one build runs each phase's kernel once: 3 jobs, 6 stages, 23 tasks") {
+    // 3 base and 6 query partitions on local[4] (default parallelism 4):
+    // the base collect (3 tasks); phase 1 (query kNN + proposals on the
+    // queries narrowed to 4, pivot merge, reverse merge: 4 + 4 + 4); and
+    // phase 2 (self-search, reverse merge: 4 + 4). Before the one-shuffle
+    // merges the same build ran 4 jobs, 10 stages and 150 tasks: the
+    // self-search stage twice (it fed both sides of a cogroup), a 32-task
+    // all-node leftOuterJoin whose 32 partitions every later merge stage
+    // inherited, and a separate job for the Dataset pivot merge's shuffle
+    // map stage.
+    val base = spread(vecRows(baseDf), 3)(_ % 3)
+    val queries = spread(vecRows(queriesDf), 6)(_ % 6)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val built = try RoarGraphBuilder.build(base, queries, params)
+      finally { org.apache.spark.ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    assert(built.adj.zip(index.adj).forall { case (a, b) => a.sameElements(b) })
+    assert((jobs.get, stages.get, tasks.get) == ((3, 6, 23)),
+      s"(jobs, stages, tasks) = (${jobs.get}, ${stages.get}, ${tasks.get})")
+  }
+
+  test("adjacency does not depend on how base and queries are partitioned " +
+       "(L2, IP, cosine)") {
+    // the reverse merges take their records in shuffle order; the
+    // adjacency must not see it
+    val (b, q) = (vecRows(baseDf), vecRows(queriesDf))
+    for (metric <- Seq(Metric.L2, Metric.InnerProduct, Metric.Cosine)) {
+      val p = params.copy(metric = metric)
+      val Seq(one, three, twelve) = Seq(1, 3, 12).map(k =>
+        RoarGraphBuilder.build(spread(b, k)(_ % k), spread(q, k)(_ % k), p))
+      for ((g, k) <- Seq((three, 3), (twelve, 12))) {
+        assert(g.ep == one.ep, s"$metric: entry point differs at $k partitions")
+        g.adj.indices.foreach { i =>
+          assert(g.adj(i).sameElements(one.adj(i)),
+            s"$metric: node $i differs at $k partitions vs 1")
+        }
+      }
+    }
+  }
+
   test("search recall@10 >= 0.95 vs exact kNN at generous beam") {
     val res = RoarGraphBuilder.searchBatch(index, queriesDf,
       SearchParams(k = 10, lPq = 100, metric = Metric.L2))

@@ -97,6 +97,26 @@ class SourcesAndMultimodalSpec extends SparkSpec {
     assert(sz == 8L + 3 * 3 * 4 * 2)
   }
 
+  test("knn_rderr_ibin: two concurrent calls on one dir both give the oracle " +
+       "answer and leave no ground-truth file behind") {
+    // the ground truth makes a round trip through a temporary .ibin; two
+    // calls used to share one fixed path per dir (one read the other's
+    // half-written file: EOFException) and left it behind
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def gtFiles(since: Long) = Option(tmp.listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("graft_gt_") && f.lastModified >= since)
+      .map(_.getName)
+    val since = (System.currentTimeMillis() / 1000 - 1) * 1000
+    val query = graft.queries.QueriesVector.queries("knn_rderr_ibin")
+    val runs = Seq.fill(2)(Future(query(spark, sf0001).collect().toSeq.map(_.getDouble(0))))
+    val got = runs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    // DuckDB's value of QueriesVector.oracles("knn_rderr_ibin") at sf0.001
+    assert(got == Seq.fill(2)(Seq(0.039404)), s"mean_rderr: $got")
+    assert(gtFiles(since).isEmpty, s"left behind: ${gtFiles(since)}")
+  }
+
   test("abandoned read (limit) does not leak a file handle per partition") {
     val emb = Tables.vectors(spark, sf0001).select("id", "vec").limit(32)
     val dir = java.nio.file.Files.createTempDirectory("graft-fbin3").toString

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test JVM. */
@@ -24,6 +25,25 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** The (id, vec) rows of `df`, by id. */
+  def vecRows(df: DataFrame): Array[(Long, Array[Float])] = {
+    import spark.implicits._
+    df.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])]
+      .collect().sortBy(_._1)
+  }
+
+  /** `rows` as an (id, vec) DataFrame of `nParts` partitions, row i in
+    * partition `partOf(i)`, built without a shuffle. */
+  def spread(rows: Array[(Long, Array[Float])], nParts: Int)(
+      partOf: Int => Int): DataFrame = {
+    import spark.implicits._
+    val placed = rows.indices.map(i => (partOf(i), rows(i)))
+    spark.sparkContext.parallelize(0 until nParts, nParts)
+      .mapPartitionsWithIndex((p, _) =>
+        placed.iterator.collect { case (`p`, r) => r })
+      .toDF("id", "vec")
+  }
 
   /** The message of the first IllegalArgumentException in the cause chain
     * of what `body` throws (a task failure arrives wrapped by Spark). */
