@@ -100,15 +100,8 @@ object Bench {
     // computed per run, only the idle gaps between sequential jobs
     // overlap. Timed wall = until BOTH complete.
     val tSetup = System.nanoTime()
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fAnn = Future(graft.queries.QueriesAnn.materializeShared(spark, sfDir))
-      val fGraph = Future(graft.queries.QueriesGraph.materializeShared(spark, sfDir))
-      Await.result(fAnn, Duration.Inf)
-      Await.result(fGraph, Duration.Inf)
-    }
+    graft.queries.Concurrently(graft.queries.QueriesAnn.materializeShared(spark, sfDir))(
+      () => graft.queries.QueriesGraph.materializeShared(spark, sfDir))
     val sharedSetupSec = (System.nanoTime() - tSetup) / 1e9
 
     // ---- per-query wall times (the t2 surface), deterministic order ----

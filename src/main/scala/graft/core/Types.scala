@@ -23,10 +23,19 @@ sealed trait Metric extends Serializable {
 }
 
 object Metric {
+  /** Named failure for two vectors of different lengths: looping to one
+    * side's length would silently cut a longer `b` or index past a
+    * shorter one. */
+  private def checkDim(a: Array[Float], b: Array[Float]): Unit =
+    if (a.length != b.length)
+      throw new IllegalArgumentException(
+        s"distance: vector dimension mismatch (${a.length} vs ${b.length})")
+
   /** Squared L2 (no sqrt — matches DistanceL2::compare,
     * include/efanna2e/distance.h:22-90). */
   case object L2 extends Metric {
     override def dist(a: Array[Float], b: Array[Float]): Double = {
+      checkDim(a, b)
       var s = 0.0; var i = 0; val n = a.length
       while (i < n) { val d = a(i).toDouble - b(i); s += d * d; i += 1 }
       s
@@ -35,6 +44,7 @@ object Metric {
   /** Negated inner product (include/efanna2e/distance.h:92-226). */
   case object InnerProduct extends Metric {
     override def dist(a: Array[Float], b: Array[Float]): Double = {
+      checkDim(a, b)
       var s = 0.0; var i = 0; val n = a.length
       while (i < n) { s += a(i).toDouble * b(i); i += 1 }
       -s

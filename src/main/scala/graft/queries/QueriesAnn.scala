@@ -307,21 +307,10 @@ object QueriesAnn {
       // trainP only), so it runs concurrently and back-fills the
       // trainer's collect-job gaps (guide §2.6)
       trainP.count()
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fB = Future(bP.count())
-        // always await the concurrent count, even when the trainer throws
-        // (ADVICE r13): an orphaned running job would keep the session
-        // busy and its own failure would be swallowed
-        val cb =
-          try Quantize.pqTrain(trainP, PqM, PqK, PqIters).cache()
-          finally Await.ready(fB, Duration.Inf)
-        Await.result(fB, Duration.Inf)
-        val codes = Quantize.pqEncodeKernel(bP, cb, PqM).cache()
-        (cb, codes, qP)
-      }
+      val cb = Concurrently(Quantize.pqTrain(trainP, PqM, PqK, PqIters).cache())(
+        () => bP.count())
+      val codes = Quantize.pqEncodeKernel(bP, cb, PqM).cache()
+      (cb, codes, qP)
     }
 
   /** Recall of OPQ-rotated PQ search WITH the refine stage vs exact kNN —

@@ -4,6 +4,7 @@ import graft.build.{BipartiteBuilder, RoarGraphBuilder}
 import graft.core.{BuildParams, Metric, SearchParams, Tables}
 import graft.eval.Eval
 import graft.ops.KnnJoin
+import graft.ops.graph.GraphSearch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,8 +13,20 @@ import org.apache.spark.sql.functions._
   * (iterative/graph-traversal semantics → rows-only driver check; the
   * ScalaTest recall gate in RoarGraphSpec is the correctness authority).
   *
+  * Session-shared artifacts ([[materializeShared]] builds all three; a
+  * query that runs first builds the one it needs):
+  *  - the in-memory RoarGraph index ([[memIndex]]): read by
+  *    roargraph_build_stats, roargraph_search_recall and QueriesAnn's
+  *    ann_pq_beam_topk;
+  *  - the bipartite 2-hop index ([[bipartiteIndex]]): read by
+  *    bipartite_search_recall;
+  *  - the distributed build with its broadcast search view
+  *    ([[distBuilt]]): read by roargraph_dist_recall.
+  * graph_bipartite and graph_bipartite_2hop are relational plans over the
+  * session's exact ground truth (QueriesAnn.exactGt) and build no index.
+  *
   * Conventions: embeddings ids < 20 = sampled queries, >= 20 = base;
-  * query node offset nd = 1000; k = 10.
+  * query node offset Nd = 1,000,000; k = 10.
   */
 object QueriesGraph {
 
@@ -83,44 +96,51 @@ object QueriesGraph {
 
   // ---- bipartite search (Q2): beam over the 2-hop projection — rows-only --
 
+  /** The bipartite 2-hop index, built ONCE per (session, sfDir) like
+    * memMemo below: every warm pass of the recall query, GraphGoldenSpec
+    * and Verify search the same deterministic graph. The factory reads
+    * only Tables (a leaf, see SessionMemo's lock-ordering note). */
+  private val bipartiteMemo = new SessionMemo[graft.build.GraphIndex]
+  private[graft] def bipartiteIndex(s: SparkSession, dir: String): graft.build.GraphIndex =
+    bipartiteMemo.getOrElseUpdate(s, dir) {
+      // the bipartite baseline needs |sampled queries| ≈ |base| for its 2-hop
+      // graph to be connected (the reference trains on 10M queries for 10M
+      // base, prepare_data.sh:27) — use the whole collection as the sample
+      val train = emb(s, dir)
+      val b = bSide(s, dir)
+      // work-derived base spread (guide §2.6 idle capacity): this train-side
+      // kNN scores |corpus|×|base| pairs inside KnnJoin's per-base-partition
+      // heap kernel, and the sf-scale parquet scan is ONE partition — the
+      // whole sweep ran as a single task while 31 cores idled. Target ~800k
+      // scored pairs per task (≈50M mul-adds at 64-d — well above task
+      // overhead), capped at the conf: at corpus scale the scan already has
+      // ≥ conf partitions and the spread is a no-op. Result-identical: the
+      // partial/final top-k merge is partition-count-independent (exact
+      // distances, (dist, id) ties).
+      val pairsPerTask = 800000L
+      // one footer-metadata count: |train| = the whole table, |base| =
+      // n - 20 by the fixed id convention (ids < 20 are the query side)
+      val n = train.count()
+      val workParts = math.max(1L, math.min(
+        s.conf.get("spark.sql.shuffle.partitions").toLong,
+        n * math.max(0L, n - 20L) / pairsPerTask)).toInt
+      val bSpread =
+        if (b.rdd.getNumPartitions < workParts) b.repartition(workParts) else b
+      val knnTrain = KnnJoin(train, bSpread, 10, Metric.L2)
+        .select(col("query_id"), transform(col("knn"), _("id")).as("knn"))
+      val adj = BipartiteBuilder.build(knnTrain, Nd, M)
+      val twoHop = BipartiteBuilder.projectTwoHop(adj, Nd)
+      GraphSearch.indexFromDF(twoHop, b, Metric.L2)
+    }
+
   /** Search-result ids of the bipartite 2-hop beam path — shared by the
     * recall query and the golden-pin spec (GraphGoldenSpec hashes these
     * ids at sf0.01 so a traversal-order regression is caught even though
     * beam search has no SQL oracle). */
-  private[graft] def bipartiteSearchIds(s: SparkSession, dir: String): DataFrame = {
-    // the bipartite baseline needs |sampled queries| ≈ |base| for its 2-hop
-    // graph to be connected (the reference trains on 10M queries for 10M
-    // base, prepare_data.sh:27) — use the whole collection as the sample
-    val train = emb(s, dir)
-    val b = bSide(s, dir)
-    // work-derived base spread (guide §2.6 idle capacity): this train-side
-    // kNN scores |corpus|×|base| pairs inside KnnJoin's per-base-partition
-    // heap kernel, and the sf-scale parquet scan is ONE partition — the
-    // whole sweep ran as a single task while 31 cores idled. Target ~800k
-    // scored pairs per task (≈50M mul-adds at 64-d — well above task
-    // overhead), capped at the conf: at corpus scale the scan already has
-    // ≥ conf partitions and the spread is a no-op. Result-identical: the
-    // partial/final top-k merge is partition-count-independent (exact
-    // distances, (dist, id) ties).
-    val pairsPerTask = 800000L
-    // one footer-metadata count: |train| = the whole table, |base| =
-    // n - 20 by the fixed id convention (ids < 20 are the query side)
-    val n = train.count()
-    val workParts = math.max(1L, math.min(
-      s.conf.get("spark.sql.shuffle.partitions").toLong,
-      n * math.max(0L, n - 20L) / pairsPerTask)).toInt
-    val bSpread =
-      if (b.rdd.getNumPartitions < workParts) b.repartition(workParts) else b
-    val knnTrain = KnnJoin(train, bSpread, 10, Metric.L2)
-      .select(col("query_id"), transform(col("knn"), _("id")).as("knn"))
-    val adj = BipartiteBuilder.build(knnTrain, Nd, M)
-    val twoHop = BipartiteBuilder.projectTwoHop(adj, Nd)
-    val idx = graft.ops.graph.GraphSearch.indexFromDF(
-      twoHop, bSide(s, dir), Metric.L2)
+  private[graft] def bipartiteSearchIds(s: SparkSession, dir: String): DataFrame =
     RoarGraphBuilder
-      .searchBatch(idx, qSide(s, dir), SearchParams(10, 100, Metric.L2))
+      .searchBatch(bipartiteIndex(s, dir), qSide(s, dir), SearchParams(10, 100, Metric.L2))
       .select(col("query_id"), col("ids"))
-  }
 
   private def bipartiteSearchRecall(s: SparkSession, dir: String): DataFrame = {
     val res = bipartiteSearchIds(s, dir)
@@ -178,60 +198,56 @@ object QueriesGraph {
 
   // ---- fully distributed build (no driver materialization) — rows-only ---
 
+  /** A distributed build and its broadcast search view, in ONE memo
+    * entry: the view is collected right after the build, under the same
+    * lock, so no nested memo (and no lock edge) is added. */
+  private[graft] final case class DistBuilt(index: graft.build.DistIndex,
+                                            view: graft.build.GraphIndex)
+
   /** Build the index with [[graft.build.DistRoarGraphBuilder]] — vectors
     * and adjacency never touch the driver or a broadcast during the build
     * (the beyond-broadcast-size path) — then search and report recall
     * beside the in-memory builder's number. Phase-2 beam kept narrow: the
     * BSP self-search pays per-round join latency, so its width is the
-    * build-cost knob at small scale. */
-  /** Distributed build + search ids — shared by the recall query and
-    * GraphGoldenSpec's sf0.01 id-hash pin. The dist index is built ONCE
-    * per (session, sfDir) — the build (incl. the default-ON reachability
-    * repair) is the expensive, deterministic part, and every consumer in
-    * a session (bench query, golden spec, verify) wants the same graph;
-    * rebuilding it inside each query made roargraph_dist_recall the
-    * bench's slowest entry (VERDICT r5 #2). */
-  private val distMemo = new SessionMemo[graft.build.DistIndex]
-  private[graft] def roargraphDistSearchIds(s: SparkSession, dir: String): DataFrame = {
-    val dist = distMemo.getOrElseUpdate(s, dir) {
+    * build-cost knob at small scale.
+    *
+    * Built ONCE per (session, sfDir), with its search view — the build
+    * (incl. the default-ON reachability repair) is the expensive,
+    * deterministic part, and every consumer in a session (bench query,
+    * golden spec, verify) wants the same graph; rebuilding it inside each
+    * query made roargraph_dist_recall the bench's slowest entry (VERDICT
+    * r5 #2), and re-collecting the view cost each call two collects. */
+  private val distMemo = new SessionMemo[DistBuilt]
+  private[graft] def distBuilt(s: SparkSession, dir: String): DistBuilt =
+    distMemo.getOrElseUpdate(s, dir) {
       val di = graft.build.DistRoarGraphBuilder.build(
         bSide(s, dir), qSide(s, dir), buildParams, frontierWidth = 16)
-      di.copy(adj = di.adj.cache())
+      val index = di.copy(adj = di.adj.cache())
+      DistBuilt(index, GraphSearch.indexFromDist(index, bSide(s, dir)))
     }
-    val idx = graft.ops.graph.GraphSearch.indexFromDist(dist, bSide(s, dir))
-    RoarGraphBuilder
-      .searchBatch(idx, qSide(s, dir), SearchParams(10, 100, Metric.L2, numSeeds = 4))
-      .select(col("query_id"), col("ids"))
-  }
 
-  /** Bench hook (same contract as QueriesAnn.materializeShared): force
-    * the session-shared distributed index build — incl. the default-ON
-    * reachability repair — so the bench's roargraph_dist_recall wall
-    * measures search + recall, and the one-time build cost lands in the
-    * timed shared_setup_sec field instead. Correctness consumers (Verify,
-    * GraphGoldenSpec) are unaffected: the memo hands them the same graph. */
-  private[graft] def materializeShared(s: SparkSession, dir: String): Unit = {
-    // the in-memory index memo too: it is consumed by three queries
-    // (roargraph_build_stats/search_recall and QueriesAnn's PQ-beam), and
-    // whichever ran first paid its build wall (measured ~1.9 s of
-    // ann_pq_beam_topk's bench time was this build).
-    // The two builds are independent (separate memo instances, disjoint
-    // outputs) — overlap them (guide §2.6): the in-memory builder is
-    // driver-CPU-heavy, so it back-fills the dist build's job-latency
-    // gaps instead of serializing ~1.4 s in front of them.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fMem = Future(memIndex(s, dir))
-    val dist = distMemo.getOrElseUpdate(s, dir) {
-      val di = graft.build.DistRoarGraphBuilder.build(
-        bSide(s, dir), qSide(s, dir), buildParams, frontierWidth = 16)
-      di.copy(adj = di.adj.cache())
-    }
-    dist.adj.count()
-    Await.result(fMem, Duration.Inf)
-    ()
-  }
+  /** Distributed build + search ids — shared by the recall query and
+    * GraphGoldenSpec's sf0.01 id-hash pin. */
+  private[graft] def roargraphDistSearchIds(s: SparkSession, dir: String): DataFrame =
+    RoarGraphBuilder
+      .searchBatch(distBuilt(s, dir).view, qSide(s, dir),
+        SearchParams(10, 100, Metric.L2, numSeeds = 4))
+      .select(col("query_id"), col("ids"))
+
+  /** Bench hook (same contract as QueriesAnn.materializeShared): build
+    * the family's three session-shared indexes, so each query's wall
+    * measures search + recall and the one-time build cost lands in the
+    * timed shared-setup field instead. Correctness consumers (Verify,
+    * GraphGoldenSpec) are unaffected: the memos hand them the same graphs.
+    *
+    * The builds are independent (separate memo instances, disjoint
+    * outputs, leaf-only factories), so they overlap: the distributed
+    * build, which is job-latency-bound, runs on this thread, and the
+    * in-memory build (driver-CPU-heavy) and the bipartite build (one kNN
+    * join and two collects) back-fill its gaps. */
+  private[graft] def materializeShared(s: SparkSession, dir: String): Unit =
+    Concurrently(distBuilt(s, dir))(
+      () => memIndex(s, dir), () => bipartiteIndex(s, dir))
 
   private def roargraphDistRecall(s: SparkSession, dir: String): DataFrame = {
     val res = roargraphDistSearchIds(s, dir)

@@ -24,7 +24,12 @@ import org.apache.spark.sql.SparkSession
   * driver threads. The lock graph stays acyclic only while memo factories
   * acquire other memo locks in one direction — today every factory calls
   * at most "leaf" memos (Tables reads, its own family's sub-artifacts)
-  * and the two concurrent families touch DISJOINT memo instances. A new
+  * and the two concurrent families touch DISJOINT memo instances. Within
+  * the graph family, `QueriesGraph.materializeShared` also runs three
+  * factories at once (`memMemo`, `bipartiteMemo`, `distMemo`); each reads
+  * only Tables, and `distMemo` keeps its search view in the same entry
+  * rather than in a nested memo, so none of them takes a second memo
+  * lock. A new
   * cross-family memo reference (e.g. a graph memo whose factory reads a
   * QueriesAnn memo while QueriesAnn's factory reads a graph memo) would
   * deadlock the concurrent setup — either keep the reference one-way, or

@@ -20,6 +20,17 @@ class GraphKernelSpec extends AnyFunSuite {
     assert(ip.dist(0, 1) == -13.0)
   }
 
+  test("Metric.dist rejects vectors of different lengths with a named error " +
+       "(L2, IP, cosine; longer and shorter b)") {
+    val a = Array(1f, 2f)
+    for (m <- Seq(Metric.L2, Metric.InnerProduct, Metric.Cosine);
+         b <- Seq(Array(1f, 2f, 3f), Array(1f))) {
+      val e = intercept[IllegalArgumentException](m.dist(a, b))
+      assert(e.getMessage ==
+        s"distance: vector dimension mismatch (2 vs ${b.length})", s"$m")
+    }
+  }
+
   test("VecStore cosine pre-normalizes rows") {
     val vs = VecStore(Array(Array(3f, 4f), Array(0f, 2f)), Metric.Cosine)
     // normalized: (0.6, 0.8), (0, 1) → -ip = -0.8

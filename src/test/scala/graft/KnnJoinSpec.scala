@@ -24,25 +24,6 @@ class KnnJoinSpec extends SparkSpec {
       (java.lang.Double.doubleToLongBits(n.getDouble(0)), n.getLong(1))).toSeq)
       .sortBy(_._1).toSeq
 
-  /** Jobs started and shuffle bytes written while `body` runs. */
-  private def jobsAndShuffle(body: => Any): (Int, Long) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val shuffle = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(listener)
-    (jobs.get, shuffle.get)
-  }
-
   private def roundTrip(metric: Metric): Unit = {
     val emb = Tables.vectors(spark, sf0001)
     val q = emb.filter(col("id") < 10)

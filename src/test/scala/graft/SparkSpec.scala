@@ -45,6 +45,25 @@ abstract class SparkSpec extends AnyFunSuite {
       .toDF("id", "vec")
   }
 
+  /** Jobs started and shuffle bytes written while `body` runs. */
+  def jobsAndShuffle(body: => Any): (Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val shuffle = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          shuffle.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    (jobs.get, shuffle.get)
+  }
+
   /** The message of the first IllegalArgumentException in the cause chain
     * of what `body` throws (a task failure arrives wrapped by Spark). */
   def namedError(body: => Any): String = {
