@@ -91,11 +91,6 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   */
 object DistRoarGraphBuilder {
 
-  private def metricName(m: Metric): String = m match {
-    case Metric.L2 => "l2"
-    case _         => "ip" // cosine inputs are pre-normalized below
-  }
-
   // checkpoint metadata resolves through the session's Hadoop FS (CpIO),
   // not java.io.File: stage data goes through Spark's Hadoop FS, so an
   // hdfs:// / s3a:// checkpointDir must probe the SAME filesystem or
@@ -182,7 +177,6 @@ object DistRoarGraphBuilder {
     // cosine is lowered to normalize-then-IP exactly like the reference
     // (src/index_bipartite.cpp:176-182); all internal scoring uses this
     val scoreMetric = if (metric.needNormalize) Metric.InnerProduct else metric
-    val mn = metricName(scoreMetric)
 
     def normalized(df: DataFrame): DataFrame =
       if (!metric.needNormalize) df.select(col("id").cast("long"), col("vec"))
@@ -199,7 +193,7 @@ object DistRoarGraphBuilder {
     // (CpIO.KernelVersion) so stages built under a bit-differently-
     // associating kernel are never silently mixed across a code change.
     checkpointDir.foreach(d => guardFingerprint(d,
-      s"m=${params.mPjbp},l=${params.lPjpq},mSq=${params.mSq},metric=$mn," +
+      s"m=${params.mPjbp},l=${params.lPjpq},mSq=${params.mSq},metric=${scoreMetric.name}," +
         s"fw=$frontierWidth,mr=$maxRounds,seeds=$selfSearchSeeds," +
         s"p2b=$selfSearchBatches,kernel=${graft.core.CpIO.KernelVersion}"))
 
@@ -256,7 +250,7 @@ object DistRoarGraphBuilder {
         .join(candVecs, "cand")
         .join(pivotVecs, "pivot")
         .select(col("pivot"), col("cand"),
-          VectorFunctions.distByMetric(mn)(col("pvec"), col("cvec")).as("d"),
+          VectorFunctions.distByMetric(scoreMetric)(col("pvec"), col("cvec")).as("d"),
           col("cvec"))
         .groupBy("pivot")
         .agg(topCand(col("cand"), col("d"), col("cvec")).as("cands"))

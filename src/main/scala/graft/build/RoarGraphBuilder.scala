@@ -185,7 +185,6 @@ object RoarGraphBuilder {
     val ids = baseRows.map(_._1)
     val vs = VecStore(baseRows.map(_._2), params.metric)
     val bcVs = sc.broadcast(vs)
-    val extToDense = ids.zipWithIndex.toMap
     val n = ids.length
 
     // ---- entry point (G22) ----

@@ -20,6 +20,13 @@ sealed trait Metric extends Serializable {
   /** Whether input vectors must be L2-normalized first (cosine is lowered to
     * normalize-then-IP exactly like src/index.cpp:14-21). */
   def needNormalize: Boolean = false
+  /** The one name of this metric, read back by [[Metric.fromString]].
+    * Saved layouts persist it as `meta.metric`, so a name never changes. */
+  final def name: String = this match {
+    case Metric.L2           => "l2"
+    case Metric.InnerProduct => "ip"
+    case Metric.Cosine       => "cosine"
+  }
 }
 
 object Metric {

@@ -182,12 +182,4 @@ object DistanceExpressions {
   def l2Sq(a: Column, b: Column): Column = c(L2SqDistance(e(a), e(b)))
   def negIp(a: Column, b: Column): Column = c(NegIpDistance(e(a), e(b)))
   def cosine(a: Column, b: Column): Column = c(CosineDistance(e(a), e(b)))
-
-  def byMetric(metric: String)(a: Column, b: Column): Column =
-    metric.toLowerCase match {
-      case "l2"     => l2Sq(a, b)
-      case "ip"     => negIp(a, b)
-      case "cosine" => cosine(a, b)
-      case m        => throw new IllegalArgumentException(s"metric $m")
-    }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.core.Metric
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -27,12 +28,8 @@ object VectorFunctions {
     aggregate(terms, lit(0.0), (acc, x) => acc + x)
 
   /** Squared L2 distance between two array<float> columns — native codegen
-    * expression; [[hofL2Sq]] is the higher-order-function equivalent
-    * (bit-identical, kept for the equivalence spec and double-array use). */
+    * expression. */
   def l2Sq(a: Column, b: Column): Column = DistanceExpressions.l2Sq(a, b)
-
-  def hofL2Sq(a: Column, b: Column): Column =
-    seqSum(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)))
 
   /** Dot product. */
   def dot(a: Column, b: Column): Column =
@@ -40,8 +37,6 @@ object VectorFunctions {
 
   /** Negated inner product (smaller = closer) — native codegen. */
   def negIp(a: Column, b: Column): Column = DistanceExpressions.negIp(a, b)
-
-  def hofNegIp(a: Column, b: Column): Column = -dot(a, b)
 
   /** L2 norm (with sqrt). */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
@@ -68,18 +63,10 @@ object VectorFunctions {
   def cosineDist(a: Column, b: Column): Column =
     DistanceExpressions.cosine(a, b)
 
-  def hofCosineDist(a: Column, b: Column): Column = {
-    val na = l2Norm(a)
-    val nb = l2Norm(b)
-    -(dot(a, b) / (na * nb))
+  /** Distance column for `metric`. */
+  def distByMetric(metric: Metric)(a: Column, b: Column): Column = metric match {
+    case Metric.L2           => l2Sq(a, b)
+    case Metric.InnerProduct => negIp(a, b)
+    case Metric.Cosine       => cosineDist(a, b)
   }
-
-  /** Distance column by metric name ("l2" | "ip" | "cosine"). */
-  def distByMetric(metric: String)(a: Column, b: Column): Column =
-    metric.toLowerCase match {
-      case "l2"     => l2Sq(a, b)
-      case "ip"     => negIp(a, b)
-      case "cosine" => cosineDist(a, b)
-      case m        => throw new IllegalArgumentException(s"metric $m")
-    }
 }

@@ -64,10 +64,6 @@ object AnnSearch {
     * Output (query_id, rank, base_id, dist). */
   def lshTopK(queries: DataFrame, base: DataFrame, k: Int, metric: Metric,
               bits: Int = LshBits): DataFrame = {
-    val metricName = metric match {
-      case Metric.L2 => "l2"; case Metric.InnerProduct => "ip"
-      case Metric.Cosine => "cosine"
-    }
     val qb = lshBucket(col("vec"), bits)
     val probeList = array(qb +: (0 until bits).map(j => qb.bitwiseXOR(lit(1L << j))): _*)
     val q = queries.select(col("id").as("query_id"), col("vec").as("qvec"),
@@ -76,7 +72,7 @@ object AnnSearch {
       lshBucket(col("vec"), bits).as("bucket"))
     val scored = q.join(b, "bucket")
       .withColumn("dist",
-        VectorFunctions.distByMetric(metricName)(col("qvec"), col("bvec")))
+        VectorFunctions.distByMetric(metric)(col("qvec"), col("bvec")))
     topKPerQuery(scored, k)
   }
 
@@ -238,10 +234,6 @@ object AnnSearch {
   def ivfTopKTable(spark: org.apache.spark.sql.SparkSession, path: String,
                    queries: DataFrame, k: Int, nprobe: Int,
                    metric: Metric): DataFrame = {
-    val metricName = metric match {
-      case Metric.L2 => "l2"; case Metric.InnerProduct => "ip"
-      case Metric.Cosine => "cosine"
-    }
     val cents = collectCentroids(spark.read.parquet(s"$path/centroids"))
     // materialized once: both the driver-side distinct-ids collect and the
     // pruned-list join consume the scored probes
@@ -256,7 +248,7 @@ object AnnSearch {
       .select(col("centroid_id"), col("id").as("base_id"), col("vec").as("bvec"))
     val scored = probes.join(lists, "centroid_id")
       .withColumn("dist",
-        VectorFunctions.distByMetric(metricName)(col("qvec"), col("bvec")))
+        VectorFunctions.distByMetric(metric)(col("qvec"), col("bvec")))
     topKPerQuery(scored, k)
   }
 
@@ -281,17 +273,13 @@ object AnnSearch {
   def ivfTopKOnLists(queries: DataFrame, lists: DataFrame,
                      centroids: DataFrame, k: Int, nprobe: Int,
                      metric: Metric): DataFrame = {
-    val metricName = metric match {
-      case Metric.L2 => "l2"; case Metric.InnerProduct => "ip"
-      case Metric.Cosine => "cosine"
-    }
     // query → nprobe nearest centroids: sort the literal centroid scores in
     // one projection (no join, no window), take the first nprobe
     val probes = probesLocal(queries, collectCentroids(centroids), nprobe)
     // search only the probed lists; bounded per-query top-k
     val scored = probes.join(lists, "centroid_id")
       .withColumn("dist",
-        VectorFunctions.distByMetric(metricName)(col("qvec"), col("bvec")))
+        VectorFunctions.distByMetric(metric)(col("qvec"), col("bvec")))
     topKPerQuery(scored, k)
   }
 }

@@ -26,22 +26,4 @@ object Dedup {
   def dedupIds(docs: DataFrame, textCol: String = "text",
                idCol: String = "doc_id"): DataFrame =
     exactGroups(docs, textCol, idCol).select(col("keep_id").as(idCol))
-
-  /** Skew-hardened exact dedup: two-phase salted aggregation. When one
-    * content value dominates (the classic near-empty-document skew at
-    * 100 TB: billions of "" or boilerplate rows land on one reducer), a
-    * plain groupBy(hash) sends them all to one task. Salting splits each
-    * hash across `salts` reducers for the partial aggregate, then a second
-    * (now tiny: ≤ salts rows per hash) aggregate removes the salt.
-    * Result is identical to [[exactGroups]] — asserted in DedupSaltSpec. */
-  def exactGroupsSalted(docs: DataFrame, salts: Int = 16,
-                        textCol: String = "text",
-                        idCol: String = "doc_id"): DataFrame =
-    docs
-      .select(md5(col(textCol).cast("binary")).as("text_hash"), col(idCol))
-      .withColumn("salt", pmod(hash(col(idCol)), lit(salts)))
-      .groupBy("text_hash", "salt")
-      .agg(count("*").as("n"), min(col(idCol)).as("keep"))
-      .groupBy("text_hash")
-      .agg(sum("n").as("n_dups"), min("keep").as("keep_id"))
 }

@@ -5,9 +5,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.types._
@@ -790,27 +788,6 @@ object KnnJoin {
     if (routedCut != null) routedCut._2()
     centsBc.destroy() // the drain is complete; the centroid grid is dead
     out
-  }
-
-  /** Reference implementation via crossJoin + window — the oracle-shaped
-    * plan (row_number over (partition by query order by dist, id) <= k).
-    * O(|Q|*|B|) shuffle; used for tests and as the DuckDB-mirroring path. */
-  def crossWindow(queries: DataFrame, base: DataFrame, k: Int, metric: Metric): DataFrame = {
-    val metricName = metric match {
-      case Metric.L2 => "l2"
-      case Metric.InnerProduct => "ip"
-      case Metric.Cosine => "cosine"
-    }
-    val q = queries.select(col("id").as("query_id"), col("vec").as("qvec"))
-    val b = base.select(col("id").as("base_id"), col("vec").as("bvec"))
-    val scored = q.crossJoin(b)
-      .withColumn("dist",
-        VectorFunctions.distByMetric(metricName)(col("qvec"), col("bvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("base_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("base_id"), col("dist"))
   }
 
   /** Flatten [query_id, knn] to one row per neighbor with 1-based rank. */

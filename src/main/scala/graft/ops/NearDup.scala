@@ -43,16 +43,10 @@ object NearDup {
   // ---- building blocks ----------------------------------------------------
 
   /** Character-level polynomial hash of a string column, mod HashMod —
-    * native codegen expression (one fused loop, no per-char array); the
-    * HOF formulation it replaced is kept as [[hofCharHash]] for the
-    * equivalence spec and as documentation of the oracle-mirrored
-    * semantics. */
+    * native codegen expression (one fused loop, no per-char array). The
+    * spec pins it to the higher-order-function form the DuckDB oracle
+    * mirrors (HofOracle.charHash in the tests). */
   def charHash(s: Column): Column = graft.functions.CharPolyHash.column(s)
-
-  /** The higher-order-function form (what the DuckDB oracle mirrors). */
-  def hofCharHash(s: Column): Column =
-    aggregate(transform(split(s, ""), c => ascii(c).cast("long")),
-      lit(0L), (acc, x) => (acc * CharBase + x) % HashMod)
 
   /** Distinct word-`n`-gram shingle hashes over a TOKEN ARRAY column
     * (sorted for determinism); shingle = space-joined n-gram.

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scalar quantization (SQ8) for embedding storage: per-dimension min/max
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * keeps distances computable with plain arithmetic).
   *
   * SQ8 is relational and deterministic (bounds are a per-dimension
-  * aggregate, encode/decode column expressions); the PQ kernels below run
+  * aggregate, the round trip one column pass); the PQ kernels below run
   * over [[PqCodebook]], and the specs pin them to relational oracles. */
 object Quantize {
 
@@ -21,32 +21,11 @@ object Quantize {
       .agg(min(col("x").cast("double")).as("lo"),
         max(col("x").cast("double")).as("hi"))
 
-  /** Encode: code_d = round(255 * (x_d - lo_d) / (hi_d - lo_d)), constant
-    * dims → 0. Output (id, codes: array<int> 0..255). Bounds are joined in
-    * exploded form and re-assembled — one broadcastable join, no UDF. */
-  def sq8Encode(vectors: DataFrame, bounds: DataFrame): DataFrame = {
-    val ex = vectors.select(col("id"), posexplode(col("vec")).as(Seq("pos", "x")))
-    ex.join(broadcast(bounds), "pos")
-      .select(col("id"), col("pos"),
-        when(col("hi") > col("lo"),
-          round(lit(255.0) * (col("x").cast("double") - col("lo"))
-            / (col("hi") - col("lo"))).cast("int"))
-          .otherwise(lit(0)).as("code"))
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("pos"), col("code")))).as("cs"))
-      .select(col("id"), transform(col("cs"), _("code")).as("codes"))
-  }
-
-  /** Decode a codes column back to doubles given aligned lo/hi arrays. */
-  def sq8Decode(codes: Column, lo: Column, hi: Column): Column =
-    zip_with(codes, zip_with(lo, hi, (l, h) => struct(l.as("l"), h.as("h"))),
-      (c, b) => b("l") + (c.cast("double") / 255.0) * (b("h") - b("l")))
-
   /** Fused encode→decode round trip: the quantization error surface
     * (id, vec: array<float> of decoded values) in ONE pass over the
-    * exploded vectors. Float-identical to
-    * `sq8Decode(sq8Encode(v, bounds)) cast float` — per element the same
-    * op chain (round(255·(x−lo)/(hi−lo)) cast int, then
+    * exploded vectors. Float-identical to the staged
+    * `decode(encode(v, bounds)) cast float` (Sq8Oracle in the tests) —
+    * per element the same op chain (round(255·(x−lo)/(hi−lo)) cast int, then
     * lo + (code/255)·(hi−lo), cast float; constant dims → lo) — but the
     * staged form paid a groupBy-exchange to assemble the codes array, a
     * one-row bounds collect + crossJoin broadcast, and a zip_with decode
@@ -175,7 +154,7 @@ object Quantize {
     * codebook[s][j])`, and a coded vector's distance is `m` array lookups
     * summed — the scan touches `m` code bytes per vector instead of `dim`
     * floats (16 B vs 256 B at the 16×4-d layout). Identical result set to
-    * exact kNN over [[pqReconstruct]]ed vectors (ADC distance ≡ distance
+    * exact kNN over PQ-reconstructed vectors (ADC distance ≡ distance
     * to the reconstruction, summed per subspace).
     *
     * Physical shape mirrors [[KnnJoin]]: lazy query blocks broadcast one
@@ -277,9 +256,7 @@ object Quantize {
     opqRotatePermuted(vectors, dim, Array.range(0, hadamardDim(dim)))
 
   /** The sign-flipped Hadamard matrix of [[opqRotate]], flattened
-    * row-major, with output row i taken from Hadamard row perm(i) — shared
-    * by the expression path and the fused encode kernel so the two can
-    * never drift. */
+    * row-major, with output row i taken from Hadamard row perm(i). */
   private def hadamardMat(dim: Int, perm: Array[Int]): Array[Double] = {
     require(perm.length == dim, s"perm has ${perm.length} entries, expected padDim=$dim")
     val m = new Array[Double](dim * dim)
@@ -295,58 +272,6 @@ object Quantize {
       i += 1
     }
     m
-  }
-
-  /** Fused pad→rotate→permute→encode kernel — the corpus-scale form of
-    * `pqEncodeKernel(permute(opqRotate(v), perm), cb, m)`, bit-identical by
-    * construction: the rotation replays MatVecRotate's exact per-output
-    * left fold (double accumulation over ALL padDim terms including the
-    * padding zeros, one multiply by scale, cast to float) over the same
-    * row-permuted matrix as [[opqRotatePermuted]], and the argmin is
-    * [[PqCodebook.encode]], the one [[pqEncodeKernel]] runs.
-    *
-    * Why fused: the staged column pipeline collapses under Catalyst's
-    * project merging — the 256-element permute projection inlines the
-    * 65k-term MatVecRotate into EVERY element when the consumer is a
-    * Dataset boundary (no CSE across it), re-evaluating the rotation
-    * 256× per row (measured: 244 s for 30k×200d rows vs 0.5 s for the
-    * collapsed column-only plan). One mapPartitions pass does the whole
-    * chain in padDim² + m·k·subDim fused multiply-adds per row with
-    * zero intermediate materialization. Equivalence is spec-gated.
-    * Every row must be `dim` long. Output (id: long, codes: array<int>). */
-  def opqEncodeKernel(vectors: DataFrame, codebooks: DataFrame, m: Int,
-                      dim: Int, perm: Array[Int]): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val padDim = hadamardDim(dim)
-    val scale = 1.0 / math.sqrt(padDim.toDouble)
-    val bcBooks = spark.sparkContext.broadcast(PqCodebook.load(codebooks, m))
-    val bcMat = spark.sparkContext.broadcast(hadamardMat(padDim, perm))
-    vectors.select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val mat = bcMat.value
-        val book = bcBooks.value
-        val y = new Array[Float](padDim)
-        it.map { case (id, v) =>
-          PqCodebook.requireDim(v.length, dim)
-          // pad + rotate + permute — the identical op sequence
-          // MatVecRotate runs over the zero-padded input with the
-          // row-permuted matrix (padding terms included so even
-          // sign-of-zero corner cases cannot diverge)
-          var i = 0
-          while (i < padDim) {
-            var s = 0.0
-            val off = i * padDim
-            var j = 0
-            while (j < dim) { s += mat(off + j) * v(j).toDouble; j += 1 }
-            while (j < padDim) { s += mat(off + j) * 0.0; j += 1 }
-            y(i) = (s * scale).toFloat
-            i += 1
-          }
-          (id, book.encode(y))
-        }
-      }.toDF("id", "codes")
   }
 
   /** Variance-balancing snake permutation over a (rotated) training set:
@@ -500,16 +425,4 @@ object Quantize {
     ivfAdcTopKKernel(p, queriesRot, lists,
       spark.read.parquet(s"$path/codebooks"), r)
   }
-
-  /** Reconstruct full vectors from PQ codes (the table form of asymmetric
-    * distance: exact kNN over reconstructions ≡ ADC). Output (id, vec). */
-  def pqReconstruct(codes: DataFrame, codebooks: DataFrame): DataFrame =
-    codes.select(col("id"), posexplode(col("codes")).as(Seq("subspace", "code")))
-      .join(broadcast(codebooks
-        .select(col("subspace"), col("centroid_id").as("code"), col("vec"))),
-        Seq("subspace", "code"))
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("subspace"), col("vec"))))
-        .as("svs"))
-      .select(col("id"), flatten(transform(col("svs"), _("vec"))).as("vec"))
 }

@@ -56,10 +56,8 @@ object BspBeamSearch {
     * declared bounded-broadcast class (KnnJoin's 100k-500k query blocks
     * live well under it). Callers with more queries must slice (the
     * repair loop does, at [[graft.build.DistRoarGraphBuilder]]'s
-    * RepairQueryBatch). Overridable for bigger driver heaps. */
-  private val MaxBroadcastQueriesProp = "graft.bsp.maxBroadcastQueries"
-  private def MaxBroadcastQueries: Int =
-    sys.props.get(MaxBroadcastQueriesProp).map(_.toInt).getOrElse(1000000)
+    * RepairQueryBatch). */
+  private val MaxBroadcastQueries = 1000000
 
   /** An (id → vec) table pinned to one partitioner and persisted, for
     * repeated NARROW vector lookups without re-shuffling the n-row table
@@ -242,11 +240,10 @@ object BspBeamSearch {
     // filtered scans of the full n-row base — MEASURED at the 10M
     // build, the limit form cost ~+3 min per ~2 min batch.
     val qvBc = spark.sparkContext.broadcast {
-      val cap = MaxBroadcastQueries
       val rows = qvecs.as[(Long, Array[Float])].collect()
-      require(rows.length <= cap,
+      require(rows.length <= MaxBroadcastQueries,
         s"BSP search: query slice (${rows.length} rows) exceeds the " +
-          s"broadcast cap ($cap; -D$MaxBroadcastQueriesProp to raise) — " +
+          s"broadcast cap ($MaxBroadcastQueries) — " +
           "batch the caller (phase-2 batching / RepairQueryBatch slicing)")
       val m = new java.util.HashMap[Long, Array[Float]]()
       rows.foreach { case (id, v) => m.put(id, v) }

@@ -22,11 +22,7 @@ object GraphIO {
     }
     rows.toDF("id", "vec", "nbrs").write.mode("overwrite")
       .parquet(s"$path/adjacency")
-    val metricName = index.vs.metric match {
-      case Metric.L2 => "l2"; case Metric.InnerProduct => "ip"
-      case Metric.Cosine => "cosine"
-    }
-    Seq((index.ids(index.ep), metricName, index.vs.dim))
+    Seq((index.ids(index.ep), index.vs.metric.name, index.vs.dim))
       .toDF("entry_point", "metric", "dim")
       .write.mode("overwrite").parquet(s"$path/meta")
   }
@@ -64,11 +60,7 @@ object GraphIO {
               (implicit spark: SparkSession): Unit = {
     import spark.implicits._
     di.adj.write.mode("overwrite").parquet(s"$path/adjacency")
-    val metricName = di.metric match {
-      case Metric.L2 => "l2"; case Metric.InnerProduct => "ip"
-      case Metric.Cosine => "cosine"
-    }
-    Seq((di.ep, metricName)).toDF("entry_point", "metric")
+    Seq((di.ep, di.metric.name)).toDF("entry_point", "metric")
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
@@ -81,11 +73,6 @@ object GraphIO {
       spark.read.parquet(s"$path/adjacency").select(col("src"), col("nbrs")),
       meta.getAs[Long]("entry_point"),
       Metric.fromString(meta.getAs[String]("metric")))
-  }
-
-  private def metricName(m: Metric): String = m match {
-    case Metric.L2 => "l2"; case Metric.InnerProduct => "ip"
-    case Metric.Cosine => "cosine"
   }
 
   /** Persist a [[graft.build.DistIndex]] + its vector table with node-id
@@ -132,7 +119,7 @@ object GraphIO {
     // partitioning the data doesn't have — wrong joins, no error). The
     // build-time degree cap travels with the layout for the same reason:
     // a serving session has no way to recover it from its own params.
-    Seq((di.ep, metricName(di.metric), buckets, di.degreeCap))
+    Seq((di.ep, di.metric.name, buckets, di.degreeCap))
       .toDF("entry_point", "metric", "buckets", "degree_cap")
       .write.mode("overwrite").saveAsTable(s"$db.meta")
   }

@@ -20,6 +20,14 @@ class GraphKernelSpec extends AnyFunSuite {
     assert(ip.dist(0, 1) == -13.0)
   }
 
+  test("Metric.name round-trips through Metric.fromString with the persisted names") {
+    val names = Seq(Metric.L2 -> "l2", Metric.InnerProduct -> "ip", Metric.Cosine -> "cosine")
+    for ((m, persisted) <- names) {
+      assert(m.name == persisted, s"$m")
+      assert(Metric.fromString(m.name) == m, s"$m")
+    }
+  }
+
   test("Metric.dist rejects vectors of different lengths with a named error " +
        "(L2, IP, cosine; longer and shorter b)") {
     val a = Array(1f, 2f)

@@ -30,7 +30,7 @@ class KnnJoinSpec extends SparkSpec {
     val b = emb.filter(col("id") >= 10)
     val fast = KnnJoin.explodeRanks(KnnJoin(q, b, 5, metric))
       .select("query_id", "rank", "base_id")
-    val ref = KnnJoin.crossWindow(q, b, 5, metric)
+    val ref = KnnOracle.crossWindow(q, b, 5, metric)
       .select("query_id", "rank", "base_id")
     assert(fast.exceptAll(ref).isEmpty && ref.exceptAll(fast).isEmpty,
       s"bruteForce != crossWindow for $metric")
@@ -341,7 +341,7 @@ class KnnJoinSpec extends SparkSpec {
       tiled.select("query_id").distinct().count() == rows.length,
       "expected one row per query")
     assert(sameRows(ranks(tiled),
-      KnnJoin.crossWindow(q, b, 5, Metric.L2).select("query_id", "rank", "base_id")),
+      KnnOracle.crossWindow(q, b, 5, Metric.L2).select("query_id", "rank", "base_id")),
       "grouped fetch != crossWindow")
     assert(sameRows(ranks(tiled), ranks(KnnJoin(q, b, 5, Metric.L2))),
       "grouped fetch != one-block join")

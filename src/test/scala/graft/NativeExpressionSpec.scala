@@ -20,11 +20,11 @@ class NativeExpressionSpec extends SparkSpec {
   test("native l2/ip/cosine match HOF forms bit-exactly") {
     val df = pairs.select(
       VectorFunctions.l2Sq(col("va"), col("vb")).as("n_l2"),
-      VectorFunctions.hofL2Sq(col("va"), col("vb")).as("h_l2"),
+      HofOracle.l2Sq(col("va"), col("vb")).as("h_l2"),
       VectorFunctions.negIp(col("va"), col("vb")).as("n_ip"),
-      VectorFunctions.hofNegIp(col("va"), col("vb")).as("h_ip"),
+      HofOracle.negIp(col("va"), col("vb")).as("h_ip"),
       VectorFunctions.cosineDist(col("va"), col("vb")).as("n_cos"),
-      VectorFunctions.hofCosineDist(col("va"), col("vb")).as("h_cos"))
+      HofOracle.cosineDist(col("va"), col("vb")).as("h_cos"))
     val rows = df.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -52,7 +52,7 @@ class NativeExpressionSpec extends SparkSpec {
         "tab\tand\nnewline", "ünïcødé mix 字").toDF("text"))
     val df = docs.select(
       graft.ops.NearDup.charHash(col("text")).as("n"),
-      graft.ops.NearDup.hofCharHash(col("text")).as("h"))
+      HofOracle.charHash(col("text")).as("h"))
     val rows = df.collect()
     assert(rows.length > 500)
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1),
@@ -61,7 +61,7 @@ class NativeExpressionSpec extends SparkSpec {
     val tok = Tables.documents(spark, sf0001)
       .select(explode(split(col("text"), " ")).as("t"))
       .select(graft.ops.NearDup.charHash(col("t")).as("n"),
-        graft.ops.NearDup.hofCharHash(col("t")).as("h"))
+        HofOracle.charHash(col("t")).as("h"))
       .filter(col("n") =!= col("h"))
     assert(tok.isEmpty, "token-level charHash mismatch")
   }

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** Relational reference forms of the PQ kernels in `graft.ops.Quantize`.
   * They mirror the DuckDB oracle SQL step by step, so the specs pin each
-  * kernel to them: `pqEncodeKernel` and `opqEncodeKernel` must give
-  * [[pqEncode]]'s codes, and `ivfAdcTopKKernel` (hence `ivfPqTopKTable`)
-  * [[ivfAdcTopK]]'s rankings, doubles included. The specs compare exploded
+  * kernel to them: `pqEncodeKernel` must give [[pqEncode]]'s codes,
+  * `adcTopK` the ranking of exact kNN over [[pqReconstruct]], and
+  * `ivfAdcTopKKernel` (hence `ivfPqTopKTable`) [[ivfAdcTopK]]'s
+  * rankings, doubles included. The specs compare exploded
   * ranks: the kernel also emits an empty `knn` row for a query with no
   * candidate, where [[ivfAdcTopK]] has no row. */
 object PqOracle {
@@ -67,6 +68,18 @@ object PqOracle {
       .groupBy("query_id")
       .agg(topR(col("id"), col("dist")).as("knn"))
   }
+
+  /** Reconstruct full vectors from PQ codes (the table form of asymmetric
+    * distance: exact kNN over reconstructions ≡ ADC). Output (id, vec). */
+  def pqReconstruct(codes: DataFrame, codebooks: DataFrame): DataFrame =
+    codes.select(col("id"), posexplode(col("codes")).as(Seq("subspace", "code")))
+      .join(broadcast(codebooks
+        .select(col("subspace"), col("centroid_id").as("code"), col("vec"))),
+        Seq("subspace", "code"))
+      .groupBy("id")
+      .agg(sort_array(collect_list(struct(col("subspace"), col("vec"))))
+        .as("svs"))
+      .select(col("id"), flatten(transform(col("svs"), _("vec"))).as("vec"))
 
   /** A loaded codebook back in table form (subspace, centroid_id, vec). */
   def codebooksDf(book: PqCodebook, spark: SparkSession): DataFrame = {

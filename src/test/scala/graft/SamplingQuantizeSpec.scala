@@ -33,7 +33,7 @@ class SamplingQuantizeSpec extends SparkSpec {
     // one mapPartitions pass); PqOracle.pqEncode is the relational form
     // the DuckDB oracle mirrors. Same double-accumulated L2, same lowest-centroid-id tie-break
     // — the code tables must be IDENTICAL, here through the full 200-d
-    // rotate+permute chain the soak runs (padDim 256, m 16).
+    // rotate+permute chain (padDim 256, m 16).
     import spark.implicits._
     val dim = 200
     def mix(z0: Long): Long = {
@@ -58,15 +58,10 @@ class SamplingQuantizeSpec extends SparkSpec {
     assert(ker.count() == 300)
     assert(ker.exceptAll(rel).isEmpty && rel.exceptAll(ker).isEmpty,
       "kernel and relational PQ codes differ")
-    // the fused pad+rotate+permute+encode kernel must match the staged
-    // relational chain too (it replays MatVecRotate's fold bit-for-bit)
-    val fused = Quantize.opqEncodeKernel(b, cb, m, dim, perm)
-    assert(fused.exceptAll(rel).isEmpty && rel.exceptAll(fused).isEmpty,
-      "fused opqEncodeKernel and relational PQ codes differ")
   }
 
   test("PQ kernels fail by name on mismatched vector dimensions " +
-       "(encode, fused encode, ADC, IVF-ADC; rows shorter and longer)") {
+       "(encode, ADC, IVF-ADC; rows shorter and longer)") {
     import spark.implicits._
     val m = 4 // 4 subspaces x 2-d centroids: vectors must be 8 floats
     val cb = (for (s <- 0 until m; c <- 0 until 2)
@@ -85,12 +80,6 @@ class SamplingQuantizeSpec extends SparkSpec {
       assert(namedError(Quantize.ivfAdcTopKKernel(probes, vecs(dim), assigned, cb, 1)
         .collect()) == want)
     }
-    // the fused kernel holds each row to its input dimension (6, padded to 8)
-    val perm = Array.range(0, 8)
-    assert(Quantize.opqEncodeKernel(vecs(6), cb, m, 6, perm).collect().length == 2)
-    for (dim <- Seq(5, 7))
-      assert(namedError(Quantize.opqEncodeKernel(vecs(dim), cb, m, 6, perm).collect()) ==
-        s"PQ: vector dimension mismatch ($dim vs 6)")
   }
 
   test("ADC top-k ids == exact kNN over PQ reconstructions") {
@@ -103,7 +92,7 @@ class SamplingQuantizeSpec extends SparkSpec {
     val codes = PqOracle.pqEncode(b, cb, m = 8)
     val adc = KnnJoin.explodeRanks(Quantize.adcTopK(q, codes, cb, 10))
       .select("query_id", "rank", "base_id")
-    val rec = Quantize.pqReconstruct(codes, cb)
+    val rec = PqOracle.pqReconstruct(codes, cb)
     val viaRec = KnnJoin.explodeRanks(KnnJoin(q, rec, 10, Metric.L2))
       .select("query_id", "rank", "base_id")
     // ADC distance ≡ distance to the reconstruction (per-subspace sums);
@@ -234,7 +223,7 @@ class SamplingQuantizeSpec extends SparkSpec {
   test("sq8 round-trip error bounded by half a quantization step per dim") {
     val vecs = Tables.vectors(spark, sf0001).select("id", "vec")
     val bounds = Quantize.sq8Bounds(vecs)
-    val codes = Quantize.sq8Encode(vecs, bounds)
+    val codes = Sq8Oracle.encode(vecs, bounds)
     val loHi = bounds
       .agg(sort_array(collect_list(struct(col("pos"), col("lo"), col("hi")))).as("b"))
       .select(transform(col("b"), _("lo")).as("lo"),
@@ -243,7 +232,7 @@ class SamplingQuantizeSpec extends SparkSpec {
       .collect().head.getDouble(0)
     val worst = codes.crossJoin(broadcast(loHi))
       .select(col("id"),
-        Quantize.sq8Decode(col("codes"), col("lo"), col("hi")).as("dec"))
+        Sq8Oracle.decode(col("codes"), col("lo"), col("hi")).as("dec"))
       .join(vecs, "id")
       .select(aggregate(
         zip_with(col("dec"), col("vec"), (d, x) => abs(d - x.cast("double"))),
@@ -259,9 +248,9 @@ class SamplingQuantizeSpec extends SparkSpec {
       .agg(sort_array(collect_list(struct(col("pos"), col("lo"), col("hi")))).as("b"))
       .select(transform(col("b"), _("lo")).as("lo"),
         transform(col("b"), _("hi")).as("hi"))
-    val staged = Quantize.sq8Encode(vecs, bounds).crossJoin(broadcast(loHi))
+    val staged = Sq8Oracle.encode(vecs, bounds).crossJoin(broadcast(loHi))
       .select(col("id"),
-        transform(Quantize.sq8Decode(col("codes"), col("lo"), col("hi")),
+        transform(Sq8Oracle.decode(col("codes"), col("lo"), col("hi")),
           _.cast("float")).as("vec"))
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq))

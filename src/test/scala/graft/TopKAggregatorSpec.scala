@@ -2,7 +2,6 @@ package graft
 
 import graft.core.{Metric, Neighbor, Tables}
 import graft.functions.TopKAggregator
-import graft.ops.KnnJoin
 import org.apache.spark.sql.functions._
 
 class TopKAggregatorSpec extends SparkSpec {
@@ -25,7 +24,7 @@ class TopKAggregatorSpec extends SparkSpec {
       .mapValues(_._2)
       .agg(TopKAggregator(5).toColumn)
       .collect().toMap
-    val ref = KnnJoin.crossWindow(q, b, 5, Metric.L2)
+    val ref = KnnOracle.crossWindow(q, b, 5, Metric.L2)
       .select("query_id", "base_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     assert(aggRes.nonEmpty)
