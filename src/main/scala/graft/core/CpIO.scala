@@ -27,13 +27,16 @@ private[graft] object CpIO {
     *
     *  - k2: 4-way-unrolled `KnnJoin.distD` (round 11; reassociates the FP
     *    sum vs the serial round-<=10 form).
+    *  - k3: `KnnJoin.ivfApprox`'s query probes use the one centroid kernel
+    *    (`AnnSearch.nearestCentroids`, a serial sum) instead of `distD`'s
+    *    unrolled one, so a near-tie can pick another probe list.
     *
     * The graph tier's batched `VecStore.distToMany` (four rows per pass)
-    * changes no bit, so it stays under k2: each row keeps its own
+    * changes no bit, so it added no version: each row keeps its own
     * accumulator summed in `distTo`'s order, and its IP multiply-adds are
     * fused only because a float×float product is exact in double.
     */
-  val KernelVersion = "k2"
+  val KernelVersion = "k3"
 
   private def fsFor(path: String)(implicit spark: SparkSession): (FileSystem, Path) = {
     val p = new Path(path)

@@ -1,5 +1,6 @@
 package graft.eval
 
+import graft.core.Metric
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,11 +26,11 @@ object Eval {
     * reference's metric-specific un-negation (test_search_roargraph.cpp:38-62):
     * L2: d, IP: -d, cosine: 2*(1-(-d)). Inputs carry aligned dist arrays. */
   def relativeDistError(res: DataFrame, gt: DataFrame, k: Int,
-                        metric: String): DataFrame = {
+                        metric: Metric): DataFrame = {
     def undo(c: org.apache.spark.sql.Column) = metric match {
-      case "l2"     => c
-      case "ip"     => -c
-      case "cosine" => lit(2.0) * (lit(1.0) + c)
+      case Metric.L2           => c
+      case Metric.InnerProduct => -c
+      case Metric.Cosine       => lit(2.0) * (lit(1.0) + c)
     }
     val r = res.select(col("query_id"), slice(col("dists"), 1, k).as("rd"))
     val g = gt.select(col("query_id"), slice(col("dists"), 1, k).as("gd"))

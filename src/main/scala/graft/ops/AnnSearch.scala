@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shapes (no windowed ranking anywhere):
   *   - centroid argmin/top-nprobe: the centroid set is driver-small by
-  *     construction, so both fold over a literal centroid array inside one
-  *     projection — zero exchange, stays in whole-stage codegen;
+  *     construction, so it is broadcast once and one map pass runs the one
+  *     centroid kernel ([[nearestCentroids]]) per vector — zero exchange,
+  *     and the plan does not grow with the number of centroids;
   *   - per-query top-k: bounded partial/final aggregation (TopKAggregator)
   *     — only `numPartitions × k` rows per query reach the exchange, never
   *     the full scored candidate set (a `row_number` window would shuffle
@@ -76,50 +77,37 @@ object AnnSearch {
     topKPerQuery(scored, k)
   }
 
-  /** Per-row array of struct(cdist, centroid_id) vs every centroid — the
-    * literal-fold scoring block shared by argmin assignment and top-nprobe
-    * probing. Centroid sets are driver-small by construction (they are
-    * k-means output); the fold is one codegen'd projection, no join, no
-    * exchange. */
-  private def centroidScores(vec: Column,
-                             cents: Array[(Int, Array[Float])]): Column =
-    array(cents.map { case (cid, cv) =>
-      struct(
-        VectorFunctions.l2Sq(vec, typedLit(cv.toSeq)).as("cdist"),
-        lit(cid).as("centroid_id"))
-    }: _*)
-
-  private def collectCentroids(centroids: DataFrame): Array[(Int, Array[Float])] =
+  private[graft] def collectCentroids(centroids: DataFrame): Array[(Int, Array[Float])] =
     centroids.select(col("centroid_id").cast("int"), col("vec"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
 
-  /** Assign each vector to its nearest centroid (L2, ties by centroid id):
-    * the IVF inverted list. `centroids` must expose (centroid_id, vec).
-    * Shuffle-free: argmin = `array_min` over the literal centroid scores
-    * (struct ordering is lexicographic (cdist, centroid_id) — exactly the
-    * tie-break). */
-  def assignToCentroids(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    assignLocal(vectors, collectCentroids(centroids))
+  /** The IVF coarse quantizer, the one centroid kernel of the engine: the
+    * `n` nearest of `cents` (centroid_id, vec) to `v` as (cdist, centroid_id)
+    * in the [[graft.core.Neighbor]] order. Each centroid's squared L2
+    * ([[Metric.L2]]`.dist`: float widened to double, one serial sum, the
+    * arithmetic of `L2SqDistance` and the DuckDB oracles) goes into one
+    * [[KnnJoin.BoundedTopK]], so ties break by ascending centroid id and a
+    * NaN distance ranks after every number. A vector of another length
+    * than the grid fails with `Metric`'s named error. */
+  private[graft] def nearestCentroids(v: Array[Float],
+                                      cents: Array[(Int, Array[Float])],
+                                      n: Int): Array[(Double, Long)] = {
+    val heap = new KnnJoin.BoundedTopK(n)
+    var c = 0
+    while (c < cents.length) {
+      heap.push(Metric.L2.dist(v, cents(c)._2), cents(c)._1); c += 1
+    }
+    heap.result()
+  }
 
-  /** Kernel form of [[assignToCentroids]] — result-identical (the same
-    * double-accumulated L2 the native l2Sq expression computes, the same
-    * smallest-centroid-id tie-break via an ascending-id scan with strict
-    * `<`), shaped for corpus scale: the literal-fold centroidScores is
-    * codegen'd and fast at the bench's 64-d regime, but at 200d × 512
-    * centroids the expression outgrows whole-stage codegen and falls
-    * back to interpreted eval with k struct allocations PER ROW
-    * (measured ~1.1 ms/row vs ~10 µs compiled). Here the centroid grid
-    * broadcasts once and one mapPartitions pass computes the argmin —
-    * zero shuffle, no per-row allocation beyond the output row.
-    * Input must expose (id, vec); output (id, vec, cdist, centroid_id).
-    * Equivalence is spec-gated. */
-  def assignToCentroidsKernel(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    assignKernelLocal(vectors, collectCentroids(centroids))
-
-  private def assignKernelLocal(vectors: DataFrame,
-                                cents: Array[(Int, Array[Float])]): DataFrame = {
+  /** One row per (vector, one of its `n` nearest centroids) of (id, vec)
+    * rows: (id, vec, cdist, centroid_id), nearest first. The centroid grid
+    * is broadcast once and one map pass scores it: no join, no exchange. */
+  private[graft] def nearestLists(vectors: DataFrame,
+                                  cents: Array[(Int, Array[Float])],
+                                  n: Int): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(cents)
@@ -127,60 +115,36 @@ object AnnSearch {
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val cs = bc.value
-        it.map { case (id, v) =>
-          var best = Double.PositiveInfinity
-          var bestCid = 0
-          var ci = 0
-          while (ci < cs.length) {
-            val cv = cs(ci)._2
-            var d = 0.0
-            var t = 0
-            while (t < v.length) {
-              val x = v(t).toDouble - cv(t); d += x * x; t += 1
-            }
-            if (d < best) { best = d; bestCid = cs(ci)._1 }
-            ci += 1
-          }
-          (id, v, best, bestCid)
+        it.flatMap { case (id, v) =>
+          nearestCentroids(v, cs, n).iterator.map(p => (id, v, p._1, p._2.toInt))
         }
       }.toDF("id", "vec", "cdist", "centroid_id")
   }
 
-  private def assignLocal(vectors: DataFrame,
-                          cents: Array[(Int, Array[Float])]): DataFrame =
-    vectors
-      .withColumn("_best", array_min(centroidScores(col("vec"), cents)))
-      .withColumn("cdist", col("_best")("cdist"))
-      .withColumn("centroid_id", col("_best")("centroid_id"))
-      .drop("_best")
+  /** Assign each vector to its nearest centroid (L2, ties by centroid id):
+    * the IVF inverted list. `centroids` must expose (centroid_id, vec);
+    * input (id, vec), output (id: long, vec, cdist, centroid_id). */
+  def assignToCentroids(vectors: DataFrame, centroids: DataFrame): DataFrame =
+    nearestLists(vectors, collectCentroids(centroids), 1)
 
   /** Per-query probe set: the `nprobe` nearest centroids (L2, ties by
     * centroid id) as (query_id, qvec, centroid_id) — the coarse-quantizer
     * front half of IVF, exposed for composites that scan a different
     * payload than the raw vectors (e.g. the IVF+PQ byte-domain scan,
-    * [[Quantize.ivfAdcTopKKernel]]). Shuffle-free: centroid scoring is a
-    * literal fold, probe selection is sort_array + slice in the same
-    * projection — no join, no window. */
+    * [[Quantize.ivfAdcTopKKernel]]). */
   def probeCentroids(queries: DataFrame, centroids: DataFrame,
                      nprobe: Int): DataFrame =
-    probesLocal(queries, collectCentroids(centroids), nprobe)
-
-  private def probesLocal(queries: DataFrame,
-                          cents: Array[(Int, Array[Float])],
-                          nprobe: Int): DataFrame =
-    queries.select(col("id").as("query_id"), col("vec").as("qvec"))
-      .withColumn("probe",
-        explode(slice(sort_array(centroidScores(col("qvec"), cents)), 1, nprobe)))
-      .select(col("query_id"), col("qvec"),
-        col("probe")("centroid_id").as("centroid_id"))
+    nearestLists(queries, collectCentroids(centroids), nprobe)
+      .select(col("id").as("query_id"), col("vec").as("qvec"), col("centroid_id"))
 
   /** Deterministic Lloyd's k-means over the vector table — the IVF
     * centroid trainer. Per iteration: assignment is the shuffle-free
-    * literal-fold argmin; the centroid update is one array-summing
-    * partial/final aggregate per cluster (shuffles `numPartitions × k`
-    * array rows, not `n × dim` exploded scalars). Seeding is deterministic
-    * (the k vectors with smallest ids), so results are reproducible.
-    * Empty clusters keep their previous centroid. Returns
+    * centroid kernel ([[nearestCentroids]]); the centroid update is one
+    * array-summing partial/final aggregate per cluster (shuffles
+    * `numPartitions × k` array rows, not `n × dim` exploded scalars).
+    * Seeding is deterministic (the k vectors with smallest ids), so
+    * results are reproducible. Empty clusters keep their previous
+    * centroid. Returns
     * (centroid_id, vec: array<float>). */
   def kMeans(vectors: DataFrame, k: Int, iters: Int = 10): DataFrame = {
     val spark = vectors.sparkSession
@@ -191,11 +155,7 @@ object AnnSearch {
       .zipWithIndex.map { case (r, i) => (i, r.getSeq[Float](1).toArray) }
     var it = 0
     while (it < iters) {
-      // kernel assign (result-identical to assignLocal, spec-gated): the
-      // trainer's per-iteration argmin is the one place assignment cost
-      // multiplies by `iters`, and at wide dims × large k the literal
-      // fold leaves codegen
-      val assigned = assignKernelLocal(v, centroids)
+      val assigned = nearestLists(v, centroids, 1)
         .groupBy("centroid_id")
         .agg(VecMeanAggregator.meanVec(
           VectorFunctions.toDouble(col("vec"))).as("m"))
@@ -211,73 +171,23 @@ object AnnSearch {
     centroids.toSeq.toDF("centroid_id", "vec")
   }
 
-  /** Persist the IVF layout at rest: inverted lists as a parquet table
-    * PARTITIONED BY centroid_id (plus the centroid table). Probing then
-    * becomes partition PRUNING — a search touching `nprobe` of `|C|`
-    * centroids reads exactly that fraction of the corpus from disk,
-    * no join and no full scan. The serving layout for IVF at 100 TB. */
-  def saveIvf(base: DataFrame, centroids: DataFrame, path: String): Unit = {
-    val cents = collectCentroids(centroids)
-    assignLocal(base.select(col("id"), col("vec")), cents)
-      .select(col("id"), col("vec"), col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/lists")
-    centroids.select(col("centroid_id"), col("vec"))
-      .write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** IVF top-k over the persisted layout: the probe set is computed
-    * driver-side from the (small) centroid table, then pushed into the
-    * scan as a static partition filter — the lists table is read only for
-    * the probed partitions. Output (query_id, rank, base_id, dist),
-    * identical to [[ivfTopK]] over the same data. */
-  def ivfTopKTable(spark: org.apache.spark.sql.SparkSession, path: String,
-                   queries: DataFrame, k: Int, nprobe: Int,
-                   metric: Metric): DataFrame = {
-    val cents = collectCentroids(spark.read.parquet(s"$path/centroids"))
-    // materialized once: both the driver-side distinct-ids collect and the
-    // pruned-list join consume the scored probes
-    val probes = graft.ops.graph.PlanUtil.cutDF(
-      probesLocal(queries, cents, nprobe))
-    // distinct probed centroid ids (≤ |C|, driver-small) → static
-    // partition filter on the lists scan
-    val probedIds = probes.select("centroid_id").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val lists = spark.read.parquet(s"$path/lists")
-      .filter(col("centroid_id").isin(probedIds.map(_.asInstanceOf[Any]): _*))
-      .select(col("centroid_id"), col("id").as("base_id"), col("vec").as("bvec"))
-    val scored = probes.join(lists, "centroid_id")
-      .withColumn("dist",
-        VectorFunctions.distByMetric(metric)(col("qvec"), col("bvec")))
-    topKPerQuery(scored, k)
-  }
-
-  /** IVF top-k: base vectors are grouped by nearest centroid; each query
-    * probes the `nprobe` nearest centroids' lists. Output
-    * (query_id, rank, base_id, dist). */
-  def ivfTopK(queries: DataFrame, base: DataFrame, centroids: DataFrame,
-              k: Int, nprobe: Int, metric: Metric): DataFrame =
-    ivfTopKOnLists(queries,
-      invertedLists(base, centroids), centroids, k, nprobe, metric)
-
-  /** The inverted-lists table [[ivfTopK]] scans: each base row tagged with
-    * its nearest centroid (shuffle-free literal-fold argmin). Exposed so a
-    * suite computing several IVF-family queries over the SAME (base,
-    * centroids) pair can build the assignment once and share it. */
+  /** The inverted-lists table [[ivfTopKOnLists]] scans: each base row
+    * tagged with its nearest centroid. Exposed so a suite computing several
+    * IVF-family queries over the SAME (base, centroids) pair can build the
+    * assignment once and share it. */
   def invertedLists(base: DataFrame, centroids: DataFrame): DataFrame =
-    assignLocal(base.select(col("id"), col("vec")), collectCentroids(centroids))
+    assignToCentroids(base, centroids)
       .select(col("centroid_id"), col("id").as("base_id"), col("vec").as("bvec"))
 
-  /** [[ivfTopK]] over a pre-built (possibly cached) [[invertedLists]]
-    * table — plan-identical scoring, same output. */
+  /** IVF top-k over a pre-built (possibly cached) [[invertedLists]] table:
+    * each query probes its `nprobe` nearest centroids' lists only. Output
+    * (query_id, rank, base_id, dist). */
   def ivfTopKOnLists(queries: DataFrame, lists: DataFrame,
                      centroids: DataFrame, k: Int, nprobe: Int,
                      metric: Metric): DataFrame = {
-    // query → nprobe nearest centroids: sort the literal centroid scores in
-    // one projection (no join, no window), take the first nprobe
-    val probes = probesLocal(queries, collectCentroids(centroids), nprobe)
     // search only the probed lists; bounded per-query top-k
-    val scored = probes.join(lists, "centroid_id")
+    val scored = probeCentroids(queries, centroids, nprobe)
+      .join(lists, "centroid_id")
       .withColumn("dist",
         VectorFunctions.distByMetric(metric)(col("qvec"), col("bvec")))
     topKPerQuery(scored, k)

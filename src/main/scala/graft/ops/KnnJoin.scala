@@ -521,24 +521,6 @@ object KnnJoin {
     Partials.of(heaps)
   }
 
-  /** The `nprobe` nearest centroids of `raw` by raw-space L2, ties by
-    * ascending centroid id — the IVF coarse-quantization step of
-    * [[ivfApprox]], a pure function of (vector, centroid grid) so the
-    * distributed assignment pass and any driver-side check agree
-    * exactly (spec-gated). A query whose dimension differs from the
-    * grid's fails with the join's named error. */
-  private[graft] def probesFor(raw: Array[Double],
-                               centsD: Array[Array[Double]],
-                               nprobe: Int): Array[Int] = {
-    if (centsD.nonEmpty) checkDim(raw.length, centsD(0).length)
-    val heap = new BoundedTopK(nprobe)
-    var c = 0
-    while (c < centsD.length) {
-      heap.push(distD(Metric.L2, raw, centsD(c)), c.toLong); c += 1
-    }
-    heap.result().map(_._2.toInt)
-  }
-
   /** Per-block centroid→query-indices index for [[ivfApprox]], built by
     * counting sort over primitive arrays (no boxing) and memoized on the
     * block's query array so the JVM's concurrent tasks share ONE copy;
@@ -678,10 +660,9 @@ object KnnJoin {
       }
     require(cents.indices.forall(i => cents(i)._1 == i),
       "k-means centroid ids not dense 0..nlist-1")
-    val centsD = cents.map(c => widen(c._2, normalize = false))
 
     // route every base row to its nearest list: ONE map pass, no shuffle
-    // (assignToCentroidsKernel broadcasts the centroid grid); cut so the
+    // (the centroid kernel, AnnSearch.nearestLists); cut so the
     // routed table materializes once and is freed after the last block.
     // Under a checkpoint dir the routed table is durable parquet — at the
     // 10M regime routing is ~2 h of brute-force nearest-of-nlist and a
@@ -695,10 +676,8 @@ object KnnJoin {
     // row. No shuffle (per-partition sort), and result-neutral: BoundedTopK
     // is insertion-order-independent ((dist, id) tie-break, spec-pinned)
     // and the full-probe==exact oracle gate covers the kernel.
-    val routedPlan = AnnSearch.assignToCentroidsKernel(
-      base.select(col("id").cast("long"), col("vec")),
-      cents.toSeq.toDF("centroid_id", "vec"))
-      .select(col("id"), col("vec"), col("centroid_id").cast("int"))
+    val routedPlan = AnnSearch.nearestLists(base, cents, 1)
+      .select(col("id"), col("vec"), col("centroid_id"))
       .sortWithinPartitions(col("centroid_id"))
     val routedDs = routedPlan.as[(Long, Array[Float], Int)]
     var routedCut: (Dataset[(Long, Array[Float], Int)], () => Unit) =
@@ -733,18 +712,20 @@ object KnnJoin {
 
     val norm = metric.needNormalize
     // probe assignment runs DISTRIBUTED (one mapPartitions pass over the
-    // queries against the broadcast centroid grid — the same shape
-    // assignToCentroidsKernel uses for base rows), so the driver's drain
-    // only deserializes (id, vec, probes) rows; the q·nlist·dim mul-adds
-    // are executor work. Probe sets are deterministic per query
-    // (BoundedTopK over (dist, centroid id)) regardless of partitioning.
-    val centsBc = spark.sparkContext.broadcast(centsD)
+    // queries against the broadcast centroid grid, through the centroid
+    // kernel that routes the base rows), so the driver's drain only
+    // deserializes (id, vec, probes) rows; the q·nlist·dim mul-adds are
+    // executor work. Probe sets are deterministic per query (the kernel's
+    // (dist, centroid id) order) regardless of partitioning. A query of
+    // another dimension fails with the join's named error first.
+    val centsBc = spark.sparkContext.broadcast(cents)
     val qDs = queries.select(col("id").cast("long"), col("vec"))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
-        val cd = centsBc.value
+        val cs = centsBc.value
         it.map { case (id, v) =>
-          (id, v, probesFor(widen(v, normalize = false), cd, nprobe))
+          if (cs.nonEmpty) checkDim(v.length, cs(0)._2.length)
+          (id, v, AnnSearch.nearestCentroids(v, cs, nprobe).map(_._2.toInt))
         }
       }
     val widenQ = queryWidener(norm)

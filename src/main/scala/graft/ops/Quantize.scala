@@ -363,9 +363,8 @@ object Quantize {
   // Coarse quantization prunes the corpus to each query's nprobe inverted
   // lists; the byte-domain ADC scan ranks only those lists; the refine
   // stage re-ranks a bounded candidate set with exact distances over the
-  // original vectors. At 100 TB this is the layout that makes vector
-  // search IO-shaped: partition pruning (nprobe/|C| of the corpus) ×
-  // 16 code bytes per row scanned × r random raw-row reads per query.
+  // original vectors. The scan reads nprobe/|C| of the corpus × 16 code
+  // bytes per row, then r raw rows per query.
 
   /** ADC top-r restricted to each query's probed inverted lists.
     * `probes` = (query_id, centroid_id) from [[AnnSearch.probeCentroids]]
@@ -394,35 +393,5 @@ object Quantize {
       .groupBy(_._1).map { case (q, a) => q -> a.map(_._2).sorted }
     adcDrain(queriesRot, assignedCodes, PqCodebook.load(codebooks),
       Some(probeMap), r, queryBlockRows, "IVF-ADC top-k")
-  }
-
-  /** Persist the IVF+PQ serving layout: PQ codes partitioned by coarse
-    * centroid (16 B of codes per row at the 16×256 layout — a 16× smaller
-    * scan than the raw lists of [[AnnSearch.saveIvf]]), plus the
-    * codebooks. `assignedCodes` = (centroid_id, id, codes). */
-  def saveIvfPq(assignedCodes: DataFrame, codebooks: DataFrame,
-                path: String): Unit = {
-    assignedCodes.select(col("id"), col("codes"), col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$path/codes")
-    codebooks.select(col("subspace"), col("centroid_id"), col("vec"))
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-  }
-
-  /** IVF+PQ top-r over the persisted layout: the probe set becomes a
-    * static partition filter on the codes table (partition pruning — the
-    * scan reads only the probed lists from disk), then the
-    * [[ivfAdcTopKKernel]] scan. Feed the result to [[refineTopK]]. */
-  def ivfPqTopKTable(spark: org.apache.spark.sql.SparkSession, path: String,
-                     probes: DataFrame, queriesRot: DataFrame,
-                     r: Int): DataFrame = {
-    val p = graft.ops.graph.PlanUtil.cutDF(
-      probes.select(col("query_id"), col("centroid_id")))
-    val probedIds = p.select("centroid_id").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val lists = spark.read.parquet(s"$path/codes")
-      .filter(col("centroid_id").isin(probedIds.map(_.asInstanceOf[Any]): _*))
-    ivfAdcTopKKernel(p, queriesRot, lists,
-      spark.read.parquet(s"$path/codebooks"), r)
   }
 }

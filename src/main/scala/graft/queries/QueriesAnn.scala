@@ -123,8 +123,8 @@ object QueriesAnn {
   /** The (base row → nearest fixed centroid) inverted-lists table, built
     * once per (session, sfDir) and cached: ann_ivf_topk scans it and
     * ann_ivfpq_topk derives its coarse list assignment from the same
-    * table — each previously re-ran the identical literal-fold argmin
-    * over the full base inside its own plan. */
+    * table — each previously re-ran the identical centroid argmin over
+    * the full base inside its own plan. */
   private val ivfListsMemo = new SessionMemo[DataFrame]
   private def ivfLists(s: SparkSession, dir: String): DataFrame =
     ivfListsMemo.getOrElseUpdate(s, dir) {
@@ -380,21 +380,30 @@ object QueriesAnn {
     ctes
   }
 
-  private val pqRecallOracle = {
+  /** The ADC stage of the 64-d PQ oracles, appended to `ctes`:
+    * `allcodes` (one row per bid with its m codes) and `wide` (one row per
+    * bid with its m codebook entries). Returns the ADC distance of a `qe`
+    * row against a `wide` row: the m per-subspace l2 terms summed left to
+    * right in subspace order. */
+  private def pqAdcCtes(ctes: scala.collection.mutable.ArrayBuffer[String]): String = {
     val sub = PqDim / PqM
-    val ctes = pqCommonCtes
-    // ADC over the rotated/coded corpus (same wide-join shape as the ADC
-    // oracle) keeps top-R per query; refine re-ranks those R rows with
-    // exact distances over the RAW vectors; ground truth is raw exact kNN
     val codeJoins = (1 until PqM).map(s => s"JOIN code$s USING (bid)").mkString(" ")
     ctes += s"allcodes AS (SELECT code0.bid AS bid, ${(0 until PqM).map(s => s"code$s.code AS k$s").mkString(", ")} FROM code0 $codeJoins)"
     val cbJoins = (0 until PqM)
       .map(s => s"JOIN c${s}_$PqIters cb$s ON cb$s.cid = k$s").mkString(" ")
     ctes += s"wide AS (SELECT bid, ${(0 until PqM).map(s => s"cb$s.ce AS ce$s").mkString(", ")} FROM allcodes $cbJoins)"
-    val distExpr = (0 until PqM).map { s =>
+    (0 until PqM).map { s =>
       val (lo, hi) = (s * sub + 1, (s + 1) * sub)
       pqL2(s"qe[$lo:$hi]", s"ce$s")
     }.mkString("(", " + ", ")")
+  }
+
+  private val pqRecallOracle = {
+    val ctes = pqCommonCtes
+    // ADC over the rotated/coded corpus (same wide-join shape as the ADC
+    // oracle) keeps top-R per query; refine re-ranks those R rows with
+    // exact distances over the RAW vectors; ground truth is raw exact kNN
+    val distExpr = pqAdcCtes(ctes)
     ctes += s"adc AS (SELECT qid, bid, $distExpr AS dist FROM q, wide)"
     ctes += s"cand AS (SELECT qid, bid FROM (SELECT qid, bid, row_number() OVER (PARTITION BY qid ORDER BY dist, bid) AS rnk FROM adc) WHERE rnk <= $PqRefine)"
     ctes += s"rer AS (SELECT cand.qid AS qid, cand.bid AS bid, ${pqL2("rawq.qe", "rawb.be")} AS d FROM cand JOIN rawq ON cand.qid = rawq.qid JOIN rawb ON cand.bid = rawb.bid)"
@@ -424,22 +433,13 @@ object QueriesAnn {
   }
 
   private val pqAdcOracle = {
-    val sub = PqDim / PqM
     val ctes = pqCommonCtes
     // one wide row per bid carrying all m codebook entries, then a single
     // (qid × bid) scan with the m per-subspace l2 terms summed inline,
     // left-associated in subspace order — the same association as the
     // engine's lookup-table fold, and no m× intermediate materialization
     // (an exploded per-(qid,bid,subspace) terms table OOMs DuckDB at sf0.1)
-    val codeJoins = (1 until PqM).map(s => s"JOIN code$s USING (bid)").mkString(" ")
-    ctes += s"allcodes AS (SELECT code0.bid AS bid, ${(0 until PqM).map(s => s"code$s.code AS k$s").mkString(", ")} FROM code0 $codeJoins)"
-    val cbJoins = (0 until PqM)
-      .map(s => s"JOIN c${s}_$PqIters cb$s ON cb$s.cid = k$s").mkString(" ")
-    ctes += s"wide AS (SELECT bid, ${(0 until PqM).map(s => s"cb$s.ce AS ce$s").mkString(", ")} FROM allcodes $cbJoins)"
-    val distExpr = (0 until PqM).map { s =>
-      val (lo, hi) = (s * sub + 1, (s + 1) * sub)
-      pqL2(s"qe[$lo:$hi]", s"ce$s")
-    }.mkString("(", " + ", ")")
+    val distExpr = pqAdcCtes(ctes)
     ctes += s"adc AS (SELECT qid, bid, $distExpr AS dist FROM q, wide)"
     ctes += s"r AS (SELECT qid, bid, dist, row_number() OVER (PARTITION BY qid ORDER BY dist, bid) AS rnk FROM adc QUALIFY rnk <= $K)"
     s"""WITH ${ctes.mkString(",\n")}
@@ -480,20 +480,11 @@ object QueriesAnn {
   }
 
   private val pqBeamOracle = {
-    val sub = PqDim / PqM
     val ctes = pqCommonCtes
     // identical candidate stage to the refined-recall oracle (ADC top-R
     // over the rotated/coded corpus == the exhaustive beam's pool), then
     // the exact re-rank emitted as ranked rows
-    val codeJoins = (1 until PqM).map(s => s"JOIN code$s USING (bid)").mkString(" ")
-    ctes += s"allcodes AS (SELECT code0.bid AS bid, ${(0 until PqM).map(s => s"code$s.code AS k$s").mkString(", ")} FROM code0 $codeJoins)"
-    val cbJoins = (0 until PqM)
-      .map(s => s"JOIN c${s}_$PqIters cb$s ON cb$s.cid = k$s").mkString(" ")
-    ctes += s"wide AS (SELECT bid, ${(0 until PqM).map(s => s"cb$s.ce AS ce$s").mkString(", ")} FROM allcodes $cbJoins)"
-    val distExpr = (0 until PqM).map { s =>
-      val (lo, hi) = (s * sub + 1, (s + 1) * sub)
-      pqL2(s"qe[$lo:$hi]", s"ce$s")
-    }.mkString("(", " + ", ")")
+    val distExpr = pqAdcCtes(ctes)
     ctes += s"adc AS (SELECT qid, bid, $distExpr AS dist FROM q, wide)"
     ctes += s"cand AS (SELECT qid, bid FROM (SELECT qid, bid, row_number() OVER (PARTITION BY qid ORDER BY dist, bid) AS rnk FROM adc) WHERE rnk <= $PqRefine)"
     ctes += s"rer AS (SELECT cand.qid AS qid, cand.bid AS bid, ${pqL2("rawq.qe", "rawb.be")} AS d FROM cand JOIN rawq ON cand.qid = rawq.qid JOIN rawb ON cand.bid = rawb.bid)"
@@ -611,9 +602,7 @@ object QueriesAnn {
     * re-rank of the top-$IvfPqRefine over the original vectors. Shares
     * the memoized rotation/codebooks/codes with the other PQ queries; the
     * whole chain (coarse assign + probe + relational ADC + refine) is
-    * float-for-float hash-checked. At rest the codes table is partitioned
-    * by centroid ([[graft.ops.Quantize.saveIvfPq]]) and the probe becomes
-    * partition pruning over 16-byte rows. */
+    * float-for-float hash-checked. */
   private def ivfPqQuery(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.Quantize
     val (cb, codes, qP) = pqArtifacts(s, dir)
@@ -641,7 +630,6 @@ object QueriesAnn {
   }
 
   private val ivfPqOracle = {
-    val sub = PqDim / PqM
     val ctes = pqCommonCtes
     // coarse IVF in RAW space: fixed-id centroids, nearest-centroid
     // assignment of base rows, nprobe nearest centroids per query — the
@@ -651,15 +639,7 @@ object QueriesAnn {
     ctes += s"probes AS (SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY ${pqL2("qe", "ce")}, cid) AS prnk FROM rawq, cents QUALIFY prnk <= $NProbe)"
     // rotated-space ADC restricted to the probed lists (same wide-join
     // shape as the full-corpus ADC oracle)
-    val codeJoins = (1 until PqM).map(s => s"JOIN code$s USING (bid)").mkString(" ")
-    ctes += s"allcodes AS (SELECT code0.bid AS bid, ${(0 until PqM).map(s => s"code$s.code AS k$s").mkString(", ")} FROM code0 $codeJoins)"
-    val cbJoins = (0 until PqM)
-      .map(s => s"JOIN c${s}_$PqIters cb$s ON cb$s.cid = k$s").mkString(" ")
-    ctes += s"wide AS (SELECT bid, ${(0 until PqM).map(s => s"cb$s.ce AS ce$s").mkString(", ")} FROM allcodes $cbJoins)"
-    val distExpr = (0 until PqM).map { s =>
-      val (lo, hi) = (s * sub + 1, (s + 1) * sub)
-      pqL2(s"qe[$lo:$hi]", s"ce$s")
-    }.mkString("(", " + ", ")")
+    val distExpr = pqAdcCtes(ctes)
     ctes += s"adc AS (SELECT qid, bid, $distExpr AS dist FROM q JOIN probes USING (qid) JOIN assign USING (cid) JOIN wide USING (bid))"
     ctes += s"cand AS (SELECT qid, bid FROM (SELECT qid, bid, row_number() OVER (PARTITION BY qid ORDER BY dist, bid) AS rnk FROM adc) WHERE rnk <= $IvfPqRefine)"
     ctes += s"rer AS (SELECT cand.qid AS qid, cand.bid AS bid, ${pqL2("rawq.qe", "rawb.be")} AS d FROM cand JOIN rawq ON cand.qid = rawq.qid JOIN rawb ON cand.bid = rawb.bid)"

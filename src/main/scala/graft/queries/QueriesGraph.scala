@@ -190,7 +190,7 @@ object QueriesGraph {
     val rderr = Eval.relativeDistError(
       res.select(col("query_id"), col("dists")),
       gtKnn.select(col("query_id"), transform(col("knn"), _("dist")).as("dists")),
-      10, "l2")
+      10, Metric.L2)
     recall.crossJoin(rderr)
       .select(round(col("recall_at_k"), 6).as("recall_at_k"),
         col("n_queries"), round(col("mean_rderr"), 6).as("mean_rderr"))

@@ -181,7 +181,7 @@ object QueriesVector {
       .select(col("query_id"), transform(col("rd0"), _("dist")).as("dists"))
     val gt = QueriesAnn.exactKnn(s, dir)
       .select(col("query_id"), transform(col("knn"), _("dist")).as("dists"))
-    Eval.relativeDistError(res, gt, k, "l2")
+    Eval.relativeDistError(res, gt, k, Metric.L2)
       .select(round(col("mean_rderr"), 6).as("mean_rderr"))
   }
 
@@ -245,7 +245,7 @@ object QueriesVector {
       .agg(sort_array(collect_list(struct(col("rank"), col("dist")))).as("rd0"))
       .filter(size(col("rd0")) >= k)
       .select(col("query_id"), transform(col("rd0"), _("dist")).as("dists"))
-    Eval.relativeDistError(res, gtBack, k, "l2")
+    Eval.relativeDistError(res, gtBack, k, Metric.L2)
       .select(round(col("mean_rderr"), 6).as("mean_rderr"))
   }
 

@@ -29,7 +29,8 @@ import org.apache.spark.sql.SparkSession
   * factories at once (`memMemo`, `bipartiteMemo`, `distMemo`); each reads
   * only Tables, and `distMemo` keeps its search view in the same entry
   * rather than in a nested memo, so none of them takes a second memo
-  * lock. A new
+  * lock. `Tables`' memo is a leaf: its factory only reads parquet and
+  * takes no other memo lock, so any factory may call `Tables`. A new
   * cross-family memo reference (e.g. a graph memo whose factory reads a
   * QueriesAnn memo while QueriesAnn's factory reads a graph memo) would
   * deadlock the concurrent setup — either keep the reference one-way, or

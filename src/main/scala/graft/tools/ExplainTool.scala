@@ -15,7 +15,7 @@ object ExplainTool {
     "tpch_q3_top_revenue",  // broadcast dimension joins
     "dedup_exact",          // hash-keyed shuffle, partial aggregation
     "ann_lsh_topk",         // bucket-keyed join + bounded top-k aggregation
-    "ann_ivf_topk",         // literal-fold centroid argmin (no exchange)
+    "ann_ivf_topk",         // broadcast centroid kernel (no exchange)
     "vec_centroid",         // posexplode + keyed aggregate
     "vec_mean_pool",        // array-summing partial/final aggregate
     "text_quality")         // pure codegen'd column expressions

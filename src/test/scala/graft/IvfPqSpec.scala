@@ -2,15 +2,12 @@ package graft
 
 import graft.core.{Metric, Tables}
 import graft.ops.{AnnSearch, KnnJoin, Quantize}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import scala.jdk.CollectionConverters._
 
 /** IVF+PQ composite (coarse probe → byte-domain ADC over probed lists →
-  * exact refine): semantics, the persisted partition-pruned layout, and
-  * the quality claim that coarse pruning costs little recall once the
-  * refine stage re-ranks with exact distances. */
+  * exact refine): semantics, and the quality claim that coarse pruning
+  * costs little recall once the refine stage re-ranks with exact
+  * distances. */
 class IvfPqSpec extends SparkSpec {
 
   private val K = 10
@@ -72,41 +69,12 @@ class IvfPqSpec extends SparkSpec {
     val (_, b, _, _, _, _) = fixture
     val cents = b.filter(col("id").between(20, 27))
       .select(col("id").cast("int").as("centroid_id"), col("vec"))
-    val rel = AnnSearch.assignToCentroids(b.select(col("id"), col("vec")), cents)
+    val rel = IvfOracle.assign(b.select(col("id"), col("vec")), cents)
       .select(col("id").cast("long").as("id"), col("cdist"), col("centroid_id"))
-    val ker = AnnSearch.assignToCentroidsKernel(b.select(col("id"), col("vec")), cents)
+    val ker = AnnSearch.assignToCentroids(b.select(col("id"), col("vec")), cents)
       .select(col("id"), col("cdist"), col("centroid_id"))
     assert(ker.exceptAll(rel).isEmpty && rel.exceptAll(ker).isEmpty,
       "kernel centroid assignment diverges from the literal fold")
-  }
-
-  test("persisted IVF+PQ layout: partition-pruned scan, identical results") {
-    val (_, _, qP, cb, assignedCodes, probes) = fixture
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    Quantize.saveIvfPq(assignedCodes, cb, dir)
-    val direct = KnnJoin.explodeRanks(
-      PqOracle.ivfAdcTopK(probes, qP, assignedCodes, cb, K))
-    // the kernel scans the codes inside the call, so the plans it runs
-    // are captured there
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val fromTable =
-      try Quantize.ivfPqTopKTable(spark, dir, probes, qP, K)
-      finally {
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        spark.listenerManager.unregister(listener)
-      }
-    val ft = KnnJoin.explodeRanks(fromTable)
-    assert(ft.exceptAll(direct).isEmpty && direct.exceptAll(ft).isEmpty,
-      "persisted-layout IVF+PQ diverges from the direct composite")
-    // probing must reach the codes scan as a partition filter
-    assert(plans.asScala.exists(_.contains("PartitionFilters: [centroid_id")),
-      s"probe set not pushed as a partition filter:\n${plans.asScala.mkString("\n")}")
   }
 
   test("refined IVF+PQ matches exact kNN restricted to the probed lists") {

@@ -23,24 +23,6 @@ class KMeansSpec extends SparkSpec {
     assert(c1.count() == 8)
   }
 
-  test("persisted IVF layout: partition-pruned probe, identical results") {
-    val emb = Tables.vectors(spark, sf0001)
-    val q = emb.filter(col("id") < 20)
-    val b = emb.filter(col("id") >= 20)
-    val cents = AnnSearch.kMeans(b, k = 8, iters = 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    AnnSearch.saveIvf(b, cents, dir)
-    val fromTable = AnnSearch.ivfTopKTable(spark, dir, q, 10, 2, Metric.L2)
-    val direct = AnnSearch.ivfTopK(q, b, cents, 10, 2, Metric.L2)
-    assert(fromTable.exceptAll(direct).isEmpty && direct.exceptAll(fromTable).isEmpty,
-      "persisted-layout IVF diverges from the direct operator")
-    // probing must reach the scan as a partition filter (pruned read)
-    fromTable.collect()
-    val plan = fromTable.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [centroid_id"),
-      s"probe set not pushed as a partition filter:\n$plan")
-  }
-
   test("IVF with trained centroids beats fixed-id centroids on recall") {
     val emb = Tables.vectors(spark, sf0001)
     val q = emb.filter(col("id") < 20)
@@ -48,7 +30,8 @@ class KMeansSpec extends SparkSpec {
     val gt = KnnJoin(q, b, 10, Metric.L2)
       .select(col("query_id"), transform(col("knn"), _("id")).as("ids"))
     def recallWith(cents: org.apache.spark.sql.DataFrame): Double = {
-      val res = AnnSearch.ivfTopK(q, b, cents, 10, 2, Metric.L2)
+      val res = AnnSearch.ivfTopKOnLists(q, AnnSearch.invertedLists(b, cents),
+          cents, 10, 2, Metric.L2)
         .groupBy("query_id").agg(collect_list(col("base_id")).as("ids"))
       graft.eval.Eval.recallAtK(res, gt, 10)
         .collect().head.getAs[Double]("recall_at_k")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Metric, Tables}
-import graft.ops.{KnnJoin, Quantize}
+import graft.ops.{AnnSearch, KnnJoin, Quantize}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -230,13 +230,13 @@ class KnnJoinSpec extends SparkSpec {
       "ivfApprox results changed under query repartitioning")
   }
 
-  test("probesFor picks the nprobe nearest centroids, ties by centroid id") {
-    val cents = Array(
-      Array(0.0, 0.0), Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 0.0))
+  test("the centroid kernel picks the nprobe nearest centroids, ties by centroid id") {
+    val cents = Array(Array(0f, 0f), Array(1f, 0f), Array(0f, 1f), Array(1f, 0f))
+      .zipWithIndex.map(_.swap)
     // query at origin: dists 0, 1, 1, 1 -> top-3 = centroid 0, then the
     // dist-1 tie breaks ascending id: 1, 2 (never 3)
-    val ps = KnnJoin.probesFor(Array(0.0, 0.0), cents, 3)
-    assert(ps.toSeq == Seq(0, 1, 2))
+    val ps = AnnSearch.nearestCentroids(Array(0f, 0f), cents, 3)
+    assert(ps.map(_._2).toSeq == Seq(0L, 1L, 2L))
   }
 
   test("ivfApprox emits exactly one row per query id (coverage)") {

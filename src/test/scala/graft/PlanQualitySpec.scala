@@ -49,11 +49,12 @@ class PlanQualitySpec extends SparkSpec {
     val emb = Tables.vectors(spark, sf001)
     val q = emb.filter(col("id") < 20)
     val b = emb.filter(col("id") >= 20)
+    val cents = b.filter(col("id").between(20, 27))
+      .select(col("id").as("centroid_id"), col("vec"))
     Seq(
       graft.ops.AnnSearch.lshTopK(q, b, 10, Metric.L2),
-      graft.ops.AnnSearch.ivfTopK(q, b,
-        b.filter(col("id").between(20, 27))
-          .select(col("id").as("centroid_id"), col("vec")), 10, 2, Metric.L2)
+      graft.ops.AnnSearch.ivfTopKOnLists(q,
+        graft.ops.AnnSearch.invertedLists(b, cents), cents, 10, 2, Metric.L2)
     ).foreach { df =>
       df.collect()
       val plan = df.queryExecution.executedPlan.toString

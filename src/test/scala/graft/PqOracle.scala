@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * They mirror the DuckDB oracle SQL step by step, so the specs pin each
   * kernel to them: `pqEncodeKernel` must give [[pqEncode]]'s codes,
   * `adcTopK` the ranking of exact kNN over [[pqReconstruct]], and
-  * `ivfAdcTopKKernel` (hence `ivfPqTopKTable`) [[ivfAdcTopK]]'s
-  * rankings, doubles included. The specs compare exploded
+  * `ivfAdcTopKKernel` [[ivfAdcTopK]]'s rankings, doubles included. The specs compare exploded
   * ranks: the kernel also emits an empty `knn` row for a query with no
   * candidate, where [[ivfAdcTopK]] has no row. */
 object PqOracle {
