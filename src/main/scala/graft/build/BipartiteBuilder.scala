@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *   - single reverse edge: pivot base node → `nd + qid` (:270-272).
   *
   * Unlike the RoarGraph phases this is pure relational dataflow — one
-  * explode + one groupBy shuffle, no vector math — so it is expressed
+  * groupBy shuffle, no vector math — so it is expressed
   * entirely in DataFrame ops and is DuckDB-oracle-checkable. Node-id space
   * follows the reference: base ids `[0, nd)`, query ids `[nd, nd+ndSq)`
   * (src/index_bipartite.cpp:152-159).
@@ -33,15 +33,15 @@ object BipartiteBuilder {
     val querySide = truncated.select(
       (col("query_id") + nd).as("src"),
       filter(col("knn"), _ =!= col("knn")(0)).as("nbrs"))
-    // pivot base node → query node (merged below; sorted for determinism —
-    // the reference's insertion order is lock-acquisition order, :270-272)
+    // pivot base node → its query nodes (sorted for determinism — the
+    // reference's insertion order is lock-acquisition order, :270-272)
     val baseSide = truncated
       .select(col("knn")(0).as("src"), (col("query_id") + nd).as("qnode"))
       .groupBy("src")
       .agg(sort_array(collect_list(col("qnode"))).as("nbrs"))
+    // the two sides' srcs are disjoint (query nodes >= nd, pivots < nd)
+    // and each side has one row per src, so the union is the adjacency
     querySide.unionByName(baseSide)
-      .groupBy("src")
-      .agg(flatten(sort_array(collect_list(col("nbrs")))).as("nbrs"))
   }
 
   /** Base-to-base 2-hop projection of the bipartite graph: the search-time
@@ -49,8 +49,9 @@ object BipartiteBuilder {
     * expands base → query → base) materialized as an adjacency table, so
     * the uniform beam-search kernel runs on it directly. One self-join of
     * the edge list — at scale both sides shuffle on the query-node key
-    * (bounded by sum of query degrees, not |V|²). Neighbor lists sorted
-    * ascending for determinism.
+    * (bounded by sum of query degrees, not |V|²) — and one groupBy whose
+    * `collect_set` drops the duplicate (src, dst) pairs. Neighbor lists
+    * sorted ascending for determinism.
     *
     * @param adj [src, nbrs] bipartite adjacency from [[build]]
     * @param nd  base/query node-id boundary
@@ -62,7 +63,6 @@ object BipartiteBuilder {
       .select(col("src").as("qnode"), explode(col("nbrs")).as("dst"))
     baseToQuery.join(queryToBase, "qnode")
       .filter(col("dst") =!= col("src"))
-      .select(col("src"), col("dst")).distinct()
       .groupBy("src")
       .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
   }

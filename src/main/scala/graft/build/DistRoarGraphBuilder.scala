@@ -7,6 +7,7 @@ import graft.ops.graph.{BspBeamSearch, OcclusionPrune}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** A RoarGraph index in distributed (DataFrame) form — the build product
   * of [[DistRoarGraphBuilder]]: adjacency stays a table, like the
@@ -80,10 +81,12 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   * pass bound is hit does repair exit unconverged — and then it says so
   * loudly (a `[dist-build] WARNING` line) instead of returning silently.
   *
-  * Job-count bound at scale: the BFS materializes every
-  * [[BfsHopsPerBatch]] levels (one multi-hop plan per materialization),
-  * so a diameter-D graph costs O(D/8) jobs, not O(D); attach rounds are
-  * bounded by RepairMaxRounds per pass and RepairMaxPasses passes.
+  * Job-count bound at scale: the BFS takes each partition to a local
+  * fixpoint between exchanges and chains up to eight supersteps per job,
+  * so its jobs scale with cross-partition hops / 8, not with depth, and
+  * a graph that fits one partition is reached in one job; attach rounds
+  * are bounded by RepairMaxRounds per pass and RepairMaxPasses passes,
+  * and each beam search runs up to eight rounds per job.
   * Nodes with zero in-degree — which occlusion pruning and caps
   * routinely produce, and which NO search-time seeding can find — are
   * exactly what this pass fixes; without it the distributed tier
@@ -287,7 +290,7 @@ object DistRoarGraphBuilder {
     // so slicing them by id hash and searching slice-by-slice is EXACT —
     // and it divides the per-round shuffle volume (|frontier|·deg·vecBytes,
     // the build's peak disk demand) by the batch count. BspBeamSearch
-    // materializes each round eagerly, so the slices run sequentially:
+    // materializes its rounds eagerly, so the slices run sequentially:
     // peak spill is one slice's rounds, not the whole corpus's. This is
     // the knob that bounds scratch-disk per executor at fixed cluster
     // size; batched == unbatched is spec-gated (DistRoarGraphSpec).
@@ -481,109 +484,97 @@ object DistRoarGraphBuilder {
   private def beamRoundsBound: Int =
     if (sys.props.get("graft.repair.disableBeams").contains("true")) 0
     else RepairMaxRounds
-  private val BfsMaxRounds = 96
-  private val BfsHopsPerBatch = 8
+  /** Bound on BFS supersteps (one exchange of frontier ids each). */
+  private val BfsMaxSteps = 96
+  private val BfsStepsPerJob = 8
 
-  /** Distributed BFS from `ep` over `adj` — returns the reached id set as
-    * a DataFrame. Expands [[BfsHopsPerBatch]] levels per materialization:
-    * the hop chain (frontier ⋈ adjacency → explode → distinct, minus the
-    * batch-start reached set at every hop) stays one lazy plan, so a
-    * diameter-D graph costs O(D/8) driver-stepped jobs instead of O(D) —
-    * the per-job launch latency, not the shuffled bytes, dominated the
-    * per-level variant (VERDICT r5 #2: 19 s of pure job latency on an
-    * 1,800-node graph). */
-  private def bfsReached(adj: DataFrame, ep: Long,
-                         scope: graft.ops.graph.CpScope): DataFrame = {
+  /** Distributed BFS from `ep` over `adj` — returns the reached id set
+    * (`ep` included) as a DataFrame. Block-centric: the adjacency is
+    * hash-partitioned and pinned, and each superstep takes every
+    * partition's newly arrived ids to a LOCAL fixpoint through the
+    * partition's own adjacency before one exchange routes the neighbors
+    * that live in other partitions to their owners. So supersteps scale
+    * with the cross-partition hops of the graph, not with its depth, and
+    * a graph that fits one partition is reached in one superstep. The
+    * first job runs one superstep; later jobs chain up to
+    * [[BfsStepsPerJob]] of them in one lazy lineage, each step persisted
+    * and only the job's last one checkpointed; a step after the last
+    * exchange changes nothing, so the reached set does not depend on the
+    * batching. `numPartitions` replaces the size-derived partition count
+    * (repair passes its vector pin's; the specs spread a small graph). */
+  private[graft] def bfsReached(adj: DataFrame, ep: Long,
+                                scope: graft.ops.graph.CpScope,
+                                numPartitions: Option[Int] = None): DataFrame = {
     val spark = adj.sparkSession
     import spark.implicits._
-    type IdSet = org.apache.spark.rdd.RDD[(Long, Unit)]
+    type Step = org.apache.spark.rdd.RDD[(Long, Boolean)]
 
-    // Pin the adjacency to one partitioner for the whole BFS: every hop's
-    // expansion is then a NARROW join (the SQL form re-exchanged/re-sorted
-    // the adjacency inside every batch plan — ~3 exchanges per hop; this
-    // shape shuffles only the frontier ids, one exchange per hop, same as
-    // the BSP round dataflow). Per-hop dedup and the reached-set subtract
-    // are zipPartitions over co-partitioned sets, narrow by construction.
     val adjDs = adj
       .select(col("src").cast("long"), col("nbrs").cast("array<long>"))
       .as[(Long, Array[Long])]
-    // size-derived partition count (capped at the conf), same rationale
-    // as BspBeamSearch.pinVectors: RDD stages get no AQE coalescing
-    val nNodes = adjDs.count()
-    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // shared size rule (BspBeamSearch.sizedPartitions, ADVICE r13): the
-    // previous inline nNodes/100000+1 was a floor+1 that drifted from the
-    // pin's ceiling division at exact multiples
-    val part = new org.apache.spark.HashPartitioner(
-      graft.ops.graph.BspBeamSearch.sizedPartitions(nNodes, confParts))
+    // size-derived partition count capped at the conf (the rule shared
+    // with BspBeamSearch.pinVectors): RDD stages get no AQE coalescing
+    val part = new org.apache.spark.HashPartitioner(numPartitions.getOrElse(
+      BspBeamSearch.sizedPartitions(adjDs.count(),
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)))
     val adjRdd = adjDs.rdd
       .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-    def materialize(s: IdSet): (Long, () => Unit) = {
-      s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      s.localCheckpoint() // lineage cut: prior sets are unpersisted below
-      val n = s.count()
-      (n, () => s.unpersist(blocking = false))
+    // A step's partition p holds (id, true) for every reached id that p
+    // owns and (id, false) for each id p sends to another partition. The
+    // next step routes the sent ids to their owners, and each owner
+    // expands the ones it has not reached yet to its local fixpoint.
+    def superstep(prev: Step, sent: org.apache.spark.util.LongAccumulator): Step = {
+      val inbox = prev.filter(!_._2).map(e => (e._1, ())).partitionBy(part)
+      adjRdd.zipPartitions(prev, inbox) { (ait, pit, iit) =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        val reached = new java.util.HashSet[Long]()
+        pit.foreach { case (id, own) => if (own) reached.add(id) }
+        val queue = new java.util.ArrayDeque[Long]()
+        iit.foreach { case (id, _) => if (reached.add(id)) queue.add(id) }
+        val out = new java.util.HashSet[Long]()
+        if (!queue.isEmpty) {
+          val nbrsOf = new java.util.HashMap[Long, Array[Long]]()
+          ait.foreach { case (src, nbrs) =>
+            val prev = nbrsOf.get(src)
+            nbrsOf.put(src, if (prev == null) nbrs else prev ++ nbrs)
+          }
+          while (!queue.isEmpty) {
+            val nbrs = nbrsOf.get(queue.poll())
+            if (nbrs != null) nbrs.foreach { n =>
+              if (part.getPartition(n) != pid) out.add(n)
+              else if (reached.add(n)) queue.add(n)
+            }
+          }
+          sent.add(out.size)
+        }
+        reached.iterator.asScala.map(id => (id, true)) ++
+          out.iterator.asScala.map(id => (id, false))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
     }
-    // narrow set-minus: both sides co-partitioned on `part`
-    def minus(a: IdSet, b: IdSet): IdSet =
-      a.zipPartitions(b, preservesPartitioning = true) { (ait, bit) =>
-        val seen = new java.util.HashSet[Long]()
-        bit.foreach(kv => seen.add(kv._1))
-        ait.filter(kv => !seen.contains(kv._1))
-      }
-    def dedup(a: IdSet): IdSet =
-      a.mapPartitions({ it =>
-        val seen = new java.util.HashSet[Long]()
-        it.filter(kv => seen.add(kv._1))
-      }, preservesPartitioning = true)
 
-    var reached: IdSet = spark.sparkContext
-      .parallelize(Seq((ep, ())), 1).partitionBy(part)
-    var relReached = materialize(reached)._2
-    var frontier = reached
-    var relFrontier: () => Unit = () => () // initially aliases `reached`
-    var level = 0
-    var grew = true
-    while (grew && level < BfsMaxRounds) {
-      var cur = frontier
-      // Each hop subtracts the BATCH-START reached set only. A node
-      // discovered at hop h therefore re-expands at later hops in the same
-      // batch (≤ BfsHopsPerBatch-fold duplicate explode volume in dense
-      // regions — ADVICE r6); the union's final dedup keeps the reached
-      // set exact, and bounded intra-batch re-expansion measured cheaper
-      // than per-hop materialization at every scale (see VERDICT r5 #2 /
-      // ADVICE r6 history on the SQL-form ancestor of this loop).
-      val hops = (0 until BfsHopsPerBatch).map { _ =>
-        cur = minus(dedup(
-          cur.join(adjRdd)
-            .mapPartitions(_.flatMap { case (_, (_, nbrs)) =>
-              nbrs.iterator.map(n => (n, ()))
-            })
-            .partitionBy(part)), reached)
-        cur
-      }
-      // co-partitioned union keeps the partitioner; dedup across hops
-      val next = dedup(spark.sparkContext.union(hops))
-      val (nNext, relNext) = materialize(next)
-      relFrontier() // next is materialized; the prior frontier is dead
-      grew = nNext > 0
-      if (grew) {
-        val widened = dedup(spark.sparkContext.union(Seq(reached, next)))
-        val relWidened = materialize(widened)._2
-        relReached() // the widened set is cut; the prior one is dead
-        reached = widened
-        relReached = relWidened
-        frontier = next
-        relFrontier = relNext
-      } else relNext()
-      level += BfsHopsPerBatch
+    var state: Step = spark.sparkContext
+      .parallelize(Seq((ep, false)), part.numPartitions)
+    var steps = 0
+    var done = false
+    while (!done && steps < BfsMaxSteps) {
+      val n = math.min(if (steps == 0) 1 else BfsStepsPerJob, BfsMaxSteps - steps)
+      val sent = (0 until n).map(_ => spark.sparkContext.longAccumulator)
+      val batch = sent.scanLeft(state)(superstep).tail
+      batch.last.localCheckpoint() // lineage cut: earlier steps are freed below
+      batch.last.count()
+      (if (steps == 0) batch.init else state +: batch.init)
+        .foreach(_.unpersist(blocking = false))
+      state = batch.last
+      val last = sent.indexWhere(_.value == 0)
+      done = last >= 0
+      steps += (if (done) last + 1 else n)
     }
-    relFrontier()
     adjRdd.unpersist(blocking = false)
-    scope.add(relReached) // final set released by the caller post-consumption
-    spark.createDataset(reached.map(_._1)).toDF("id")
+    val fin = state
+    scope.add(() => fin.unpersist(blocking = false)) // released post-consumption
+    spark.createDataset(fin.filter(_._2).map(_._1)).toDF("id")
   }
 
   /** Distributed reachability repair — see the class doc. Returns the
@@ -602,7 +593,9 @@ object DistRoarGraphBuilder {
 
     // vectors never change across repair rounds (only the adjacency
     // does), so the vector half of the beam searches' pin is shared for
-    // the whole repair instead of re-shuffling the n-row table per round
+    // the whole repair instead of re-shuffling the n-row table per round;
+    // its size-derived partition count (one row per node) also sizes the
+    // verify BFS
     val repairVecs = BspBeamSearch.pinVectors(
       baseN.select(col("id"), col("vec")))
 
@@ -618,7 +611,8 @@ object DistRoarGraphBuilder {
       // a node whose only in-path ran through the trimmed edge)
       val tBfs0 = System.nanoTime()
       val bfsScope = new graft.ops.graph.CpScope
-      val reached = bfsReached(adjCur.select("src", "nbrs"), ep, bfsScope)
+      val reached = bfsReached(adjCur.select("src", "nbrs"), ep, bfsScope,
+        Some(repairVecs.part.numPartitions))
       var (unreached, relUnreached) = graft.ops.graph.PlanUtil.cutDFReleasable(
         baseN.select(col("id"), col("vec"))
           .join(reached, Seq("id"), "left_anti"))
@@ -733,7 +727,8 @@ object DistRoarGraphBuilder {
     var staleCount = !done && unverifiedTrim
     while ((remaining > 0 || staleCount) && fpass <= RepairForcePasses) {
       val vScope = new graft.ops.graph.CpScope
-      val reached = bfsReached(adjCur.select("src", "nbrs"), ep, vScope)
+      val reached = bfsReached(adjCur.select("src", "nbrs"), ep, vScope,
+        Some(repairVecs.part.numPartitions))
       val (orphans, relOrphans) = graft.ops.graph.PlanUtil.cutDFReleasable(
         baseN.select(col("id"), col("vec"))
           .join(reached, Seq("id"), "left_anti"))

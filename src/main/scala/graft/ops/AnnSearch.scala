@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.Metric
-import graft.functions.{TopKAggregator, VecMeanAggregator, VectorFunctions}
+import graft.functions.{TopKAggregator, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +30,10 @@ import org.apache.spark.sql.functions._
   *   - per-query top-k: bounded partial/final aggregation (TopKAggregator)
   *     — only `numPartitions × k` rows per query reach the exchange, never
   *     the full scored candidate set (a `row_number` window would shuffle
-  *     and sort every scored row).
+  *     and sort every scored row);
+  *   - k-means (and the PQ trainer in [[Quantize]]): one job per Lloyd
+  *     iteration ([[lloydSums]]) — each partition returns per-cell sums,
+  *     merged on the driver in partition order; no join, no shuffle.
   */
 object AnnSearch {
 
@@ -138,37 +141,113 @@ object AnnSearch {
       .select(col("id").as("query_id"), col("vec").as("qvec"), col("centroid_id"))
 
   /** Deterministic Lloyd's k-means over the vector table — the IVF
-    * centroid trainer. Per iteration: assignment is the shuffle-free
-    * centroid kernel ([[nearestCentroids]]); the centroid update is one
-    * array-summing partial/final aggregate per cluster (shuffles
-    * `numPartitions × k` array rows, not `n × dim` exploded scalars).
-    * Seeding is deterministic (the k vectors with smallest ids), so
-    * results are reproducible. Empty clusters keep their previous
-    * centroid. Returns
-    * (centroid_id, vec: array<float>). */
+    * centroid trainer. Seeding is deterministic (the k vectors with
+    * smallest ids, centroid ids 0..k-1 in id order), so results are
+    * reproducible; the rows are persisted once and the seed fetch fills
+    * that cache. Each iteration is ONE [[lloydSums]] job: every row goes
+    * to its nearest centroid through the one centroid kernel
+    * ([[nearestCentroids]]) and each partition sums its rows per cell; the
+    * new centroid is the double mean cast to float, and an empty cluster
+    * keeps its previous centroid. Returns (centroid_id, vec: array<float>). */
   def kMeans(vectors: DataFrame, k: Int, iters: Int = 10): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val v = vectors.select(col("id").cast("long"), col("vec")).cache()
-    var centroids = v.orderBy("id").limit(k)
-      .orderBy("id").collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Float](1).toArray) }
-    var it = 0
-    while (it < iters) {
-      val assigned = nearestLists(v, centroids, 1)
-        .groupBy("centroid_id")
-        .agg(VecMeanAggregator.meanVec(
-          VectorFunctions.toDouble(col("vec"))).as("m"))
-        .select(col("centroid_id").cast("int"),
-          transform(col("m"), _.cast("float")).as("vec"))
-        .as[(Int, Array[Float])].collect().toMap
-      centroids = centroids.map { case (cid, old) =>
-        (cid, assigned.getOrElse(cid, old))
+    val rows = persistedRows(vectors)
+    try {
+      var centroids = rows.takeOrdered(k)(Ordering.by[(Long, Array[Float]), Long](_._1))
+        .zipWithIndex.map { case ((_, v), i) => (i, v) }
+      val dim = centroids.headOption.fold(0)(_._2.length)
+      var it = 0
+      while (it < iters && centroids.nonEmpty) {
+        val bc = spark.sparkContext.broadcast(centroids)
+        val sums = lloydSums(rows, centroids.length, dim) { (part, acc) =>
+          val cs = bc.value
+          part.foreach { v => acc.add(nearestCentroids(v, cs, 1)(0)._2.toInt, v, 0) }
+        }
+        bc.destroy()
+        centroids = centroids.map { case (cid, old) => (cid, sums.meanOr(cid, old)) }
+        it += 1
       }
-      it += 1
+      centroids.toSeq.toDF("centroid_id", "vec")
+    } finally rows.unpersist(blocking = false)
+  }
+
+  /** `(id, vec)` rows of `vectors` as a persisted RDD, for a trainer that
+    * scans them once per iteration; the caller unpersists it. */
+  private[ops] def persistedRows(vectors: DataFrame)
+      : org.apache.spark.rdd.RDD[(Long, Array[Float])] = {
+    import vectors.sparkSession.implicits._
+    vectors.select(col("id").cast("long"), col("vec"))
+      .as[(Long, Array[Float])].rdd
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Per-cell running sums of `width`-float slices, the update of one
+    * Lloyd iteration. A cell's first slice is copied and later ones are
+    * added, and two partial sums add element-wise: the arithmetic of the
+    * element-wise mean aggregate (`VecMeanAggregator`), so a mean is the
+    * same double whichever form computed it. */
+  private[ops] final class CellSums(cells: Int, width: Int) extends Serializable {
+    private val n = new Array[Long](cells)
+    private val sum = new Array[Double](cells * width)
+
+    /** Add `v(from until from + width)` to cell `c`. */
+    def add(c: Int, v: Array[Float], from: Int): Unit = {
+      val o = c * width
+      var i = 0
+      if (n(c) == 0L) while (i < width) { sum(o + i) = v(from + i).toDouble; i += 1 }
+      else while (i < width) { sum(o + i) += v(from + i).toDouble; i += 1 }
+      n(c) += 1
     }
-    v.unpersist()
-    centroids.toSeq.toDF("centroid_id", "vec")
+
+    def merge(p: CellSums): Unit = {
+      var c = 0
+      while (c < cells) {
+        if (p.n(c) > 0L) {
+          val o = c * width
+          if (n(c) == 0L) System.arraycopy(p.sum, o, sum, o, width)
+          else { var i = 0; while (i < width) { sum(o + i) += p.sum(o + i); i += 1 } }
+          n(c) += p.n(c)
+        }
+        c += 1
+      }
+    }
+
+    /** Cell `c`'s mean, each element's double mean cast to float; `old`
+      * when no row fell in the cell. */
+    def meanOr(c: Int, old: Array[Float]): Array[Float] =
+      if (n(c) == 0L) old
+      else Array.tabulate(width)(i => (sum(c * width + i) / n(c)).toFloat)
+  }
+
+  /** One Lloyd update in ONE job: `fold` adds each row of a partition to
+    * the partition's [[CellSums]], merged on the driver in partition
+    * order ([[inPartitionOrder]]). No join and no shuffle. */
+  private[ops] def lloydSums(rows: org.apache.spark.rdd.RDD[(Long, Array[Float])],
+                             cells: Int, width: Int)(
+      fold: (Iterator[Array[Float]], CellSums) => Unit): CellSums = {
+    val total = new CellSums(cells, width)
+    inPartitionOrder(rows) { it =>
+      val acc = new CellSums(cells, width)
+      fold(it.map(_._2), acc)
+      acc
+    }(total.merge)
+    total
+  }
+
+  /** Reduce each partition of `rdd` with `fold` in ONE job and hand the
+    * results to `merge` in partition order as their tasks finish (a late
+    * partition waits for the ones before it), so a driver-side merge of
+    * doubles does not depend on which task finished first. */
+  private[ops] def inPartitionOrder[T, R: scala.reflect.ClassTag](
+      rdd: org.apache.spark.rdd.RDD[T])(
+      fold: Iterator[T] => R)(merge: R => Unit): Unit = {
+    val pending = new java.util.HashMap[Int, R]()
+    var next = 0
+    rdd.sparkContext.runJob(rdd, fold, (part: Int, r: R) => {
+      pending.put(part, r)
+      while (pending.containsKey(next)) { merge(pending.remove(next)); next += 1 }
+    })
   }
 
   /** The inverted-lists table [[ivfTopKOnLists]] scans: each base row

@@ -108,6 +108,13 @@ object PqCodebook {
       col("vec")).as[(Int, Int, Array[Float])].collect()
   }
 
+  /** A codebook over a dense `m × kCodes` grid of equal-length
+    * centroids (a trainer's current grid). */
+  private[ops] def of(books: Array[Array[Array[Float]]]): PqCodebook = {
+    require(books.nonEmpty && books(0).nonEmpty, "PQ: empty codebook")
+    new PqCodebook(books)
+  }
+
   /** Load a `(subspace, centroid_id, vec)` table into the dense grid;
     * `m > 0` pins the subspace count (the caller's `m`, or the width of
     * the codes it will score). Holes, duplicates, negative ids and

@@ -11,7 +11,11 @@ import org.apache.spark.sql.functions._
   *
   * SQ8 is relational and deterministic (bounds are a per-dimension
   * aggregate, the round trip one column pass); the PQ kernels below run
-  * over [[PqCodebook]], and the specs pin them to relational oracles. */
+  * over [[PqCodebook]], and the specs pin them to relational oracles.
+  * The PQ trainer and the OPQ permutation's variances are driver-merged
+  * jobs: each partition reduces its rows to driver-small per-cell (or
+  * per-dimension) partials, and the driver merges them in partition
+  * order, one job per Lloyd iteration and one for the variances. */
 object Quantize {
 
   /** Per-dimension (pos, lo, hi) bounds over a vector column. */
@@ -54,78 +58,50 @@ object Quantize {
   // encoding, reconstruction for asymmetric distance computation.
 
   /** Train per-subspace codebooks: split `dim` into `m` contiguous
-    * subspaces, run deterministic k-means in each — all subspaces advance
-    * TOGETHER, one Spark job per Lloyd's iteration regardless of `m`
-    * (the m-separate-trainers formulation costs m× the scheduling).
-    * Semantics identical to per-subspace `AnnSearch.kMeans`: seeds = the k
-    * smallest ids' subvectors, double-avg → float centroids, empty
-    * clusters keep their previous centroid. Returns
-    * (subspace, centroid_id, vec: array<float> of dim/m). */
+    * subspaces and run deterministic k-means in each; all subspaces
+    * advance together. Seeds are the k smallest ids' subvectors (one job,
+    * which also fills the persisted row cache). Each Lloyd iteration is
+    * ONE [[AnnSearch.lloydSums]] job: a row's codes come from
+    * [[PqCodebook.encode]] over the current codebook (double L2, lowest
+    * code id on ties) and its subvectors are summed per (subspace, code)
+    * cell; the new centroid is the double mean cast to float, and an empty
+    * cell keeps its previous centroid. Every row must be `dim` long. The
+    * relational trainer (broadcast join, per-row min, per-cell mean
+    * aggregate) is the spec oracle `PqOracle.pqTrain`, equal bit for bit.
+    * Returns (subspace, centroid_id, vec: array<float> of dim/m), a local
+    * table. */
   def pqTrain(vectors: DataFrame, m: Int, k: Int, iters: Int): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    // one driver job fetches the k smallest ids WITH their vectors; dim
-    // and the per-subspace seed centroids derive from those rows on the
-    // driver (the previous dim-probe + id-collect + seed-filter trio cost
-    // three jobs for the same driver-small data)
-    val seedRows = vectors.select(col("id").cast("long"), col("vec"))
-      .orderBy("id").limit(k).as[(Long, Array[Float])].collect()
-    val dim = seedRows.head._2.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val subDim = dim / m
-    val sv = subspaceRows(vectors, m, subDim).cache()
-
-    var cents: Map[(Int, Int), Array[Float]] = seedRows.zipWithIndex.flatMap {
-      case ((_, v), c) =>
-        (0 until m).map(s => ((s, c), v.slice(s * subDim, (s + 1) * subDim)))
-    }.toMap
-
-    var it = 0
-    while (it < iters) {
-      val cdf = cents.toSeq.map { case ((s, c), v) => (s, c, v) }
-        .toDF("subspace", "centroid_id", "cvec")
-      // assignment = partial-aggregating min over struct(cdist, cid) — the
-      // n×k scored rows never reach an exchange (map-side min); ties by
-      // centroid_id via struct ordering. Update = one array-mean aggregate
-      // per cluster. No window, no sort, two keyed exchanges per iteration.
-      val updatedDf = sv.join(broadcast(cdf), "subspace")
-        .withColumn("cdist",
-          graft.functions.VectorFunctions.l2Sq(col("vec"), col("cvec")))
-        .groupBy("subspace", "id")
-        .agg(min(struct(col("cdist"), col("centroid_id"))).as("best"),
-          first(col("vec")).as("vec"))
-        .select(col("subspace"), col("best")("centroid_id").as("centroid_id"),
-          col("vec"))
-        .groupBy("subspace", "centroid_id")
-        .agg(graft.functions.VecMeanAggregator.meanVec(
-          graft.functions.VectorFunctions.toDouble(col("vec"))).as("mv"))
-        .select(col("subspace"), col("centroid_id"),
-          transform(col("mv"), _.cast("float")).as("vec"))
-      val updated = PqCodebook.rows(updatedDf)
-        .map { case (s, c, v) => ((s, c), v) }.toMap
-      cents = cents.map { case (key, old) => (key, updated.getOrElse(key, old)) }
-      it += 1
-    }
-    sv.unpersist()
-    cents.toSeq.map { case ((s, c), v) => (s, c, v) }
-      .toDF("subspace", "centroid_id", "vec")
+    val rows = AnnSearch.persistedRows(vectors)
+    try {
+      val seeds = rows.takeOrdered(k)(Ordering.by[(Long, Array[Float]), Long](_._1))
+      require(seeds.nonEmpty, "PQ: empty training set")
+      val dim = seeds.head._2.length
+      require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+      val subDim = dim / m
+      val kc = seeds.length
+      var books = Array.tabulate(m, kc)((s, c) =>
+        seeds(c)._2.slice(s * subDim, (s + 1) * subDim))
+      var it = 0
+      while (it < iters) {
+        val bc = spark.sparkContext.broadcast(PqCodebook.of(books))
+        val sums = AnnSearch.lloydSums(rows, m * kc, subDim) { (part, acc) =>
+          val book = bc.value
+          part.foreach { v =>
+            val codes = book.encode(v)
+            var s = 0
+            while (s < m) { acc.add(s * kc + codes(s), v, s * subDim); s += 1 }
+          }
+        }
+        bc.destroy()
+        books = Array.tabulate(m, kc)((s, c) => sums.meanOr(s * kc + c, books(s)(c)))
+        it += 1
+      }
+      (for (s <- 0 until m; c <- 0 until kc) yield (s, c, books(s)(c)))
+        .toDF("subspace", "centroid_id", "vec")
+    } finally rows.unpersist(blocking = false)
   }
-
-  /** (subspace, id, subvector) rows — one row per (input row, subspace).
-    * A single posexplode over the m slices, NOT an m-way union: the union
-    * compiled m near-identical whole-stage-codegen classes (one per
-    * branch, each with the slice offsets constant-folded in), and janino
-    * compile time — paid once per plan shape per session — dominated
-    * pqTrain/encode wall at bench scale (measured: 7.5 s first run vs
-    * 2.2 s re-run of the identical dataflow). Row values are identical;
-    * only the physical layout changes (a row's m subspaces now share its
-    * partition instead of living in m union branches). */
-  private[graft] def subspaceRows(vectors: DataFrame, m: Int, subDim: Int): DataFrame =
-    vectors.select(col("id").cast("long"),
-        posexplode(array((0 until m).map(s =>
-          slice(col("vec"), s * subDim + 1, subDim)): _*))
-          .as(Seq("subspace", "vec")))
-      .select(col("subspace"), col("id"), col("vec"))
 
   /** Encode: per subspace, the nearest codebook entry
     * ([[PqCodebook.encode]]: double L2, lowest code id on ties). The dense
@@ -280,14 +256,12 @@ object Quantize {
     * odd — every subspace receives one dimension per deal, so per-subspace
     * energy is balanced. Returns newPos -> oldPos (driver-small: dim
     * ints, like the codebooks). Rounding makes the rank order robust to
-    * last-ulp aggregation differences between engines. */
+    * last-ulp aggregation differences between engines. The variances come
+    * from one job ([[dimVariances]]). */
   def opqPermutation(train: DataFrame, dim: Int, m: Int): Array[Int] = {
     val subDim = dim / m
-    val vars = train.select(posexplode(col("vec")).as(Seq("pos", "x")))
-      .groupBy("pos")
-      .agg(round(variance(col("x").cast("double")), 6).as("v"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1)))
-    val ranked = vars.sortBy { case (pos, v) => (-v, pos) }.map(_._1)
+    val vars = dimVariances(train, dim)
+    val ranked = vars.indices.sortBy(pos => (-vars(pos), pos))
     val perm = Array.ofDim[Int](dim)
     ranked.zipWithIndex.foreach { case (oldPos, r) =>
       val deal = r / m
@@ -295,6 +269,69 @@ object Quantize {
       perm(s * subDim + deal) = oldPos
     }
     perm
+  }
+
+  /** round(sample variance, 6) of each of the `dim` positions of a
+    * `vec` column, in ONE job: each partition runs Spark's central-moment
+    * update (count, mean, M2) over its rows in order, and the driver
+    * merges the partitions into a zero buffer in partition order with
+    * Spark's merge formula — the arithmetic of `round(variance(x), 6)`
+    * over the exploded column, partial then final aggregate. A partition
+    * with no rows is skipped, as an aggregate skips a group absent from a
+    * map partition. Null rows are skipped; a row of another length fails
+    * by name, and so does a set of fewer than two rows (no sample
+    * variance). */
+  private[graft] def dimVariances(train: DataFrame, dim: Int): Array[Double] = {
+    import train.sparkSession.implicits._
+    val rows = train.select(col("vec")).as[Array[Float]].rdd
+    val n = new Array[Double](dim)
+    val avg = new Array[Double](dim)
+    val m2 = new Array[Double](dim)
+    def merge(p: Array[Array[Double]]): Unit = {
+      val Array(pn, pAvg, pM2) = p
+      if (dim > 0 && pn(0) > 0.0) {
+        var d = 0
+        while (d < dim) {
+          val n1 = n(d); val n2 = pn(d)
+          val newN = n1 + n2
+          val delta = pAvg(d) - avg(d)
+          val deltaN = if (newN == 0.0) 0.0 else delta / newN
+          avg(d) = avg(d) + deltaN * n2
+          m2(d) = m2(d) + pM2(d) + delta * deltaN * n1 * n2
+          n(d) = newN
+          d += 1
+        }
+      }
+    }
+    AnnSearch.inPartitionOrder(rows) { it =>
+      val (pn, pAvg, pM2) = (new Array[Double](dim), new Array[Double](dim),
+        new Array[Double](dim))
+      it.foreach { v =>
+        if (v != null) {
+          require(v.length == dim,
+            s"OPQ: vector dimension mismatch (${v.length} vs $dim)")
+          var d = 0
+          while (d < dim) {
+            val newN = pn(d) + 1.0
+            val delta = v(d).toDouble - pAvg(d)
+            val deltaN = delta / newN
+            pAvg(d) = pAvg(d) + deltaN
+            pM2(d) = pM2(d) + delta * (delta - deltaN)
+            pn(d) = newN
+            d += 1
+          }
+        }
+      }
+      Array(pn, pAvg, pM2)
+    }(merge)
+    require(dim == 0 || n(0) >= 2.0,
+      s"OPQ: a sample variance needs two training rows, got ${n(0).toLong}")
+    Array.tabulate(dim) { d =>
+      val v = m2(d) / (n(d) - 1.0)
+      if (v.isNaN || v.isInfinite) v
+      else java.math.BigDecimal.valueOf(v)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    }
   }
 
   /** Apply a newPos -> oldPos permutation (exact reorder, no float ops). */

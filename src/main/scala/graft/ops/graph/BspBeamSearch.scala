@@ -41,6 +41,11 @@ import org.apache.spark.sql.functions._
   * the single-node kernel: the visited set is the pool itself (entries
   * evicted past L may be revisited), which is the standard batch
   * approximation; the recall gate in BspBeamSearchSpec measures it.
+  *
+  * Rounds run up to eight per Spark job, with one checkpoint per job,
+  * and on a one-partition pin a round runs inside the task with no
+  * exchange (see [[search]]); the one-job-per-round loop is the spec
+  * oracle `BspOracle`, equal in ids and dist bits.
   */
 object BspBeamSearch {
 
@@ -58,6 +63,10 @@ object BspBeamSearch {
     * repair loop does, at [[graft.build.DistRoarGraphBuilder]]'s
     * RepairQueryBatch). */
   private val MaxBroadcastQueries = 1000000
+
+  /** Search rounds run per Spark job (see `search`): one job, and one
+    * checkpoint, per this many rounds instead of per round. */
+  private val RoundsPerJob = 8
 
   /** An (id → vec) table pinned to one partitioner and persisted, for
     * repeated NARROW vector lookups without re-shuffling the n-row table
@@ -88,16 +97,15 @@ object BspBeamSearch {
     * the session's shuffle-partition conf — a conf-sized constant
     * scheduled conf empty tasks per round on small graphs (RDD stages get
     * no AQE coalescing), while the cap keeps cluster-scale pins at the
-    * configured parallelism. */
-  def pinVectors(vectors: DataFrame): PinnedVecs = {
+    * configured parallelism. `numPartitions` overrides the derived count
+    * (the specs use it to spread a small table). */
+  def pinVectors(vectors: DataFrame, numPartitions: Option[Int] = None): PinnedVecs = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val ds = vectors.select(col("id").cast("long"), col("vec"))
       .as[(Long, Array[Float])]
-    val rows = ds.count()
-    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val part = new org.apache.spark.HashPartitioner(
-      sizedPartitions(rows, confParts))
+    val part = new org.apache.spark.HashPartitioner(numPartitions.getOrElse(
+      sizedPartitions(ds.count(), spark.conf.get("spark.sql.shuffle.partitions").toInt)))
     val vecRdd = ds.rdd
       .partitionBy(part)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -130,10 +138,10 @@ object BspBeamSearch {
     * over one frozen snapshot; re-pinning per call re-shuffles the n-row
     * vector table every batch). The caller owns release(). */
   final class Pinned private[BspBeamSearch] (
-      private[graph] val adjRdd: org.apache.spark.rdd.RDD[(Long, Array[Long])],
+      private[graft] val adjRdd: org.apache.spark.rdd.RDD[(Long, Array[Long])],
       private[graft] val vecs: PinnedVecs) {
-    private[graph] def vecRdd = vecs.rdd
-    private[graph] def part = vecs.part
+    private[graft] def vecRdd = vecs.rdd
+    private[graft] def part = vecs.part
     def release(): Unit = {
       adjRdd.unpersist(blocking = false)
       vecs.release()
@@ -149,8 +157,8 @@ object BspBeamSearch {
     * [[Pinned]]). Materializes both eagerly so the first search pays no
     * hidden pin cost. The DataFrames passed to search() alongside this
     * handle MUST be the same tables. */
-  def pin(adj: DataFrame, vectors: DataFrame): Pinned =
-    pinAdjOnto(adj, pinVectors(vectors))
+  def pin(adj: DataFrame, vectors: DataFrame, numPartitions: Option[Int] = None): Pinned =
+    pinAdjOnto(adj, pinVectors(vectors, numPartitions))
 
   /** Pin an adjacency onto an existing vector pin's layout; eager.
     * Release via [[Pinned.releaseAdj]] when `vp` outlives this pin
@@ -293,30 +301,53 @@ object BspBeamSearch {
         (qid, pool)
       }
       .partitionBy(qPart)
-    // Rolling checkpoint: round N's state is the only live reader of round
-    // N-1's blocks, so once N materializes N-1 is freed — heap holds ONE
-    // round of state, not O(rounds). localCheckpoint (not PlanUtil.cut:
-    // re-wrapping would erase the partitioner that keeps the merge narrow)
-    // truncates lineage so an unpersisted prior round is never a
-    // recompute dependency. The final round's release goes to `scope`
-    // (the caller frees it after consuming the returned DF) or is leaked
-    // session-lifetime when no scope is given.
-    def materialize(s: org.apache.spark.rdd.RDD[(Long, Array[Entry])]): Unit = {
-      s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      s.localCheckpoint()
-      s.count()
-    }
-    materialize(state)
-    var releasePrev: () => Unit = { val s0 = state; () => s0.unpersist(blocking = false) }
+    // Rounds run in batches of up to RoundsPerJob, ONE job per batch: the
+    // batch's rounds stay one lazy lineage, each round's state persisted
+    // (the next round reads it twice: frontier and merge), and only the
+    // batch's last state is checkpointed and counted; the initial state is
+    // persisted too and materialized by the first batch. localCheckpoint
+    // (not PlanUtil.cut: re-wrapping would erase the partitioner that
+    // keeps the merge narrow) truncates lineage, so the batch's earlier
+    // states and the previous batch's last one are then freed — heap holds
+    // one batch of state, not O(rounds). Each state is released exactly
+    // once. The final state's release goes to `scope` (the caller frees it
+    // after consuming the returned DF) or is leaked session-lifetime when
+    // no scope is given.
+    state.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    var round = 0
-    var done = false
-    while (!done && round < maxRounds) {
-      // frontier: best `frontierWidth` unexpanded entries per query —
-      // skinny (node, qid) id pairs routed to the pinned adjacency layout
+    // One round of one pool, shared by both round shapes below: its
+    // frontier is the best `frontierWidth` unexpanded entries, and
+    // `advance` marks exactly those expanded and merges the scored
+    // neighbors in. `unexpanded` counts the pools left with an unexpanded
+    // entry; task retries can only over-count it, and the test is `== 0`,
+    // so the convergence check stays exact.
+    val fw = frontierWidth
+    val exSelf = excludeSelf
+    val mtr = metric
+    def frontierOf(pool: Array[Entry]): Iterator[Long] =
+      pool.iterator.filter(!_.expanded).take(fw).map(_.id)
+    def advance(pool: Array[Entry], cands: Iterator[(Long, Double)],
+                unexpanded: org.apache.spark.util.LongAccumulator): Array[Entry] = {
+      var budget = fw
+      val marked = pool.map { e =>
+        if (!e.expanded && budget > 0) { budget -= 1; e.copy(expanded = true) }
+        else e
+      }
+      val merged = mergePool(marked, cands)
+      if (merged.exists(!_.expanded)) unexpanded.add(1)
+      merged
+    }
+
+    // A round over the distributed layout: frontier ids go to their
+    // adjacency, neighbor ids to their vectors, and scored candidates to
+    // their query's pool (three id-only exchanges).
+    def distributedRound(state: org.apache.spark.rdd.RDD[(Long, Array[Entry])],
+                         unexpanded: org.apache.spark.util.LongAccumulator)
+        : org.apache.spark.rdd.RDD[(Long, Array[Entry])] = {
+      // frontier: skinny (node, qid) id pairs routed to the pinned
+      // adjacency layout
       val frontierRdd = state.flatMap { case (qid, pool) =>
-        pool.iterator.filter(!_.expanded).take(frontierWidth)
-          .map(e => (e.id, qid))
+        frontierOf(pool).map(id => (id, qid))
       }.partitionBy(part)
 
       // candidate gathering: narrow join with the pinned adjacency →
@@ -326,8 +357,6 @@ object BspBeamSearch {
       // VECTOR rows — with id-only rows it collapses to this) → narrow
       // zip with the pinned vector partition, scoring against the
       // broadcast query vector where the candidate vector lives
-      val exSelf = excludeSelf
-      val mtr = metric
       val scoredRdd = frontierRdd.join(adjRdd)
         .flatMap { case (_, (qid, nbrs)) =>
           nbrs.iterator.filter(n => !exSelf || n != qid).map(n => (n, qid))
@@ -348,41 +377,78 @@ object BspBeamSearch {
           }
         }
 
-      // per-query merge: mark this round's frontier expanded, fold in cands.
-      // Both cogroup sides sit on qPart (state never left it; cands pay
-      // the round's ONE qid-keyed shuffle), so the merge itself is narrow.
-      // Merge order over cands is irrelevant: per-partition dedup already
-      // made (qid, nbr) globally unique (all copies co-locate under the
-      // nbr key), and pool entries take precedence by insertion order.
-      // Convergence is observed via an accumulator populated by the SAME
-      // job that materializes the round — no second driver action per
-      // round. Task retries can only over-count, and the test is `== 0`,
-      // so the check stays exact.
-      val fw = frontierWidth
-      val unexpandedAcc = spark.sparkContext.longAccumulator(s"bsp_unexpanded_r$round")
+      // per-query merge: both cogroup sides sit on qPart (state never
+      // left it; cands pay the round's ONE qid-keyed shuffle), so the
+      // merge itself is narrow. Merge order over cands is irrelevant:
+      // per-partition dedup already made (qid, nbr) globally unique (all
+      // copies co-locate under the nbr key), and pool entries take
+      // precedence by insertion order.
       val candsByQ = scoredRdd
         .map { case (qid, nbr, d) => (qid, (nbr, d)) }
         .partitionBy(qPart)
-      val next = state.cogroup(candsByQ, qPart)
+      state.cogroup(candsByQ, qPart)
         .flatMapValues { case (sts, cs) =>
-          sts.iterator.map { pool =>
-            var budget = fw
-            val marked = pool.map { e =>
-              if (!e.expanded && budget > 0) { budget -= 1; e.copy(expanded = true) }
-              else e
-            }
-            val merged = mergePool(marked, cs.iterator)
-            if (merged.exists(!_.expanded)) unexpandedAcc.add(1)
-            merged
-          }
+          sts.iterator.map(advance(_, cs.iterator, unexpanded))
         }
-      materialize(next) // then free round N-1
-      state = next
-      releasePrev()
-      releasePrev = { val sN = next; () => sN.unpersist(blocking = false) }
+    }
 
-      done = unexpandedAcc.value == 0
-      round += 1
+    // The same round when the pin is ONE partition (so is the state):
+    // the adjacency, the vectors and every pool share the task, so the
+    // round runs in it with no exchange, and a job's rounds are one
+    // stage. Per pool it gathers the same (nbr, qid)-deduplicated
+    // candidates with the same scores, so the pools are those of the
+    // distributed round.
+    def localRound(state: org.apache.spark.rdd.RDD[(Long, Array[Entry])],
+                   unexpanded: org.apache.spark.util.LongAccumulator)
+        : org.apache.spark.rdd.RDD[(Long, Array[Entry])] =
+      state.zipPartitions(adjRdd, vecRdd, preservesPartitioning = true) { (sit, ait, vit) =>
+        val qv = qvBc.value
+        val nbrsOf = new java.util.HashMap[Long, Array[Long]]()
+        ait.foreach { case (src, nbrs) =>
+          val prev = nbrsOf.get(src)
+          nbrsOf.put(src, if (prev == null) nbrs else prev ++ nbrs)
+        }
+        val vecs = new java.util.HashMap[Long, Array[Float]]()
+        vit.foreach { case (id, v) => vecs.put(id, v) }
+        sit.map { case (qid, pool) =>
+          val q = qv.get(qid)
+          val seen = new java.util.HashSet[Long]()
+          val cands = frontierOf(pool).flatMap { node =>
+            val nbrs = nbrsOf.get(node)
+            if (nbrs == null) Iterator.empty else nbrs.iterator
+          }.filter(n => (!exSelf || n != qid) && seen.add(n)).flatMap { n =>
+            val v = vecs.get(n)
+            if (v == null) Iterator.empty else Iterator.single((n, mtr.dist(q, v)))
+          }
+          (qid, advance(pool, cands, unexpanded))
+        }
+      }
+
+    def roundOf(state: org.apache.spark.rdd.RDD[(Long, Array[Entry])],
+                unexpanded: org.apache.spark.util.LongAccumulator)
+        : org.apache.spark.rdd.RDD[(Long, Array[Entry])] =
+      (if (part.numPartitions == 1) localRound(state, unexpanded)
+       else distributedRound(state, unexpanded))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+    // A round after convergence has an empty frontier and leaves every
+    // (sorted, deduplicated) pool as it is, so the rounds a batch runs
+    // past convergence do not change the final state; the batch sizes
+    // stop at maxRounds exactly.
+    var round = 0
+    var done = false
+    while (!done && round < maxRounds) {
+      val n = math.min(RoundsPerJob, maxRounds - round)
+      val accs = (0 until n).map(i =>
+        spark.sparkContext.longAccumulator(s"bsp_unexpanded_r${round + i}"))
+      val states = accs.scanLeft(state)(roundOf).tail
+      states.last.localCheckpoint()
+      states.last.count()
+      (state +: states.init).foreach(_.unpersist(blocking = false))
+      state = states.last
+      val converged = accs.indexWhere(_.value == 0)
+      done = converged >= 0
+      round += (if (done) converged + 1 else n)
     }
     // the final round's state is materialized (cut is eager), so the
     // pin (the halves owned by this call) and the query broadcast are
@@ -392,7 +458,7 @@ object BspBeamSearch {
       if (ownVecs) thePin.vecs.release()
     }
     qvBc.destroy()
-    if (scope ne null) scope.add(releasePrev)
+    if (scope ne null) { val last = state; scope.add(() => last.unpersist(blocking = false)) }
 
     spark.createDataset(state.map { case (qid, pool) =>
       val top = (if (excludeSelf) pool.filter(_.id != qid) else pool).take(k)

@@ -182,7 +182,11 @@ object QueriesGraph {
   }
 
   private def roargraphRecall(s: SparkSession, dir: String): DataFrame = {
-    val res = roargraphSearchResults(s, dir).cache()
+    // the recall and the distance-error sides both read the 20 result
+    // rows: search once per call and hold them as a local table (a
+    // `.cache()` would pin one cache entry per call for the session)
+    val found = roargraphSearchResults(s, dir)
+    val res = s.createDataFrame(found.collectAsList(), found.schema)
     val gtKnn = QueriesAnn.exactKnn(s, dir)
     val gtIds = gtKnn
       .select(col("query_id"), transform(col("knn"), _("id")).as("ids"))

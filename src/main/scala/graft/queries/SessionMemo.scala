@@ -25,11 +25,12 @@ import org.apache.spark.sql.SparkSession
   * acquire other memo locks in one direction — today every factory calls
   * at most "leaf" memos (Tables reads, its own family's sub-artifacts)
   * and the two concurrent families touch DISJOINT memo instances. Within
-  * the graph family, `QueriesGraph.materializeShared` also runs three
-  * factories at once (`memMemo`, `bipartiteMemo`, `distMemo`); each reads
-  * only Tables, and `distMemo` keeps its search view in the same entry
-  * rather than in a nested memo, so none of them takes a second memo
-  * lock. `Tables`' memo is a leaf: its factory only reads parquet and
+  * each family, `materializeShared` also runs three factories at once:
+  * `QueriesGraph`'s `memMemo`, `bipartiteMemo` and `distMemo`, and
+  * `QueriesAnn`'s `pqMemo`, `gtMemo` and `ivfListsMemo`. Each of the six
+  * reads only Tables, and `distMemo` keeps its search view in the same
+  * entry rather than in a nested memo, so none of them takes a second
+  * memo lock. `Tables`' memo is a leaf: its factory only reads parquet and
   * takes no other memo lock, so any factory may call `Tables`. A new
   * cross-family memo reference (e.g. a graph memo whose factory reads a
   * QueriesAnn memo while QueriesAnn's factory reads a graph memo) would

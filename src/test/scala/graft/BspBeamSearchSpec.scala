@@ -7,7 +7,8 @@ import graft.ops.graph.{BspBeamSearch, GraphIO}
 import org.apache.spark.sql.functions._
 
 /** The BSP (no-broadcast) search must reach the same recall regime as the
-  * broadcast kernel over the same RoarGraph index. */
+  * broadcast kernel over the same RoarGraph index, and the distributed
+  * build's batched searches must equal their per-step forms (`BspOracle`). */
 class BspBeamSearchSpec extends SparkSpec {
 
   test("BSP frontier search recall@10 >= 0.9 on the sf0.001 RoarGraph") {
@@ -35,5 +36,79 @@ class BspBeamSearchSpec extends SparkSpec {
       .collect().head.getAs[Double]("recall_at_k")
     assert(math.abs(recall - bcRecall) <= 0.1,
       s"BSP $recall vs broadcast $bcRecall")
+  }
+
+  test("rounds batched per job == the per-round loop, ids and dist bits") {
+    implicit val s = spark
+    import spark.implicits._
+    val emb = Tables.vectors(spark, sf0001)
+    val queriesDf = emb.filter(col("id") < 100)
+    val baseDf = emb.filter(col("id") >= 100)
+    val index = RoarGraphBuilder.build(baseDf, queriesDf,
+      BuildParams(mSq = 40, mPjbp = 12, lPjpq = 60, metric = Metric.L2))
+    val adjDf = GraphIO.toDF(index)
+    val ep = index.ids(index.ep)
+    val seeds = BspBeamSearch.pickSeeds(adjDf, 3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Array[Long], Array[Double])].collect().sortBy(_._1).toSeq
+        .map { case (q, ids, ds) =>
+          (q, ids.toSeq, ds.toSeq.map(java.lang.Double.doubleToLongBits)) }
+    // (frontierWidth, maxRounds, excludeSelf, extraSeeds): converging runs,
+    // and maxRounds falling inside the first and the second batch. The
+    // graph's pin is one partition (its rounds run in one task); a
+    // 3-partition pin runs the exchanging rounds.
+    val spreadPin = BspBeamSearch.pin(adjDf, baseDf, Some(3))
+    Seq((4, 64, false, Nil), (1, 3, false, Nil), (1, 11, true, Nil),
+        (2, 64, true, seeds)).foreach { case (fw, mr, ex, xs) =>
+      val queries = if (ex) baseDf.filter(col("id") < 160) else queriesDf
+      var oracle: Seq[(Long, Seq[Long], Seq[Long])] = Nil
+      val (jobsOracle, _) = jobsAndShuffle {
+        oracle = rows(BspOracle.search(adjDf, baseDf, queries, k = 10, l = 40,
+          ep, Metric.L2, frontierWidth = fw, maxRounds = mr, excludeSelf = ex,
+          extraSeeds = xs))
+      }
+      assert(oracle.nonEmpty)
+      Seq(None -> "one partition", Some(spreadPin) -> "3 partitions").foreach {
+        case (pin, layout) =>
+          var batched: Seq[(Long, Seq[Long], Seq[Long])] = Nil
+          val (jobsBatched, _) = jobsAndShuffle {
+            batched = rows(BspBeamSearch.search(adjDf, baseDf, queries, k = 10,
+              l = 40, ep, Metric.L2, frontierWidth = fw, maxRounds = mr,
+              excludeSelf = ex, extraSeeds = xs, pinned = pin))
+          }
+          assert(batched == oracle, s"$layout, fw=$fw maxRounds=$mr")
+          if (mr > 8) assert(jobsBatched < jobsOracle,
+            s"$layout, fw=$fw maxRounds=$mr: $jobsBatched jobs batched vs " +
+              s"$jobsOracle per round")
+      }
+    }
+    spreadPin.release()
+  }
+
+  test("block-local BFS reaches what the hop-by-hop BFS reaches") {
+    import spark.implicits._
+    def h(i: Long): Long = (i * 0x9E3779B97F4A7C15L) >>> 40
+    // a 60-node chain from ep, a random region hanging off it, dangling
+    // neighbor ids with no adjacency row, and an island with no in-edge
+    val chain = (0L until 60L).map(i => (1000L + i, Seq(1000L + i + 1)))
+    val region = (60L until 300L).map(i =>
+      (1000L + i, (0 until 3).map(j => 1000L + 30 + h(i * 7 + j) % 270) :+ (9000L + i % 5)))
+    val island = (300L until 400L).map(i => (1000L + i, Seq(1000L + 300 + (i + 1) % 100)))
+    val adj = (chain ++ region ++ island ++ Seq((1020L, Seq(1100L))))
+      .groupBy(_._1).toSeq.map { case (src, ls) => (src, ls.flatMap(_._2).distinct) }
+      .toDF("src", "nbrs")
+    def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().toSet
+    val oracle = ids(BspOracle.bfsReached(adj, 1000L, 3))
+    assert(oracle.size > 200 && !oracle.contains(1350L) && oracle.contains(9003L))
+    Seq(Some(1), Some(3), Some(7), None).foreach { parts =>
+      val scope = new graft.ops.graph.CpScope
+      val got = ids(graft.build.DistRoarGraphBuilder.bfsReached(adj, 1000L, scope, parts))
+      scope.releaseAll()
+      assert(got == oracle, s"partitions $parts")
+    }
+    val scope = new graft.ops.graph.CpScope
+    assert(ids(graft.build.DistRoarGraphBuilder.bfsReached(adj, 7777L, scope, Some(3))) ==
+      Set(7777L))
+    scope.releaseAll()
   }
 }

@@ -23,6 +23,32 @@ object IvfOracle {
   def probes(queries: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
     probesLocal(queries, AnnSearch.collectCentroids(centroids), nprobe)
 
+  /** The relational k-means trainer: seeds = the k smallest ids' vectors
+    * (centroid ids 0..k-1); per iteration the one centroid kernel assigns
+    * each row and one element-wise double mean aggregate per centroid_id
+    * updates it, cast to float; an empty cluster keeps its previous
+    * centroid. Returns (centroid_id, vec). */
+  def kMeans(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    val v = vectors.select(col("id").cast("long"), col("vec")).cache()
+    var centroids = v.orderBy("id").limit(k).orderBy("id").collect()
+      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Float](1).toArray) }
+    (0 until iters).foreach { _ =>
+      val cdf = centroids.toSeq.toDF("centroid_id", "vec")
+      val assigned = AnnSearch.assignToCentroids(v, cdf)
+        .groupBy("centroid_id")
+        .agg(graft.functions.VecMeanAggregator.meanVec(
+          VectorFunctions.toDouble(col("vec"))).as("m"))
+        .select(col("centroid_id").cast("int"),
+          transform(col("m"), _.cast("float")).as("vec"))
+        .as[(Int, Array[Float])].collect().toMap
+      centroids = centroids.map { case (cid, old) => (cid, assigned.getOrElse(cid, old)) }
+    }
+    v.unpersist()
+    centroids.toSeq.toDF("centroid_id", "vec")
+  }
+
   /** Per-row array of struct(cdist, centroid_id) vs every centroid — the
     * literal-fold scoring block shared by argmin assignment and top-nprobe
     * probing. Centroid sets are driver-small by construction (they are

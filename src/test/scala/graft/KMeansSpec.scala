@@ -44,4 +44,26 @@ class KMeansSpec extends SparkSpec {
     assert(rTrained >= rFixed,
       s"trained IVF recall $rTrained < fixed-centroid recall $rFixed")
   }
+
+  test("k-means kernel == relational Lloyd update, bits, on 1 and 3 partitions") {
+    val rows = vecRows(Tables.vectors(spark, sf0001))
+    // a NaN row and a duplicated seed (its cluster stays empty)
+    val (dupId, nanId) = (rows(1)._1, rows(300)._1)
+    val hostile = rows.map { case (id, v) =>
+      if (id == dupId) (id, rows(0)._2)
+      else if (id == nanId) (id, v.updated(3, Float.NaN))
+      else (id, v)
+    }
+    def bits(df: org.apache.spark.sql.DataFrame) = vecRows(
+        df.select(col("centroid_id").as("id"), col("vec")))
+      .map { case (c, v) => (c, v.toSeq.map(java.lang.Float.floatToIntBits)) }.toSeq
+    for ((df, what) <- Seq(spread(hostile, 1)(_ => 0) -> "1 partition",
+           spread(hostile, 3)(_ % 3) -> "3 partitions");
+         iters <- Seq(0, 1, 3)) {
+      val ker = bits(AnnSearch.kMeans(df, k = 8, iters = iters))
+      val rel = bits(IvfOracle.kMeans(df, k = 8, iters = iters))
+      assert(ker.length == 8, what)
+      assert(ker == rel, s"$what, $iters iters: kernel and relational centroids differ")
+    }
+  }
 }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Relational reference forms of the PQ kernels in `graft.ops.Quantize`.
   * They mirror the DuckDB oracle SQL step by step, so the specs pin each
-  * kernel to them: `pqEncodeKernel` must give [[pqEncode]]'s codes,
+  * kernel to them: `pqTrain` must give [[pqTrain]]'s codebook bits,
+  * `opqPermutation` must rank by [[dimVariances]], `pqEncodeKernel` must
+  * give [[pqEncode]]'s codes,
   * `adcTopK` the ranking of exact kNN over [[pqReconstruct]], and
   * `ivfAdcTopKKernel` [[ivfAdcTopK]]'s rankings, doubles included. The specs compare exploded
   * ranks: the kernel also emits an empty `knn` row for a query with no
@@ -18,7 +20,7 @@ object PqOracle {
     * the codebook table + a partial-aggregating min per (subspace, id). */
   def pqEncode(vectors: DataFrame, codebooks: DataFrame, m: Int): DataFrame = {
     val subDim = vectors.select(size(col("vec"))).head().getInt(0) / m
-    Quantize.subspaceRows(vectors, m, subDim)
+    subspaceRows(vectors, m, subDim)
       .join(broadcast(codebooks.select(col("subspace"),
         col("centroid_id"), col("vec").as("cvec"))), "subspace")
       .withColumn("cdist",
@@ -32,6 +34,65 @@ object PqOracle {
         .as("cs"))
       .select(col("id"), transform(col("cs"), _("code")).as("codes"))
   }
+
+  /** (subspace, id, subvector) rows — one row per (input row, subspace),
+    * from a single posexplode over the m slices. */
+  def subspaceRows(vectors: DataFrame, m: Int, subDim: Int): DataFrame =
+    vectors.select(col("id").cast("long"),
+        posexplode(array((0 until m).map(s =>
+          slice(col("vec"), s * subDim + 1, subDim)): _*))
+          .as(Seq("subspace", "vec")))
+      .select(col("subspace"), col("id"), col("vec"))
+
+  /** The relational PQ trainer: seeds = the k smallest ids' subvectors;
+    * per Lloyd iteration a broadcast join of the codebook, a partial-
+    * aggregating `min(struct(cdist, centroid_id))` per (subspace, id) and
+    * one element-wise double mean per (subspace, centroid_id), cast to
+    * float; an empty cluster keeps its previous centroid. Returns
+    * (subspace, centroid_id, vec). */
+  def pqTrain(vectors: DataFrame, m: Int, k: Int, iters: Int): DataFrame = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    val seedRows = vectors.select(col("id").cast("long"), col("vec"))
+      .orderBy("id").limit(k).as[(Long, Array[Float])].collect()
+    val subDim = seedRows.head._2.length / m
+    val sv = subspaceRows(vectors, m, subDim).cache()
+    var cents: Map[(Int, Int), Array[Float]] = seedRows.zipWithIndex.flatMap {
+      case ((_, v), c) =>
+        (0 until m).map(s => ((s, c), v.slice(s * subDim, (s + 1) * subDim)))
+    }.toMap
+    (0 until iters).foreach { _ =>
+      val cdf = cents.toSeq.map { case ((s, c), v) => (s, c, v) }
+        .toDF("subspace", "centroid_id", "cvec")
+      val updated = sv.join(broadcast(cdf), "subspace")
+        .withColumn("cdist",
+          graft.functions.VectorFunctions.l2Sq(col("vec"), col("cvec")))
+        .groupBy("subspace", "id")
+        .agg(min(struct(col("cdist"), col("centroid_id"))).as("best"),
+          first(col("vec")).as("vec"))
+        .select(col("subspace"), col("best")("centroid_id").as("centroid_id"),
+          col("vec"))
+        .groupBy("subspace", "centroid_id")
+        .agg(graft.functions.VecMeanAggregator.meanVec(
+          graft.functions.VectorFunctions.toDouble(col("vec"))).as("mv"))
+        .select(col("subspace").cast("int"), col("centroid_id").cast("int"),
+          transform(col("mv"), _.cast("float")).as("vec"))
+        .as[(Int, Int, Array[Float])].collect()
+        .map { case (s, c, v) => ((s, c), v) }.toMap
+      cents = cents.map { case (key, old) => (key, updated.getOrElse(key, old)) }
+    }
+    sv.unpersist()
+    cents.toSeq.map { case ((s, c), v) => (s, c, v) }
+      .toDF("subspace", "centroid_id", "vec")
+  }
+
+  /** `round(variance(x), 6)` per position of the exploded `vec` column
+    * (the ranking key of `Quantize.opqPermutation`), by position. */
+  def dimVariances(train: DataFrame): Array[Double] =
+    train.select(posexplode(col("vec")).as(Seq("pos", "x")))
+      .groupBy("pos")
+      .agg(round(variance(col("x").cast("double")), 6).as("v"))
+      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).map(_._2)
 
   /** ADC top-r restricted to each query's probed inverted lists, as a
     * pure column expression: per candidate row, m codebook-literal lookups
