@@ -85,8 +85,7 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   * fixpoint between exchanges and chains up to eight supersteps per job,
   * so its jobs scale with cross-partition hops / 8, not with depth, and
   * a graph that fits one partition is reached in one job; attach rounds
-  * are bounded by RepairMaxRounds per pass and RepairMaxPasses passes,
-  * and each beam search runs up to eight rounds per job.
+  * are bounded by RepairMaxRounds per pass and RepairMaxPasses passes.
   * Nodes with zero in-degree — which occlusion pruning and caps
   * routinely produce, and which NO search-time seeding can find — are
   * exactly what this pass fixes; without it the distributed tier
@@ -290,7 +289,7 @@ object DistRoarGraphBuilder {
     // so slicing them by id hash and searching slice-by-slice is EXACT —
     // and it divides the per-round shuffle volume (|frontier|·deg·vecBytes,
     // the build's peak disk demand) by the batch count. BspBeamSearch
-    // materializes its rounds eagerly, so the slices run sequentially:
+    // materializes each round eagerly, so the slices run sequentially:
     // peak spill is one slice's rounds, not the whole corpus's. This is
     // the knob that bounds scratch-disk per executor at fixed cluster
     // size; batched == unbatched is spec-gated (DistRoarGraphSpec).
@@ -490,47 +489,41 @@ object DistRoarGraphBuilder {
 
   /** Distributed BFS from `ep` over `adj` — returns the reached id set
     * (`ep` included) as a DataFrame. Block-centric: the adjacency is
-    * hash-partitioned and pinned, and each superstep takes every
-    * partition's newly arrived ids to a LOCAL fixpoint through the
-    * partition's own adjacency before one exchange routes the neighbors
-    * that live in other partitions to their owners. So supersteps scale
-    * with the cross-partition hops of the graph, not with its depth, and
-    * a graph that fits one partition is reached in one superstep. The
-    * first job runs one superstep; later jobs chain up to
-    * [[BfsStepsPerJob]] of them in one lazy lineage, each step persisted
-    * and only the job's last one checkpointed; a step after the last
-    * exchange changes nothing, so the reached set does not depend on the
-    * batching. `numPartitions` replaces the size-derived partition count
-    * (repair passes its vector pin's; the specs spread a small graph). */
-  private[graft] def bfsReached(adj: DataFrame, ep: Long,
-                                scope: graft.ops.graph.CpScope,
-                                numPartitions: Option[Int] = None): DataFrame = {
+    * hash-partitioned into `numPartitions` and pinned, and each superstep
+    * takes every partition's newly arrived ids to a LOCAL fixpoint
+    * through the partition's own adjacency before one exchange routes the
+    * neighbors that live in other partitions to their owners. So
+    * supersteps scale with the cross-partition hops of the graph, not
+    * with its depth, and a graph that fits one partition is reached in
+    * one superstep. The first job runs one superstep; later jobs chain up
+    * to [[BfsStepsPerJob]] of them in one lazy lineage, each step
+    * persisted (the next reads it twice: its sent ids and its reached
+    * set) as one pair of primitive id arrays per partition, 8 bytes per
+    * reached id, and only the job's last step checkpointed. A step after
+    * the last exchange changes nothing, so the reached set does not
+    * depend on the batching. */
+  private[graft] def bfsReached(adj: DataFrame, ep: Long, numPartitions: Int,
+                                scope: graft.ops.graph.CpScope): DataFrame = {
     val spark = adj.sparkSession
     import spark.implicits._
-    type Step = org.apache.spark.rdd.RDD[(Long, Boolean)]
+    // per partition: (the reached ids it owns, the ids it sends on)
+    type Step = org.apache.spark.rdd.RDD[(Array[Long], Array[Long])]
 
-    val adjDs = adj
+    val part = new org.apache.spark.HashPartitioner(numPartitions)
+    val adjRdd = adj
       .select(col("src").cast("long"), col("nbrs").cast("array<long>"))
-      .as[(Long, Array[Long])]
-    // size-derived partition count capped at the conf (the rule shared
-    // with BspBeamSearch.pinVectors): RDD stages get no AQE coalescing
-    val part = new org.apache.spark.HashPartitioner(numPartitions.getOrElse(
-      BspBeamSearch.sizedPartitions(adjDs.count(),
-        spark.conf.get("spark.sql.shuffle.partitions").toInt)))
-    val adjRdd = adjDs.rdd
+      .as[(Long, Array[Long])].rdd
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // A step's partition p holds (id, true) for every reached id that p
-    // owns and (id, false) for each id p sends to another partition. The
-    // next step routes the sent ids to their owners, and each owner
-    // expands the ones it has not reached yet to its local fixpoint.
+    // The sent ids of the previous step go to their owners, and each
+    // owner expands the ones it has not reached yet to its local fixpoint.
     def superstep(prev: Step, sent: org.apache.spark.util.LongAccumulator): Step = {
-      val inbox = prev.filter(!_._2).map(e => (e._1, ())).partitionBy(part)
+      val inbox = prev.flatMap(_._2.iterator.map(id => (id, ()))).partitionBy(part)
       adjRdd.zipPartitions(prev, inbox) { (ait, pit, iit) =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val reached = new java.util.HashSet[Long]()
-        pit.foreach { case (id, own) => if (own) reached.add(id) }
+        pit.foreach(_._1.foreach(id => reached.add(id)))
         val queue = new java.util.ArrayDeque[Long]()
         iit.foreach { case (id, _) => if (reached.add(id)) queue.add(id) }
         val out = new java.util.HashSet[Long]()
@@ -549,13 +542,12 @@ object DistRoarGraphBuilder {
           }
           sent.add(out.size)
         }
-        reached.iterator.asScala.map(id => (id, true)) ++
-          out.iterator.asScala.map(id => (id, false))
+        Iterator.single((reached.asScala.toArray, out.asScala.toArray))
       }.persist(StorageLevel.MEMORY_AND_DISK)
     }
 
     var state: Step = spark.sparkContext
-      .parallelize(Seq((ep, false)), part.numPartitions)
+      .parallelize(Seq((Array.empty[Long], Array(ep))), numPartitions)
     var steps = 0
     var done = false
     while (!done && steps < BfsMaxSteps) {
@@ -574,7 +566,7 @@ object DistRoarGraphBuilder {
     adjRdd.unpersist(blocking = false)
     val fin = state
     scope.add(() => fin.unpersist(blocking = false)) // released post-consumption
-    spark.createDataset(fin.filter(_._2).map(_._1)).toDF("id")
+    spark.createDataset(fin.flatMap(_._1.iterator)).toDF("id")
   }
 
   /** Distributed reachability repair — see the class doc. Returns the
@@ -611,8 +603,8 @@ object DistRoarGraphBuilder {
       // a node whose only in-path ran through the trimmed edge)
       val tBfs0 = System.nanoTime()
       val bfsScope = new graft.ops.graph.CpScope
-      val reached = bfsReached(adjCur.select("src", "nbrs"), ep, bfsScope,
-        Some(repairVecs.part.numPartitions))
+      val reached = bfsReached(adjCur.select("src", "nbrs"), ep,
+        repairVecs.part.numPartitions, bfsScope)
       var (unreached, relUnreached) = graft.ops.graph.PlanUtil.cutDFReleasable(
         baseN.select(col("id"), col("vec"))
           .join(reached, Seq("id"), "left_anti"))
@@ -727,8 +719,8 @@ object DistRoarGraphBuilder {
     var staleCount = !done && unverifiedTrim
     while ((remaining > 0 || staleCount) && fpass <= RepairForcePasses) {
       val vScope = new graft.ops.graph.CpScope
-      val reached = bfsReached(adjCur.select("src", "nbrs"), ep, vScope,
-        Some(repairVecs.part.numPartitions))
+      val reached = bfsReached(adjCur.select("src", "nbrs"), ep,
+        repairVecs.part.numPartitions, vScope)
       val (orphans, relOrphans) = graft.ops.graph.PlanUtil.cutDFReleasable(
         baseN.select(col("id"), col("vec"))
           .join(reached, Seq("id"), "left_anti"))

@@ -221,33 +221,20 @@ object AnnSearch {
   }
 
   /** One Lloyd update in ONE job: `fold` adds each row of a partition to
-    * the partition's [[CellSums]], merged on the driver in partition
-    * order ([[inPartitionOrder]]). No join and no shuffle. */
+    * the partition's [[CellSums]], and the driver merges the partials in
+    * partition order (`runJob` returns them so), so a merge of doubles
+    * does not depend on which task finished first. No join and no
+    * shuffle. */
   private[ops] def lloydSums(rows: org.apache.spark.rdd.RDD[(Long, Array[Float])],
                              cells: Int, width: Int)(
       fold: (Iterator[Array[Float]], CellSums) => Unit): CellSums = {
     val total = new CellSums(cells, width)
-    inPartitionOrder(rows) { it =>
+    rows.sparkContext.runJob(rows, (it: Iterator[(Long, Array[Float])]) => {
       val acc = new CellSums(cells, width)
       fold(it.map(_._2), acc)
       acc
-    }(total.merge)
+    }).foreach(total.merge)
     total
-  }
-
-  /** Reduce each partition of `rdd` with `fold` in ONE job and hand the
-    * results to `merge` in partition order as their tasks finish (a late
-    * partition waits for the ones before it), so a driver-side merge of
-    * doubles does not depend on which task finished first. */
-  private[ops] def inPartitionOrder[T, R: scala.reflect.ClassTag](
-      rdd: org.apache.spark.rdd.RDD[T])(
-      fold: Iterator[T] => R)(merge: R => Unit): Unit = {
-    val pending = new java.util.HashMap[Int, R]()
-    var next = 0
-    rdd.sparkContext.runJob(rdd, fold, (part: Int, r: R) => {
-      pending.put(part, r)
-      while (pending.containsKey(next)) { merge(pending.remove(next)); next += 1 }
-    })
   }
 
   /** The inverted-lists table [[ivfTopKOnLists]] scans: each base row

@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
   * SQ8 is relational and deterministic (bounds are a per-dimension
   * aggregate, the round trip one column pass); the PQ kernels below run
   * over [[PqCodebook]], and the specs pin them to relational oracles.
-  * The PQ trainer and the OPQ permutation's variances are driver-merged
-  * jobs: each partition reduces its rows to driver-small per-cell (or
-  * per-dimension) partials, and the driver merges them in partition
-  * order, one job per Lloyd iteration and one for the variances. */
+  * The PQ trainer runs each Lloyd iteration as one driver-merged job:
+  * each partition reduces its rows to driver-small per-cell partials,
+  * and the driver merges them in partition order. */
 object Quantize {
 
   /** Per-dimension (pos, lo, hi) bounds over a vector column. */
@@ -256,12 +255,14 @@ object Quantize {
     * odd — every subspace receives one dimension per deal, so per-subspace
     * energy is balanced. Returns newPos -> oldPos (driver-small: dim
     * ints, like the codebooks). Rounding makes the rank order robust to
-    * last-ulp aggregation differences between engines. The variances come
-    * from one job ([[dimVariances]]). */
+    * last-ulp aggregation differences between engines. */
   def opqPermutation(train: DataFrame, dim: Int, m: Int): Array[Int] = {
     val subDim = dim / m
-    val vars = dimVariances(train, dim)
-    val ranked = vars.indices.sortBy(pos => (-vars(pos), pos))
+    val vars = train.select(posexplode(col("vec")).as(Seq("pos", "x")))
+      .groupBy("pos")
+      .agg(round(variance(col("x").cast("double")), 6).as("v"))
+      .collect().map(r => (r.getInt(0), r.getDouble(1)))
+    val ranked = vars.sortBy { case (pos, v) => (-v, pos) }.map(_._1)
     val perm = Array.ofDim[Int](dim)
     ranked.zipWithIndex.foreach { case (oldPos, r) =>
       val deal = r / m
@@ -269,69 +270,6 @@ object Quantize {
       perm(s * subDim + deal) = oldPos
     }
     perm
-  }
-
-  /** round(sample variance, 6) of each of the `dim` positions of a
-    * `vec` column, in ONE job: each partition runs Spark's central-moment
-    * update (count, mean, M2) over its rows in order, and the driver
-    * merges the partitions into a zero buffer in partition order with
-    * Spark's merge formula — the arithmetic of `round(variance(x), 6)`
-    * over the exploded column, partial then final aggregate. A partition
-    * with no rows is skipped, as an aggregate skips a group absent from a
-    * map partition. Null rows are skipped; a row of another length fails
-    * by name, and so does a set of fewer than two rows (no sample
-    * variance). */
-  private[graft] def dimVariances(train: DataFrame, dim: Int): Array[Double] = {
-    import train.sparkSession.implicits._
-    val rows = train.select(col("vec")).as[Array[Float]].rdd
-    val n = new Array[Double](dim)
-    val avg = new Array[Double](dim)
-    val m2 = new Array[Double](dim)
-    def merge(p: Array[Array[Double]]): Unit = {
-      val Array(pn, pAvg, pM2) = p
-      if (dim > 0 && pn(0) > 0.0) {
-        var d = 0
-        while (d < dim) {
-          val n1 = n(d); val n2 = pn(d)
-          val newN = n1 + n2
-          val delta = pAvg(d) - avg(d)
-          val deltaN = if (newN == 0.0) 0.0 else delta / newN
-          avg(d) = avg(d) + deltaN * n2
-          m2(d) = m2(d) + pM2(d) + delta * deltaN * n1 * n2
-          n(d) = newN
-          d += 1
-        }
-      }
-    }
-    AnnSearch.inPartitionOrder(rows) { it =>
-      val (pn, pAvg, pM2) = (new Array[Double](dim), new Array[Double](dim),
-        new Array[Double](dim))
-      it.foreach { v =>
-        if (v != null) {
-          require(v.length == dim,
-            s"OPQ: vector dimension mismatch (${v.length} vs $dim)")
-          var d = 0
-          while (d < dim) {
-            val newN = pn(d) + 1.0
-            val delta = v(d).toDouble - pAvg(d)
-            val deltaN = delta / newN
-            pAvg(d) = pAvg(d) + deltaN
-            pM2(d) = pM2(d) + delta * (delta - deltaN)
-            pn(d) = newN
-            d += 1
-          }
-        }
-      }
-      Array(pn, pAvg, pM2)
-    }(merge)
-    require(dim == 0 || n(0) >= 2.0,
-      s"OPQ: a sample variance needs two training rows, got ${n(0).toLong}")
-    Array.tabulate(dim) { d =>
-      val v = m2(d) / (n(d) - 1.0)
-      if (v.isNaN || v.isInfinite) v
-      else java.math.BigDecimal.valueOf(v)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    }
   }
 
   /** Apply a newPos -> oldPos permutation (exact reorder, no float ops). */

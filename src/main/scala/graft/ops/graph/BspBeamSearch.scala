@@ -42,10 +42,11 @@ import org.apache.spark.sql.functions._
   * evicted past L may be revisited), which is the standard batch
   * approximation; the recall gate in BspBeamSearchSpec measures it.
   *
-  * Rounds run up to eight per Spark job, with one checkpoint per job,
-  * and on a one-partition pin a round runs inside the task with no
-  * exchange (see [[search]]); the one-job-per-round loop is the spec
-  * oracle `BspOracle`, equal in ids and dist bits.
+  * On a one-partition pin a round runs inside the task with no exchange,
+  * up to eight rounds per Spark job; over a multi-partition pin each
+  * round is one job (see [[search]]). The one-job-per-round loop over
+  * the exchanges is the spec oracle `BspOracle`, equal in ids and dist
+  * bits.
   */
 object BspBeamSearch {
 
@@ -64,15 +65,15 @@ object BspBeamSearch {
     * RepairQueryBatch). */
   private val MaxBroadcastQueries = 1000000
 
-  /** Search rounds run per Spark job (see `search`): one job, and one
-    * checkpoint, per this many rounds instead of per round. */
+  /** Search rounds run per Spark job on a one-partition pin (see
+    * `search`): one job, and one checkpoint, per this many rounds. */
   private val RoundsPerJob = 8
 
   /** An (id → vec) table pinned to one partitioner and persisted, for
     * repeated NARROW vector lookups without re-shuffling the n-row table
     * (used by search rounds and by the build's reverse-merge slices —
     * the round-12 measured fix; see object doc). Caller owns release(). */
-  final class PinnedVecs private[graph] (
+  final class PinnedVecs private[graft] (
       private[graft] val rdd: org.apache.spark.rdd.RDD[(Long, Array[Float])],
       private[graft] val part: org.apache.spark.HashPartitioner) {
     def release(): Unit = rdd.unpersist(blocking = false)
@@ -97,15 +98,14 @@ object BspBeamSearch {
     * the session's shuffle-partition conf — a conf-sized constant
     * scheduled conf empty tasks per round on small graphs (RDD stages get
     * no AQE coalescing), while the cap keeps cluster-scale pins at the
-    * configured parallelism. `numPartitions` overrides the derived count
-    * (the specs use it to spread a small table). */
-  def pinVectors(vectors: DataFrame, numPartitions: Option[Int] = None): PinnedVecs = {
+    * configured parallelism. */
+  def pinVectors(vectors: DataFrame): PinnedVecs = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val ds = vectors.select(col("id").cast("long"), col("vec"))
       .as[(Long, Array[Float])]
-    val part = new org.apache.spark.HashPartitioner(numPartitions.getOrElse(
-      sizedPartitions(ds.count(), spark.conf.get("spark.sql.shuffle.partitions").toInt)))
+    val part = new org.apache.spark.HashPartitioner(
+      sizedPartitions(ds.count(), spark.conf.get("spark.sql.shuffle.partitions").toInt))
     val vecRdd = ds.rdd
       .partitionBy(part)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -157,8 +157,8 @@ object BspBeamSearch {
     * [[Pinned]]). Materializes both eagerly so the first search pays no
     * hidden pin cost. The DataFrames passed to search() alongside this
     * handle MUST be the same tables. */
-  def pin(adj: DataFrame, vectors: DataFrame, numPartitions: Option[Int] = None): Pinned =
-    pinAdjOnto(adj, pinVectors(vectors, numPartitions))
+  def pin(adj: DataFrame, vectors: DataFrame): Pinned =
+    pinAdjOnto(adj, pinVectors(vectors))
 
   /** Pin an adjacency onto an existing vector pin's layout; eager.
     * Release via [[Pinned.releaseAdj]] when `vp` outlives this pin
@@ -301,18 +301,16 @@ object BspBeamSearch {
         (qid, pool)
       }
       .partitionBy(qPart)
-    // Rounds run in batches of up to RoundsPerJob, ONE job per batch: the
-    // batch's rounds stay one lazy lineage, each round's state persisted
-    // (the next round reads it twice: frontier and merge), and only the
-    // batch's last state is checkpointed and counted; the initial state is
-    // persisted too and materialized by the first batch. localCheckpoint
-    // (not PlanUtil.cut: re-wrapping would erase the partitioner that
-    // keeps the merge narrow) truncates lineage, so the batch's earlier
-    // states and the previous batch's last one are then freed — heap holds
-    // one batch of state, not O(rounds). Each state is released exactly
-    // once. The final state's release goes to `scope` (the caller frees it
-    // after consuming the returned DF) or is leaked session-lifetime when
-    // no scope is given.
+    // Rolling checkpoint: each job ends in one state that is persisted,
+    // checkpointed and counted, and it is the only live reader of the
+    // previous job's state, which is then freed — heap holds two states,
+    // not O(rounds). localCheckpoint (not PlanUtil.cut: re-wrapping would
+    // erase the partitioner that keeps the merge narrow) truncates
+    // lineage so a freed state is never a recompute dependency. The
+    // initial state is persisted and materialized by the first job. Each
+    // state is released exactly once; the final one's release goes to
+    // `scope` (the caller frees it after consuming the returned DF) or is
+    // leaked session-lifetime when no scope is given.
     state.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // One round of one pool, shared by both round shapes below: its
@@ -394,10 +392,11 @@ object BspBeamSearch {
 
     // The same round when the pin is ONE partition (so is the state):
     // the adjacency, the vectors and every pool share the task, so the
-    // round runs in it with no exchange, and a job's rounds are one
-    // stage. Per pool it gathers the same (nbr, qid)-deduplicated
-    // candidates with the same scores, so the pools are those of the
-    // distributed round.
+    // round runs in it with no exchange and reads its state once, and a
+    // job's rounds pipeline through one task pool by pool with no state
+    // stored between them. Per pool it gathers the same (nbr,
+    // qid)-deduplicated candidates with the same scores, so the pools
+    // are those of the distributed round.
     def localRound(state: org.apache.spark.rdd.RDD[(Long, Array[Entry])],
                    unexpanded: org.apache.spark.util.LongAccumulator)
         : org.apache.spark.rdd.RDD[(Long, Array[Entry])] =
@@ -424,28 +423,31 @@ object BspBeamSearch {
         }
       }
 
-    def roundOf(state: org.apache.spark.rdd.RDD[(Long, Array[Entry])],
-                unexpanded: org.apache.spark.util.LongAccumulator)
-        : org.apache.spark.rdd.RDD[(Long, Array[Entry])] =
-      (if (part.numPartitions == 1) localRound(state, unexpanded)
-       else distributedRound(state, unexpanded))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
+    // Rounds per job: a one-partition pin chains up to RoundsPerJob local
+    // rounds in one task. A distributed round reads its state twice
+    // (frontier and merge) and runs three exchanges, so it keeps one job
+    // per round: a round run past convergence would cost three stages,
+    // and a job would hold every round's state and shuffles at once.
     // A round after convergence has an empty frontier and leaves every
-    // (sorted, deduplicated) pool as it is, so the rounds a batch runs
-    // past convergence do not change the final state; the batch sizes
-    // stop at maxRounds exactly.
+    // (sorted, deduplicated) pool as it is, so the rounds a job runs past
+    // convergence do not change the final state; the job sizes stop at
+    // maxRounds exactly.
+    val local = part.numPartitions == 1
+    val perJob = if (local) RoundsPerJob else 1
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
-      val n = math.min(RoundsPerJob, maxRounds - round)
+      val n = math.min(perJob, maxRounds - round)
       val accs = (0 until n).map(i =>
         spark.sparkContext.longAccumulator(s"bsp_unexpanded_r${round + i}"))
-      val states = accs.scanLeft(state)(roundOf).tail
-      states.last.localCheckpoint()
-      states.last.count()
-      (state +: states.init).foreach(_.unpersist(blocking = false))
-      state = states.last
+      val next = accs.foldLeft(state) { (st, acc) =>
+        if (local) localRound(st, acc) else distributedRound(st, acc)
+      }
+      next.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      next.localCheckpoint()
+      next.count()
+      state.unpersist(blocking = false)
+      state = next
       val converged = accs.indexWhere(_.value == 0)
       done = converged >= 0
       round += (if (done) converged + 1 else n)

@@ -55,9 +55,9 @@ class BspBeamSearchSpec extends SparkSpec {
           (q, ids.toSeq, ds.toSeq.map(java.lang.Double.doubleToLongBits)) }
     // (frontierWidth, maxRounds, excludeSelf, extraSeeds): converging runs,
     // and maxRounds falling inside the first and the second batch. The
-    // graph's pin is one partition (its rounds run in one task); a
-    // 3-partition pin runs the exchanging rounds.
-    val spreadPin = BspBeamSearch.pin(adjDf, baseDf, Some(3))
+    // graph's pin is one partition (its rounds run in one task, up to 8
+    // per job); a 3-partition pin runs the exchanging rounds, one per job.
+    val spreadPin = BspOracle.spreadPin(adjDf, baseDf, 3)
     Seq((4, 64, false, Nil), (1, 3, false, Nil), (1, 11, true, Nil),
         (2, 64, true, seeds)).foreach { case (fw, mr, ex, xs) =>
       val queries = if (ex) baseDf.filter(col("id") < 160) else queriesDf
@@ -77,7 +77,7 @@ class BspBeamSearchSpec extends SparkSpec {
               excludeSelf = ex, extraSeeds = xs, pinned = pin))
           }
           assert(batched == oracle, s"$layout, fw=$fw maxRounds=$mr")
-          if (mr > 8) assert(jobsBatched < jobsOracle,
+          if (pin.isEmpty && mr > 8) assert(jobsBatched < jobsOracle,
             s"$layout, fw=$fw maxRounds=$mr: $jobsBatched jobs batched vs " +
               s"$jobsOracle per round")
       }
@@ -100,14 +100,14 @@ class BspBeamSearchSpec extends SparkSpec {
     def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().toSet
     val oracle = ids(BspOracle.bfsReached(adj, 1000L, 3))
     assert(oracle.size > 200 && !oracle.contains(1350L) && oracle.contains(9003L))
-    Seq(Some(1), Some(3), Some(7), None).foreach { parts =>
+    Seq(1, 3, 7).foreach { parts =>
       val scope = new graft.ops.graph.CpScope
-      val got = ids(graft.build.DistRoarGraphBuilder.bfsReached(adj, 1000L, scope, parts))
+      val got = ids(graft.build.DistRoarGraphBuilder.bfsReached(adj, 1000L, parts, scope))
       scope.releaseAll()
       assert(got == oracle, s"partitions $parts")
     }
     val scope = new graft.ops.graph.CpScope
-    assert(ids(graft.build.DistRoarGraphBuilder.bfsReached(adj, 7777L, scope, Some(3))) ==
+    assert(ids(graft.build.DistRoarGraphBuilder.bfsReached(adj, 7777L, 3, scope)) ==
       Set(7777L))
     scope.releaseAll()
   }

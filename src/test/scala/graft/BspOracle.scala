@@ -13,8 +13,8 @@ import org.apache.spark.storage.StorageLevel
   *  - [[search]], `BspBeamSearch.search` with one job per round: each
   *    round's state is checkpointed and counted before the next starts,
   *    and the loop stops at the first round after which no pool holds an
-  *    unexpanded entry. The engine runs several rounds per job; ids and
-  *    dist bits must agree.
+  *    unexpanded entry. On a one-partition pin the engine runs several
+  *    rounds per job inside one task; ids and dist bits must agree.
   *  - [[bfsReached]], the level-synchronous BFS: every hop is one exchange
   *    of the frontier ids, eight hops per materialization. The engine
   *    takes each partition's frontier to a local fixpoint before an
@@ -122,6 +122,20 @@ object BspOracle {
       val top = (if (excludeSelf) pool.filter(_.id != qid) else pool).take(k)
       (qid, top.map(_.id), top.map(_.dist))
     }).toDF("query_id", "ids", "dists")
+  }
+
+  /** `BspBeamSearch.pin` over `numPartitions` hash partitions instead of
+    * the size-derived count, so a small spec graph runs the multi-partition
+    * search path. The caller releases it. */
+  def spreadPin(adj: DataFrame, vectors: DataFrame, numPartitions: Int): BspBeamSearch.Pinned = {
+    import vectors.sparkSession.implicits._
+    val part = new org.apache.spark.HashPartitioner(numPartitions)
+    val vecRdd = vectors.select(col("id").cast("long"), col("vec"))
+      .as[(Long, Array[Float])].rdd
+      .partitionBy(part)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    vecRdd.count()
+    BspBeamSearch.pinAdjOnto(adj, new BspBeamSearch.PinnedVecs(vecRdd, part))
   }
 
   /** The ids reachable from `ep` over `adj` (src, nbrs), `ep` included,

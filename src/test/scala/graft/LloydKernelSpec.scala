@@ -3,11 +3,9 @@ package graft
 import graft.ops.Quantize
 import org.apache.spark.sql.functions._
 
-/** The one-job trainers equal their relational forms bit for bit: the PQ
-  * codebook of `Quantize.pqTrain` against `PqOracle.pqTrain`, and the
-  * per-dimension variances behind `Quantize.opqPermutation` against
-  * `round(variance(x), 6)` over the exploded column, on one partition and
-  * spread over several. */
+/** The one-job PQ trainer equals its relational form bit for bit: the
+  * codebook of `Quantize.pqTrain` against `PqOracle.pqTrain`, on one
+  * partition and spread over several. */
 class LloydKernelSpec extends SparkSpec {
 
   private def mix(z0: Long): Long = {
@@ -64,20 +62,5 @@ class LloydKernelSpec extends SparkSpec {
     val ragged = rows.take(20) :+ ((999L, Array.fill(12)(0.5f)))
     assert(namedError(Quantize.pqTrain(spread(ragged, 2)(_ % 2), 4, 8, 1).collect())
       .contains("dimension mismatch"))
-  }
-
-  test("opqPermutation's variances == round(variance(x), 6), bits, on 1 and 3 partitions") {
-    val finite = rows.filter(_._1 != 77)
-    val rot = (df: org.apache.spark.sql.DataFrame) => Quantize.opqRotate(df, 16)
-    for ((df, what) <- Seq(spread(finite, 1)(_ => 0) -> "1 partition",
-           spread(finite, 3)(_ % 3) -> "3 partitions",
-           spread(finite, 4)(i => if (i < 60) 1 else 3) -> "2 of 4 partitions empty")) {
-      val r = rot(df)
-      val ker = Quantize.dimVariances(r, 16).map(java.lang.Double.doubleToLongBits)
-      val rel = PqOracle.dimVariances(r).map(java.lang.Double.doubleToLongBits)
-      assert(ker.toSeq == rel.toSeq, s"$what: variances differ")
-    }
-    assert(namedError(Quantize.dimVariances(spread(finite.take(1), 1)(_ => 0), 16))
-      .contains("two training rows"))
   }
 }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 /** Relational reference forms of the PQ kernels in `graft.ops.Quantize`.
   * They mirror the DuckDB oracle SQL step by step, so the specs pin each
   * kernel to them: `pqTrain` must give [[pqTrain]]'s codebook bits,
-  * `opqPermutation` must rank by [[dimVariances]], `pqEncodeKernel` must
-  * give [[pqEncode]]'s codes,
+  * `pqEncodeKernel` must give [[pqEncode]]'s codes,
   * `adcTopK` the ranking of exact kNN over [[pqReconstruct]], and
   * `ivfAdcTopKKernel` [[ivfAdcTopK]]'s rankings, doubles included. The specs compare exploded
   * ranks: the kernel also emits an empty `knn` row for a query with no
@@ -85,14 +84,6 @@ object PqOracle {
     cents.toSeq.map { case ((s, c), v) => (s, c, v) }
       .toDF("subspace", "centroid_id", "vec")
   }
-
-  /** `round(variance(x), 6)` per position of the exploded `vec` column
-    * (the ranking key of `Quantize.opqPermutation`), by position. */
-  def dimVariances(train: DataFrame): Array[Double] =
-    train.select(posexplode(col("vec")).as(Seq("pos", "x")))
-      .groupBy("pos")
-      .agg(round(variance(col("x").cast("double")), 6).as("v"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).map(_._2)
 
   /** ADC top-r restricted to each query's probed inverted lists, as a
     * pure column expression: per candidate row, m codebook-literal lookups
