@@ -172,14 +172,16 @@ object Bench {
     // frontierWidth 8: halves the round count vs the default 4 at the same
     // pool width — per-round job latency is the dominant BSP cost at bench
     // scale, and recall is pool-width-bound, not frontier-bound
+    val bspScope = new graft.ops.graph.CpScope
     val bspRes = graft.ops.graph.BspBeamSearch.search(bIdx.adj, bVecs, queries,
-      k = 10, l = 60, ep = bIdx.ep, Metric.L2, frontierWidth = 8)
+      k = 10, l = 60, ep = bIdx.ep, Metric.L2, frontierWidth = 8, scope = bspScope)
       .select(col("query_id"), col("ids")).cache()
     bspRes.count()
     val bspSec = (System.nanoTime() - tBsp0) / 1e9
     val bspRecall = graft.eval.Eval.recallAtK(bspRes, gt, 10)
       .collect().head.getAs[Double]("recall_at_k")
     bspRes.unpersist()
+    bspScope.releaseAll()
 
     val tSh0 = System.nanoTime()
     val sharded = graft.build.ShardedRoarGraph.build(base, queries, params, 3)

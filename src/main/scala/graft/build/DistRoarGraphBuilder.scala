@@ -4,7 +4,7 @@ import graft.core.{BuildParams, Metric, NeighborVec}
 import graft.functions.{TopKAggregator, VecMeanAggregator, VectorFunctions}
 import graft.ops.KnnJoin
 import graft.ops.graph.{BspBeamSearch, OcclusionPrune}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
@@ -59,27 +59,37 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   * Reachability repair (the scalable analogue of the reference's
   * CollectPoints, src/index_bipartite.cpp:2587-2604, and of
   * [[RoarGraphBuilder.repairReachability]]) runs as a distributed
-  * post-pass, ON by default: a distributed BFS from the entry point
-  * marks the reached component; every unreached node then beam-searches
-  * (BSP — beams start at ep, so every candidate they pool is reached BY
-  * CONSTRUCTION) for its nearest reached nodes and receives in-edges
-  * from them. Iterated: once an island's boundary members attach, the
-  * next round's beams can enter the island through them, so islands
-  * drain geometrically. A source normally absorbs repair edges only
-  * into its free degree room (cap 3m); when a round stalls because
-  * every candidate source is saturated, the next round lets sources
-  * trim their ORIGINAL edge tail (never a repair edge — a repair edge
-  * is some node's only in-link) to make room, and because trimming can
-  * in principle orphan a node whose only in-path ran through the
-  * trimmed edge, any pass that trimmed is re-verified by a fresh BFS
+  * post-pass when `BuildParams.repairReachability` is set (the default):
+  * a distributed BFS from the entry point marks the reached component;
+  * every unreached node then beam-searches (BSP — beams start at ep, so
+  * every candidate they pool is reached BY CONSTRUCTION) for its nearest
+  * reached nodes and receives in-edges from them. Iterated: once an
+  * island's boundary members attach, the next round's beams can enter the
+  * island through them, so islands drain geometrically. A source normally
+  * absorbs repair edges only into its free degree room (cap 3m); when a
+  * round stalls because every candidate source is saturated, the next
+  * round lets sources trim their ORIGINAL edge tail (never a repair edge —
+  * a repair edge is some node's only in-link) to make room, and because
+  * trimming can in principle orphan a node whose only in-path ran through
+  * the trimmed edge, any pass that trimmed is re-verified by a fresh BFS
   * (bounded outer passes) before repair reports done. When the bounded
-  * beam rounds exit with residual orphans (the beams' miss mode is
-  * geometric — an island no beam enters), a convergence backstop
-  * attaches the residue through one EXACT blocked kNN join per pass
-  * (orphans vs the reached set — |orphans|-bounded work, cannot miss),
-  * re-verifying by BFS after every attach. Only if the backstop's own
+  * beam rounds exit with residual orphans, the exact backstop
+  * ([[exactBackstop]]) attaches the residue through one EXACT blocked kNN
+  * join per pass, re-verifying by BFS after every attach. Only if its own
   * pass bound is hit does repair exit unconverged — and then it says so
   * loudly (a `[dist-build] WARNING` line) instead of returning silently.
+  *
+  * One pinned layout per build (the analogue of the reference's one
+  * in-RAM base store, include/efanna2e/index.h:59-63): the build pins its
+  * base vectors once, lazily, when the first phase that is not a
+  * checkpoint hit reads them; both reverse merges, the phase-2
+  * self-searches and pools, and every repair step read that pin, and it
+  * is released once, after repair. Each repair adjacency state is pinned
+  * once onto it ([[AdjState]]): the state's verify BFS and its beam round
+  * read the same pin, and a round's queries run as
+  * ceil(|unreached| / RepairQueryBatch) hash slices over it. Pins are
+  * lazy: making one costs only the vector pin's sizing count, and the
+  * first reader's job fills the cache.
   *
   * Job-count bound at scale: the BFS takes each partition to a local
   * fixpoint between exchanges and chains up to eight supersteps per job,
@@ -145,6 +155,32 @@ object DistRoarGraphBuilder {
       (implicit spark: org.apache.spark.sql.SparkSession): Unit =
     graft.core.CpIO.guardFingerprint(dir, fp)
 
+  /** Cosine is lowered to normalize-then-IP exactly like the reference
+    * (src/index_bipartite.cpp:176-182): every internal score uses this
+    * metric over [[lowered]] vectors. */
+  private def scoringMetric(metric: Metric): Metric =
+    if (metric.needNormalize) Metric.InnerProduct else metric
+
+  /** (id: long, vec) rows of `df`, L2-normalized when `metric` is cosine. */
+  private def lowered(df: DataFrame, metric: Metric): DataFrame =
+    df.select(col("id").cast("long"),
+      if (!metric.needNormalize) col("vec")
+      else transform(VectorFunctions.l2Normalize(col("vec")), _.cast("float"))
+        .as("vec"))
+
+  /** A build's one vector pin over its lowered base table: made by the
+    * first phase that reads vectors (a phase whose checkpoint is a hit
+    * reads none), shared by every later phase and repair state, and
+    * released once. */
+  private final class VecPin(baseN: DataFrame) {
+    private var made: Option[BspBeamSearch.PinnedVecs] = None
+    def get(): BspBeamSearch.PinnedVecs = {
+      if (made.isEmpty) made = Some(BspBeamSearch.pinVectors(baseN))
+      made.get
+    }
+    def release(): Unit = made.foreach(_.release())
+  }
+
   /** Build. `base`/`queries` expose (id, vec: array<float>);
     * `precomputedKnn`, if given, is [query_id, knn: array<long>] of
     * EXTERNAL base ids sorted by distance (the S5 LoadLearnBaseKNN input).
@@ -170,24 +206,17 @@ object DistRoarGraphBuilder {
             selfSearchSeeds: Int = 0,
             selfSearchBatches: Int = 1,
             mergeBatches: Int = 1,
-            repairReachability: Boolean = true,
             checkpointDir: Option[String] = None): DistIndex = {
     implicit val spark: org.apache.spark.sql.SparkSession = base.sparkSession
     import spark.implicits._
     val m = params.mPjbp
     val metric = params.metric
-    // cosine is lowered to normalize-then-IP exactly like the reference
-    // (src/index_bipartite.cpp:176-182); all internal scoring uses this
-    val scoreMetric = if (metric.needNormalize) Metric.InnerProduct else metric
-
-    def normalized(df: DataFrame): DataFrame =
-      if (!metric.needNormalize) df.select(col("id").cast("long"), col("vec"))
-      else df.select(col("id").cast("long"),
-        transform(VectorFunctions.l2Normalize(col("vec")), _.cast("float"))
-          .as("vec"))
-
-    val baseN = normalized(base).persist(StorageLevel.MEMORY_AND_DISK)
-    val queriesN = normalized(queries)
+    val scoreMetric = scoringMetric(metric)
+    val baseN = lowered(base, metric).persist(StorageLevel.MEMORY_AND_DISK)
+    val queriesN = lowered(queries, metric)
+    // the build's one vector pin: both reverse merges, the phase-2
+    // searches and pools, and every repair state read it
+    val vecPin = new VecPin(baseN)
 
     // mergeBatches is deliberately NOT in the fingerprint: batched ==
     // unbatched merge is spec-gated result-identical, so stages persist
@@ -269,7 +298,7 @@ object DistRoarGraphBuilder {
       // the train set is the small side by construction)
       val (revMergedP1, relRevP1) = mergeReversePhase(fwdListsCut, baseN,
         scoreMetric, appendCap = m, pruneTo = m, backfill = true,
-        capRev = 2 * m, finalCap = None)
+        capRev = 2 * m, finalCap = None, vp = vecPin.get())
       // durableCut materializes revMergedP1 (parquet write or local cut)
       // before the caller runs this release, so the ordering contract of
       // cutReleasable holds
@@ -307,7 +336,7 @@ object DistRoarGraphBuilder {
     // starts. Peak scratch is one batch's pool shuffle, not the corpus's,
     // and the merge phase starts with a clean disk.
     // Candidate vectors attach via a NARROW lookup against the build's
-    // shared pin, not a join against the n-row table (the round-12
+    // vector pin, not a join against the n-row table (the round-12
     // ids-not-payloads fix at its third site, found when round 13's
     // slower disk turned the boundary into the dominant batch cost):
     // the per-batch sort-merge join re-shuffled all n vector rows
@@ -317,14 +346,13 @@ object DistRoarGraphBuilder {
     // aggregation.
     var p2Pin: Option[BspBeamSearch.Pinned] = None
     def supplyPools(ss: DataFrame): DataFrame = {
-      val vp = p2Pin.get.vecs // set by batchSupply before any search runs
       val skinny = ss
         .select(col("query_id").as("src"),
           explode(arrays_zip(col("dists"), col("ids"))).as("h"))
         .select(col("h.ids").as("cand"), col("src"), col("h.dists").as("d"))
         .as[(Long, Long, Double)].rdd
         .map { case (cand, src, d) => (cand, (src, d)) }
-      val withVec = BspBeamSearch.lookupVec(skinny, vp)
+      val withVec = BspBeamSearch.lookupVec(skinny, vecPin.get())
       spark.createDataset(
           withVec.map { case (cand, (src, d), v) => (src, d, cand, v) })
         .toDF("src", "d", "cand", "cvec")
@@ -341,17 +369,15 @@ object DistRoarGraphBuilder {
     }
     // each batch is its own durable stage (supply_b<i>_of<B>): a build
     // killed after batch i resumes at batch i+1 — at the 10M regime a
-    // batch is tens of minutes, so this is the preemption granularity
-    // one pin for ALL batches: every batch searches the same frozen
-    // phase-1 snapshot, so the n-row vector/adjacency shuffle is paid
-    // once per build, not once per batch (at 192 batches the per-batch
-    // re-pin would re-shuffle ~1.6 TB of vector bytes). Lazy: a fully
-    // checkpointed resume (every batch a hit) never builds it.
-    // (p2Pin itself is declared above supplyPools, which shares it.)
+    // batch is tens of minutes, so this is the preemption granularity.
+    // One adjacency pin for ALL batches, onto the build's vector pin:
+    // every batch searches the same frozen phase-1 snapshot, so the n-row
+    // adjacency shuffle is paid once per build, not once per batch. Lazy:
+    // a resume whose every batch is a hit never builds it.
     def batchSupply(queries: DataFrame, name: String): (DataFrame, () => Unit) = {
       var scopeRelease: () => Unit = () => ()
       val cutRel = durableCut(checkpointDir, name) {
-        if (p2Pin.isEmpty) p2Pin = Some(BspBeamSearch.pin(projection, baseN))
+        if (p2Pin.isEmpty) p2Pin = Some(BspBeamSearch.pinAdjOnto(projection, vecPin.get()))
         val scope = new graft.ops.graph.CpScope
         val ss = BspBeamSearch.search(
           projection, baseN, queries, k = params.lPjpq, l = params.lPjpq,
@@ -372,7 +398,7 @@ object DistRoarGraphBuilder {
       }
     val supplyFwdCut = batchCuts.map(_._1).reduce(_.unionByName(_))
     val relSupplyFwd = () => batchCuts.foreach(_._2())
-    p2Pin.foreach(_.release()) // every batch is cut; the shared pin is dead
+    p2Pin.foreach(_.releaseAdj()) // every batch is cut; the phase-2 pin is dead
     lap("phase2-selfsearch")
 
     // ---- supply reverse (G12 cap 2m) + overflow prune to m (G11), then
@@ -384,7 +410,8 @@ object DistRoarGraphBuilder {
     val (adjCut, relAdjCut) = durableCut(checkpointDir, "adj_merged") {
       val (supplyMerged, relSupplyMergedB) = mergeReversePhase(supplyFwdCut,
         baseN, scoreMetric, appendCap = 2 * m, pruneTo = m, backfill = false,
-        capRev = 2 * m, finalCap = Some(m), batches = mergeBatches)
+        capRev = 2 * m, finalCap = Some(m), vp = vecPin.get(),
+        batches = mergeBatches)
       mergeRelease = () => relSupplyMergedB()
       // ---- merge ≤ 2m novel supply edges into the projection (:1251-1269) --
       projection
@@ -400,13 +427,15 @@ object DistRoarGraphBuilder {
     lap("phase2-supply-merge")
 
     val repaired =
-      if (repairReachability) {
-        val r = repair(adjCut, baseN, ep, scoreMetric, m, frontierWidth, maxRounds)
+      if (params.repairReachability) {
+        val r = repair(adjCut, baseN, ep, scoreMetric, m, frontierWidth,
+          maxRounds, vecPin.get())
         relAdjCut() // repair's internal state is self-contained cuts
         lap("repair")
         r
       } else adjCut
 
+    vecPin.release() // every phase and repair state that read it is cut
     baseN.unpersist()
     DistIndex(repaired, ep, metric, Some(3 * params.mPjbp))
   }
@@ -434,21 +463,14 @@ object DistRoarGraphBuilder {
         "layouts carry none — rebuild or supply the cap by re-saving)"))
     require(cap >= 3 && cap % 3 == 0,
       s"degree cap $cap is not the builder's 3*m shape")
-    val m = cap / 3
-    val metric = di.metric
-    val scoreMetric = if (metric.needNormalize) Metric.InnerProduct else metric
-    val vecsN =
-      if (!metric.needNormalize)
-        vectors.select(col("id").cast("long"), col("vec"))
-      else vectors.select(col("id").cast("long"),
-        transform(VectorFunctions.l2Normalize(col("vec")), _.cast("float"))
-          .as("vec"))
-    val baseN = vecsN.persist(StorageLevel.MEMORY_AND_DISK)
-    baseN.count()
+    // the pin's sizing count fills baseN
+    val baseN = lowered(vectors, di.metric).persist(StorageLevel.MEMORY_AND_DISK)
+    val vecPin = new VecPin(baseN)
     val adj0 = di.adj.select(col("src").cast("long"),
       col("nbrs").cast("array<bigint>").as("nbrs"))
-    val repaired = repair(adj0, baseN, di.ep, scoreMetric, m,
-      frontierWidth, maxRounds)
+    val repaired = repair(adj0, baseN, di.ep, scoringMetric(di.metric), cap / 3,
+      frontierWidth, maxRounds, vecPin.get())(spark)
+    vecPin.release()
     baseN.unpersist()
     di.copy(adj = repaired)
   }
@@ -466,34 +488,46 @@ object DistRoarGraphBuilder {
     * query vectors, so an unbatched call is a driver/executor OOM, not a
     * spill. 500k × 200d ≈ 400 MB, the same measured broadcast class as
     * the 10M prefix's query blocks (tools/run_prefix_10m.sh). Slices of
-    * one round search the SAME frozen adjacency, so per-query results
-    * are identical to the unsliced call; the adjacency is pinned once
-    * per round and shared across slices (no per-slice re-shuffle). */
-  private val RepairQueryBatch = 500000
+    * one round search the SAME frozen adjacency pin, so per-query results
+    * are identical to the unsliced call. */
+  private val RepairQueryBatch = 500000L
   private val RepairMaxRounds = 8
   private val RepairMaxPasses = 3
   /** Bound on exact-backstop attach passes after the beam rounds exhaust
     * (each pass is one verify-BFS + one blocked exact kNN join over the
     * orphan residue — measured 0.009% of nodes at the 4M rung). */
   private val RepairForcePasses = 3
-  /** Test hook: `-Dgraft.repair.disableBeams=true` skips the beam-based
-    * attach rounds so the exact backstop carries ALL repair work —
-    * DistRoarGraphSpec's converges gate drives the backstop end-to-end
-    * through this. Never set outside tests. */
-  private def beamRoundsBound: Int =
-    if (sys.props.get("graft.repair.disableBeams").contains("true")) 0
-    else RepairMaxRounds
   /** Bound on BFS supersteps (one exchange of frontier ids each). */
   private val BfsMaxSteps = 96
   private val BfsStepsPerJob = 8
 
-  /** Distributed BFS from `ep` over `adj` — returns the reached id set
-    * (`ep` included) as a DataFrame. Block-centric: the adjacency is
-    * hash-partitioned into `numPartitions` and pinned, and each superstep
-    * takes every partition's newly arrived ids to a LOCAL fixpoint
-    * through the partition's own adjacency before one exchange routes the
-    * neighbors that live in other partitions to their owners. So
-    * supersteps scale with the cross-partition hops of the graph, not
+  /** One repair adjacency state, (src, nbrs, origCnt) cut, and its one
+    * adjacency pin onto the build's vector pin: the state's verify BFS
+    * and its beam round read the same pin. */
+  private[graft] final class AdjState(val adj: DataFrame, relAdj: () => Unit,
+                                      vp: BspBeamSearch.PinnedVecs) {
+    val pin: BspBeamSearch.Pinned = BspBeamSearch.pinAdjOnto(adj.select("src", "nbrs"), vp)
+    /** The state after this one (a materialized cut); this one is dead. */
+    def next(adj2: DataFrame, rel2: () => Unit): AdjState = {
+      pin.releaseAdj(); relAdj()
+      new AdjState(adj2, rel2, vp)
+    }
+  }
+  private[graft] object AdjState {
+    /** The first state: every edge of `adj0` is original (trim-eligible). */
+    def apply(adj0: DataFrame, vp: BspBeamSearch.PinnedVecs): AdjState = {
+      val (a, rel) = graft.ops.graph.PlanUtil.cutDFReleasable(
+        adj0.select(col("src"), col("nbrs"), size(col("nbrs")).as("origCnt")))
+      new AdjState(a, rel, vp)
+    }
+  }
+
+  /** Distributed BFS from `ep` over a pinned adjacency — returns the
+    * reached id set (`ep` included) as a DataFrame. Block-centric: each
+    * superstep takes every pin partition's newly arrived ids to a LOCAL
+    * fixpoint through the partition's own adjacency before one exchange
+    * routes the neighbors that live in other partitions to their owners.
+    * So supersteps scale with the cross-partition hops of the graph, not
     * with its depth, and a graph that fits one partition is reached in
     * one superstep. The first job runs one superstep; later jobs chain up
     * to [[BfsStepsPerJob]] of them in one lazy lineage, each step
@@ -501,26 +535,20 @@ object DistRoarGraphBuilder {
     * set) as one pair of primitive id arrays per partition, 8 bytes per
     * reached id, and only the job's last step checkpointed. A step after
     * the last exchange changes nothing, so the reached set does not
-    * depend on the batching. */
-  private[graft] def bfsReached(adj: DataFrame, ep: Long, numPartitions: Int,
-                                scope: graft.ops.graph.CpScope): DataFrame = {
-    val spark = adj.sparkSession
+    * depend on the batching. The pin stays the caller's. */
+  private[graft] def bfsReached(pin: BspBeamSearch.Pinned, ep: Long,
+                                scope: graft.ops.graph.CpScope)
+                               (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     // per partition: (the reached ids it owns, the ids it sends on)
     type Step = org.apache.spark.rdd.RDD[(Array[Long], Array[Long])]
-
-    val part = new org.apache.spark.HashPartitioner(numPartitions)
-    val adjRdd = adj
-      .select(col("src").cast("long"), col("nbrs").cast("array<long>"))
-      .as[(Long, Array[Long])].rdd
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val part = pin.part
 
     // The sent ids of the previous step go to their owners, and each
     // owner expands the ones it has not reached yet to its local fixpoint.
     def superstep(prev: Step, sent: org.apache.spark.util.LongAccumulator): Step = {
       val inbox = prev.flatMap(_._2.iterator.map(id => (id, ()))).partitionBy(part)
-      adjRdd.zipPartitions(prev, inbox) { (ait, pit, iit) =>
+      pin.adjRdd.zipPartitions(prev, inbox) { (ait, pit, iit) =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val reached = new java.util.HashSet[Long]()
         pit.foreach(_._1.foreach(id => reached.add(id)))
@@ -547,7 +575,7 @@ object DistRoarGraphBuilder {
     }
 
     var state: Step = spark.sparkContext
-      .parallelize(Seq((Array.empty[Long], Array(ep))), numPartitions)
+      .parallelize(Seq((Array.empty[Long], Array(ep))), part.numPartitions)
     var steps = 0
     var done = false
     while (!done && steps < BfsMaxSteps) {
@@ -563,7 +591,6 @@ object DistRoarGraphBuilder {
       done = last >= 0
       steps += (if (done) last + 1 else n)
     }
-    adjRdd.unpersist(blocking = false)
     val fin = state
     scope.add(() => fin.unpersist(blocking = false)) // released post-consumption
     spark.createDataset(fin.flatMap(_._1.iterator)).toDF("id")
@@ -575,24 +602,13 @@ object DistRoarGraphBuilder {
     * always original-prefix ++ appended-repair-edges, so `origCnt` marks
     * the trim-eligible prefix); trims happen only in a round that follows
     * a stalled round, and any pass that trimmed is re-verified by a fresh
-    * BFS before repair reports done. */
+    * BFS before repair reports done. `vp` stays the caller's. */
   private def repair(adj0: DataFrame, baseN: DataFrame, ep: Long,
                      metric: Metric, m: Int, frontierWidth: Int,
-                     maxRounds: Int): DataFrame = {
-    val spark = adj0.sparkSession
-    import spark.implicits._
+                     maxRounds: Int, vp: BspBeamSearch.PinnedVecs)
+                    (implicit spark: SparkSession): DataFrame = {
     val cap = 3 * m
-
-    // vectors never change across repair rounds (only the adjacency
-    // does), so the vector half of the beam searches' pin is shared for
-    // the whole repair instead of re-shuffling the n-row table per round;
-    // its size-derived partition count (one row per node) also sizes the
-    // verify BFS
-    val repairVecs = BspBeamSearch.pinVectors(
-      baseN.select(col("id"), col("vec")))
-
-    var (adjCur, relAdjCur) = graft.ops.graph.PlanUtil.cutDFReleasable(
-      adj0.select(col("src"), col("nbrs"), size(col("nbrs")).as("origCnt")))
+    var state = AdjState(adj0, vp)
     var remaining = 0L
     var pass = 0
     var done = false
@@ -603,11 +619,9 @@ object DistRoarGraphBuilder {
       // a node whose only in-path ran through the trimmed edge)
       val tBfs0 = System.nanoTime()
       val bfsScope = new graft.ops.graph.CpScope
-      val reached = bfsReached(adjCur.select("src", "nbrs"), ep,
-        repairVecs.part.numPartitions, bfsScope)
+      val reached = bfsReached(state.pin, ep, bfsScope)
       var (unreached, relUnreached) = graft.ops.graph.PlanUtil.cutDFReleasable(
-        baseN.select(col("id"), col("vec"))
-          .join(reached, Seq("id"), "left_anti"))
+        baseN.select(col("id"), col("vec")).join(reached, Seq("id"), "left_anti"))
       bfsScope.releaseAll() // unreached is cut; the BFS reached-set is dead
       remaining = unreached.count()
       println(f"[dist-build] repair pass $pass: verify-bfs " +
@@ -619,49 +633,30 @@ object DistRoarGraphBuilder {
         var allowTrim = false
         var trimmedThisPass = false
         var exhausted = false
-        while (remaining > 0 && !exhausted && round < beamRoundsBound) {
+        while (remaining > 0 && !exhausted && round < RepairMaxRounds) {
           val tRound0 = System.nanoTime()
           val ranWithTrim = allowTrim
           // nearest reached nodes per unreached query: beams start at ep
           // over the CURRENT adjacency, so every pooled candidate is
           // reached (incl. nodes attached in previous rounds — that is
           // what drains islands: once boundary members attach, the next
-          // round's beams walk through them into the island interior)
+          // round's beams walk through them into the island interior).
+          // The queries are hash slices of the unreached set over the
+          // state's one pin (one unfiltered slice up to RepairQueryBatch).
           val roundScope = new graft.ops.graph.CpScope
-          val hits =
-            if (remaining <= RepairQueryBatch)
-              BspBeamSearch.search(
-                adjCur.select("src", "nbrs"), baseN, unreached, k = RepairC,
-                l = math.max(16, 4 * RepairC), ep, metric,
-                frontierWidth, maxRounds, excludeSelf = true,
-                scope = roundScope, sharedVecs = Some(repairVecs))
-            else {
-              // bounded query slices over ONE frozen (adjacency, vectors)
-              // pin: per-query results are independent given the frozen
-              // graph, so slice ∪ == unsliced (see RepairQueryBatch doc)
-              val nb = math.ceil(remaining.toDouble / RepairQueryBatch).toInt
-              val roundPin = BspBeamSearch.pinAdjOnto(
-                adjCur.select("src", "nbrs"), repairVecs)
-              val slices = (0 until nb).map { b =>
-                BspBeamSearch.search(
-                  adjCur.select("src", "nbrs"), baseN,
-                  unreached.filter(
-                    pmod(xxhash64(col("id")), lit(nb)) === lit(b)),
-                  k = RepairC, l = math.max(16, 4 * RepairC), ep, metric,
-                  frontierWidth, maxRounds, excludeSelf = true,
-                  scope = roundScope, pinned = Some(roundPin))
-              }
-              // each slice's result is cut (eager) inside search(), so
-              // the round pin's adjacency half is dead once all return;
-              // the vector half is the repair-lifetime shared pin
-              roundPin.releaseAdj()
-              slices.reduce(_ unionByName _)
-            }
+          val nb = ((remaining + RepairQueryBatch - 1) / RepairQueryBatch).toInt
+          val hits = (0 until nb).map { b =>
+            BspBeamSearch.search(
+              state.adj, baseN,
+              if (nb == 1) unreached
+              else unreached.filter(pmod(xxhash64(col("id")), lit(nb)) === lit(b)),
+              k = RepairC, l = math.max(16, 4 * RepairC), ep, metric,
+              frontierWidth, maxRounds, excludeSelf = true,
+              scope = roundScope, pinned = Some(state.pin))
+          }.reduce(_ unionByName _)
           val (a2, relA2, attached, relAttached) =
-            absorbRound(adjCur, hits, cap, m, allowTrim)
-          relAdjCur() // merged adjacency is cut; the prior round's is dead
-          adjCur = a2
-          relAdjCur = relA2
+            absorbRound(state.adj, hits, cap, m, allowTrim)
+          state = state.next(a2, relA2) // merged adjacency is cut
           locally {
             val (u2, relU2) = graft.ops.graph.PlanUtil.cutDFReleasable(
               unreached.join(attached, Seq("id"), "left_anti"))
@@ -697,36 +692,53 @@ object DistRoarGraphBuilder {
       relUnreached() // pass is over; only the scalar `remaining` survives
       pass += 1
     }
-    // Convergence backstop (VERDICT r8 #3). Two exit states need it:
-    // (a) the pass bound was hit with the FINAL pass's trim unverified
-    // (done still false, `remaining` possibly stale-zero — a trim could
-    // have orphaned a node whose only in-path ran through the trimmed
-    // edge); (b) the beam rounds exhausted/stalled with residual orphans
-    // (measured 0.009% of nodes at the 4M rung — the beams' miss mode is
-    // geometric: an island no beam enters). Each backstop pass re-runs
-    // the verify BFS, then attaches the orphan residue through one EXACT
-    // blocked kNN join (orphans vs the reached set — KnnJoin streams the
-    // reached side once per orphan block, so work is |orphans|-bounded,
-    // and unlike a beam it cannot miss): every orphan's nearest reached
-    // sources are found by construction and absorbed under the same
-    // trim-allowed discipline as a trim round. Because a trim can in
-    // principle orphan someone else, the NEXT pass's BFS re-verifies;
-    // the loop exits only on a verified-clean BFS or the pass bound.
-    // The orphan residue does transit the driver inside KnnJoin's query
-    // blocks — bounded by the residue size, not the corpus; the builder's
-    // no-driver-materialization contract is about corpus-scale state.
+    // The exact backstop takes two exit states: (a) the pass bound was
+    // hit with the FINAL pass's trim unverified (done still false,
+    // `remaining` possibly stale-zero); (b) the beam rounds
+    // exhausted/stalled with residual orphans.
+    if (remaining > 0 || (!done && unverifiedTrim)) {
+      val (s2, left) = exactBackstop(state, baseN, ep, metric, m)
+      state = s2
+      remaining = left
+    }
+    state.pin.releaseAdj()
+    if (remaining > 0)
+      println(s"[dist-build] WARNING: reachability repair exiting with " +
+        s"$remaining unreachable node(s) after $pass pass(es) — callers " +
+        s"should not assume full connectivity")
+    state.adj.select("src", "nbrs")
+  }
+
+  /** Convergence backstop of [[repair]] (VERDICT r8 #3): re-runs the
+    * verify BFS over `state`, then attaches the orphan residue through one
+    * EXACT blocked kNN join (orphans vs the reached set — KnnJoin streams
+    * the reached side once per orphan block, so work is |orphans|-bounded,
+    * and unlike a beam it cannot miss, where the beams' miss mode is
+    * geometric: an island no beam enters, measured 0.009% of nodes at the
+    * 4M rung): every orphan's nearest reached sources are found by
+    * construction and absorbed under the same trim-allowed discipline as a
+    * trim round. Because a trim can in principle orphan someone else, the
+    * NEXT pass's BFS re-verifies; the loop exits on a verified-clean BFS or
+    * after [[RepairForcePasses]] attaches. Returns the last state and the
+    * orphan count of the last BFS. The orphan residue does transit the
+    * driver inside KnnJoin's query blocks — bounded by the residue size,
+    * not the corpus; the builder's no-driver-materialization contract is
+    * about corpus-scale state. */
+  private[graft] def exactBackstop(s0: AdjState, baseN: DataFrame, ep: Long,
+                                   metric: Metric, m: Int)
+                                  (implicit spark: SparkSession): (AdjState, Long) = {
+    var state = s0
+    var remaining = 0L
     var fpass = 0
-    var staleCount = !done && unverifiedTrim
-    while ((remaining > 0 || staleCount) && fpass <= RepairForcePasses) {
+    var attach = true
+    while (attach) {
       val vScope = new graft.ops.graph.CpScope
-      val reached = bfsReached(adjCur.select("src", "nbrs"), ep,
-        repairVecs.part.numPartitions, vScope)
+      val reached = bfsReached(state.pin, ep, vScope)
       val (orphans, relOrphans) = graft.ops.graph.PlanUtil.cutDFReleasable(
-        baseN.select(col("id"), col("vec"))
-          .join(reached, Seq("id"), "left_anti"))
+        baseN.select(col("id"), col("vec")).join(reached, Seq("id"), "left_anti"))
       remaining = orphans.count()
-      staleCount = false
-      if (remaining > 0 && fpass < RepairForcePasses) {
+      attach = remaining > 0 && fpass < RepairForcePasses
+      if (attach) {
         println(s"[dist-build] repair backstop: exact-attaching $remaining " +
           s"orphan(s), pass ${fpass + 1}")
         val (reachedV, relReachedV) = graft.ops.graph.PlanUtil.cutDFReleasable(
@@ -737,22 +749,14 @@ object DistRoarGraphBuilder {
             transform(col("knn"), _("dist")).as("dists"),
             transform(col("knn"), _("id")).as("ids"))
         val (a2, relA2, _, relAttached) =
-          absorbRound(adjCur, hits, cap, m, allowTrim = true)
-        relAdjCur()
-        adjCur = a2
-        relAdjCur = relA2
+          absorbRound(state.adj, hits, 3 * m, m, allowTrim = true)
+        state = state.next(a2, relA2)
         relAttached(); relReachedV()
-        staleCount = true // attach happened: the next BFS must re-verify
       } else vScope.releaseAll()
       relOrphans()
       fpass += 1
     }
-    repairVecs.release() // every consumer (beam rounds) is cut
-    if (remaining > 0)
-      println(s"[dist-build] WARNING: reachability repair exiting with " +
-        s"$remaining unreachable node(s) after $pass pass(es) — callers " +
-        s"should not assume full connectivity")
-    adjCur.select("src", "nbrs")
+    (state, remaining)
   }
 
   /** One bounded absorption round, shared by the beam repair rounds and
@@ -838,24 +842,22 @@ object DistRoarGraphBuilder {
     * id-only (src, nbrs) cut before the next slice starts, and the dead
     * slice's shuffle files are reclaimed by the ContextCleaner. On a
     * cluster the same knob bounds per-executor scratch at fixed executor
-    * count. */
+    * count.
+    *
+    * Every slice reads vectors through the build's pin `vp`: the slice
+    * joins used to re-shuffle the FULL n-row vector table three times PER
+    * SLICE (~6 TB of sort-merge input at 10M x mrb 256 — the same disease
+    * the round-12 BSP reshape fixed); with the pin, slices route only
+    * skinny edge ids and slice-bounded payload rows. */
   private def mergeReversePhase(fwd: DataFrame, baseN: DataFrame,
                                 metric: Metric, appendCap: Int, pruneTo: Int,
                                 backfill: Boolean, capRev: Int,
                                 finalCap: Option[Int],
+                                vp: BspBeamSearch.PinnedVecs,
                                 batches: Int = 1): (DataFrame, () => Unit) = {
-    // one vector pin shared by every slice: the slice joins used to
-    // re-shuffle the FULL n-row vector table three times PER SLICE
-    // (~6 TB of sort-merge input at 10M x mrb 256 — the same disease the
-    // round-12 BSP reshape fixed); with the pin, slices route only
-    // skinny edge ids and slice-bounded payload rows
-    val vp = BspBeamSearch.pinVectors(baseN)
     if (batches <= 1)
-      // the returned release follows the cutReleasable contract (call
-      // only after the result is materialized) — it frees the pin too
       (mergeReverseSlice(fwd, baseN, metric, appendCap, pruneTo, backfill,
-        capRev, finalCap, keepDst = lit(true), vp = vp),
-        () => vp.release())
+        capRev, finalCap, keepDst = lit(true), vp = vp), () => ())
     else {
       val cuts = (0 until batches).map { b =>
         graft.ops.graph.PlanUtil.cutDFReleasable(
@@ -864,7 +866,6 @@ object DistRoarGraphBuilder {
             keepDst = pmod(xxhash64(col("__dst")), lit(batches)) === lit(b),
             vp = vp))
       }
-      vp.release() // every slice is cut; the pin is dead
       (cuts.map(_._1).reduce(_.unionByName(_)), () => cuts.foreach(_._2()))
     }
   }

@@ -32,11 +32,18 @@ final case class GraphIndex(adj: Array[Array[Int]], ep: Int,
     * src/index_bipartite.cpp:2521-2604, exists for exactly this check).
     * A healthy index reaches every node (beam search can only find what
     * is reachable from `ep`). */
-  def reachableFromEp: Int = {
-    val seen = new Array[Boolean](n)
-    var stack = List(ep)
-    seen(ep) = true
-    var cnt = 1
+  def reachableFromEp: Int = GraphIndex.markReachable(adj, new Array[Boolean](n), ep)
+}
+
+object GraphIndex {
+  /** Marks in `seen` every node reachable over `adj` from `from` (itself
+    * included) through unmarked nodes, by stack DFS; returns how many it
+    * newly marked. */
+  private[build] def markReachable(adj: Array[Array[Int]], seen: Array[Boolean],
+                                   from: Int): Int = {
+    var cnt = if (seen(from)) 0 else 1
+    seen(from) = true
+    var stack = List(from)
     while (stack.nonEmpty) {
       val cur = stack.head
       stack = stack.tail
@@ -291,17 +298,7 @@ object RoarGraphBuilder {
     val n = index.n
     val adj = index.adj.map(_.clone())
     val seen = new Array[Boolean](n)
-    def bfs(from: Int): Unit = {
-      var stack = List(from)
-      if (!seen(from)) { seen(from) = true }
-      while (stack.nonEmpty) {
-        val cur = stack.head; stack = stack.tail
-        adj(cur).foreach { nb =>
-          if (!seen(nb)) { seen(nb) = true; stack = nb :: stack }
-        }
-      }
-    }
-    bfs(index.ep)
+    GraphIndex.markReachable(adj, seen, index.ep)
     var u = 0
     while (u < n) {
       if (!seen(u)) {
@@ -335,8 +332,7 @@ object RoarGraphBuilder {
               else if (a._2 == -1 || Neighbor.less(b._1, b._2, a._1, a._2)) b
               else a)
         adj(best) = adj(best) :+ u
-        seen(u) = true
-        bfs(u)
+        GraphIndex.markReachable(adj, seen, u)
       }
       u += 1
     }

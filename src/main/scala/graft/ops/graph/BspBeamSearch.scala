@@ -83,34 +83,28 @@ object BspBeamSearch {
     * and scoring sweep dominate its task overhead, small enough that the
     * conf cap engages long before memory pressure (100k × 200d floats ≈
     * 80 MB per partition). */
-  private[graft] val PinRowsPerPartition = 100000L
+  private val PinRowsPerPartition = 100000L
 
-  /** Size-derived partition count: ceil(rows / [[PinRowsPerPartition]])
-    * capped at the session's shuffle-partition conf (min 1) — shared by
-    * every size-derived RDD partitioner (pinVectors, the dist builder's
-    * BFS pin) so the two cannot drift (ADVICE r13). */
-  private[graft] def sizedPartitions(rows: Long, confParts: Int): Int =
-    math.max(1L, math.min(confParts.toLong,
-      (rows + PinRowsPerPartition - 1) / PinRowsPerPartition)).toInt
-
-  /** Pin a vector table for reuse (see [[PinnedVecs]]); eager. Partition
-    * count is derived from the TABLE SIZE (one extra count job), capped at
-    * the session's shuffle-partition conf — a conf-sized constant
-    * scheduled conf empty tasks per round on small graphs (RDD stages get
-    * no AQE coalescing), while the cap keeps cluster-scale pins at the
-    * configured parallelism. */
+  /** Pin a vector table for reuse (see [[PinnedVecs]]). Partition count
+    * is ceil(rows / [[PinRowsPerPartition]]) (one count job, the pin's
+    * only job), capped at the session's shuffle-partition conf (min 1) — a
+    * conf-sized constant scheduled conf empty tasks per round on small
+    * graphs (RDD stages get no AQE coalescing), while the cap keeps
+    * cluster-scale pins at the configured parallelism. Lazy: the first job
+    * that reads the pin shuffles the table into place and fills the
+    * cache. */
   def pinVectors(vectors: DataFrame): PinnedVecs = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val ds = vectors.select(col("id").cast("long"), col("vec"))
       .as[(Long, Array[Float])]
-    val part = new org.apache.spark.HashPartitioner(
-      sizedPartitions(ds.count(), spark.conf.get("spark.sql.shuffle.partitions").toInt))
-    val vecRdd = ds.rdd
-      .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    vecRdd.count()
-    new PinnedVecs(vecRdd, part)
+    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val part = new org.apache.spark.HashPartitioner(math.max(1L, math.min(confParts,
+      (ds.count() + PinRowsPerPartition - 1) / PinRowsPerPartition)).toInt)
+    new PinnedVecs(
+      ds.rdd.partitionBy(part)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      part)
   }
 
   /** Narrow keyed vector lookup against a pin: routes the skinny
@@ -133,47 +127,45 @@ object BspBeamSearch {
       }
 
   /** A graph+vector pair pinned to one partitioner and persisted — build
-    * it ONCE with [[pin]] when many search() calls share the same
-    * (adj, vectors) (the phase-2 batch loop runs hundreds of searches
-    * over one frozen snapshot; re-pinning per call re-shuffles the n-row
-    * vector table every batch). The caller owns release(). */
+    * it ONCE when many search() calls share the same (adj, vectors) (the
+    * phase-2 batch loop runs hundreds of searches over one frozen
+    * snapshot; re-pinning per call re-shuffles the n-row vector table
+    * every batch). The caller owns the release. */
   final class Pinned private[BspBeamSearch] (
       private[graft] val adjRdd: org.apache.spark.rdd.RDD[(Long, Array[Long])],
       private[graft] val vecs: PinnedVecs) {
     private[graft] def vecRdd = vecs.rdd
     private[graft] def part = vecs.part
     def release(): Unit = {
-      adjRdd.unpersist(blocking = false)
+      releaseAdj()
       vecs.release()
     }
-    /** Release only the adjacency half — for pins built with
-      * [[pinAdjOnto]] over a LONGER-LIVED shared vector pin (the repair
-      * loop's per-round pin: adjacency changes between rounds, vectors
-      * never do). */
+    /** Release only the adjacency half, for a pin made with
+      * [[pinAdjOnto]] over a vector pin that outlives it (the distributed
+      * build's: its adjacency changes between phases and repair rounds,
+      * its vectors never do). */
     def releaseAdj(): Unit = adjRdd.unpersist(blocking = false)
   }
 
   /** Pin `adj` + `vectors` for reuse across search() calls (see
-    * [[Pinned]]). Materializes both eagerly so the first search pays no
-    * hidden pin cost. The DataFrames passed to search() alongside this
-    * handle MUST be the same tables. */
+    * [[Pinned]]). The DataFrames passed to search() alongside this handle
+    * MUST be the same tables. */
   def pin(adj: DataFrame, vectors: DataFrame): Pinned =
     pinAdjOnto(adj, pinVectors(vectors))
 
-  /** Pin an adjacency onto an existing vector pin's layout; eager.
-    * Release via [[Pinned.releaseAdj]] when `vp` outlives this pin
-    * (e.g. the repair loop's shared vector pin), [[Pinned.release]]
+  /** Pin an adjacency onto an existing vector pin's layout. Lazy, like
+    * the vector pin: its first reader fills the cache. Release via
+    * [[Pinned.releaseAdj]] when `vp` outlives this pin, [[Pinned.release]]
     * when it does not. */
   def pinAdjOnto(adj: DataFrame, vp: PinnedVecs): Pinned = {
     val spark = adj.sparkSession
     import spark.implicits._
-    val adjRdd = adj
-      .select(col("src").cast("long"), col("nbrs").cast("array<long>"))
-      .as[(Long, Array[Long])].rdd
-      .partitionBy(vp.part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    adjRdd.count()
-    new Pinned(adjRdd, vp)
+    new Pinned(
+      adj.select(col("src").cast("long"), col("nbrs").cast("array<long>"))
+        .as[(Long, Array[Long])].rdd
+        .partitionBy(vp.part)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      vp)
   }
 
   /** Deterministic shared entry seeds — the `s` node ids with smallest
@@ -200,6 +192,12 @@ object BspBeamSearch {
     * @param extraSeeds   additional entry nodes seeded into every pool
     *                     (see [[pickSeeds]]); Nil preserves single-ep
     *                     behavior
+    * @param scope    takes the release of the final round's persisted
+    *                 state; the caller releases it after consuming the
+    *                 returned DataFrame
+    * @param pinned   a caller-owned pin of `adj` + `vectors`; without one
+    *                 the search pins both and releases them before it
+    *                 returns
     * @return [query_id, ids: array<long>, dists: array<double>] top-k
     */
   def search(adj: DataFrame, vectors: DataFrame, queries: DataFrame,
@@ -207,9 +205,8 @@ object BspBeamSearch {
              frontierWidth: Int = 4, maxRounds: Int = 64,
              excludeSelf: Boolean = false,
              extraSeeds: Seq[Long] = Nil,
-             scope: CpScope = null,
-             pinned: Option[Pinned] = None,
-             sharedVecs: Option[PinnedVecs] = None): DataFrame = {
+             scope: CpScope,
+             pinned: Option[Pinned] = None): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     require(!metric.needNormalize,
@@ -221,16 +218,12 @@ object BspBeamSearch {
     // round's joins against them are then NARROW (zero re-shuffle of the
     // n-row tables — the round-12 measured fix; see object doc). persist
     // MEMORY_AND_DISK: at 10M×200d the vector side is ~8 GB — storage
-    // overflow spills, it is never recomputed. A caller-supplied Pinned
-    // handle shares one pin across many searches (phase-2 batches).
-    // Ownership: a caller-supplied Pinned is released by the caller; with
-    // only sharedVecs (the repair loop: adjacency CHANGES between rounds
-    // but vectors never do) this call pins and releases the adj half and
-    // leaves the shared vector half alone.
-    val ownPin = pinned.isEmpty
-    val ownVecs = pinned.isEmpty && sharedVecs.isEmpty
-    val thePin = pinned.getOrElse(
-      pinAdjOnto(adj, sharedVecs.getOrElse(pinVectors(vectors))))
+    // overflow spills, it is never recomputed. Two ownership modes: a
+    // caller-supplied Pinned (shared across many searches, as the
+    // distributed build's phase-2 batches and repair slices share theirs)
+    // is released by the caller; otherwise this call pins both tables and
+    // releases them once its final state is materialized.
+    val thePin = pinned.getOrElse(pin(adj, vectors))
     val part = thePin.part
     val adjRdd = thePin.adjRdd
     val vecRdd = thePin.vecRdd
@@ -309,8 +302,7 @@ object BspBeamSearch {
     // lineage so a freed state is never a recompute dependency. The
     // initial state is persisted and materialized by the first job. Each
     // state is released exactly once; the final one's release goes to
-    // `scope` (the caller frees it after consuming the returned DF) or is
-    // leaked session-lifetime when no scope is given.
+    // `scope`, which the caller frees after consuming the returned DF.
     state.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // One round of one pool, shared by both round shapes below: its
@@ -452,15 +444,13 @@ object BspBeamSearch {
       done = converged >= 0
       round += (if (done) converged + 1 else n)
     }
-    // the final round's state is materialized (cut is eager), so the
-    // pin (the halves owned by this call) and the query broadcast are
-    // dead — freed here, not at scope release (search-internal)
-    if (ownPin) {
-      thePin.adjRdd.unpersist(blocking = false)
-      if (ownVecs) thePin.vecs.release()
-    }
+    // the final round's state is materialized (cut is eager), so an own
+    // pin and the query broadcast are dead — freed here, not at scope
+    // release (search-internal)
+    if (pinned.isEmpty) thePin.release()
     qvBc.destroy()
-    if (scope ne null) { val last = state; scope.add(() => last.unpersist(blocking = false)) }
+    val last = state
+    scope.add(() => last.unpersist(blocking = false))
 
     spark.createDataset(state.map { case (qid, pool) =>
       val top = (if (excludeSelf) pool.filter(_.id != qid) else pool).take(k)

@@ -226,10 +226,11 @@ object QueriesVector {
       .select(col("query_id"),
         transform(col("knn"), _("id").cast("int")).as("ids"),
         transform(col("knn"), _("dist").cast("float")).as("dists"))
-    // one file per call, so concurrent calls never share one; the read-back
-    // is collected before the file is deleted (the reader reads in tasks)
+    // one local temp file per call, so concurrent calls never share one;
+    // the read-back is collected before the file is deleted (the reader
+    // reads in tasks)
     val tmp = new org.apache.hadoop.fs.Path(
-      s"${sys.props("java.io.tmpdir")}/graft_gt_${java.util.UUID.randomUUID}.ibin")
+      java.nio.file.Files.createTempFile("graft_gt_", ".ibin").toUri)
     val back = try {
       graft.sources.FbinCodec.writeGtWithDist(
         gt.select(col("query_id").as("id"), col("ids"), col("dists")), tmp.toString)

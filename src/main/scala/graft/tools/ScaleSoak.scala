@@ -357,16 +357,18 @@ object ScaleSoak {
         val ts = System.nanoTime()
         val searchSeeds = graft.ops.graph.BspBeamSearch.pickSeeds(
           bIdx.adj, a.getOrElse("seeds", "32").toInt)
+        val searchScope = new graft.ops.graph.CpScope
         val res = graft.ops.graph.BspBeamSearch.search(bIdx.adj, bVecs, eval,
           k = 10, l = a.getOrElse("l", "100").toInt, ep = bIdx.ep, Metric.L2,
           frontierWidth = a.getOrElse("searchFw", "8").toInt,
           maxRounds = a.getOrElse("searchRounds", "256").toInt,
-          extraSeeds = searchSeeds)
+          extraSeeds = searchSeeds, scope = searchScope)
           .select(col("query_id"), col("ids")).cache()
         res.count()
         val searchSec = (System.nanoTime() - ts) / 1e9
         val recall = graft.eval.Eval.recallAtK(res, gt, 10)
           .head().getAs[Double]("recall_at_k")
+        searchScope.releaseAll()
         // the cap is the LAYOUT's, not this run's: a --searchOnly session
         // reads the build-time 3*mPjbp persisted in the bucketed meta
         // (None for layouts written before the meta carried it — then the

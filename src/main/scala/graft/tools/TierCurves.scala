@@ -210,15 +210,17 @@ object TierCurves {
       for ((l, seeds) <- bspGrid) {
         val extra = graft.ops.graph.BspBeamSearch.pickSeeds(di.adj, seeds)
         val t0 = System.nanoTime()
+        val scope = new graft.ops.graph.CpScope
         val res = graft.ops.graph.BspBeamSearch.search(di.adj, bVecs, eval,
           k = 10, l = l, ep = di.ep, di.metric,
           frontierWidth = a.getOrElse("searchFw", "8").toInt,
           maxRounds = a.getOrElse("searchRounds", "256").toInt,
-          extraSeeds = extra).cache()
+          extraSeeds = extra, scope = scope).cache()
         res.count()
         val sec = (System.nanoTime() - t0) / 1e9
         record("bsp", l, seeds, sec, recallOf(res), None, None)
         res.unpersist()
+        scope.releaseAll()
       }
     }
 

@@ -20,13 +20,15 @@ class BspBeamSearchSpec extends SparkSpec {
       BuildParams(mSq = 40, mPjbp = 12, lPjpq = 60, metric = Metric.L2))
 
     val adjDf = GraphIO.toDF(index)
+    val scope = new graft.ops.graph.CpScope
     val res = BspBeamSearch.search(adjDf, baseDf, queriesDf,
-      k = 10, l = 60, ep = index.ids(index.ep), Metric.L2)
+      k = 10, l = 60, ep = index.ids(index.ep), Metric.L2, scope = scope)
       .select(col("query_id"), col("ids"))
     val gt = KnnJoin(queriesDf, baseDf, 10, Metric.L2)
       .select(col("query_id"), transform(col("knn"), _("id")).as("ids"))
     val recall = graft.eval.Eval.recallAtK(res, gt, 10)
       .collect().head.getAs[Double]("recall_at_k")
+    scope.releaseAll()
     assert(recall >= 0.9, s"BSP recall@10 = $recall")
 
     // and it should be close to the broadcast kernel at the same beam width
@@ -71,11 +73,13 @@ class BspBeamSearchSpec extends SparkSpec {
       Seq(None -> "one partition", Some(spreadPin) -> "3 partitions").foreach {
         case (pin, layout) =>
           var batched: Seq[(Long, Seq[Long], Seq[Long])] = Nil
+          val scope = new graft.ops.graph.CpScope
           val (jobsBatched, _) = jobsAndShuffle {
             batched = rows(BspBeamSearch.search(adjDf, baseDf, queries, k = 10,
               l = 40, ep, Metric.L2, frontierWidth = fw, maxRounds = mr,
-              excludeSelf = ex, extraSeeds = xs, pinned = pin))
+              excludeSelf = ex, extraSeeds = xs, scope = scope, pinned = pin))
           }
+          scope.releaseAll()
           assert(batched == oracle, s"$layout, fw=$fw maxRounds=$mr")
           if (pin.isEmpty && mr > 8) assert(jobsBatched < jobsOracle,
             s"$layout, fw=$fw maxRounds=$mr: $jobsBatched jobs batched vs " +
@@ -97,18 +101,18 @@ class BspBeamSearchSpec extends SparkSpec {
     val adj = (chain ++ region ++ island ++ Seq((1020L, Seq(1100L))))
       .groupBy(_._1).toSeq.map { case (src, ls) => (src, ls.flatMap(_._2).distinct) }
       .toDF("src", "nbrs")
-    def ids(df: org.apache.spark.sql.DataFrame) = df.as[Long].collect().toSet
-    val oracle = ids(BspOracle.bfsReached(adj, 1000L, 3))
-    assert(oracle.size > 200 && !oracle.contains(1350L) && oracle.contains(9003L))
-    Seq(1, 3, 7).foreach { parts =>
+    // the BFS reads only the adjacency half of its pin
+    val noVecs = Seq.empty[(Long, Array[Float])].toDF("id", "vec")
+    def bfs(ep: Long, parts: Int): Set[Long] = {
+      val pin = BspOracle.spreadPin(adj, noVecs, parts)
       val scope = new graft.ops.graph.CpScope
-      val got = ids(graft.build.DistRoarGraphBuilder.bfsReached(adj, 1000L, parts, scope))
-      scope.releaseAll()
-      assert(got == oracle, s"partitions $parts")
+      try graft.build.DistRoarGraphBuilder.bfsReached(pin, ep, scope)(spark)
+        .as[Long].collect().toSet
+      finally { scope.releaseAll(); pin.release() }
     }
-    val scope = new graft.ops.graph.CpScope
-    assert(ids(graft.build.DistRoarGraphBuilder.bfsReached(adj, 7777L, 3, scope)) ==
-      Set(7777L))
-    scope.releaseAll()
+    val oracle = BspOracle.bfsReached(adj, 1000L, 3).as[Long].collect().toSet
+    assert(oracle.size > 200 && !oracle.contains(1350L) && oracle.contains(9003L))
+    Seq(1, 3, 7).foreach(parts => assert(bfs(1000L, parts) == oracle, s"partitions $parts"))
+    assert(bfs(7777L, 3) == Set(7777L))
   }
 }

@@ -126,7 +126,8 @@ object BspOracle {
 
   /** `BspBeamSearch.pin` over `numPartitions` hash partitions instead of
     * the size-derived count, so a small spec graph runs the multi-partition
-    * search path. The caller releases it. */
+    * search and BFS paths. Lazy like the engine's pins; the caller
+    * releases it. */
   def spreadPin(adj: DataFrame, vectors: DataFrame, numPartitions: Int): BspBeamSearch.Pinned = {
     import vectors.sparkSession.implicits._
     val part = new org.apache.spark.HashPartitioner(numPartitions)
@@ -134,7 +135,6 @@ object BspOracle {
       .as[(Long, Array[Float])].rdd
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    vecRdd.count()
     BspBeamSearch.pinAdjOnto(adj, new BspBeamSearch.PinnedVecs(vecRdd, part))
   }
 

@@ -123,11 +123,14 @@ class DistRoarGraphSpec extends SparkSpec {
       // and BSP search over the bucketed tables is result-identical
       val qs = queriesDf.limit(20)
       def run(adj: org.apache.spark.sql.DataFrame,
-              vecs: org.apache.spark.sql.DataFrame) =
-        graft.ops.graph.BspBeamSearch.search(adj, vecs, qs,
-          k = 10, l = 30, ep = dist.ep, graft.core.Metric.L2)
+              vecs: org.apache.spark.sql.DataFrame) = {
+        val scope = new graft.ops.graph.CpScope
+        try graft.ops.graph.BspBeamSearch.search(adj, vecs, qs,
+            k = 10, l = 30, ep = dist.ep, graft.core.Metric.L2, scope = scope)
           .select("query_id", "ids").as[(Long, Seq[Long])].collect()
           .toMap
+        finally scope.releaseAll()
+      }
       val plainRes = run(dist.adj, baseDf.select(col("id").cast("long"), col("vec")))
       val bucketedRes = run(bucketed.adj, bvecs)
       assert(plainRes == bucketedRes, "bucketed BSP results diverge")
@@ -245,7 +248,8 @@ class DistRoarGraphSpec extends SparkSpec {
       seen.size
     }
 
-    val broken = DistRoarGraphBuilder.build(b, t, p, repairReachability = false)
+    // the build honours BuildParams.repairReachability
+    val broken = DistRoarGraphBuilder.build(b, t, p.copy(repairReachability = false))
     val nBroken = reachableFrom(broken)
     assert(nBroken < 1500,
       s"corpus not disconnected ($nBroken/1500) — geometry no longer stresses repair")
@@ -258,20 +262,22 @@ class DistRoarGraphSpec extends SparkSpec {
     val maxDeg = fixed.adj.select(max(size(col("nbrs")))).head().getInt(0)
     assert(maxDeg <= cap, s"repair blew the degree cap: $maxDeg > $cap")
 
-    // convergence backstop (VERDICT r8 #3): with the beam rounds disabled
-    // (-Dgraft.repair.disableBeams — every pass "stalls" immediately), ALL
-    // repair work lands on the exact-kNN backstop, which must STILL
-    // reconnect every node of the same disconnected geometry under the
-    // same cap. This is the converges gate: repair no longer depends on
-    // beams finding the islands.
-    sys.props("graft.repair.disableBeams") = "true"
+    // convergence backstop (VERDICT r8 #3): the exact-kNN backstop step
+    // alone, run on the unrepaired build with no beam round before it,
+    // must STILL reconnect every node of the same disconnected geometry
+    // under the same cap. This is the converges gate: repair does not
+    // depend on beams finding the islands.
+    val vp = graft.ops.graph.BspBeamSearch.pinVectors(b)
+    val (state, left) = DistRoarGraphBuilder.exactBackstop(
+      DistRoarGraphBuilder.AdjState(broken.adj, vp), b, broken.ep,
+      p.metric, p.mPjbp)(spark)
     try {
-      val forced = DistRoarGraphBuilder.build(b, t, p)
-      assert(reachableFrom(forced) == 1500,
-        "exact backstop left unreachable nodes")
+      val forced = broken.copy(adj = state.adj.select("src", "nbrs"))
+      assert(left == 0 && reachableFrom(forced) == 1500,
+        s"exact backstop left unreachable nodes ($left)")
       val fDeg = forced.adj.select(max(size(col("nbrs")))).head().getInt(0)
       assert(fDeg <= cap, s"backstop blew the degree cap: $fDeg > $cap")
-    } finally sys.props -= "graft.repair.disableBeams"
+    } finally { state.pin.releaseAdj(); vp.release() }
   }
 
   test("repairLayout reconnects a damaged PERSISTED layout without rebuild") {

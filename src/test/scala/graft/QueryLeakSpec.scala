@@ -32,4 +32,26 @@ class QueryLeakSpec extends SparkSpec {
     QueriesAnn.queries("ann_pq200_codes")(spark, sf0001).collect()
     assert(held() == before, "ann_pq200_codes holds state after its call")
   }
+
+  test("a BSP search holds only its final state, until its scope is released") {
+    import spark.implicits._
+    // a ring of 64 points on a line; two queries between ring nodes
+    val vecs = (0L until 64L).map(i => (i, Array(i.toFloat, 0f))).toDF("id", "vec")
+    val adj = (0L until 64L).map(i => (i, Seq((i + 1) % 64, (i + 63) % 64)))
+      .toDF("src", "nbrs")
+    val qs = Seq((1000L, Array(10.2f, 0f)), (1001L, Array(40.7f, 0f))).toDF("id", "vec")
+    val cachedBefore = held()._1
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // ids, not counts: the context cleaner may drop an earlier suite's RDD
+    def added() = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val scope = new graft.ops.graph.CpScope
+    val top = graft.ops.graph.BspBeamSearch.search(adj, vecs, qs, k = 3, l = 8,
+        ep = 0L, graft.core.Metric.L2, scope = scope)
+      .select("query_id", "ids").as[(Long, Seq[Long])].collect().toMap
+    assert(top == Map(1000L -> Seq(10L, 11L, 9L), 1001L -> Seq(41L, 40L, 42L)))
+    assert(added().size == 1, s"after the search: ${added()} (the pins must be gone)")
+    scope.releaseAll()
+    assert(added().isEmpty, "the search's final state outlives its scope")
+    assert(held()._1 == cachedBefore)
+  }
 }
