@@ -1,13 +1,17 @@
 package graft.build
 
-import graft.core.{BuildParams, Metric, NeighborVec}
-import graft.functions.{TopKAggregator, VecMeanAggregator, VectorFunctions}
+import graft.core.{BuildParams, Metric, Neighbor, NeighborVec}
+import graft.functions.{TopKAggregator, VectorFunctions}
 import graft.ops.KnnJoin
-import graft.ops.graph.{BspBeamSearch, OcclusionPrune}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ops.graph.{BspBeamSearch, CpScope, OcclusionPrune}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** A RoarGraph index in distributed (DataFrame) form — the build product
   * of [[DistRoarGraphBuilder]]: adjacency stays a table, like the
@@ -36,25 +40,40 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   * model), NO phase here materializes vectors or adjacency on the driver
   * or in a broadcast: the only driver-side values are scalar aggregates
   * (the dim-length centroid, the entry-point id, per-round convergence
-  * flags). Every phase is keyed dataflow:
+  * flags).
   *
-  *   - phase 1 (G3/G7): kNN lists → (pivot, cand) edges → vector joins →
-  *     bounded per-pivot candidate aggregation (TopKAggregator.topKVec —
-  *     a hub pivot cannot blow up its group) → group-local occlusion prune;
-  *   - phase 1b/1c (G8/G5): reverse edges by explode, bounded per-node
-  *     reverse-candidate aggregation, deterministic merge + overflow
-  *     re-prune — the shuffle-keyed replacement for the reference's
-  *     per-node locks (include/index_bipartite.h:166);
+  * One pinned layout per build (the analogue of the reference's one
+  * in-RAM base store, include/efanna2e/index.h:59-63): the build pins its
+  * base vectors once, lazily, to one `HashPartitioner` (`VecPin`), and
+  * every step after the kNN input is an RDD pipeline on that partitioner,
+  * with no DataFrame plan between steps:
+  *
+  *   - phase 1 (G3/G7): kNN lists → (pivot, cand) edges, deduplicated where
+  *     their copies meet → the candidate's and the pivot's vectors by two
+  *     narrow pin lookups → a bounded per-pivot top-capC in the
+  *     [[graft.core.Neighbor]] order (`combineByKey` with the
+  *     [[TopKAggregator]] fold, so a hub pivot cannot blow up its group) →
+  *     occlusion prune;
+  *   - phase 1b/1c (G8/G5): the reverse merge — forward lists with their
+  *     neighbors' vectors, and bounded top-capRev reverse candidates scored
+  *     where they land, meet the node's own vector in ONE `cogroup` on the
+  *     pin's partitioner, then a deterministic merge + overflow re-prune
+  *     (the keyed replacement for the reference's per-node locks,
+  *     include/index_bipartite.h:166);
   *   - phase 2 (G6/G9/Q4): every base node beam-searches for itself via
-  *     the BSP frontier kernel over the frozen phase-1 graph (graph and
-  *     vectors remain DataFrames; the per-round dataflow is three keyed
-  *     joins), pool pruned per node, supply reverse merge capped at 2m
-  *     (G12), final merge adds ≤ 2m novel supply edges (:1251-1269).
+  *     the BSP frontier kernel over the frozen phase-1 graph, whose
+  *     adjacency pin IS the projection step (no shuffle); each node's
+  *     search pool gets its vectors by a pin lookup and is pruned; the
+  *     supply reverse merge is capped at 2m (G12), and one narrow `cogroup`
+  *     adds ≤ 2m novel supply edges to the projection (:1251-1269).
   *
-  * Candidate groups carry their vectors (NeighborVec) so occlusion
-  * pruning needs no global vector store. Results are deterministic (all
-  * group merges are (dist, id)-ordered); recall is gated by
-  * DistRoarGraphSpec.
+  * Each step ends in one persisted, localCheckpointed RDD and one count
+  * job ([[Cut]]), like BspBeamSearch's round states, and is released
+  * exactly once, after its last reader is itself cut. Candidate groups
+  * carry their vectors (NeighborVec) so occlusion pruning needs no global
+  * vector store. Results are deterministic (every merge is (dist,
+  * id)-ordered); each step equals its relational form (`DistBuildOracle`,
+  * src/test) list for list, and recall is gated by DistRoarGraphSpec.
   *
   * Reachability repair (the scalable analogue of the reference's
   * CollectPoints, src/index_bipartite.cpp:2587-2604, and of
@@ -79,17 +98,13 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   * pass bound is hit does repair exit unconverged — and then it says so
   * loudly (a `[dist-build] WARNING` line) instead of returning silently.
   *
-  * One pinned layout per build (the analogue of the reference's one
-  * in-RAM base store, include/efanna2e/index.h:59-63): the build pins its
-  * base vectors once, lazily, when the first phase that is not a
-  * checkpoint hit reads them; both reverse merges, the phase-2
-  * self-searches and pools, and every repair step read that pin, and it
-  * is released once, after repair. Each repair adjacency state is pinned
-  * once onto it ([[AdjState]]): the state's verify BFS and its beam round
-  * read the same pin, and a round's queries run as
-  * ceil(|unreached| / RepairQueryBatch) hash slices over it. Pins are
-  * lazy: making one costs only the vector pin's sizing count, and the
-  * first reader's job fills the cache.
+  * Repair runs on the same layout: each adjacency state ([[AdjState]]) is
+  * a step on the pin's partitioner and is its own adjacency pin, the
+  * unreached set is the vector pin zipped with the BFS's per-partition
+  * reached arrays, a round's hits merge per source in one narrow
+  * `cogroup` with the state, and the attached ids leave the unreached set
+  * by a zip with it. A round's queries run as ceil(|unreached| /
+  * RepairQueryBatch) hash slices of the unreached set.
   *
   * Job-count bound at scale: the BFS takes each partition to a local
   * fixpoint between exchanges and chains up to eight supersteps per job,
@@ -103,6 +118,35 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   */
 object DistRoarGraphBuilder {
 
+  /** (src, nbrs) rows of one adjacency step. */
+  private type Adj = RDD[(Long, Array[Long])]
+
+  /** A repair round's merged state row: (src, (nbrs, origCnt, the
+    * unreached ids it picked this round — the attached ids)). */
+  private[graft] type Absorbed = (Long, (Array[Long], Int, Array[Long]))
+
+  /** The end of one build step: `rdd` persisted, localCheckpointed and
+    * counted (`rows`) in one job — the way BspBeamSearch's round states
+    * end. localCheckpoint, not a DataFrame cut: the RDD keeps its
+    * partitioner, so the next step's `cogroup` or zip on the pin's layout
+    * stays narrow. Released exactly once, after every reader is itself
+    * cut. */
+  private[graft] final class Cut[T](val rdd: RDD[T], val rows: Long) {
+    def release(): Unit = rdd.unpersist(blocking = false)
+  }
+
+  private[graft] def cut[T](rdd: RDD[T]): Cut[T] = {
+    rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    rdd.localCheckpoint()
+    new Cut(rdd, rdd.count())
+  }
+
+  /** The slice of `id` among `n` id-hash slices: `pmod(xxhash64(id), n)`
+    * as Spark computes it on a long column, so slice membership, and
+    * every persisted `supply_b*` stage, is the relational slicing's. */
+  private[graft] def sliceOf(id: Long, n: Int): Int =
+    java.lang.Math.floorMod(XXH64.hashLong(id, 42L), n.toLong).toInt
+
   // checkpoint metadata resolves through the session's Hadoop FS (CpIO),
   // not java.io.File: stage data goes through Spark's Hadoop FS, so an
   // hdfs:// / s3a:// checkpointDir must probe the SAME filesystem or
@@ -111,40 +155,34 @@ object DistRoarGraphBuilder {
       (implicit spark: org.apache.spark.sql.SparkSession): Boolean =
     graft.core.CpIO.exists(s"$path/_SUCCESS")
 
-  /** Durable variant of [[graft.ops.graph.PlanUtil.cutDFReleasable]]: when a
-    * checkpoint dir is given, the stage's output is materialized as parquet
-    * under `dir/name` (the write IS the eager cut) and read back with a
-    * fresh lineage; a later build pointed at the same dir skips the stage's
-    * compute entirely (`_SUCCESS` gate — a kill mid-write leaves no marker,
-    * so overwrite-on-resume is safe). `df` is by-name: on a checkpoint hit
-    * the stage plan is never even constructed. Without a dir this is the
-    * in-session localCheckpoint cut, unchanged. At 100 TB a build is days
-    * of cluster work; this is what makes it PREEMPTIBLE — the same
-    * contract as Spark's own reliable checkpoint, but name-addressed so an
-    * entirely new driver JVM (a new cluster allocation) can resume.
-    *
-    * `hot = true` for stages that downstream code RE-SCANS many times
-    * (the phase-1 projection is read by every BSP round of every phase-2
-    * batch — maxRounds x batches passes): the parquet read is additionally
-    * cut into block-manager storage (persist-class, with a real release),
-    * so a checkpointed build pays parquet deserialization ONCE instead of
-    * per-pass, matching the uncheckpointed path's in-memory localCheckpoint
-    * cost. Single-scan stages keep the bare read — persisting them would
-    * only duplicate bytes. */
-  private def durableCut(dir: Option[String], name: String, hot: Boolean = false)
-                        (df: => DataFrame)
-                        (implicit spark: org.apache.spark.sql.SparkSession)
-      : (DataFrame, () => Unit) = dir match {
-    case None => graft.ops.graph.PlanUtil.cutDFReleasable(df)
-    case Some(d) =>
-      val path = s"$d/$name"
-      if (hasSuccess(path))
-        println(s"[dist-build] $name: checkpoint hit ($path)")
-      else
-        df.write.mode("overwrite").parquet(path)
-      if (hot) graft.ops.graph.PlanUtil.cutDFReleasable(spark.read.parquet(path))
-      else (spark.read.parquet(path), () => ())
-  }
+  /** Durable variant of [[cut]]: when a checkpoint dir is given, the
+    * step's (src, nbrs) output is written as parquet under `dir/name` and
+    * read back onto the pin's partitioner `part` as a fresh cut; a later
+    * build pointed at the same dir skips the step's compute entirely
+    * (`_SUCCESS` gate — a kill mid-write leaves no marker, so
+    * overwrite-on-resume is safe). `adj` is by-name: on a checkpoint hit
+    * the step is never even constructed. Without a dir this is the
+    * in-session cut, unchanged. At 100 TB a build is days of cluster work;
+    * this is what makes it PREEMPTIBLE — the same contract as Spark's own
+    * reliable checkpoint, but name-addressed so an entirely new driver JVM
+    * (a new cluster allocation) can resume. The read-back is cut into
+    * block-manager storage, so a stage that later steps re-scan (the
+    * phase-1 projection is read by every BSP round of every phase-2
+    * batch) pays parquet deserialization once. */
+  private def durableCut(dir: Option[String], name: String, part: => HashPartitioner)
+                        (adj: => Adj)
+                        (implicit spark: SparkSession): Cut[(Long, Array[Long])] =
+    dir match {
+      case None => cut(adj)
+      case Some(d) =>
+        import spark.implicits._
+        val path = s"$d/$name"
+        if (hasSuccess(path))
+          println(s"[dist-build] $name: checkpoint hit ($path)")
+        else
+          spark.createDataset(adj).toDF("src", "nbrs").write.mode("overwrite").parquet(path)
+        cut(spark.read.parquet(path).as[(Long, Array[Long])].rdd.partitionBy(part))
+    }
 
   /** Refuse to resume a checkpoint dir written under different build knobs
     * — stale stage outputs would silently corrupt the index. The corpus /
@@ -181,6 +219,40 @@ object DistRoarGraphBuilder {
     def release(): Unit = made.foreach(_.release())
   }
 
+  /** The base centroid (G22, :2004-2041) in one `runJob`: each partition
+    * sums its rows in double, in row order (as `VecMeanAggregator.reduce`
+    * builds its buffer), and the driver merges the partition sums in
+    * partition order — one job, and one value, on every run. A row of
+    * another length fails with a named error. */
+  private def centroidOf(baseN: DataFrame): Array[Float] = {
+    import baseN.sparkSession.implicits._
+    def addInto(sum: Array[Double], v: Int => Double, n: Int): Unit = {
+      if (n != sum.length) throw new IllegalArgumentException(
+        s"centroid: vector dimension mismatch (${sum.length} vs $n)")
+      var i = 0
+      while (i < n) { sum(i) += v(i); i += 1 }
+    }
+    val rows = baseN.select(col("vec")).as[Array[Float]].rdd
+    val parts = rows.sparkContext.runJob(rows, (it: Iterator[Array[Float]]) => {
+      var sum: Array[Double] = null
+      var n = 0L
+      it.foreach { v =>
+        if (sum == null) sum = v.map(_.toDouble) else addInto(sum, v(_), v.length)
+        n += 1
+      }
+      (sum, n)
+    })
+    var total: Array[Double] = null
+    var n = 0L
+    parts.foreach { case (sum, c) =>
+      if (sum != null) {
+        if (total == null) total = sum else addInto(total, sum(_), sum.length)
+        n += c
+      }
+    }
+    if (total == null) Array.empty else total.map(s => (s / n).toFloat)
+  }
+
   /** Build. `base`/`queries` expose (id, vec: array<float>);
     * `precomputedKnn`, if given, is [query_id, knn: array<long>] of
     * EXTERNAL base ids sorted by distance (the S5 LoadLearnBaseKNN input).
@@ -214,9 +286,9 @@ object DistRoarGraphBuilder {
     val scoreMetric = scoringMetric(metric)
     val baseN = lowered(base, metric).persist(StorageLevel.MEMORY_AND_DISK)
     val queriesN = lowered(queries, metric)
-    // the build's one vector pin: both reverse merges, the phase-2
-    // searches and pools, and every repair state read it
+    // the build's one vector pin: every step after the kNN input reads it
     val vecPin = new VecPin(baseN)
+    def part = vecPin.get().part
 
     // mergeBatches is deliberately NOT in the fingerprint: batched ==
     // unbatched merge is spec-gated result-identical, so stages persist
@@ -228,9 +300,9 @@ object DistRoarGraphBuilder {
         s"fw=$frontierWidth,mr=$maxRounds,seeds=$selfSearchSeeds," +
         s"p2b=$selfSearchBatches,kernel=${graft.core.CpIO.KernelVersion}"))
 
-    // per-phase wall clock: every phase boundary below is an EAGER
-    // PlanUtil.cut / BspBeamSearch round loop, so lap() deltas are real
-    // phase walls (the scale soak's phase table reads these lines)
+    // per-phase wall clock: every phase boundary below is an EAGER cut or
+    // a BspBeamSearch round loop, so lap() deltas are real phase walls
+    // (the scale soak's phase table and perfbench read these lines)
     var tMark = System.nanoTime()
     def lap(name: String): Unit = {
       val now = System.nanoTime()
@@ -240,15 +312,12 @@ object DistRoarGraphBuilder {
 
     // ---- entry point (G22, :2004-2041): centroid argmin under squared L2
     // (the reference hardcodes L2 here regardless of build metric). The
-    // centroid is a single dim-length aggregate row — the one value small
-    // enough to fold into a literal.
-    val centroid = baseN
-      .agg(VecMeanAggregator.meanVec(VectorFunctions.toDouble(col("vec")))
-        .as("c"))
-      .as[Seq[Double]].head().map(_.toFloat)
+    // centroid is a single dim-length value — the one value small enough
+    // to fold into a literal.
+    val centroid = centroidOf(baseN)
     val ep = baseN
       .select(col("id"),
-        VectorFunctions.l2Sq(col("vec"), typedLit(centroid)).as("d"))
+        VectorFunctions.l2Sq(col("vec"), typedLit(centroid.toSeq)).as("d"))
       .orderBy(col("d").asc, col("id").asc).limit(1)
       .select("id").as[Long].head()
     lap("centroid+ep")
@@ -258,52 +327,28 @@ object DistRoarGraphBuilder {
       KnnJoin(queriesN, baseN, params.mSq, scoreMetric)
         .select(col("query_id"), transform(col("knn"), _("id")).as("knn")))
 
-    val candVecs = baseN.select(col("id").as("cand"), col("vec").as("cvec"))
-    val pivotVecs = baseN.select(col("id").as("pivot"), col("vec").as("pvec"))
-
     // ---- phase 1 (G3, :1059-1097): pivot = 1-NN, rest of the kNN list =
     // pivot's forward candidates; occlusion-prune per pivot; then the
     // reverse sweep. One durable stage ("projection"): on a resume the
     // kNN input is not even read. ----
     val projHit = checkpointDir.exists(d => hasSuccess(s"$d/projection"))
     var phase1Release: () => Unit = () => ()
-    val (projection, relProjection) = durableCut(checkpointDir, "projection",
-        hot = true) { // BspBeamSearch re-scans this every round of every batch
-      val edges = knn
-        .filter(size(col("knn")) >= 2)
-        .select(col("knn")(0).as("pivot"),
-          explode(slice(col("knn"), lit(2), size(col("knn")) - 1)).as("cand"))
-        .filter(col("cand") =!= col("pivot"))
-        .distinct()
-      val capC = math.max(params.mSq, 4 * m)
-      val topCand = TopKAggregator.topKVec(capC)
-      val fwdLists = edges
-        .join(candVecs, "cand")
-        .join(pivotVecs, "pivot")
-        .select(col("pivot"), col("cand"),
-          VectorFunctions.distByMetric(scoreMetric)(col("pvec"), col("cvec")).as("d"),
-          col("cvec"))
-        .groupBy("pivot")
-        .agg(topCand(col("cand"), col("d"), col("cvec")).as("cands"))
-        .as[(Long, Array[NeighborVec])]
-        .map { case (pivot, cands) =>
-          (pivot, OcclusionPrune.pruneVecs(
-            cands.map(c => (c.id, c.dist, c.vec)), pivot, m, scoreMetric))
-        }.toDF("src", "nbrs")
-      val (fwdListsCut, relFwdLists) =
-        graft.ops.graph.PlanUtil.cutDFReleasable(fwdLists)
+    val projection = durableCut(checkpointDir, "projection", part) {
+      val vp = vecPin.get()
+      val fwd = cut(forwardLists(
+        knn.select(col("knn").cast("array<bigint>")).as[Array[Long]].rdd,
+        vp, scoreMetric, capC = math.max(params.mSq, 4 * m), m))
       lap("phase1-forward")
       // ---- phase 1b/1c (G8/G5): reverse sweep + overflow re-prune ----
       // (unbatched: phase-1 edge volume is |train|·mSq-bound, not n·m —
       // the train set is the small side by construction)
-      val (revMergedP1, relRevP1) = mergeReversePhase(fwdListsCut, baseN,
-        scoreMetric, appendCap = m, pruneTo = m, backfill = true,
-        capRev = 2 * m, finalCap = None, vp = vecPin.get())
-      // durableCut materializes revMergedP1 (parquet write or local cut)
-      // before the caller runs this release, so the ordering contract of
-      // cutReleasable holds
-      phase1Release = () => { relRevP1(); relFwdLists() }
-      revMergedP1
+      val (revMerged, relRev) = mergeReversePhase(fwd.rdd, vp, scoreMetric,
+        appendCap = m, pruneTo = m, backfill = true, capRev = 2 * m,
+        finalCap = None)
+      // durableCut materializes revMerged (parquet write or cut) before
+      // the caller runs this release
+      phase1Release = () => { relRev(); fwd.release() }
+      revMerged
     }
     phase1Release() // projection is materialized; phase-1 scratch is dead
     if (!projHit) lap("phase1-reverse")
@@ -312,7 +357,7 @@ object DistRoarGraphBuilder {
     // ---- phase 2 (G6, :1183-1276): BSP self-search over the frozen
     // phase-1 snapshot; pool prune (G9: strict pass, no backfill) ----
     val p2Seeds =
-      if (selfSearchSeeds > 0) BspBeamSearch.pickSeeds(projection, selfSearchSeeds)
+      if (selfSearchSeeds > 0) BspBeamSearch.pickSeedIds(projection.rdd.keys, selfSearchSeeds)
       else Nil
     // Self-search queries are independent over the frozen phase-1 snapshot,
     // so slicing them by id hash and searching slice-by-slice is EXACT —
@@ -322,83 +367,46 @@ object DistRoarGraphBuilder {
     // peak spill is one slice's rounds, not the whole corpus's. This is
     // the knob that bounds scratch-disk per executor at fixed cluster
     // size; batched == unbatched is spec-gated (DistRoarGraphSpec).
-    // The per-node supply-pool aggregation (explode + vec lookup +
-    // groupBy(src) + occlusion prune) runs INSIDE each batch rather than
-    // once over the union of all batches: a batch's query slice is a
-    // disjoint set of srcs (id-hash partition), so the per-batch
-    // groupBy(src) is complete for those srcs, and the batch's
-    // vec-carrying pool shuffle — the build's single largest scratch
-    // consumer: at 2M×128d×(32,48) the monolithic version left tens of
-    // GB of uncollected spill on disk, and the reverse supply-merge
-    // starting on top of it overflowed a ~90 GB single-box scratch
-    // (SCALE.md 2M rung, attempt 1) — is materialized to a small
+    // The per-node supply-pool step (vector lookup + per-src pool +
+    // occlusion prune) runs INSIDE each batch rather than once over the
+    // union of all batches: a batch's query slice is a disjoint set of
+    // srcs (id-hash slice), so the per-batch pools are complete for those
+    // srcs, and the batch's vec-carrying pool shuffle — the build's single
+    // largest scratch consumer: at 2M×128d×(32,48) the monolithic version
+    // left tens of GB of uncollected spill on disk, and the reverse
+    // supply-merge starting on top of it overflowed a ~90 GB single-box
+    // scratch (SCALE.md 2M rung, attempt 1) — is materialized to a small
     // (src, ≤m nbrs) cut and its scratch freed before the next batch
-    // starts. Peak scratch is one batch's pool shuffle, not the corpus's,
-    // and the merge phase starts with a clean disk.
-    // Candidate vectors attach via a NARROW lookup against the build's
-    // vector pin, not a join against the n-row table (the round-12
-    // ids-not-payloads fix at its third site, found when round 13's
-    // slower disk turned the boundary into the dominant batch cost):
-    // the per-batch sort-merge join re-shuffled all n vector rows
-    // (~14 GB × 192 batches ≈ 2.6 TB per build); now only the skinny
-    // (cand ← src,d) triples route to the pin's layout and the one
-    // remaining vec-carrying shuffle is the inherent |slice|·l pool
-    // aggregation.
-    var p2Pin: Option[BspBeamSearch.Pinned] = None
-    def supplyPools(ss: DataFrame): DataFrame = {
-      val skinny = ss
-        .select(col("query_id").as("src"),
-          explode(arrays_zip(col("dists"), col("ids"))).as("h"))
-        .select(col("h.ids").as("cand"), col("src"), col("h.dists").as("d"))
-        .as[(Long, Long, Double)].rdd
-        .map { case (cand, src, d) => (cand, (src, d)) }
-      val withVec = BspBeamSearch.lookupVec(skinny, vecPin.get())
-      spark.createDataset(
-          withVec.map { case (cand, (src, d), v) => (src, d, cand, v) })
-        .toDF("src", "d", "cand", "cvec")
-        .groupBy("src")
-        // pool is bounded by lPjpq per node — sort for determinism
-        .agg(sort_array(collect_list(struct(col("d"), col("cand"), col("cvec"))))
-          .as("pool"))
-        .as[(Long, Seq[(Double, Long, Array[Float])])]
-        .map { case (src, pool) =>
-          (src, OcclusionPrune.pruneVecs(
-            pool.map(t => (t._2, t._1, t._3)).toArray, src, m, scoreMetric,
-            backfill = false))
-        }.toDF("src", "nbrs")
-    }
-    // each batch is its own durable stage (supply_b<i>_of<B>): a build
+    // starts. Candidate vectors attach via a NARROW lookup against the
+    // build's vector pin, so only the skinny (cand ← src, d) triples route
+    // to the pin's layout and the one remaining vec-carrying shuffle is the
+    // inherent |slice|·l pool grouping.
+    // Each batch is its own durable stage (supply_b<i>_of<B>): a build
     // killed after batch i resumes at batch i+1 — at the 10M regime a
     // batch is tens of minutes, so this is the preemption granularity.
-    // One adjacency pin for ALL batches, onto the build's vector pin:
-    // every batch searches the same frozen phase-1 snapshot, so the n-row
-    // adjacency shuffle is paid once per build, not once per batch. Lazy:
-    // a resume whose every batch is a hit never builds it.
-    def batchSupply(queries: DataFrame, name: String): (DataFrame, () => Unit) = {
+    // Every batch searches the same frozen snapshot through one adjacency
+    // pin, and that pin is the projection step itself (already on the
+    // vector pin's partitioner): no adjacency shuffle at all.
+    lazy val p2Pin = BspBeamSearch.pinAdjRddOnto(projection.rdd, vecPin.get())
+    val batches = math.max(1, selfSearchBatches)
+    val batchCuts = (0 until batches).map { b =>
       var scopeRelease: () => Unit = () => ()
-      val cutRel = durableCut(checkpointDir, name) {
-        if (p2Pin.isEmpty) p2Pin = Some(BspBeamSearch.pinAdjOnto(projection, vecPin.get()))
-        val scope = new graft.ops.graph.CpScope
-        val ss = BspBeamSearch.search(
-          projection, baseN, queries, k = params.lPjpq, l = params.lPjpq,
-          ep, scoreMetric, frontierWidth, maxRounds, excludeSelf = true,
-          extraSeeds = p2Seeds, scope = scope, pinned = p2Pin)
+      val c = durableCut(checkpointDir, s"supply_b${b}_of$batches", part) {
+        val vp = vecPin.get()
+        val scope = new CpScope
+        val ss = BspBeamSearch.searchPinned(p2Pin,
+          if (batches == 1) vp.rdd else vp.rdd.filter(kv => sliceOf(kv._1, batches) == b),
+          k = params.lPjpq, l = params.lPjpq, ep, scoreMetric, frontierWidth,
+          maxRounds, excludeSelf = true, extraSeeds = p2Seeds, scope = scope)
         scopeRelease = () => scope.releaseAll()
-        supplyPools(ss)
+        supplyPools(ss, vp, scoreMetric, m)
       }
       scopeRelease() // this batch's pools are cut; its round states are dead
-      cutRel
+      c
     }
-    val batchCuts =
-      if (selfSearchBatches <= 1) Seq(batchSupply(baseN, "supply_b0_of1"))
-      else (0 until selfSearchBatches).map { b =>
-        batchSupply(baseN.filter(
-          pmod(xxhash64(col("id")), lit(selfSearchBatches)) === lit(b)),
-          s"supply_b${b}_of$selfSearchBatches")
-      }
-    val supplyFwdCut = batchCuts.map(_._1).reduce(_.unionByName(_))
-    val relSupplyFwd = () => batchCuts.foreach(_._2())
-    p2Pin.foreach(_.releaseAdj()) // every batch is cut; the phase-2 pin is dead
+    val supplyFwd: Adj =
+      if (batchCuts.size == 1) batchCuts.head.rdd
+      else spark.sparkContext.union(batchCuts.map(_.rdd))
     lap("phase2-selfsearch")
 
     // ---- supply reverse (G12 cap 2m) + overflow prune to m (G11), then
@@ -407,38 +415,101 @@ object DistRoarGraphBuilder {
     // shuffle family — so it takes the destination-hash batching knob
     // (mergeBatches) that bounds its live scratch to one slice's volume.
     var mergeRelease: () => Unit = () => ()
-    val (adjCut, relAdjCut) = durableCut(checkpointDir, "adj_merged") {
-      val (supplyMerged, relSupplyMergedB) = mergeReversePhase(supplyFwdCut,
-        baseN, scoreMetric, appendCap = 2 * m, pruneTo = m, backfill = false,
-        capRev = 2 * m, finalCap = Some(m), vp = vecPin.get(),
-        batches = mergeBatches)
-      mergeRelease = () => relSupplyMergedB()
-      // ---- merge ≤ 2m novel supply edges into the projection (:1251-1269) --
-      projection
-        .join(supplyMerged.withColumnRenamed("nbrs", "snbrs"), Seq("src"), "left")
-        .select(col("src"),
-          concat(col("nbrs"),
-            slice(filter(coalesce(col("snbrs"), array().cast("array<bigint>")),
-              x => !array_contains(col("nbrs"), x)), 1, 2 * m)).as("nbrs"))
+    val adjMerged = durableCut(checkpointDir, "adj_merged", part) {
+      val vp = vecPin.get()
+      val (supplyMerged, relSupplyMerged) = mergeReversePhase(supplyFwd, vp,
+        scoreMetric, appendCap = 2 * m, pruneTo = m, backfill = false,
+        capRev = 2 * m, finalCap = Some(m), batches = mergeBatches)
+      mergeRelease = relSupplyMerged
+      withSupply(projection.rdd, supplyMerged, 2 * m, vp.part)
     }
-    mergeRelease()     // merged adjacency is cut; per-slice merge blocks,
-    relSupplyFwd()     // supply pools, and the phase-1 projection are all
-    relProjection()    // dead
+    mergeRelease()                      // merged adjacency is cut; per-slice
+    batchCuts.foreach(_.release())      // merge blocks, supply pools and the
+    projection.release()                // phase-1 projection are all dead
     lap("phase2-supply-merge")
 
-    val repaired =
+    val adj: Adj =
       if (params.repairReachability) {
-        val r = repair(adjCut, baseN, ep, scoreMetric, m, frontierWidth,
-          maxRounds, vecPin.get())
-        relAdjCut() // repair's internal state is self-contained cuts
+        // repair owns adjMerged from here: it is the first repair state
+        val r = repair(AdjState(adjMerged, vecPin.get()), ep, scoreMetric, m,
+          frontierWidth, maxRounds)
         lap("repair")
         r
-      } else adjCut
+      } else adjMerged.rdd
 
-    vecPin.release() // every phase and repair state that read it is cut
+    vecPin.release() // every step and repair state that read it is cut
     baseN.unpersist()
-    DistIndex(repaired, ep, metric, Some(3 * params.mPjbp))
+    DistIndex(spark.createDataset(adj).toDF("src", "nbrs"), ep, metric,
+      Some(3 * params.mPjbp))
   }
+
+  /** Bounded per-key top-k in the [[Neighbor]] order: `combineByKey` with
+    * map-side combine over the [[TopKAggregator]] fold, so no buffer ever
+    * holds more than `k` rows of one key. Runs in place (no shuffle) when
+    * `rdd` already sits on `part`. */
+  private def topKByKey[T: ClassTag : Ordering](rdd: RDD[(Long, T)], k: Int,
+                                                part: HashPartitioner): RDD[(Long, Array[T])] =
+    rdd.combineByKey[Array[T]](
+      (t: T) => Array(t),
+      (buf: Array[T], t: T) => TopKAggregator.insert(buf, t, k),
+      (a: Array[T], b: Array[T]) => TopKAggregator.merge(a, b, k),
+      part)
+
+  /** Phase-1 forward lists (G3/G7): each kNN list's first id is the
+    * pivot, the rest its candidates. Every copy of a (pivot, cand) edge
+    * meets at the candidate's pin partition, where the first takes the
+    * candidate's vector on to the pivot's partition (the edge `distinct`);
+    * there each candidate is scored against the pivot, the pivot keeps its
+    * `capC` best in the Neighbor order, and the occlusion prune keeps ≤ m.
+    * Ids without a vector drop out, as under the inner join. */
+  private[graft] def forwardLists(knn: RDD[Array[Long]], vp: BspBeamSearch.PinnedVecs,
+                                  metric: Metric, capC: Int, m: Int): Adj = {
+    val edges = knn.flatMap { l =>
+      if (l == null || l.length < 2) Iterator.empty
+      else l.iterator.drop(1).filter(_ != l(0)).map(c => (c, l(0)))
+    }
+    val withCand = BspBeamSearch.lookupVec(edges, vp).mapPartitions { it =>
+      val seen = new java.util.HashSet[(Long, Long)]()
+      it.filter { case (c, p, _) => seen.add((c, p)) }
+        .map { case (c, p, cv) => (p, (c, cv)) }
+    }
+    val scored = BspBeamSearch.lookupVec(withCand, vp).mapPartitions(_.map {
+      case (p, (c, cv), pv) => (p, NeighborVec(c, metric.dist(pv, cv), cv))
+    }, preservesPartitioning = true)
+    topKByKey(scored, capC, vp.part).mapPartitions(_.map { case (p, cands) =>
+      (p, OcclusionPrune.pruneVecs(cands.map(c => (c.id, c.dist, c.vec)), p, m, metric))
+    }, preservesPartitioning = true)
+  }
+
+  /** Phase-2 supply pools: each node's self-search hits take their
+    * vectors by a pin lookup, group per src on the pin's partitioner, and
+    * the strict occlusion prune (no backfill) — which ranks the pool in
+    * the Neighbor order — keeps ≤ m. */
+  private[graft] def supplyPools(ss: RDD[(Long, Array[Long], Array[Double])],
+                                 vp: BspBeamSearch.PinnedVecs, metric: Metric,
+                                 m: Int): Adj =
+    BspBeamSearch.lookupVec(ss.flatMap { case (src, ids, ds) =>
+        ids.indices.iterator.map(i => (ids(i), (src, ds(i))))
+      }, vp)
+      .map { case (cand, (src, d), cv) => (src, (cand, d, cv)) }
+      .groupByKey(vp.part)
+      .mapPartitions(_.map { case (src, pool) =>
+        (src, OcclusionPrune.pruneVecs(pool.toArray, src, m, metric, backfill = false))
+      }, preservesPartitioning = true)
+
+  /** The projection with ≤ `cap` novel supply edges appended per src
+    * (:1251-1269), in one narrow `cogroup`: both sides sit on `part`. */
+  private def withSupply(projection: Adj, supply: Adj, cap: Int,
+                         part: HashPartitioner): Adj =
+    projection.cogroup(supply, part).mapPartitions(_.flatMap {
+      case (src, (ps, ss)) => ps.iterator.flatMap { nbrs =>
+        if (ss.isEmpty) Iterator.single((src, nbrs))
+        else {
+          val have = nbrs.toSet
+          ss.iterator.map(s => (src, nbrs ++ s.iterator.filter(x => !have.contains(x)).take(cap)))
+        }
+      }
+    }, preservesPartitioning = true)
 
   /** Post-hoc reachability repair of an ALREADY-BUILT layout — the
     * operational form of the build-time repair pass: verify reachability
@@ -457,7 +528,8 @@ object DistRoarGraphBuilder {
     * re-persists, e.g. GraphIO.saveDistBucketed). */
   def repairLayout(di: DistIndex, vectors: DataFrame,
                    frontierWidth: Int = 8, maxRounds: Int = 64): DistIndex = {
-    val spark = di.adj.sparkSession
+    implicit val spark: SparkSession = di.adj.sparkSession
+    import spark.implicits._
     val cap = di.degreeCap.getOrElse(sys.error(
       "repairLayout needs the layout's persisted degree cap (pre-cap " +
         "layouts carry none — rebuild or supply the cap by re-saving)"))
@@ -466,13 +538,11 @@ object DistRoarGraphBuilder {
     // the pin's sizing count fills baseN
     val baseN = lowered(vectors, di.metric).persist(StorageLevel.MEMORY_AND_DISK)
     val vecPin = new VecPin(baseN)
-    val adj0 = di.adj.select(col("src").cast("long"),
-      col("nbrs").cast("array<bigint>").as("nbrs"))
-    val repaired = repair(adj0, baseN, di.ep, scoringMetric(di.metric), cap / 3,
-      frontierWidth, maxRounds, vecPin.get())(spark)
+    val repaired = repair(AdjState(di.adj, vecPin.get()), di.ep,
+      scoringMetric(di.metric), cap / 3, frontierWidth, maxRounds)
     vecPin.release()
     baseN.unpersist()
-    di.copy(adj = repaired)
+    di.copy(adj = spark.createDataset(repaired).toDF("src", "nbrs"))
   }
 
   /** How many repair in-edges each unreached node asks for, and the cap
@@ -501,47 +571,56 @@ object DistRoarGraphBuilder {
   private val BfsMaxSteps = 96
   private val BfsStepsPerJob = 8
 
-  /** One repair adjacency state, (src, nbrs, origCnt) cut, and its one
-    * adjacency pin onto the build's vector pin: the state's verify BFS
-    * and its beam round read the same pin. */
-  private[graft] final class AdjState(val adj: DataFrame, relAdj: () => Unit,
-                                      vp: BspBeamSearch.PinnedVecs) {
-    val pin: BspBeamSearch.Pinned = BspBeamSearch.pinAdjOnto(adj.select("src", "nbrs"), vp)
-    /** The state after this one (a materialized cut); this one is dead. */
-    def next(adj2: DataFrame, rel2: () => Unit): AdjState = {
-      pin.releaseAdj(); relAdj()
-      new AdjState(adj2, rel2, vp)
+  /** One repair adjacency state: (src → (nbrs, origCnt)) rows, a view of
+    * one step on the vector pin's partitioner, and its adjacency pin — a
+    * view of the same blocks, so the state's verify BFS and beam round
+    * read them with no shuffle and no second copy. `release` frees the
+    * step the state is a view of. */
+  private[graft] final class AdjState private (
+      val rows: RDD[(Long, (Array[Long], Int))], release: () => Unit,
+      val vp: BspBeamSearch.PinnedVecs) {
+    val pin: BspBeamSearch.Pinned = BspBeamSearch.pinAdjRddOnto(adjacency, vp)
+    def adjacency: Adj = rows.mapValues(_._1)
+    /** The state after this one (a materialized step); this one is dead. */
+    def next(step: Cut[Absorbed]): AdjState = {
+      release()
+      new AdjState(step.rdd.mapValues(v => (v._1, v._2)), () => step.release(), vp)
     }
   }
   private[graft] object AdjState {
-    /** The first state: every edge of `adj0` is original (trim-eligible). */
+    /** The first state over a build step on `vp`'s partitioner, which the
+      * state now owns: every edge is original (trim-eligible). */
+    def apply(adj0: Cut[(Long, Array[Long])], vp: BspBeamSearch.PinnedVecs): AdjState =
+      new AdjState(adj0.rdd.mapValues(n => (n, n.length)), () => adj0.release(), vp)
+    /** The first state over a [src, nbrs] table (one shuffle onto the pin). */
     def apply(adj0: DataFrame, vp: BspBeamSearch.PinnedVecs): AdjState = {
-      val (a, rel) = graft.ops.graph.PlanUtil.cutDFReleasable(
-        adj0.select(col("src"), col("nbrs"), size(col("nbrs")).as("origCnt")))
-      new AdjState(a, rel, vp)
+      import adj0.sparkSession.implicits._
+      apply(cut(adj0.select(col("src").cast("long"), col("nbrs").cast("array<bigint>"))
+        .as[(Long, Array[Long])].rdd.partitionBy(vp.part)), vp)
     }
   }
 
-  /** Distributed BFS from `ep` over a pinned adjacency — returns the
-    * reached id set (`ep` included) as a DataFrame. Block-centric: each
-    * superstep takes every pin partition's newly arrived ids to a LOCAL
-    * fixpoint through the partition's own adjacency before one exchange
-    * routes the neighbors that live in other partitions to their owners.
-    * So supersteps scale with the cross-partition hops of the graph, not
-    * with its depth, and a graph that fits one partition is reached in
-    * one superstep. The first job runs one superstep; later jobs chain up
-    * to [[BfsStepsPerJob]] of them in one lazy lineage, each step
-    * persisted (the next reads it twice: its sent ids and its reached
-    * set) as one pair of primitive id arrays per partition, 8 bytes per
-    * reached id, and only the job's last step checkpointed. A step after
-    * the last exchange changes nothing, so the reached set does not
-    * depend on the batching. The pin stays the caller's. */
+  /** Distributed BFS from `ep` over a pinned adjacency — returns each pin
+    * partition's reached ids (`ep` included), one array per partition in
+    * the pin's partition order. Block-centric: each superstep takes every
+    * pin partition's newly arrived ids to a LOCAL fixpoint through the
+    * partition's own adjacency before one exchange routes the neighbors
+    * that live in other partitions to their owners. So supersteps scale
+    * with the cross-partition hops of the graph, not with its depth, and
+    * a graph that fits one partition is reached in one superstep. The
+    * first job runs one superstep; later jobs chain up to
+    * [[BfsStepsPerJob]] of them in one lazy lineage, each step persisted
+    * (the next reads it twice: its sent ids and its reached set) as one
+    * pair of primitive id arrays per partition, 8 bytes per reached id,
+    * and only the job's last step checkpointed. A step after the last
+    * exchange changes nothing, so the reached set does not depend on the
+    * batching. The pin stays the caller's; the final step's release goes
+    * to `scope`. */
   private[graft] def bfsReached(pin: BspBeamSearch.Pinned, ep: Long,
-                                scope: graft.ops.graph.CpScope)
-                               (implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
+                                scope: CpScope)
+                               (implicit spark: SparkSession): RDD[Array[Long]] = {
     // per partition: (the reached ids it owns, the ids it sends on)
-    type Step = org.apache.spark.rdd.RDD[(Array[Long], Array[Long])]
+    type Step = RDD[(Array[Long], Array[Long])]
     val part = pin.part
 
     // The sent ids of the previous step go to their owners, and each
@@ -593,22 +672,46 @@ object DistRoarGraphBuilder {
     }
     val fin = state
     scope.add(() => fin.unpersist(blocking = false)) // released post-consumption
-    spark.createDataset(fin.flatMap(_._1.iterator)).toDF("id")
+    fin.map(_._1)
   }
+
+  /** The pinned vectors the BFS reached (`wanted = true`) or did not: the
+    * vector pin zipped with the BFS's per-partition reached arrays. Both
+    * sit on the pin's partitioner, so this needs no shuffle. */
+  private def byReach(vp: BspBeamSearch.PinnedVecs, reached: RDD[Array[Long]],
+                      wanted: Boolean): RDD[(Long, Array[Float])] =
+    vp.rdd.zipPartitions(reached, preservesPartitioning = true) { (vit, rit) =>
+      val r = new java.util.HashSet[Long]()
+      rit.foreach(_.foreach(id => r.add(id)))
+      vit.filter(kv => r.contains(kv._1) == wanted)
+    }
+
+  /** `unreached` less the ids a round attached: the attached ids go to
+    * their own partition and leave the unreached set by a zip with it. */
+  private def unattached(unreached: RDD[(Long, Array[Float])], absorbed: RDD[Absorbed],
+                         part: HashPartitioner): RDD[(Long, Array[Float])] =
+    unreached.zipPartitions(
+      absorbed.flatMap(_._2._3.iterator.map(u => (u, ()))).partitionBy(part),
+      preservesPartitioning = true) { (uit, ait) =>
+      val gone = new java.util.HashSet[Long]()
+      ait.foreach(kv => gone.add(kv._1))
+      uit.filter(kv => !gone.contains(kv._1))
+    }
 
   /** Distributed reachability repair — see the class doc. Returns the
     * adjacency with repair in-edges merged, degree cap 3m preserved.
-    * Carries an `origCnt` column through the attach rounds (adjacency is
-    * always original-prefix ++ appended-repair-edges, so `origCnt` marks
-    * the trim-eligible prefix); trims happen only in a round that follows
-    * a stalled round, and any pass that trimmed is re-verified by a fresh
-    * BFS before repair reports done. `vp` stays the caller's. */
-  private def repair(adj0: DataFrame, baseN: DataFrame, ep: Long,
-                     metric: Metric, m: Int, frontierWidth: Int,
-                     maxRounds: Int, vp: BspBeamSearch.PinnedVecs)
-                    (implicit spark: SparkSession): DataFrame = {
+    * Carries an `origCnt` through the attach rounds (adjacency is always
+    * original-prefix ++ appended-repair-edges, so `origCnt` marks the
+    * trim-eligible prefix); trims happen only in a round that follows a
+    * stalled round, and any pass that trimmed is re-verified by a fresh
+    * BFS before repair reports done. Repair owns `s0`; the vector pin
+    * stays the caller's. */
+  private def repair(s0: AdjState, ep: Long, metric: Metric, m: Int,
+                     frontierWidth: Int, maxRounds: Int)
+                    (implicit spark: SparkSession): Adj = {
     val cap = 3 * m
-    var state = AdjState(adj0, vp)
+    val vp = s0.vp
+    var state = s0
     var remaining = 0L
     var pass = 0
     var done = false
@@ -618,12 +721,10 @@ object DistRoarGraphBuilder {
       // passes VERIFY the post-trim graph (trims can in principle orphan
       // a node whose only in-path ran through the trimmed edge)
       val tBfs0 = System.nanoTime()
-      val bfsScope = new graft.ops.graph.CpScope
-      val reached = bfsReached(state.pin, ep, bfsScope)
-      var (unreached, relUnreached) = graft.ops.graph.PlanUtil.cutDFReleasable(
-        baseN.select(col("id"), col("vec")).join(reached, Seq("id"), "left_anti"))
+      val bfsScope = new CpScope
+      var unreached = cut(byReach(vp, bfsReached(state.pin, ep, bfsScope), wanted = false))
       bfsScope.releaseAll() // unreached is cut; the BFS reached-set is dead
-      remaining = unreached.count()
+      remaining = unreached.rows
       println(f"[dist-build] repair pass $pass: verify-bfs " +
         f"${(System.nanoTime() - tBfs0) / 1e9}%.1f s, unreached $remaining")
       if (remaining == 0) done = true
@@ -643,30 +744,24 @@ object DistRoarGraphBuilder {
           // round's beams walk through them into the island interior).
           // The queries are hash slices of the unreached set over the
           // state's one pin (one unfiltered slice up to RepairQueryBatch).
-          val roundScope = new graft.ops.graph.CpScope
+          val roundScope = new CpScope
           val nb = ((remaining + RepairQueryBatch - 1) / RepairQueryBatch).toInt
           val hits = (0 until nb).map { b =>
-            BspBeamSearch.search(
-              state.adj, baseN,
-              if (nb == 1) unreached
-              else unreached.filter(pmod(xxhash64(col("id")), lit(nb)) === lit(b)),
+            BspBeamSearch.searchPinned(state.pin,
+              if (nb == 1) unreached.rdd
+              else unreached.rdd.filter(kv => sliceOf(kv._1, nb) == b),
               k = RepairC, l = math.max(16, 4 * RepairC), ep, metric,
-              frontierWidth, maxRounds, excludeSelf = true,
-              scope = roundScope, pinned = Some(state.pin))
-          }.reduce(_ unionByName _)
-          val (a2, relA2, attached, relAttached) =
-            absorbRound(state.adj, hits, cap, m, allowTrim)
-          state = state.next(a2, relA2) // merged adjacency is cut
-          locally {
-            val (u2, relU2) = graft.ops.graph.PlanUtil.cutDFReleasable(
-              unreached.join(attached, Seq("id"), "left_anti"))
-            relUnreached()
-            unreached = u2
-            relUnreached = relU2
+              frontierWidth, maxRounds, excludeSelf = true, extraSeeds = Nil,
+              scope = roundScope)
           }
-          roundScope.releaseAll() // beam states are dead: both consumers cut
-          relAttached()
-          val left = unreached.count()
+          val absorbed = absorbRound(state,
+            if (nb == 1) hits.head else spark.sparkContext.union(hits), cap, m, allowTrim)
+          state = state.next(absorbed) // merged adjacency is cut
+          val u2 = cut(unattached(unreached.rdd, absorbed.rdd, vp.part))
+          unreached.release()
+          unreached = u2
+          roundScope.releaseAll() // beam states are dead: their reader is cut
+          val left = unreached.rows
           // a trim round that attached anything may have trimmed (only
           // saturated sources trim; a stalled round changed nothing)
           if (ranWithTrim && left < remaining) trimmedThisPass = true
@@ -689,7 +784,7 @@ object DistRoarGraphBuilder {
           done = true
         unverifiedTrim = trimmedThisPass
       }
-      relUnreached() // pass is over; only the scalar `remaining` survives
+      unreached.release() // pass is over; only the scalar `remaining` survives
       pass += 1
     }
     // The exact backstop takes two exit states: (a) the pass bound was
@@ -697,16 +792,15 @@ object DistRoarGraphBuilder {
     // `remaining` possibly stale-zero); (b) the beam rounds
     // exhausted/stalled with residual orphans.
     if (remaining > 0 || (!done && unverifiedTrim)) {
-      val (s2, left) = exactBackstop(state, baseN, ep, metric, m)
+      val (s2, left) = exactBackstop(state, ep, metric, m)
       state = s2
       remaining = left
     }
-    state.pin.releaseAdj()
     if (remaining > 0)
       println(s"[dist-build] WARNING: reachability repair exiting with " +
         s"$remaining unreachable node(s) after $pass pass(es) — callers " +
         s"should not assume full connectivity")
-    state.adj.select("src", "nbrs")
+    state.adjacency
   }
 
   /** Convergence backstop of [[repair]] (VERDICT r8 #3): re-runs the
@@ -724,229 +818,175 @@ object DistRoarGraphBuilder {
     * driver inside KnnJoin's query blocks — bounded by the residue size,
     * not the corpus; the builder's no-driver-materialization contract is
     * about corpus-scale state. */
-  private[graft] def exactBackstop(s0: AdjState, baseN: DataFrame, ep: Long,
-                                   metric: Metric, m: Int)
+  private[graft] def exactBackstop(s0: AdjState, ep: Long, metric: Metric, m: Int)
                                   (implicit spark: SparkSession): (AdjState, Long) = {
+    import spark.implicits._
+    val vp = s0.vp
     var state = s0
     var remaining = 0L
     var fpass = 0
     var attach = true
     while (attach) {
-      val vScope = new graft.ops.graph.CpScope
+      val vScope = new CpScope
       val reached = bfsReached(state.pin, ep, vScope)
-      val (orphans, relOrphans) = graft.ops.graph.PlanUtil.cutDFReleasable(
-        baseN.select(col("id"), col("vec")).join(reached, Seq("id"), "left_anti"))
-      remaining = orphans.count()
+      val orphans = cut(byReach(vp, reached, wanted = false))
+      remaining = orphans.rows
       attach = remaining > 0 && fpass < RepairForcePasses
       if (attach) {
         println(s"[dist-build] repair backstop: exact-attaching $remaining " +
           s"orphan(s), pass ${fpass + 1}")
-        val (reachedV, relReachedV) = graft.ops.graph.PlanUtil.cutDFReleasable(
-          baseN.select(col("id"), col("vec")).join(reached, Seq("id")))
-        vScope.releaseAll() // both consumers of the BFS set are cut
-        val hits = KnnJoin(orphans, reachedV, RepairC, metric)
+        val hits = KnnJoin(spark.createDataset(orphans.rdd).toDF("id", "vec"),
+            spark.createDataset(byReach(vp, reached, wanted = true)).toDF("id", "vec"),
+            RepairC, metric)
           .select(col("query_id"),
-            transform(col("knn"), _("dist")).as("dists"),
-            transform(col("knn"), _("id")).as("ids"))
-        val (a2, relA2, _, relAttached) =
-          absorbRound(state.adj, hits, 3 * m, m, allowTrim = true)
-        state = state.next(a2, relA2)
-        relAttached(); relReachedV()
-      } else vScope.releaseAll()
-      relOrphans()
+            transform(col("knn"), _("id")).as("ids"),
+            transform(col("knn"), _("dist")).as("dists"))
+          .as[(Long, Array[Long], Array[Double])].rdd
+        state = state.next(absorbRound(state, hits, 3 * m, m, allowTrim = true))
+      }
+      vScope.releaseAll() // both readers of the BFS set are cut
+      orphans.release()
       fpass += 1
     }
     (state, remaining)
   }
 
   /** One bounded absorption round, shared by the beam repair rounds and
-    * the exact backstop. `hits` rows are (query_id, dists, ids): candidate
-    * source nodes per unreached node, nearest first. Sources absorb
-    * (dist, id)-deterministically into their free degree room; with
+    * the exact backstop. `hits` rows are (query_id, ids, dists): candidate
+    * source nodes per unreached node, nearest first. Each source keeps its
+    * 2m nearest picks in the Neighbor order (`combineByKey` with map-side
+    * combine), and one narrow `cogroup` with the state merges them: sources
+    * absorb (dist, id)-deterministically into their free degree room; with
     * `allowTrim`, a saturated source's allowance is raised to
     * min(origCnt, RepairC) so the merge can trim that many ORIGINAL tail
     * edges — never a repair edge (a repair edge is some node's only
-    * in-link). `adjCur` must carry (src, nbrs, origCnt). Returns the
-    * merged adjacency and the distinct attached node ids, both cut, with
-    * their release thunks (merged is materialized before return, so the
-    * caller may release the prior adjacency immediately). */
-  private def absorbRound(adjCur: DataFrame, hits: DataFrame, cap: Int,
-                          m: Int, allowTrim: Boolean)
-      : (DataFrame, () => Unit, DataFrame, () => Unit) = {
-    val spark = adjCur.sparkSession
-    import spark.implicits._
-    val topAttach = graft.functions.TopKAggregator.topK(2 * m)
-    val allowance =
-      if (allowTrim)
-        greatest(lit(cap) - col("deg"),
-          least(col("origCnt"), lit(RepairC)))
-      else greatest(lit(0), lit(cap) - col("deg"))
-    val kept = hits
-      .select(col("query_id").as("u"),
-        explode(arrays_zip(col("dists"), col("ids"))).as("h"))
-      .select(col("h.ids").as("src"), col("u"), col("h.dists").as("d"))
-      .groupBy("src")
-      .agg(topAttach(col("u"), col("d")).as("adds"))
-      .join(adjCur.select(col("src"), size(col("nbrs")).as("deg"),
-        col("origCnt")), "src")
-      .select(col("src"), slice(col("adds"), lit(1), allowance).as("adds"))
-      .filter(size(col("adds")) > 0)
-    val (attached, relAttached) = graft.ops.graph.PlanUtil.cutDFReleasable(
-      kept.select(explode(col("adds")("id")).as("id")).distinct())
-    val merged = adjCur
-      .join(kept.select(col("src"), col("adds")), Seq("src"), "left")
-      .as[(Long, Seq[Long], Int, Option[Seq[(Long, Double)]])]
-      .map { case (src, nbrs, origCnt, addsOpt) =>
+    * in-link). Returns the merged state as a cut step whose rows also
+    * carry the picks each source kept (the attached ids), so the caller may
+    * release the prior state at once. */
+  private[graft] def absorbRound(state: AdjState,
+                                 hits: RDD[(Long, Array[Long], Array[Double])],
+                                 cap: Int, m: Int, allowTrim: Boolean): Cut[Absorbed] = {
+    val part = state.vp.part
+    val picks = topKByKey(hits.flatMap { case (u, ids, ds) =>
+      ids.indices.iterator.map(i => (ids(i), Neighbor(u, ds(i))))
+    }, 2 * m, part)
+    cut(state.rows.cogroup(picks, part).mapPartitions(_.flatMap {
+      case (src, (sts, ps)) => sts.iterator.map { case (nbrs, origCnt) =>
+        val allowance =
+          if (allowTrim) math.max(cap - nbrs.length, math.min(origCnt, RepairC))
+          else math.max(0, cap - nbrs.length)
+        val kept = ps.iterator.flatten.take(allowance).map(_.id).toArray
         val have = nbrs.toSet
-        val adds = addsOpt.getOrElse(Seq.empty).map(_._1)
-          .filter(u => u != src && !have.contains(u)).distinct
-        val room = cap - nbrs.size
-        if (adds.size <= room) (src, nbrs ++ adds, origCnt)
+        val adds = kept.filter(u => u != src && !have.contains(u)).distinct
+        val room = cap - nbrs.length
+        if (adds.length <= room) (src, (nbrs ++ adds, origCnt, kept))
         else {
           // overflow ≤ allowance - room ≤ min(origCnt, RepairC), so
           // the original prefix always has room to give
-          val t = math.min(adds.size - math.max(room, 0), origCnt)
+          val t = math.min(adds.length - math.max(room, 0), origCnt)
           val kept2 = nbrs.take(origCnt - t) ++ nbrs.drop(origCnt)
-          (src, kept2 ++ adds.take(math.max(room, 0) + t), origCnt - t)
+          (src, (kept2 ++ adds.take(math.max(room, 0) + t), origCnt - t, kept))
         }
-      }.toDF("src", "nbrs", "origCnt")
-    val (a2, relA2) = graft.ops.graph.PlanUtil.cutDFReleasable(merged)
-    (a2, relA2, attached, relAttached)
+      }
+    }, preservesPartitioning = true))
   }
 
   /** Bulk reverse-edge merge (G8 ProjectionAddReverse / G12
-    * SupplyAddReverse, src/index_bipartite.cpp:1391-1432 / :1352-1389),
-    * fully keyed: forward lists keep their order (pos), reverse candidates
-    * arrive through a bounded (dist, id) top-`capRev` aggregation (a hub's
-    * reverse fan-in never exceeds the cap anywhere — not even in a task's
-    * aggregation buffer), and the per-node merge appends sorted reverse
-    * candidates while under `appendCap`, occlusion-pruning the union to
-    * `pruneTo` on overflow; `finalCap` applies the phase-2 post-pass
-    * re-prune. */
-  /** Reverse sweep + per-src merge (the G8/G10-G12 shapes). Returns the
-    * merged (src, nbrs) lists plus a release thunk for any per-slice
-    * checkpoint blocks (a no-op when unbatched).
+    * SupplyAddReverse, src/index_bipartite.cpp:1391-1432 / :1352-1389):
+    * forward lists keep their order, reverse candidates arrive through a
+    * bounded (dist, id) top-`capRev` fold (a hub's reverse fan-in never
+    * exceeds the cap anywhere — not even in a task's combine buffer), and
+    * the per-node merge appends sorted reverse candidates while under
+    * `appendCap`, occlusion-pruning the union to `pruneTo` on overflow;
+    * `finalCap` applies the phase-2 post-pass re-prune. Returns the merged
+    * (src, nbrs) lists on the pin's partitioner plus a release thunk for
+    * any per-slice cuts (a no-op when unbatched).
     *
-    * `batches` > 1 slices DESTINATION srcs by id hash and runs the sweep
-    * slice-by-slice. Every shuffle in here is keyed by `src` — the fwd
-    * explode's groupBy, the reverse swap's groupBy, and the final
-    * three-way join — so per-src results are independent and slicing is
+    * `batches` > 1 slices DESTINATION srcs by id hash ([[sliceOf]]) and
+    * runs the sweep slice-by-slice. Every step in here is keyed by the
+    * destination src, so per-src results are independent and slicing is
     * EXACT (spec-gated batched==unbatched, DistRoarGraphSpec). Why it
-    * exists: the sweep's live scratch is vec-carrying — fwd and reverse
-    * edges each haul a vecBytes vector into their groupBy, and rev lists
-    * of up to capRev vectors ride the final join — totalling
+    * exists: the sweep's live scratch is vec-carrying — forward and
+    * reverse edges each haul a vecBytes vector to their src, and reverse
+    * lists of up to capRev vectors ride the final cogroup — totalling
     * ~n·m·vecBytes·4 monolithically, the build's largest single-phase
     * disk demand once the forward pools are batched (MEASURED: 64 GB
     * accumulated in 90 s at 4M×200d×(24,32), SCALE.md 4M rung). Sliced,
-    * live scratch is one slice's volume: each slice materializes to an
-    * id-only (src, nbrs) cut before the next slice starts, and the dead
-    * slice's shuffle files are reclaimed by the ContextCleaner. On a
-    * cluster the same knob bounds per-executor scratch at fixed executor
-    * count.
-    *
-    * Every slice reads vectors through the build's pin `vp`: the slice
-    * joins used to re-shuffle the FULL n-row vector table three times PER
-    * SLICE (~6 TB of sort-merge input at 10M x mrb 256 — the same disease
-    * the round-12 BSP reshape fixed); with the pin, slices route only
-    * skinny edge ids and slice-bounded payload rows. */
-  private def mergeReversePhase(fwd: DataFrame, baseN: DataFrame,
+    * live scratch is one slice's volume: each slice is cut to id-only
+    * (src, nbrs) rows before the next slice starts, and the dead slice's
+    * shuffle files are reclaimed by the ContextCleaner. On a cluster the
+    * same knob bounds per-executor scratch at fixed executor count.
+    * Every slice reads vectors through the build's pin, so slices route
+    * only skinny edge ids and slice-bounded payload rows, never the n-row
+    * vector table. */
+  private def mergeReversePhase(fwd: Adj, vp: BspBeamSearch.PinnedVecs,
                                 metric: Metric, appendCap: Int, pruneTo: Int,
                                 backfill: Boolean, capRev: Int,
                                 finalCap: Option[Int],
-                                vp: BspBeamSearch.PinnedVecs,
-                                batches: Int = 1): (DataFrame, () => Unit) = {
+                                batches: Int = 1): (Adj, () => Unit) =
     if (batches <= 1)
-      (mergeReverseSlice(fwd, baseN, metric, appendCap, pruneTo, backfill,
-        capRev, finalCap, keepDst = lit(true), vp = vp), () => ())
+      (mergeReverseSlice(fwd, vp, metric, appendCap, pruneTo, backfill,
+        capRev, finalCap, _ => true), () => ())
     else {
       val cuts = (0 until batches).map { b =>
-        graft.ops.graph.PlanUtil.cutDFReleasable(
-          mergeReverseSlice(fwd, baseN, metric, appendCap, pruneTo, backfill,
-            capRev, finalCap,
-            keepDst = pmod(xxhash64(col("__dst")), lit(batches)) === lit(b),
-            vp = vp))
+        cut(mergeReverseSlice(fwd, vp, metric, appendCap, pruneTo, backfill,
+          capRev, finalCap, id => sliceOf(id, batches) == b))
       }
-      (cuts.map(_._1).reduce(_.unionByName(_)), () => cuts.foreach(_._2()))
+      (fwd.sparkContext.union(cuts.map(_.rdd)), () => cuts.foreach(_.release()))
     }
-  }
 
-  /** One destination slice of [[mergeReversePhase]]. `keepDst` is a
-    * predicate over a column named `__dst` holding the destination src id
-    * at each of the three filter sites. */
-  private def mergeReverseSlice(fwd: DataFrame, baseN: DataFrame,
-                                metric: Metric, appendCap: Int, pruneTo: Int,
-                                backfill: Boolean, capRev: Int,
-                                finalCap: Option[Int],
-                                keepDst: Column,
-                                vp: BspBeamSearch.PinnedVecs): DataFrame = {
-    val spark = fwd.sparkSession
-    import spark.implicits._
-    val mtr = metric
-    def dstFilter(df: DataFrame, dstCol: String): DataFrame = df
-      .withColumn("__dst", col(dstCol)).where(keepDst).drop("__dst")
-
-    // forward edges: skinny (other → (src, pos)) ids routed to the pin,
-    // vector attached where it lives, payload rows are slice-bounded
-    val fwdE = spark.createDataset(
+  /** One destination slice of [[mergeReversePhase]]; `keep` selects the
+    * destination srcs. Three sides meet in ONE `cogroup` on the pin's
+    * partitioner: the node's own vector (the pin), its forward list with
+    * each neighbor's vector (routed to the neighbor's partition and back),
+    * and its bounded reverse candidates — the list owner's vector is
+    * local to its list (`fwd` sits on the pin's partitioner), each
+    * (owner → node) edge carries it to the node's partition, and it is
+    * scored there with the same `Metric.dist`. */
+  private[graft] def mergeReverseSlice(fwd: Adj, vp: BspBeamSearch.PinnedVecs,
+                                       metric: Metric, appendCap: Int, pruneTo: Int,
+                                       backfill: Boolean, capRev: Int,
+                                       finalCap: Option[Int],
+                                       keep: Long => Boolean): Adj = {
+    val fwdSide = BspBeamSearch.lookupVec(fwd.flatMap { case (src, nbrs) =>
+        if (!keep(src)) Iterator.empty
+        else nbrs.iterator.zipWithIndex.map { case (o, pos) => (o, (src, pos)) }
+      }, vp)
+      .map { case (o, (src, pos), ov) => (src, (pos, o, ov)) }
+    val revSide = topKByKey(
       BspBeamSearch.lookupVec(
-        dstFilter(fwd, "src")
-          .select(col("src"), posexplode(col("nbrs")).as(Seq("pos", "other")))
-          .as[(Long, Int, Long)].rdd
-          .map { case (src, pos, other) => (other, (src, pos)) }, vp)
-        .map { case (other, (src, pos), ovec) => (src, pos, other, ovec) })
-      .toDF("src", "pos", "other", "ovec")
-      .groupBy("src")
-      .agg(sort_array(collect_list(struct(col("pos"), col("other"), col("ovec"))))
-        .as("fwdl"))
+        BspBeamSearch.lookupVec(fwd, vp).flatMap { case (o, nbrs, ov) =>
+          nbrs.iterator.filter(keep).map(n => (n, (o, ov)))
+        }, vp)
+        .mapPartitions(_.map { case (n, (o, ov), nv) =>
+          (n, NeighborVec(o, metric.dist(nv, ov), ov))
+        }, preservesPartitioning = true),
+      capRev, vp.part)
 
-    // reverse candidates: two narrow lookups (other's vector at its
-    // partition, then src's vector at its partition) and the distance
-    // computed right there — Metric.dist accumulates in double exactly
-    // like the Catalyst expression this replaces (the engine-wide shared
-    // float64 contract, Types.scala), so results are bit-identical
-    val topRev = TopKAggregator.topKVec(capRev)
-    val revE = spark.createDataset(
-      BspBeamSearch.lookupVec(
-        BspBeamSearch.lookupVec(
-          dstFilter(
-            fwd.select(col("src").as("other"), explode(col("nbrs")).as("src")),
-            "src")
-            .select(col("other"), col("src")) // fix positional order
-            .as[(Long, Long)].rdd, vp) // keyed by other → ovec
-          .map { case (other, src, ovec) => (src, (other, ovec)) }, vp)
-        .map { case (src, (other, ovec), svec) =>
-          (src, other, mtr.dist(svec, ovec), ovec)
-        })
-      .toDF("src", "other", "d", "ovec")
-      .groupBy("src")
-      .agg(topRev(col("other"), col("d"), col("ovec")).as("revl"))
-
-    dstFilter(baseN, "id").select(col("id").as("src"), col("vec").as("svec"))
-      .join(fwdE, Seq("src"), "left")
-      .join(revE, Seq("src"), "left")
-      .as[(Long, Array[Float], Option[Seq[(Int, Long, Array[Float])]],
-        Option[Seq[NeighborVec]])]
-      .map { case (src, svec, fwdlOpt, revlOpt) =>
-        val fwdl = fwdlOpt.getOrElse(Seq.empty)
-        val fwdIds = fwdl.map(_._2).toArray
-        val have = fwdIds.toSet
-        val rev = revlOpt.getOrElse(Seq.empty)
-          .filter(r => r.id != src && !have.contains(r.id))
-        val fwdTriples = fwdl.map(t => (t._2, metric.dist(svec, t._3), t._3))
-        val revTriples = rev.map(r => (r.id, r.dist, r.vec))
-        val ids: Array[Long] =
-          if (fwdIds.length + revTriples.length <= appendCap)
-            fwdIds ++ revTriples.map(_._1)
-          else OcclusionPrune.pruneVecs(
-            (fwdTriples ++ revTriples).toArray, src, pruneTo, metric, backfill)
-        val finalIds = finalCap match {
-          case Some(c) if ids.length > c =>
-            val byId = (fwdTriples ++ revTriples).map(t => (t._1, t)).toMap
-            OcclusionPrune.pruneVecs(ids.flatMap(byId.get(_)).toArray, src, c,
-              metric, backfill = false)
-          case _ => ids
+    vp.rdd.filter(kv => keep(kv._1)).cogroup(fwdSide, revSide, vp.part)
+      .mapPartitions(_.flatMap { case (src, (svecs, fwdIt, revIt)) =>
+        svecs.iterator.map { svec =>
+          val fwdl = fwdIt.toArray.sortBy(t => (t._1, t._2))
+          val fwdIds = fwdl.map(_._2)
+          val have = fwdIds.toSet
+          val rev = revIt.iterator.flatten
+            .filter(r => r.id != src && !have.contains(r.id)).toArray
+          val fwdTriples = fwdl.map(t => (t._2, metric.dist(svec, t._3), t._3))
+          val revTriples = rev.map(r => (r.id, r.dist, r.vec))
+          val ids: Array[Long] =
+            if (fwdIds.length + revTriples.length <= appendCap)
+              fwdIds ++ revTriples.map(_._1)
+            else OcclusionPrune.pruneVecs(fwdTriples ++ revTriples, src,
+              pruneTo, metric, backfill)
+          val finalIds = finalCap match {
+            case Some(c) if ids.length > c =>
+              val byId = (fwdTriples ++ revTriples).map(t => (t._1, t)).toMap
+              OcclusionPrune.pruneVecs(ids.flatMap(byId.get(_)), src, c,
+                metric, backfill = false)
+            case _ => ids
+          }
+          (src, finalIds)
         }
-        (src, finalIds)
-      }.toDF("src", "nbrs")
+      }, preservesPartitioning = true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.core.{Neighbor, NeighborVec}
+import graft.core.Neighbor
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
@@ -16,11 +16,12 @@ import scala.reflect.runtime.universe.TypeTag
   *
   * Generic over the ranked row: [[Neighbor]] for plain (id, dist) top-ks,
   * [[NeighborVec]] for the distributed graph build, where the candidate's
-  * vector rides along for the downstream occlusion prune. There the
-  * per-partition cap also keeps a node with a huge reverse fan-in (a hub)
-  * from blowing up its group buffer, unlike a plain `collect_list`.
+  * vector rides along for the downstream occlusion prune. The build folds
+  * with the same [[TopKAggregator.insert]] and [[TopKAggregator.merge]]
+  * in `combineByKey`, so its per-key cap also keeps a node with a huge
+  * fan-in (a hub) from blowing up its buffer, unlike a plain group.
   * Usable as a typed `Dataset` aggregate or registered for DataFrame/SQL
-  * via `functions.udaf` ([[TopKAggregator.topK]], [[TopKAggregator.topKVec]]). */
+  * via `functions.udaf` ([[TopKAggregator.topK]]). */
 final class TopKAggregator[T: ClassTag](k: Int, arrayEncoder: Encoder[Array[T]])(
     implicit ord: Ordering[T]) extends Aggregator[T, Array[T], Array[T]] {
   require(k > 0, s"k must be positive: $k")
@@ -28,7 +29,21 @@ final class TopKAggregator[T: ClassTag](k: Int, arrayEncoder: Encoder[Array[T]])
   override def zero: Array[T] = Array.empty[T]
 
   /** Buffers stay sorted ascending and bounded by k. */
-  override def reduce(buf: Array[T], n: T): Array[T] =
+  override def reduce(buf: Array[T], n: T): Array[T] = TopKAggregator.insert(buf, n, k)
+
+  override def merge(a: Array[T], b: Array[T]): Array[T] = TopKAggregator.merge(a, b, k)
+
+  override def finish(r: Array[T]): Array[T] = r
+  override def bufferEncoder: Encoder[Array[T]] = arrayEncoder
+  override def outputEncoder: Encoder[Array[T]] = arrayEncoder
+}
+
+object TopKAggregator {
+  /** `buf` (sorted ascending, at most k long) with `n` inserted, still
+    * sorted and bounded by k. The reduce of the aggregate, and the
+    * per-key fold of the RDD steps that keep a bounded top-k
+    * (`combineByKey` in the distributed graph build). */
+  def insert[T: ClassTag](buf: Array[T], n: T, k: Int)(implicit ord: Ordering[T]): Array[T] =
     if (buf.length == k && ord.lteq(buf(k - 1), n)) buf
     else {
       val out = new Array[T](math.min(buf.length + 1, k))
@@ -44,8 +59,8 @@ final class TopKAggregator[T: ClassTag](k: Int, arrayEncoder: Encoder[Array[T]])
       out
     }
 
-  override def merge(a: Array[T], b: Array[T]): Array[T] = {
-    // merge two sorted bounded arrays — O(k)
+  /** Two sorted bounded buffers merged into one, bounded by k — O(k). */
+  def merge[T: ClassTag](a: Array[T], b: Array[T], k: Int)(implicit ord: Ordering[T]): Array[T] = {
     val out = new Array[T](math.min(a.length + b.length, k))
     var i = 0; var j = 0; var o = 0
     while (o < out.length) {
@@ -57,12 +72,6 @@ final class TopKAggregator[T: ClassTag](k: Int, arrayEncoder: Encoder[Array[T]])
     out
   }
 
-  override def finish(r: Array[T]): Array[T] = r
-  override def bufferEncoder: Encoder[Array[T]] = arrayEncoder
-  override def outputEncoder: Encoder[Array[T]] = arrayEncoder
-}
-
-object TopKAggregator {
   def apply(k: Int): TopKAggregator[Neighbor] = of[Neighbor](k)
 
   def of[T <: Product : ClassTag : TypeTag : Ordering](k: Int): TopKAggregator[T] =
@@ -72,9 +81,4 @@ object TopKAggregator {
   def topK(k: Int): UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(apply(k), Encoders.product[Neighbor])
 
-  /** DataFrame-level aggregate over (id: long, dist: double,
-    * vec: array<float>) columns. */
-  def topKVec(k: Int): UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(of[NeighborVec](k),
-      Encoders.product[NeighborVec])
 }

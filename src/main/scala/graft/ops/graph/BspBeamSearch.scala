@@ -108,16 +108,19 @@ object BspBeamSearch {
   }
 
   /** Narrow keyed vector lookup against a pin: routes the skinny
-    * (id, payload) rows to the pin's layout (one small shuffle), then
-    * hash-joins each partition against its resident vector slice — the
-    * n-row table never re-shuffles. Rows whose id has no vector are
-    * dropped (the inner-join semantic every caller had). */
+    * (id, payload) rows to the pin's layout (one small shuffle, none when
+    * `rdd` already sits on the pin's partitioner), then hash-joins each
+    * partition against its resident vector slice — the n-row table never
+    * re-shuffles. Rows whose id has no vector are dropped (the inner-join
+    * semantic every caller had). The output stays on the pin's
+    * partitioner, keyed by the looked-up id, so a per-id step after it
+    * (`combineByKey` or `cogroup` on `vp.part`) needs no shuffle. */
   private[graft] def lookupVec[T](
       rdd: org.apache.spark.rdd.RDD[(Long, T)], vp: PinnedVecs)(
       implicit ct: scala.reflect.ClassTag[T])
       : org.apache.spark.rdd.RDD[(Long, T, Array[Float])] =
     rdd.partitionBy(vp.part)
-      .zipPartitions(vp.rdd, preservesPartitioning = false) { (eit, vit) =>
+      .zipPartitions(vp.rdd, preservesPartitioning = true) { (eit, vit) =>
         val vecs = new java.util.HashMap[Long, Array[Float]]()
         vit.foreach { case (id, v) => vecs.put(id, v) }
         eit.flatMap { case (k, t) =>
@@ -133,7 +136,8 @@ object BspBeamSearch {
     * every batch). The caller owns the release. */
   final class Pinned private[BspBeamSearch] (
       private[graft] val adjRdd: org.apache.spark.rdd.RDD[(Long, Array[Long])],
-      private[graft] val vecs: PinnedVecs) {
+      private[graft] val vecs: PinnedVecs,
+      ownsAdj: Boolean = true) {
     private[graft] def vecRdd = vecs.rdd
     private[graft] def part = vecs.part
     def release(): Unit = {
@@ -144,7 +148,7 @@ object BspBeamSearch {
       * [[pinAdjOnto]] over a vector pin that outlives it (the distributed
       * build's: its adjacency changes between phases and repair rounds,
       * its vectors never do). */
-    def releaseAdj(): Unit = adjRdd.unpersist(blocking = false)
+    def releaseAdj(): Unit = if (ownsAdj) adjRdd.unpersist(blocking = false)
   }
 
   /** Pin `adj` + `vectors` for reuse across search() calls (see
@@ -160,13 +164,20 @@ object BspBeamSearch {
   def pinAdjOnto(adj: DataFrame, vp: PinnedVecs): Pinned = {
     val spark = adj.sparkSession
     import spark.implicits._
-    new Pinned(
+    pinAdjRddOnto(
       adj.select(col("src").cast("long"), col("nbrs").cast("array<long>"))
-        .as[(Long, Array[Long])].rdd
-        .partitionBy(vp.part)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      vp)
+        .as[(Long, Array[Long])].rdd, vp)
   }
+
+  /** [[pinAdjOnto]] for an adjacency RDD. One already on the vector pin's
+    * partitioner (a persisted build step) is the pin as it is: no shuffle
+    * and no second copy, and [[Pinned.releaseAdj]] leaves its blocks to
+    * their owner. */
+  private[graft] def pinAdjRddOnto(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
+                                   vp: PinnedVecs): Pinned =
+    if (adj.partitioner.contains(vp.part)) new Pinned(adj, vp, ownsAdj = false)
+    else new Pinned(adj.partitionBy(vp.part)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), vp)
 
   /** Deterministic shared entry seeds — the `s` node ids with smallest
     * (xxhash64(id), id): uniform over the id universe regardless of
@@ -176,10 +187,16 @@ object BspBeamSearch {
     * entry point strands the beam in one region; a shared set keeps the
     * driver-side state a bounded id list (the same scalar class as the
     * entry point itself). */
-  def pickSeeds(nodes: DataFrame, s: Int, idCol: String = "src"): Seq[Long] =
-    nodes.select(col(idCol).cast("long").as("id"))
-      .orderBy(xxhash64(col("id")), col("id")).limit(s)
-      .collect().map(_.getLong(0)).toSeq
+  def pickSeeds(nodes: DataFrame, s: Int, idCol: String = "src"): Seq[Long] = {
+    import nodes.sparkSession.implicits._
+    pickSeedIds(nodes.select(col(idCol).cast("long")).as[Long].rdd, s)
+  }
+
+  /** [[pickSeeds]] over an id RDD, in one `takeOrdered` job.
+    * `XXH64.hashLong(id, 42)` is Spark's `xxhash64` of a long column. */
+  private[graft] def pickSeedIds(ids: org.apache.spark.rdd.RDD[Long], s: Int): Seq[Long] =
+    ids.takeOrdered(s)(Ordering.by((id: Long) =>
+      (org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L), id))).toSeq
 
   /** @param adj      [src: long, nbrs: array<long>]
     * @param vectors  [id: long, vec: array<float>]
@@ -212,8 +229,6 @@ object BspBeamSearch {
     require(!metric.needNormalize,
       "BSP search expects pre-normalized inputs for cosine (normalize-then-IP)")
 
-    val qvecs = queries.select(col("id").cast("long").as("qid"), col("vec").as("qvec"))
-
     // Pin the big sides to one partitioner for the whole search: every
     // round's joins against them are then NARROW (zero re-shuffle of the
     // n-row tables — the round-12 measured fix; see object doc). persist
@@ -224,6 +239,51 @@ object BspBeamSearch {
     // is released by the caller; otherwise this call pins both tables and
     // releases them once its final state is materialized.
     val thePin = pinned.getOrElse(pin(adj, vectors))
+    // every pool starts as {ep} ∪ extraSeeds (seed vectors are a bounded
+    // driver-side list, the same scalar class as epVec)
+    val seedIds = (ep +: extraSeeds).distinct
+    val seedVecs = vectors.filter(col("id").isin(seedIds: _*))
+      .select(col("id").cast("long"), col("vec"))
+      .as[(Long, Array[Float])].collect().toMap
+    val out = rounds(thePin,
+      queries.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])].rdd,
+      k, l, ep, seedIds, seedVecs, metric, frontierWidth, maxRounds, excludeSelf, scope)
+    // the final round's state is materialized (cut is eager), so an own
+    // pin is dead — freed here, not at scope release (search-internal)
+    if (pinned.isEmpty) thePin.release()
+    spark.createDataset(out).toDF("query_id", "ids", "dists")
+  }
+
+  /** [[search]] over a caller-owned pin, in RDD form: `queries` are
+    * (id, vec) rows, the seeds' vectors come from the pin, and the result
+    * is (query_id, ids, dists) rows. The final state's release goes to
+    * `scope`. The distributed build's steps call this, so no DataFrame
+    * plan sits between them. */
+  private[graft] def searchPinned(pin: Pinned,
+                                  queries: org.apache.spark.rdd.RDD[(Long, Array[Float])],
+                                  k: Int, l: Int, ep: Long, metric: Metric,
+                                  frontierWidth: Int, maxRounds: Int,
+                                  excludeSelf: Boolean, extraSeeds: Seq[Long],
+                                  scope: CpScope)
+      : org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Double])] = {
+    require(!metric.needNormalize,
+      "BSP search expects pre-normalized inputs for cosine (normalize-then-IP)")
+    val seedIds = (ep +: extraSeeds).distinct
+    val wanted = seedIds.toSet
+    val seedVecs = pin.vecRdd.filter(kv => wanted.contains(kv._1)).collect().toMap
+    rounds(pin, queries, k, l, ep, seedIds, seedVecs, metric, frontierWidth,
+      maxRounds, excludeSelf, scope)
+  }
+
+  /** The round loop of [[search]] and [[searchPinned]]. */
+  private def rounds(thePin: Pinned,
+                     queries: org.apache.spark.rdd.RDD[(Long, Array[Float])],
+                     k: Int, l: Int, ep: Long, seedIds: Seq[Long],
+                     seedVecs: Map[Long, Array[Float]], metric: Metric,
+                     frontierWidth: Int, maxRounds: Int, excludeSelf: Boolean,
+                     scope: CpScope)
+      : org.apache.spark.rdd.RDD[(Long, Array[Long], Array[Double])] = {
+    val sc = queries.sparkContext
     val part = thePin.part
     val adjRdd = thePin.adjRdd
     val vecRdd = thePin.vecRdd
@@ -240,8 +300,8 @@ object BspBeamSearch {
     // incremental waves (1,4,16,…), and phase-2 query slices are
     // filtered scans of the full n-row base — MEASURED at the 10M
     // build, the limit form cost ~+3 min per ~2 min batch.
-    val qvBc = spark.sparkContext.broadcast {
-      val rows = qvecs.as[(Long, Array[Float])].collect()
+    val qvBc = sc.broadcast {
+      val rows = queries.collect()
       require(rows.length <= MaxBroadcastQueries,
         s"BSP search: query slice (${rows.length} rows) exceeds the " +
           s"broadcast cap ($MaxBroadcastQueries) — " +
@@ -264,12 +324,6 @@ object BspBeamSearch {
       arr.sorted(Entry.ordering).take(l)
     }
 
-    // ---- init: every pool = {ep} ∪ extraSeeds (seed vectors are a
-    // bounded driver-side list, the same scalar class as epVec) ----
-    val seedIds = (ep +: extraSeeds).distinct
-    val seedVecs = vectors.filter(col("id").isin(seedIds: _*))
-      .select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Float])].collect().toMap
     require(seedVecs.contains(ep), s"entry point $ep not in vectors")
     val seeds: Array[(Long, Array[Float])] =
       seedIds.flatMap(id => seedVecs.get(id).map(v => (id, v))).toArray
@@ -285,8 +339,7 @@ object BspBeamSearch {
     // pools of l entries per partition is comfortably task-sized).
     val qPart = new org.apache.spark.HashPartitioner(
       math.max(1, math.min(part.numPartitions, qvBc.value.size / 1024 + 1)))
-    var state: org.apache.spark.rdd.RDD[(Long, Array[Entry])] = qvecs
-      .as[(Long, Array[Float])].rdd
+    var state: org.apache.spark.rdd.RDD[(Long, Array[Entry])] = queries
       .map { case (qid, qv) =>
         val pool = seeds.map { case (id, v) =>
           Entry(metric.dist(qv, v), id, expanded = false)
@@ -431,7 +484,7 @@ object BspBeamSearch {
     while (!done && round < maxRounds) {
       val n = math.min(perJob, maxRounds - round)
       val accs = (0 until n).map(i =>
-        spark.sparkContext.longAccumulator(s"bsp_unexpanded_r${round + i}"))
+        sc.longAccumulator(s"bsp_unexpanded_r${round + i}"))
       val next = accs.foldLeft(state) { (st, acc) =>
         if (local) localRound(st, acc) else distributedRound(st, acc)
       }
@@ -444,17 +497,14 @@ object BspBeamSearch {
       done = converged >= 0
       round += (if (done) converged + 1 else n)
     }
-    // the final round's state is materialized (cut is eager), so an own
-    // pin and the query broadcast are dead — freed here, not at scope
-    // release (search-internal)
-    if (pinned.isEmpty) thePin.release()
+    // the final round's state is materialized (cut is eager), so the
+    // query broadcast is dead
     qvBc.destroy()
     val last = state
     scope.add(() => last.unpersist(blocking = false))
-
-    spark.createDataset(state.map { case (qid, pool) =>
+    state.map { case (qid, pool) =>
       val top = (if (excludeSelf) pool.filter(_.id != qid) else pool).take(k)
       (qid, top.map(_.id), top.map(_.dist))
-    }).toDF("query_id", "ids", "dists")
+    }
   }
 }

@@ -107,7 +107,7 @@ class BspBeamSearchSpec extends SparkSpec {
       val pin = BspOracle.spreadPin(adj, noVecs, parts)
       val scope = new graft.ops.graph.CpScope
       try graft.build.DistRoarGraphBuilder.bfsReached(pin, ep, scope)(spark)
-        .as[Long].collect().toSet
+        .flatMap(_.iterator).collect().toSet
       finally { scope.releaseAll(); pin.release() }
     }
     val oracle = BspOracle.bfsReached(adj, 1000L, 3).as[Long].collect().toSet

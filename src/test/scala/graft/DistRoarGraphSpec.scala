@@ -269,10 +269,10 @@ class DistRoarGraphSpec extends SparkSpec {
     // depend on beams finding the islands.
     val vp = graft.ops.graph.BspBeamSearch.pinVectors(b)
     val (state, left) = DistRoarGraphBuilder.exactBackstop(
-      DistRoarGraphBuilder.AdjState(broken.adj, vp), b, broken.ep,
+      DistRoarGraphBuilder.AdjState(broken.adj, vp), broken.ep,
       p.metric, p.mPjbp)(spark)
     try {
-      val forced = broken.copy(adj = state.adj.select("src", "nbrs"))
+      val forced = broken.copy(adj = state.adjacency.toDF("src", "nbrs"))
       assert(left == 0 && reachableFrom(forced) == 1500,
         s"exact backstop left unreachable nodes ($left)")
       val fDeg = forced.adj.select(max(size(col("nbrs")))).head().getInt(0)
@@ -353,7 +353,7 @@ class DistRoarGraphSpec extends SparkSpec {
 
   test("no driver materialization of vectors or adjacency in the build source") {
     // the structural point of the distributed path: the only permitted
-    // driver-side actions are scalar aggregates (centroid row, entry-point
+    // driver-side actions are scalar aggregates (centroid sums, entry-point
     // id). Gate the source itself so a collect cannot creep back in.
     val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
       .get("src/main/scala/graft/build/DistRoarGraphBuilder.scala")))
@@ -361,8 +361,11 @@ class DistRoarGraphSpec extends SparkSpec {
       "DistRoarGraphBuilder must not collect() anything")
     assert(!src.contains("broadcast("),
       "DistRoarGraphBuilder must not broadcast vectors/adjacency")
-    // head() appears exactly twice: the centroid aggregate and the ep argmin
-    val heads = ".head()".r.findAllIn(src).length
-    assert(heads == 2, s"expected exactly 2 scalar head() actions, found $heads")
+    // one head(), the ep argmin, and one runJob, the centroid's
+    // per-partition double sums
+    val heads = """\.head\(\)""".r.findAllIn(src).length
+    assert(heads == 1, s"expected exactly 1 scalar head() action, found $heads")
+    val jobs = """\brunJob\(""".r.findAllIn(src).length
+    assert(jobs == 1, s"expected exactly 1 runJob (the centroid), found $jobs")
   }
 }
