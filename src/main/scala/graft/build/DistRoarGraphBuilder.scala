@@ -3,7 +3,7 @@ package graft.build
 import graft.core.{BuildParams, Metric, Neighbor, NeighborVec}
 import graft.functions.{TopKAggregator, VectorFunctions}
 import graft.ops.KnnJoin
-import graft.ops.graph.{BspBeamSearch, CpScope, OcclusionPrune}
+import graft.ops.graph.{BspBeamSearch, CpScope, OcclusionPrune, PlanUtil}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -67,8 +67,9 @@ final case class DistIndex(adj: DataFrame, ep: Long, metric: Metric,
   *     supply reverse merge is capped at 2m (G12), and one narrow `cogroup`
   *     adds ≤ 2m novel supply edges to the projection (:1251-1269).
   *
-  * Each step ends in one persisted, localCheckpointed RDD and one count
-  * job ([[Cut]]), like BspBeamSearch's round states, and is released
+  * Each step ends in one persisted, checkpointed RDD and one count job
+  * ([[Cut]]; the checkpoint is reliable under a session checkpoint dir,
+  * local otherwise), like BspBeamSearch's round states, and is released
   * exactly once, after its last reader is itself cut. Candidate groups
   * carry their vectors (NeighborVec) so occlusion pruning needs no global
   * vector store. Results are deterministic (every merge is (dist,
@@ -125,20 +126,21 @@ object DistRoarGraphBuilder {
     * unreached ids it picked this round — the attached ids)). */
   private[graft] type Absorbed = (Long, (Array[Long], Int, Array[Long]))
 
-  /** The end of one build step: `rdd` persisted, localCheckpointed and
+  /** The end of one build step: `rdd` persisted, checkpointed and
     * counted (`rows`) in one job — the way BspBeamSearch's round states
-    * end. localCheckpoint, not a DataFrame cut: the RDD keeps its
-    * partitioner, so the next step's `cogroup` or zip on the pin's layout
-    * stays narrow. Released exactly once, after every reader is itself
-    * cut. */
+    * end. The checkpoint is `PlanUtil.checkpointedRdd`'s: a reliable one
+    * (one more job, writing its files) when the session has a checkpoint
+    * dir, so a step survives executor loss, a local one otherwise. An RDD
+    * checkpoint, not a DataFrame cut: the RDD keeps its partitioner, so
+    * the next step's `cogroup` or zip on the pin's layout stays narrow.
+    * Released exactly once, after every reader is itself cut. */
   private[graft] final class Cut[T](val rdd: RDD[T], val rows: Long) {
     def release(): Unit = rdd.unpersist(blocking = false)
   }
 
   private[graft] def cut[T](rdd: RDD[T]): Cut[T] = {
-    rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    rdd.localCheckpoint()
-    new Cut(rdd, rdd.count())
+    val r = PlanUtil.checkpointedRdd(rdd)
+    new Cut(r, r.count())
   }
 
   /** The slice of `id` among `n` id-hash slices: `pmod(xxhash64(id), n)`
@@ -457,21 +459,26 @@ object DistRoarGraphBuilder {
 
   /** Phase-1 forward lists (G3/G7): each kNN list's first id is the
     * pivot, the rest its candidates. Every copy of a (pivot, cand) edge
-    * meets at the candidate's pin partition, where the first takes the
-    * candidate's vector on to the pivot's partition (the edge `distinct`);
-    * there each candidate is scored against the pivot, the pivot keeps its
-    * `capC` best in the Neighbor order, and the occlusion prune keeps ≤ m.
-    * Ids without a vector drop out, as under the inner join. */
+    * meets at the candidate's pin partition, sorted by candidate (a
+    * sort-based shuffle, which spills), and the first copy takes the
+    * candidate's vector on to the pivot's partition (the edge `distinct`:
+    * its seen-set holds one candidate's pivots at a time); there each
+    * candidate is scored against the pivot, the pivot keeps its `capC`
+    * best in the Neighbor order, and the occlusion prune keeps ≤ m. Ids
+    * without a vector drop out, as under the inner join. */
   private[graft] def forwardLists(knn: RDD[Array[Long]], vp: BspBeamSearch.PinnedVecs,
                                   metric: Metric, capC: Int, m: Int): Adj = {
     val edges = knn.flatMap { l =>
       if (l == null || l.length < 2) Iterator.empty
       else l.iterator.drop(1).filter(_ != l(0)).map(c => (c, l(0)))
-    }
+    }.repartitionAndSortWithinPartitions(vp.part)
     val withCand = BspBeamSearch.lookupVec(edges, vp).mapPartitions { it =>
-      val seen = new java.util.HashSet[(Long, Long)]()
-      it.filter { case (c, p, _) => seen.add((c, p)) }
-        .map { case (c, p, cv) => (p, (c, cv)) }
+      val pivots = new java.util.HashSet[Long]()
+      var cand = 0L
+      it.filter { case (c, p, _) =>
+        if (pivots.isEmpty || c != cand) { pivots.clear(); cand = c }
+        pivots.add(p)
+      }.map { case (c, p, cv) => (p, (c, cv)) }
     }
     val scored = BspBeamSearch.lookupVec(withCand, vp).mapPartitions(_.map {
       case (p, (c, cv), pv) => (p, NeighborVec(c, metric.dist(pv, cv), cv))
@@ -574,18 +581,22 @@ object DistRoarGraphBuilder {
   /** One repair adjacency state: (src → (nbrs, origCnt)) rows, a view of
     * one step on the vector pin's partitioner, and its adjacency pin — a
     * view of the same blocks, so the state's verify BFS and beam round
-    * read them with no shuffle and no second copy. `release` frees the
-    * step the state is a view of. */
+    * read them with no shuffle and no second copy. A state owns its step:
+    * [[next]] frees it, and so does [[release]] for a state that has no
+    * next, once its adjacency is consumed. The vector pin stays the
+    * caller's. */
   private[graft] final class AdjState private (
-      val rows: RDD[(Long, (Array[Long], Int))], release: () => Unit,
+      val rows: RDD[(Long, (Array[Long], Int))], releaseStep: () => Unit,
       val vp: BspBeamSearch.PinnedVecs) {
     val pin: BspBeamSearch.Pinned = BspBeamSearch.pinAdjRddOnto(adjacency, vp)
     def adjacency: Adj = rows.mapValues(_._1)
     /** The state after this one (a materialized step); this one is dead. */
     def next(step: Cut[Absorbed]): AdjState = {
-      release()
+      releaseStep()
       new AdjState(step.rdd.mapValues(v => (v._1, v._2)), () => step.release(), vp)
     }
+    /** Frees the step this state is a view of. */
+    def release(): Unit = releaseStep()
   }
   private[graft] object AdjState {
     /** The first state over a build step on `vp`'s partitioner, which the

@@ -111,8 +111,9 @@ object BspBeamSearch {
     * (id, payload) rows to the pin's layout (one small shuffle, none when
     * `rdd` already sits on the pin's partitioner), then hash-joins each
     * partition against its resident vector slice — the n-row table never
-    * re-shuffles. Rows whose id has no vector are dropped (the inner-join
-    * semantic every caller had). The output stays on the pin's
+    * re-shuffles. Rows keep their order within a partition; rows whose
+    * id has no vector are dropped (the inner-join semantic every caller
+    * had). The output stays on the pin's
     * partitioner, keyed by the looked-up id, so a per-id step after it
     * (`combineByKey` or `cogroup` on `vp.part`) needs no shuffle. */
   private[graft] def lookupVec[T](
@@ -129,38 +130,32 @@ object BspBeamSearch {
         }
       }
 
-  /** A graph+vector pair pinned to one partitioner and persisted — build
-    * it ONCE when many search() calls share the same (adj, vectors) (the
-    * phase-2 batch loop runs hundreds of searches over one frozen
-    * snapshot; re-pinning per call re-shuffles the n-row vector table
-    * every batch). The caller owns the release. */
+  /** A graph+vector pair on one partitioner — build it ONCE when many
+    * searches share the same (adj, vectors) (the phase-2 batch loop runs
+    * hundreds of [[searchPinned]] calls over one frozen snapshot;
+    * re-pinning per call re-shuffles the n-row vector table every batch).
+    * The caller owns the release. */
   final class Pinned private[BspBeamSearch] (
       private[graft] val adjRdd: org.apache.spark.rdd.RDD[(Long, Array[Long])],
       private[graft] val vecs: PinnedVecs,
       ownsAdj: Boolean = true) {
     private[graft] def vecRdd = vecs.rdd
     private[graft] def part = vecs.part
+    /** Frees the vector pin, and the adjacency when this pin holds its
+      * own copy of it. */
     def release(): Unit = {
-      releaseAdj()
+      if (ownsAdj) adjRdd.unpersist(blocking = false)
       vecs.release()
     }
-    /** Release only the adjacency half, for a pin made with
-      * [[pinAdjOnto]] over a vector pin that outlives it (the distributed
-      * build's: its adjacency changes between phases and repair rounds,
-      * its vectors never do). */
-    def releaseAdj(): Unit = if (ownsAdj) adjRdd.unpersist(blocking = false)
   }
 
-  /** Pin `adj` + `vectors` for reuse across search() calls (see
-    * [[Pinned]]). The DataFrames passed to search() alongside this handle
-    * MUST be the same tables. */
+  /** Pin `adj` + `vectors` (see [[Pinned]]). */
   def pin(adj: DataFrame, vectors: DataFrame): Pinned =
     pinAdjOnto(adj, pinVectors(vectors))
 
   /** Pin an adjacency onto an existing vector pin's layout. Lazy, like
-    * the vector pin: its first reader fills the cache. Release via
-    * [[Pinned.releaseAdj]] when `vp` outlives this pin, [[Pinned.release]]
-    * when it does not. */
+    * the vector pin: its first reader fills the cache. [[Pinned.release]]
+    * frees both. */
   def pinAdjOnto(adj: DataFrame, vp: PinnedVecs): Pinned = {
     val spark = adj.sparkSession
     import spark.implicits._
@@ -171,8 +166,9 @@ object BspBeamSearch {
 
   /** [[pinAdjOnto]] for an adjacency RDD. One already on the vector pin's
     * partitioner (a persisted build step) is the pin as it is: no shuffle
-    * and no second copy, and [[Pinned.releaseAdj]] leaves its blocks to
-    * their owner. */
+    * and no second copy; its blocks stay their owner's to release, and so
+    * does the vector pin, which the distributed build shares across its
+    * steps. */
   private[graft] def pinAdjRddOnto(adj: org.apache.spark.rdd.RDD[(Long, Array[Long])],
                                    vp: PinnedVecs): Pinned =
     if (adj.partitioner.contains(vp.part)) new Pinned(adj, vp, ownsAdj = false)
@@ -212,9 +208,6 @@ object BspBeamSearch {
     * @param scope    takes the release of the final round's persisted
     *                 state; the caller releases it after consuming the
     *                 returned DataFrame
-    * @param pinned   a caller-owned pin of `adj` + `vectors`; without one
-    *                 the search pins both and releases them before it
-    *                 returns
     * @return [query_id, ids: array<long>, dists: array<double>] top-k
     */
   def search(adj: DataFrame, vectors: DataFrame, queries: DataFrame,
@@ -222,8 +215,7 @@ object BspBeamSearch {
              frontierWidth: Int = 4, maxRounds: Int = 64,
              excludeSelf: Boolean = false,
              extraSeeds: Seq[Long] = Nil,
-             scope: CpScope,
-             pinned: Option[Pinned] = None): DataFrame = {
+             scope: CpScope): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     require(!metric.needNormalize,
@@ -233,12 +225,10 @@ object BspBeamSearch {
     // round's joins against them are then NARROW (zero re-shuffle of the
     // n-row tables — the round-12 measured fix; see object doc). persist
     // MEMORY_AND_DISK: at 10M×200d the vector side is ~8 GB — storage
-    // overflow spills, it is never recomputed. Two ownership modes: a
-    // caller-supplied Pinned (shared across many searches, as the
-    // distributed build's phase-2 batches and repair slices share theirs)
-    // is released by the caller; otherwise this call pins both tables and
-    // releases them once its final state is materialized.
-    val thePin = pinned.getOrElse(pin(adj, vectors))
+    // overflow spills, it is never recomputed. This call owns its pin and
+    // releases it once its final state is materialized; callers that
+    // share one pin across many searches use [[searchPinned]].
+    val thePin = pin(adj, vectors)
     // every pool starts as {ep} ∪ extraSeeds (seed vectors are a bounded
     // driver-side list, the same scalar class as epVec)
     val seedIds = (ep +: extraSeeds).distinct
@@ -248,17 +238,18 @@ object BspBeamSearch {
     val out = rounds(thePin,
       queries.select(col("id").cast("long"), col("vec")).as[(Long, Array[Float])].rdd,
       k, l, ep, seedIds, seedVecs, metric, frontierWidth, maxRounds, excludeSelf, scope)
-    // the final round's state is materialized (cut is eager), so an own
-    // pin is dead — freed here, not at scope release (search-internal)
-    if (pinned.isEmpty) thePin.release()
+    // the final round's state is materialized (cut is eager), so the pin
+    // is dead — freed here, not at scope release (search-internal)
+    thePin.release()
     spark.createDataset(out).toDF("query_id", "ids", "dists")
   }
 
   /** [[search]] over a caller-owned pin, in RDD form: `queries` are
     * (id, vec) rows, the seeds' vectors come from the pin, and the result
     * is (query_id, ids, dists) rows. The final state's release goes to
-    * `scope`. The distributed build's steps call this, so no DataFrame
-    * plan sits between them. */
+    * `scope`; the pin stays the caller's. The distributed build's phase-2
+    * batches and repair slices share one pin through this, with no
+    * DataFrame plan between their steps. */
   private[graft] def searchPinned(pin: Pinned,
                                   queries: org.apache.spark.rdd.RDD[(Long, Array[Float])],
                                   k: Int, l: Int, ep: Long, metric: Metric,

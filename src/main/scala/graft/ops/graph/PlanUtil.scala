@@ -32,6 +32,19 @@ private[graft] object PlanUtil {
       ds.checkpoint()
     else ds.localCheckpoint()
 
+  /** RDD form of [[checkpointed]]: persists `rdd` and marks it for a
+    * reliable checkpoint when the session has a checkpoint dir, for a
+    * local one otherwise. The caller's next action materializes it (a
+    * reliable checkpoint then writes its files in one more job, reading
+    * the persisted blocks). The RDD keeps its partitioner either way;
+    * release it with `unpersist`. */
+  def checkpointedRdd[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
+    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (rdd.sparkContext.getCheckpointDir.isDefined) rdd.checkpoint()
+    else rdd.localCheckpoint()
+    rdd
+  }
+
   /** The block-holding ancestor of a cut's RDD (the internal RDD that
     * `localCheckpoint` marked persistent). Reliable checkpoints hold no
     * blocks (data lives in files), so this returns None there. */

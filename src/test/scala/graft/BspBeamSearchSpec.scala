@@ -70,18 +70,28 @@ class BspBeamSearchSpec extends SparkSpec {
           extraSeeds = xs))
       }
       assert(oracle.nonEmpty)
-      Seq(None -> "one partition", Some(spreadPin) -> "3 partitions").foreach {
-        case (pin, layout) =>
+      // the search's own one-partition pin, and the caller-owned spread
+      // pin through the RDD entry point
+      def onePartition(scope: graft.ops.graph.CpScope) =
+        rows(BspBeamSearch.search(adjDf, baseDf, queries, k = 10, l = 40, ep,
+          Metric.L2, frontierWidth = fw, maxRounds = mr, excludeSelf = ex,
+          extraSeeds = xs, scope = scope))
+      def spread(scope: graft.ops.graph.CpScope) =
+        BspBeamSearch.searchPinned(spreadPin,
+            queries.select(col("id").cast("long"), col("vec"))
+              .as[(Long, Array[Float])].rdd,
+            k = 10, l = 40, ep, Metric.L2, frontierWidth = fw, maxRounds = mr,
+            excludeSelf = ex, extraSeeds = xs, scope = scope)
+          .collect().sortBy(_._1).toSeq.map { case (q, ids, ds) =>
+            (q, ids.toSeq, ds.toSeq.map(java.lang.Double.doubleToLongBits)) }
+      Seq("one partition" -> onePartition _, "3 partitions" -> spread _).foreach {
+        case (layout, run) =>
           var batched: Seq[(Long, Seq[Long], Seq[Long])] = Nil
           val scope = new graft.ops.graph.CpScope
-          val (jobsBatched, _) = jobsAndShuffle {
-            batched = rows(BspBeamSearch.search(adjDf, baseDf, queries, k = 10,
-              l = 40, ep, Metric.L2, frontierWidth = fw, maxRounds = mr,
-              excludeSelf = ex, extraSeeds = xs, scope = scope, pinned = pin))
-          }
+          val (jobsBatched, _) = jobsAndShuffle { batched = run(scope) }
           scope.releaseAll()
           assert(batched == oracle, s"$layout, fw=$fw maxRounds=$mr")
-          if (pin.isEmpty && mr > 8) assert(jobsBatched < jobsOracle,
+          if (layout == "one partition" && mr > 8) assert(jobsBatched < jobsOracle,
             s"$layout, fw=$fw maxRounds=$mr: $jobsBatched jobs batched vs " +
               s"$jobsOracle per round")
       }

@@ -64,16 +64,20 @@ class DistBuildStepSpec extends SparkSpec {
     // a hub pivot (0) whose distinct candidates exceed capC, pivots seen
     // by several queries (duplicate edges), a pivot and candidates with no
     // vector (998, 999), the pivot among its own candidates, a one-id list
-    // and an empty list
+    // and an empty list; pivot 40's nearest candidate (25) comes in more
+    // lists than capC, so only the edge distinct leaves it room for others
     val knn = ((0 until 12).map(q => (q.toLong, 0L +: (1 to 8).map(j => ((q * 5 + j * 3) % 59 + 1).toLong))) ++
       (12 until 30).map(q => (q.toLong, Seq((q % 20).toLong, ((q * 11) % 60).toLong,
         ((q * 13 + 1) % 60).toLong, (q % 20).toLong, 999L, ((q * 17) % 60).toLong))) ++
-      Seq((30L, Seq(998L, 1L, 2L)), (31L, Seq(4L)), (32L, Seq.empty[Long])))
+      Seq((30L, Seq(998L, 1L, 2L)), (31L, Seq(4L)), (32L, Seq.empty[Long])) ++
+      Seq(43L, 44L, 46L, 47L, 49L, 50L, 52L, 53L, 55L, 56L, 58L, 59L, 20L).zipWithIndex
+        .map { case (c, i) => (33L + i, Seq(40L, 25L, c)) })
       .toDF("query_id", "knn")
     val (m, capC) = (3, 12)
     Seq(Metric.L2, Metric.InnerProduct).foreach { metric =>
       val oracle = rows(DistBuildOracle.forwardLists(knn, base, metric, capC, m))
       assert(oracle.exists(_._1 == 0L) && !oracle.exists(_._1 == 998L))
+      assert(oracle.find(_._1 == 40L).exists(_._2.length == m), s"$metric: pivot 40")
       pins().foreach { case (layout, vp) =>
         val got = rows(DistRoarGraphBuilder.forwardLists(
           knn.select("knn").as[Array[Long]].rdd, vp, metric, capC, m))
@@ -120,6 +124,34 @@ class DistBuildStepSpec extends SparkSpec {
         }
         vp.release()
       }
+    }
+  }
+
+  test("under a session checkpoint dir a step is reliably checkpointed, and the build is unchanged") {
+    import spark.implicits._
+    val knn = (0 until 30).map(q => Seq(q.toLong, ((q * 7 + 1) % 60).toLong,
+      ((q * 11 + 2) % 60).toLong, ((q * 13 + 3) % 60).toLong)).toDS().rdd.map(_.toArray)
+    val params = graft.core.BuildParams(mSq = 6, mPjbp = 3, lPjpq = 12, metric = Metric.L2)
+    def adjOf(di: graft.build.DistIndex) = rows(di.adj)
+    val vp = pins().head._2
+    val local = DistRoarGraphBuilder.cut(DistRoarGraphBuilder.forwardLists(knn, vp, Metric.L2, 12, 3))
+    assert(local.rdd.isCheckpointed && local.rdd.getCheckpointFile.isEmpty)
+    val expect = rows(local.rdd)
+    local.release()
+    val fresh = adjOf(DistRoarGraphBuilder.build(base, base.filter(col("id") < 30), params))
+    val dir = java.nio.file.Files.createTempDirectory("graft-rdd-cp").toFile
+    try org.apache.spark.CheckpointDirs.withDir(spark.sparkContext, dir.toString) {
+      val c = DistRoarGraphBuilder.cut(DistRoarGraphBuilder.forwardLists(knn, vp, Metric.L2, 12, 3))
+      assert(c.rdd.getCheckpointFile.isDefined, "the step is not reliably checkpointed")
+      assert(c.rdd.partitioner.contains(vp.part))
+      assert(rows(c.rdd) == expect)
+      // its blocks gone, the step is read back from its checkpoint files
+      c.release()
+      assert(rows(c.rdd) == expect)
+      assert(adjOf(DistRoarGraphBuilder.build(base, base.filter(col("id") < 30), params)) == fresh)
+    } finally {
+      vp.release()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }
   }
 

@@ -277,7 +277,7 @@ class DistRoarGraphSpec extends SparkSpec {
         s"exact backstop left unreachable nodes ($left)")
       val fDeg = forced.adj.select(max(size(col("nbrs")))).head().getInt(0)
       assert(fDeg <= cap, s"backstop blew the degree cap: $fDeg > $cap")
-    } finally { state.pin.releaseAdj(); vp.release() }
+    } finally { state.release(); vp.release() }
   }
 
   test("repairLayout reconnects a damaged PERSISTED layout without rebuild") {
